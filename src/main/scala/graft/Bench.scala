@@ -265,15 +265,16 @@ object Bench {
       cleanTotal > pin * RerunPinExcessFactor &&
         memMaxSec > CanaryMemMaxHonestP95Sec)
 
-  /** The pin is only a comparator for a run over the SAME sf dir it was
-    * measured on: a full-registry run at another SF exceeds the pinned
-    * total many times over for honest reasons, and flagging it would
-    * teach readers to ignore the flag (review finding, r18). An explicit
-    * SPARK_GRAFT_PIN_CLEAN_TOTAL override skips the check — the caller
-    * chose their comparator. */
+  /** The pin is only a comparator for a run over the SAME sf dir AND the
+    * same core count it was measured with: a full-registry run at another
+    * SF, or a 4-core draw against a 32-core pin, differs from the pinned
+    * total for honest reasons, and flagging it would teach readers to
+    * ignore the flag (review finding, r18). A pin that records no `cpus`
+    * is not comparable. An explicit SPARK_GRAFT_PIN_CLEAN_TOTAL override
+    * skips the check — the caller chose their comparator. */
   private[graft] def pinComparable(pinSf: Option[String], runSf: String,
-      explicitOverride: Boolean): Boolean =
-    explicitOverride || pinSf.contains(runSf)
+      pinCpus: Option[Int], runCpus: Int, explicitOverride: Boolean): Boolean =
+    explicitOverride || (pinSf.contains(runSf) && pinCpus.contains(runCpus))
 
   /** The committed pin's clean_total, read from BENCH_pin.json in the
     * working directory (the driver and builder both bench from the repo
@@ -292,6 +293,10 @@ object Bench {
   /** The pin's recorded sf dir, for [[pinComparable]]. */
   private[graft] def pinSf(): Option[String] =
     pinField(""""sf"\s*:\s*"([^"]+)"""")
+
+  /** The pin's recorded core count, for [[pinComparable]]. */
+  private[graft] def pinCpus(): Option[Int] =
+    pinField(""""cpus"\s*:\s*([0-9]+)""").flatMap(_.toIntOption)
 
   private def pinField(regex: String): Option[String] =
     try {
@@ -671,9 +676,12 @@ object Bench {
       results.collect { case (k, t) if t.rerun => (first(k).sec, t.sec) }))
     val filtered = only.isDefined
     // the second-draw rule: pin-relative drift + mem-canary max spike,
-    // only against a pin measured over the SAME sf dir (or an explicit
-    // env override — the caller chose their comparator)
+    // only against a pin measured over the SAME sf dir on the same core
+    // count (or an explicit env override — the caller chose their
+    // comparator). local[N] runs N task slots; local[*] all host cores
+    val runCpus = spark.sparkContext.defaultParallelism
     val pinClean = pinCleanTotal().filter(_ => pinComparable(pinSf(), sfDir,
+      pinCpus(), runCpus,
       sys.env.get("SPARK_GRAFT_PIN_CLEAN_TOTAL").exists(_.toDoubleOption.isDefined)))
     val rerunRec = rerunRecommended(cleanTotalRaw, pinClean,
       canaryMemSamples.max, filtered, tainted)
@@ -681,7 +689,7 @@ object Bench {
     // the numbers are contaminated and must not be compared round-over-
     // round); loadavg_end is informational (dominated by the bench itself)
     val loadavgEnd = loadavgNow()
-    val common = s""""sf":"$sfDir","loadavg":$loadavgStart,"loadavg_end":$loadavgEnd,""" +
+    val common = s""""sf":"$sfDir","cpus":$runCpus,"loadavg":$loadavgStart,"loadavg_end":$loadavgEnd,""" +
       s""""tainted":$tainted,"pre_gate_tainted":$preGateTainted,""" +
       s""""tainted_queries":${jArr(taintedNames)},""" +
       s""""crashed_queries":${jArr(crashedNames)},""" +

@@ -7,9 +7,10 @@ import org.apache.spark.sql.SparkSession
   * The query library deliberately `cache()`s shared intermediates (the
   * dedup pipeline's shingles/signatures/pair set) and memoizes
   * checkpoint-rooted artifacts (cluster labels, trained IVF stats, the
-  * forecast table, the DAG runner's stage counts) for the life of a
-  * session — correct for Verify/Bench runs, but a LONG-LIVED server
-  * session cycling many corpora would accumulate them. This is the
+  * forecast table, the DAG runner's stage counts, every inferred parquet
+  * schema — [[Tables.parquetSchema]]) for the life of a session — correct
+  * for Verify/Bench runs, but a LONG-LIVED server session cycling many
+  * corpora would accumulate them. This is the
   * explicit release hook: evict cached plans and drop the session from
   * every [[graft.operators.SessionMemo]] (their checkpoint and cache
   * blocks become unreferenced and the ContextCleaner reclaims them). The

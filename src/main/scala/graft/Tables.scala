@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+import graft.operators.SessionMemo
 
 /** Readers for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -39,8 +42,41 @@ object Tables {
     // Tables without copying their builder config must get the same
     // instants — not silently shifted ones.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
   }
+
+  /** Spark's own inferred schema for one parquet path, inferred once per
+    * session.
+    *
+    * `spark.read.parquet(...)` runs its footer read as a Spark job on every
+    * call, even for one file — a fixed cost every warm table read and every
+    * TxTable snapshot read used to pay before executing. The memo returns
+    * whatever that inference returned the first time, keyed by everything
+    * it depends on: the path, the (path, length, mtime) of every file it
+    * lists (so a file rewritten in place is re-inferred), and every session
+    * conf naming parquet (`inferTimestampNTZ.enabled`, `nanosAsLong`,
+    * `binaryAsString`, `int96AsTimestamp`, ...). A failed inference (absent
+    * path, corrupt footer) throws as before and is not memoized.
+    * [[Caches.clear]] drops the memo.
+    *
+    * One path only, and only one whose identity repeats: a table file, or
+    * one immutable TxTable data file. A file is one status lookup; a
+    * directory is one listing of its tree. A multi-file read whose file
+    * set changes every call (a merge's candidates, a change feed's commit,
+    * a sink that rewrites its directory) would only add dead entries. */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).toSeq
+    val confs = spark.conf.getAll.toSeq.filter(_._1.contains("parquet")).sorted
+    schemaMemo.getOrElseUpdate(spark, (path, files, confs))(
+      spark.read.parquet(path).schema)
+  }
+
+  private val schemaMemo = new SessionMemo[
+    (String, Seq[(String, Long, Long)], Seq[(String, String)]), StructType]
 
   /** Spread a small-file input across the cluster before per-row-expensive
     * work — IF the scan actually under-parallelizes. The small testdata

@@ -92,19 +92,19 @@ object Sink {
     if (!fs.exists(p) && fs.exists(old)) mustRename(old, p)
     // only a provably-absent table means "first write"; any OTHER read
     // failure (permissions, corrupt footer) must abort — treating it as
-    // absent would silently overwrite the table with the updates alone
-    val exists = try {
-      spark.read.parquet(path).schema.nonEmpty
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => false
-      case _: java.io.FileNotFoundException => false
+    // absent would silently overwrite the table with the updates alone.
+    // The probe IS the read: one schema inference serves both.
+    val current = try Some(spark.read.parquet(path)) catch {
+      case _: org.apache.spark.sql.AnalysisException => None
+      case _: java.io.FileNotFoundException => None
     }
     val deduped = collapseByKey(updates, keys, versionCol)
-    val merged = if (exists) {
-      val current = spark.read.parquet(path)
-      current.join(deduped.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        .unionByName(deduped)
-    } else deduped
+    val merged = current match {
+      case Some(cur) =>
+        cur.join(deduped.select(keys.map(col): _*).distinct(), keys, "left_anti")
+          .unionByName(deduped)
+      case None => deduped
+    }
     // stage + rename: the plan reads the same path it overwrites, so write
     // to a staging dir first; the swap is then a delete + rename (tiny
     // failure window, no second full write — the previous version re-wrote

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.Tables
 
 /** A minimal transactional table format on plain parquet — the contract a
   * Delta/Iceberg table provides for the serving layer (the reference names
@@ -453,7 +454,7 @@ object TxTable {
       return spark.read.parquet(path + "/data") // never: guard only
     val index = new StatsFileIndex(spark, path, entries.map(e => (e.rel, e.stats)))
     GraftBridge.relationToDataFrame(spark, HadoopFsRelation(
-      index, StructType(Nil), snapshotSchema(spark, path, entries), None,
+      index, StructType(Nil), snapshotSchema(spark, path, entries.map(_.rel)), None,
       new ParquetFileFormat, Map.empty[String, String])(spark))
   }
 
@@ -469,24 +470,31 @@ object TxTable {
     * Cost: one footer per staging GENERATION, not per file — every file
     * of one `stageData` call shares a schema by construction (rel =
     * `data/<uuid>-part-NNNNN.parquet`), and generations are bounded by
-    * retained commits (compaction resets to one). Version pinning
+    * retained commits (compaction resets to one). Data files are
+    * immutable, so each generation's footer is inferred once per session
+    * ([[Tables.parquetSchema]]): a re-read of a known snapshot starts no
+    * job before it executes, and so does a merge's candidate scan or a
+    * change feed over generations already read. Version pinning
     * composes for free: an old version's manifest lists only old
     * generations, so time travel sees the schema AS OF that version.
     *
     * Additive only: a field present in two generations must carry the
     * SAME type — a retype is a corrupt table, refused loudly (Delta's
-    * rule; rewriting history is what `compact` is for). */
+    * rule; rewriting history is what `compact` is for).
+    *
+    * `rels` may be any file set of the table, not only a whole snapshot:
+    * the change feed reads a commit's adds or removes at their own union. */
   private def snapshotSchema(spark: SparkSession, path: String,
-      entries: Seq[ManifestEntry]): StructType = {
+      rels: Seq[String]): StructType = {
     // first file of each generation, in MANIFEST order (commit order) so
     // appended columns land after existing ones deterministically — a
     // random-uuid sort would shuffle field order between snapshots
     val seen = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    entries.foreach { e =>
-      val gen = e.rel.takeWhile(_ != '-')
-      if (!seen.contains(gen)) seen(gen) = e.rel
+    rels.foreach { rel =>
+      val gen = rel.takeWhile(_ != '-')
+      if (!seen.contains(gen)) seen(gen) = rel
     }
-    val schemas = seen.values.toSeq.map(r => spark.read.parquet(s"$path/$r").schema)
+    val schemas = seen.values.toSeq.map(r => Tables.parquetSchema(spark, s"$path/$r"))
     schemas.tail.foldLeft(schemas.head) { (acc, s) =>
       s.fields.foldLeft(acc) { (a, f) =>
         a.fields.find(_.name == f.name) match {
@@ -757,7 +765,7 @@ object TxTable {
             // fail-fast additive-evolution guard: a retyped column must be
             // refused BEFORE the commit poisons the table (the read-side
             // snapshotSchema check is the safety net, not the gate)
-            val current = snapshotSchema(spark, path, baseFiles)
+            val current = snapshotSchema(spark, path, baseFiles.map(_.rel))
             deduped.schema.fields.foreach { f =>
               current.fields.find(_.name == f.name).foreach { existing =>
                 if (!org.apache.spark.sql.types.DataType
@@ -779,10 +787,12 @@ object TxTable {
                 case None => true // no stats: must scan
               }
             }
-            // which candidate files hold a matched key? one scan, keys broadcast
+            // which candidate files hold a matched key? one scan, keys
+            // broadcast, read at the snapshot schema just resolved
             val touchedNames =
               if (candidates.isEmpty) Set.empty[String]
-              else spark.read.parquet(candidates.map(e => s"$path/${e.rel}"): _*)
+              else spark.read.schema(current)
+                .parquet(candidates.map(e => s"$path/${e.rel}"): _*)
                 .withColumn("__file", input_file_name())
                 .join(broadcast(updKeys), keys, "left_semi")
                 .select("__file").distinct().collect()
@@ -902,7 +912,8 @@ object TxTable {
     def readRels(rels: Seq[String], schemaOf: => StructType): DataFrame =
       if (rels.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf)
-      else spark.read.parquet(rels.map(r => s"$path/$r"): _*)
+      else spark.read.schema(snapshotSchema(spark, path, rels))
+        .parquet(rels.map(r => s"$path/$r"): _*)
     // the CDC schema with zero change rows — the shape of the feed's most
     // common polling state (no commits since `fromV`, or only no-op
     // commits in the window); must be a valid empty frame, not a crash
@@ -1013,7 +1024,7 @@ object TxTable {
       // footers lack that column — filtering the narrower mergeSchema read
       // with it would throw AnalysisException and fail the delete. Pad the
       // touched read to the snapshot schema (the changeFeed pad) first.
-      val snapSchema = snapshotSchema(spark, path, entries)
+      val snapSchema = snapshotSchema(spark, path, entries.map(_.rel))
       val raw = spark.read.option("mergeSchema", "true")
         .parquet(touched.map(e => s"$path/${e.rel}"): _*)
       val present = raw.columns.toSet

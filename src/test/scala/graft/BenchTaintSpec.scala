@@ -189,6 +189,21 @@ class BenchTaintSpec extends AnyFunSuite {
     assert(!Bench.rerunRecommended(151.5, None, 0.171, filtered = false, tainted = false))
   }
 
+  test("pin comparability requires the same sf AND the same core count") {
+    val sf = "/data/sf0.1"
+    def cmp(pinSf: Option[String], pinCpus: Option[Int], runCpus: Int,
+        explicitOverride: Boolean = false): Boolean =
+      Bench.pinComparable(pinSf, sf, pinCpus, runCpus, explicitOverride)
+    assert(cmp(Some(sf), Some(32), 32), "same sf, same cores: comparable")
+    assert(!cmp(Some(sf), Some(32), 4), "a 4-core draw is not comparable with a 32-core pin")
+    assert(!cmp(Some("/data/sf0.01"), Some(32), 32), "another sf is not comparable")
+    assert(!cmp(Some(sf), None, 32), "a pin without cpus is not comparable")
+    assert(!cmp(None, Some(32), 32), "a pin without sf is not comparable")
+    assert(!cmp(None, None, 32))
+    // the explicit env override: the caller chose their comparator
+    assert(cmp(None, None, 4, explicitOverride = true))
+  }
+
   test("synthetic bandwidth load fires the memory-canary min rule") {
     // quiet reference first (JIT-warm)
     (1 to 2).foreach(_ => Bench.canaryMemOnce())
