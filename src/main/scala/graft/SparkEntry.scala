@@ -58,7 +58,7 @@ object SparkEntry {
       ((s: SparkSession, d: String) => LensQueries.lensDashboard(s, d)): Q,
       Some(LensQueries.lensDashboardSql)),
     ("q_tail_n_per_key", LensQueries.tailNPerKey _, Some(LensQueries.tailNPerKeySql)),
-    // same semantics, bounded-heap physics (map-side combinable Aggregator) —
+    // same semantics, bounded-heap physics (map-side combinable aggregate) —
     // verified against the identical window oracle
     ("q_tail_n_heap",
       ((s: SparkSession, d: String) => graft.operators.TopK.tailKHeap(s, d)): Q,

@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare, and
+  * verify_failures.json naming every query that threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (local targeted
@@ -20,12 +21,16 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = SparkEntry.queries.toSeq.filter(kv => keep(kv._1)).flatMap {
+      case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> String.valueOf(e))
+        }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -48,6 +53,11 @@ object Verify {
     val oracleName =
       if (only.isDefined) "oracle_sql_filtered.json" else "oracle_sql.json"
     Files.writeString(Paths.get(s"$outDir/$oracleName"), json)
+    // every query that threw, name -> exception, rewritten on every run
+    // (`{}` when none): a failed query leaves no result directory, so
+    // without this list a checker reading results alone cannot see it
+    Files.writeString(Paths.get(s"$outDir/verify_failures.json"),
+      failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -1415,10 +1416,12 @@ object Curation {
           require(kBand <= Int.MaxValue,
             s"boundary band of $kBand rows (massive lw ties) exceeds the " +
               "refine heap range")
-          val kth = udaf(new TopK.DocKthAgg(kBand.toInt),
-            org.apache.spark.sql.Encoders.product[TopK.DocW])
+          // the band's k′-th in (lw DESC, doc_id ASC): the heap's last
+          // element (its worst row when the band holds fewer than k′);
+          // doc_id is unique and lw an integer sum / 1e9, never −0.0
           val t = full.filter(col("lw") >= tLo && col("lw") <= tHi)
-            .agg(kth(col("lw"), col("doc_id")).as("t"))
+            .agg(element_at(TopK.top_k(struct(col("lw"), col("doc_id")),
+              kBand.toInt, "lw" -> Descending, "doc_id" -> Ascending), -1).as("t"))
             .select(col("t.lw"), col("t.doc_id")).head()
           val (tLw, tId) = (t.getDouble(0), t.getLong(1))
           // rank(doc) <= k  ⇔  above the hi bracket, or at-or-above the
@@ -1605,7 +1608,7 @@ object Curation {
     * sources): reputation decides who participates, the cap bounds how
     * much.
     *
-    * Scale shape: the selection is the bounded-heap top-k Aggregator keyed
+    * Scale shape: the selection is the bounded-heap top-k aggregate keyed
     * (rounded quality desc, doc_id asc) — map-side combined, ≤ cap rows
     * shuffled per partition per source — NOT a per-source window sort.
     * Sources are the classic mega-stratum (20 sources at any corpus size:
@@ -1617,14 +1620,12 @@ object Curation {
     val scored = TextFunctions
       .qualityMetrics(Tables.documents(spark, dir), "text")
       .select(col("doc_id"), col("source"), col("quality_score"))
-    val topk = udaf(new TopK.ScoreTopKAgg(cap),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
     scored.groupBy("source")
-      .agg(topk(col("doc_id"), col("quality_score")).as("top"))
+      .agg(TopK.top_k(struct(col("doc_id"), col("quality_score")), cap,
+        "quality_score" -> Descending, "doc_id" -> Ascending).as("top"))
       .select(col("source"), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("source"), (col("pos") + 1).cast("int").as("rank"),
-        col("s.vec_id").as("doc_id"),
-        col("s.cosine").as("quality_score"))
+        col("s.doc_id"), col("s.quality_score"))
   }
 
   /** DuckDB oracle for [[domainCap]] — the window spelling of the same

@@ -81,13 +81,11 @@ object Rag {
         col("vec_id") < nQueries * ChunkShift)
       .select((col("vec_id") / ChunkShift).cast("long").as("q_doc"),
         col("emb").as("q_emb"))
-    val topk = udaf(new TopK.ScoreTopKAgg(k),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
     val winners = vecs.crossJoin(broadcast(q))
       .filter((col("vec_id") / ChunkShift).cast("long") =!= col("q_doc"))
       .withColumn("cosine", round(cosine_sim(col("emb"), col("q_emb")), 6))
       .groupBy("q_doc")
-      .agg(topk(col("vec_id"), col("cosine")).as("top"))
+      .agg(Similarity.nearest(k).as("top"))
       .select(col("q_doc"), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("q_doc"), (col("pos") + 1).cast("int").as("rank"),
         col("s.vec_id").as("chunk_id"), col("s.cosine").as("cosine"))
@@ -330,13 +328,11 @@ object Rag {
           col("vec_id") < nQueries * ChunkShift)
         .select((col("vec_id") / ChunkShift).cast("long").as("q_doc"),
           col("emb").as("q_emb"))
-      val topk = udaf(new TopK.ScoreTopKAgg(pool + 1),
-        org.apache.spark.sql.Encoders.product[TopK.Scored])
       val cands = vecs.crossJoin(broadcast(q))
         .filter((col("vec_id") / ChunkShift).cast("long") =!= col("q_doc"))
         .withColumn("cosine", round(cosine_sim(col("emb"), col("q_emb")), 6))
         .groupBy("q_doc")
-        .agg(topk(col("vec_id"), col("cosine")).as("top"))
+        .agg(Similarity.nearest(pool + 1).as("top"))
         .select(col("q_doc"), posexplode(col("top")).as(Seq("pos", "s")))
         .select(col("q_doc"), col("pos"),
           col("s.vec_id").as("vec_id"), col("s.cosine").as("rel"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Ascending
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -267,13 +268,12 @@ object Sampling {
 
   def budgetSampleOf(docs: DataFrame, keyCol: String, budget: Int,
       seed: Int = 42): DataFrame = {
-    val topk = udaf(new TopK.DocHTopKAgg(budget),
-      org.apache.spark.sql.Encoders.product[TopK.DocH])
     docs
       .select(col(keyCol),
         budgetRankHash(col("doc_id"), seed).as("h"), col("doc_id"))
       .groupBy(keyCol)
-      .agg(topk(col("h"), col("doc_id")).as("top"))
+      .agg(TopK.top_k(struct(col("h"), col("doc_id")), budget,
+        "h" -> Ascending, "doc_id" -> Ascending).as("top"))
       .select(col(keyCol), explode(col("top")).as("d"))
       .select(col("d.doc_id").as("doc_id"), col(keyCol))
   }

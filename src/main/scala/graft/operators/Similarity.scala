@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -38,6 +39,15 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dot_product(a, b)
 
+  /** The k best (vec_id, `score`, payload…) rows per group in every tier's
+    * rank order, `score` DESC then vec_id ASC ([[TopK.top_k]]). Scores are
+    * rounded or integer-valued, so never −0.0 or NaN, and vec_id is unique
+    * within a query: the order is total. */
+  private[graft] def nearest(k: Int, score: String = "cosine",
+      payload: Seq[Column] = Nil): Column =
+    TopK.top_k(struct(col("vec_id") +: col(score) +: payload: _*), k,
+      score -> Descending, "vec_id" -> Ascending)
+
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Corpus frame; `nrm` is consumed only by the exact top-1 kernel
@@ -74,8 +84,8 @@ object Similarity {
     * contract (rounded cosine DESC, vec_id tiebreak) exists once.
     *
     * Re-rank physics: the scored (nQueries × N) rows go through the
-    * bounded-heap [[TopK.ScoreTopKAgg]] — a map-side-combinable
-    * Aggregator holding k rows per query — NOT a `row_number()` window,
+    * bounded-heap [[nearest]] — a map-side-combinable aggregate
+    * holding k rows per query — NOT a `row_number()` window,
     * which would hash ALL N scored rows of a query into ONE partition and
     * full-sort them (nQueries single-task corpus sorts at scale). The
     * heap shuffles ≤ k rows per partition per query; the output order
@@ -89,10 +99,8 @@ object Similarity {
     val scored = vecs.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cosine", round(cosine_sim(col("emb"), col("q_emb")), 6))
-    val topk = udaf(new TopK.ScoreTopKAgg(k),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
     scored.groupBy("q_id")
-      .agg(topk(col("vec_id"), col("cosine")).as("top"))
+      .agg(nearest(k).as("top"))
       .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
         col("s.vec_id").as("vec_id"), col("s.cosine").as("cosine"))
@@ -154,13 +162,11 @@ object Similarity {
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
         col("label").as("q_label"))
-    val topk = udaf(new TopK.ScoreTopKAgg(k),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
     c.crossJoin(broadcast(q))
       .filter(col("label") =!= col("q_label"))
       .withColumn("cosine", round(cosine_sim(col("emb"), col("q_emb")), 6))
       .groupBy("q_id", "q_label")
-      .agg(topk(col("vec_id"), col("cosine")).as("top"))
+      .agg(nearest(k).as("top"))
       .select(col("q_id"), col("q_label"),
         posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("q_id"), col("q_label"),
@@ -194,38 +200,33 @@ object Similarity {
     * then smallest label). n_agree counts neighbors sharing the anchor's
     * own label, so the report carries the vote margin, not just the flag.
     *
-    * Scale shape: scoring/heap as [[bruteForceTopKOf]]; the vote is a
-    * (anchor, label)-keyed count of nQueries·k rows, and both windows run
-    * over ≤|labels| rows per anchor — metadata-scale partitions. */
+    * Scale shape: ONE corpus pass and ONE aggregation — the scoring and
+    * k-bounded heap of [[bruteForceTopKOf]] with the neighbor's label riding
+    * as an order-inert payload; the vote is array arithmetic over the ≤ k
+    * kept labels of each anchor, with no further shuffle. */
   def labelNoiseKnn(spark: SparkSession, dir: String,
       nQueries: Int = 50, k: Int = 10): DataFrame = {
     val c = corpus(spark, dir)
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
         col("label").as("q_label"))
-    // ONE corpus pass, ONE aggregation (guide §2.4, r19): the neighbor's
-    // label rides the k-bounded heap as an order-inert payload and the
-    // majority vote runs in the aggregator's finish() — the old plan
-    // re-scanned the corpus to attach labels to the broadcast top-k id
-    // list and voted through two more keyed aggregations (10 stages for a
-    // 50-row answer; stage latency, not compute, dominated the bench
-    // line). Decisions are bit-identical: same (cosine DESC, vec_id ASC)
-    // heap, same neighbor set, same max-count/smallest-label vote —
-    // label ties compared in UTF8String binary order, exactly what the
-    // relational min(struct(-cnt, nbr_label)) did (SimilaritySpec pins
-    // the vote against the window form; the DuckDB oracle is unchanged).
-    val vote = udaf(new TopK.LabelVoteAgg(k),
-      org.apache.spark.sql.Encoders.product[TopK.ScoredLab])
+    // labels are INTEGER, so the smallest-label tiebreak is integer order:
+    // the min of (−count, label) over the distinct neighbor labels is the
+    // oracle's first row by (cnt DESC, nbr_label ASC)
+    val labels = transform(col("top"), _("label"))
+    def votes(l: Column): Column = size(filter(labels, _ === l))
+    val majority = array_min(transform(array_distinct(labels),
+      l => struct((-votes(l)).as("neg_count"), l.as("label"))))
     c.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cosine", round(cosine_sim(col("emb"), col("q_emb")), 6))
       .groupBy("q_id", "q_label")
-      .agg(vote(col("vec_id"), col("cosine"), col("label"), col("q_label")).as("v"))
+      .agg(nearest(k, payload = Seq(col("label"))).as("top"))
       .select(col("q_id"), col("q_label"),
-        col("v.majority_label").as("majority_label"),
-        col("v.majority_count").as("majority_count"),
-        col("v.n_agree").as("n_agree"),
-        (col("v.majority_label") =!= col("q_label")).as("suspect"))
+        majority("label").as("majority_label"),
+        (-majority("neg_count")).cast("long").as("majority_count"),
+        votes(col("q_label")).cast("long").as("n_agree"),
+        (majority("label") =!= col("q_label")).as("suspect"))
   }
 
   /** DuckDB oracle for [[labelNoiseKnn]] — window-ranked kNN, then the
@@ -532,44 +533,29 @@ object Similarity {
 
   /** The fused two-stage tail shared by the INLINE code-compressed tiers
     * (int8 scalar, PQ): `scored` carries one row per (query, candidate)
-    * with the stage-1 score AND the candidate's float embedding already in
-    * hand (the encode is inline, so emb was in the row anyway). Stage 1
-    * keeps the top-m per query in an m-bounded heap whose ordering is
-    * exactly [[TopK.ScoreTopKAgg]]'s (score DESC, vec_id ASC) — the
-    * payload embedding is order-inert — and stage 2 re-ranks the m
-    * survivors by exact rounded cosine THROUGH THE SAME heap ordering the
-    * old [[exactRerank]] used, over rows that never left the aggregation's
-    * partitioning (the second groupBy reuses the first exchange's hash
-    * layout — zero new shuffles).
-    *
-    * Why (guide §2.4/§3, r19): the compositional form ran stage 2 as a
-    * SECOND corpus pass — collect the m·nQueries candidate ids, broadcast
-    * them back INTO a fresh scan of `vecs`, hash-join, re-aggregate —
-    * which cost two extra broadcast builds, a corpus re-scan, and a
-    * sequential barrier between the stages. Here the whole search is one
-    * corpus pass + one 20-group exchange. The exact cosine is computed
-    * INLINE next to the stage-1 score (one extra dim-length dot per scored
-    * row — the same arithmetic scale as the stage-1 score itself), so the
-    * row entering the aggregation is three primitive scalars: the first
-    * fused form instead carried the float emb through the heap, and the
-    * per-row encoder conversion of that dim-sized payload (plus a second
-    * udaf pass over the exploded survivors) dominated the whole query's
-    * task time (~10.5 CPU-s at sf0.1, ProfileExec). Decisions are
-    * bit-identical: same stage-1 heap order, same candidate set, same
-    * `round(cosine_sim, 6)` on the same emb values, same stage-2 heap
-    * order — now the finish() of ONE m-bounded aggregator
-    * ([[TopK.RerankTopKAgg]]; OperatorsSpec pins the fused search against
-    * the stored-index search, which still runs the compositional two-pass
-    * tail; the unchanged DuckDB oracles are the final arbiter). */
+    * with the stage-1 score and the candidate's float embedding. The exact
+    * rounded cosine is computed INLINE next to the stage-1 score, so the
+    * row entering the aggregation is three scalars. Stage 1 keeps the
+    * top-m per query by (score DESC, vec_id ASC) in ONE m-bounded
+    * [[nearest]] heap with the cosine as payload; stage 2 re-sorts those
+    * ≤ m survivors by (cosine DESC, vec_id ASC) — the order
+    * [[exactRerank]] uses — and cuts to k, as array expressions on the
+    * aggregate's output: one corpus pass, one exchange, no second
+    * aggregation. OperatorsSpec pins the fused search against the
+    * stored-index search, which runs the two-pass tail; the DuckDB oracles
+    * are the final arbiter. */
   private def rerankFused(scored: DataFrame, k: Int, m: Int): DataFrame = {
-    val agg = udaf(new TopK.RerankTopKAgg(m, k),
-      org.apache.spark.sql.Encoders.product[TopK.Scored2])
+    val byCosine = (l: Column, r: Column) =>
+      when(l("cosine") > r("cosine"), -1).when(l("cosine") < r("cosine"), 1)
+        .when(l("vec_id") < r("vec_id"), -1).when(l("vec_id") > r("vec_id"), 1)
+        .otherwise(0)
     scored
       .select(col("q_id"), col("vec_id"), col("qscore"),
         round(cosine_sim(col("emb"), col("q_emb")), 6).as("cosine"))
       .groupBy("q_id")
-      .agg(agg(col("vec_id"), col("qscore"), col("cosine")).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "s")))
+      .agg(nearest(m, "qscore", Seq(col("cosine"))).as("top"))
+      .select(col("q_id"), posexplode(
+        slice(array_sort(col("top"), byCosine), 1, k)).as(Seq("pos", "s")))
       .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
         col("s.vec_id").as("vec_id"), col("s.cosine").as("cosine"))
   }
@@ -583,14 +569,12 @@ object Similarity {
     * [[rerankFused]] instead (r19). */
   private def exactRerank(vecs: DataFrame, cands: DataFrame, q: DataFrame,
       k: Int): DataFrame = {
-    val topk = udaf(new TopK.ScoreTopKAgg(k),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
     vecs.select(col("vec_id"), col("emb"))
       .join(broadcast(cands), "vec_id")
       .join(broadcast(q), "q_id")
       .withColumn("cosine", round(cosine_sim(col("emb"), col("q_emb")), 6))
       .groupBy("q_id")
-      .agg(topk(col("vec_id"), col("cosine")).as("top"))
+      .agg(nearest(k).as("top"))
       .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
         col("s.vec_id").as("vec_id"), col("s.cosine").as("cosine"))
@@ -790,13 +774,11 @@ object Similarity {
     val q = pc.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("pemb").as("q_pemb"),
         col("emb").as("q_emb"))
-    val topm = udaf(new TopK.ScoreTopKAgg(m),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
     val cands = pc.crossJoin(broadcast(q.select("q_id", "q_pemb")))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("pscore", round(cosine_sim(col("pemb"), col("q_pemb")), 6))
       .groupBy("q_id")
-      .agg(topm(col("vec_id"), col("pscore")).as("top"))
+      .agg(nearest(m, "pscore").as("top"))
       .select(col("q_id"), explode(col("top")).as("s"))
       .select(col("q_id"), col("s.vec_id").as("vec_id"))
     exactRerank(vecs, cands, q.select(col("q_id"), col("q_emb")), k)
@@ -1049,14 +1031,12 @@ object Similarity {
       cb: Seq[Seq[Seq[Double]]], nQueries: Int, k: Int, m: Int): DataFrame = {
     val q = vecs.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val topm = udaf(new TopK.ScoreTopKAgg(m),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
     val cands = coded.crossJoin(broadcast(q.select(col("q_id"), col("q_emb"))))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("qscore", round(
         graft.functions.PqExpressions.pq_adc(col("q_emb"), col("codes"), cb), 6))
       .groupBy("q_id")
-      .agg(topm(col("vec_id"), col("qscore")).as("top"))
+      .agg(nearest(m, "qscore").as("top"))
       .select(col("q_id"), explode(col("top")).as("s"))
       .select(col("q_id"), col("s.vec_id").as("vec_id"))
     exactRerank(vecs, cands, q, k)
@@ -1683,13 +1663,11 @@ object Similarity {
         cs, nprobe)
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
         col("cell").as("q_cell"))
-    val topk = udaf(new TopK.ScoreTopKAgg(k),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
     c.join(broadcast(q), col("cell") === col("q_cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cosine", round(cosine_sim(col("emb"), col("q_emb")), 6))
       .groupBy("q_id")
-      .agg(topk(col("vec_id"), col("cosine")).as("top"))
+      .agg(nearest(k).as("top"))
       .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
         col("s.vec_id").as("vec_id"), col("s.cosine").as("cosine"))

@@ -1,230 +1,151 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import java.util.PriorityQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Descending,
+  Expression, InterpretedOrdering, RowOrdering, SortDirection, SortOrder,
+  UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 import graft.Tables
 
-/** Bounded-memory top-k per group as a typed `Aggregator`.
+/** Bounded-memory top-k per group as ONE native aggregate.
   *
   * The window formulation (`row_number().over(partitionBy(key).orderBy(ord))
   * <= k`) shuffles EVERY row of every group and sorts whole groups — at
   * 100 TB, a group with 10⁹ rows pays a 10⁹ sort for a k=5 answer. This
-  * aggregator keeps a k-bounded buffer, is partial-aggregable (map-side
-  * combine), and therefore shuffles at most k rows per partition per group:
-  * cost O(n log k) scan + O(parts·k) shuffle, independent of group size.
+  * aggregate keeps a k-bounded heap, is partial-aggregable (map-side
+  * combine through ObjectHashAggregate), and therefore shuffles at most k
+  * rows per partition per group: cost O(n log k) scan + O(parts·k)
+  * shuffle, independent of group size.
   *
-  * Ordering: (ts desc, id desc) — matches `LensQueries.tailNPerKey`, so the
-  * same DuckDB window oracle verifies this implementation.
+  * `child` is a struct of the caller's columns; `order` is a sort spec
+  * over that struct's fields as plain (field, direction) data — never a
+  * Scala `Ordering` or closure — so two constructions of the same query
+  * are canonically equal and share CacheManager entries (a `udaf` over a
+  * typed Aggregator is not: its encoder breaks `sameResult`). Rows compare
+  * with Spark's own row ordering (`SortOrder` defaults: ascending nulls
+  * first, descending nulls last). The result is `array<struct>` in rank
+  * order with the caller's field names; the k-th element, a re-rank or a
+  * vote over the survivors are ordinary column expressions on it.
+  *
+  * Every consumer's order ends in an id unique within its group, so the
+  * order is total and which of two tied rows survives can never matter.
   */
+case class BoundedTopK(
+    child: Expression,
+    k: Int,
+    order: Seq[(String, SortDirection)],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[PriorityQueue[InternalRow]]
+  with UnaryLike[Expression] {
+
+  require(k >= 1, s"k must be >= 1, got $k")
+
+  private def rowType: StructType = child.dataType.asInstanceOf[StructType]
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case st: StructType =>
+      val bad = order.map(_._1).filterNot(f =>
+        st.fieldNames.contains(f) && RowOrdering.isOrderable(st(f).dataType))
+      if (bad.isEmpty) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"top_k: no orderable field ${bad.mkString(", ")} in ${st.catalogString}")
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"top_k expects a struct, got ${other.catalogString}")
+  }
+
+  /** Better rows compare lower. */
+  @transient private lazy val ord: Ordering[InternalRow] =
+    new InterpretedOrdering(order.map { case (f, dir) =>
+      val i = rowType.fieldIndex(f)
+      SortOrder(BoundReference(i, rowType(i).dataType, rowType(i).nullable), dir)
+    })
+
+  /** Head = the worst kept row. */
+  override def createAggregationBuffer(): PriorityQueue[InternalRow] =
+    new PriorityQueue[InternalRow](k, ord.reverse)
+
+  /** Whether `row` enters the heap, evicting the worst when full. The
+    * strict short-circuit: a row worse than a full heap's worst exits on
+    * one comparison, which is how most rows of a large group leave. */
+  private def admit(heap: PriorityQueue[InternalRow], row: InternalRow): Boolean =
+    if (heap.size < k) true
+    else if (ord.compare(row, heap.peek) > 0) false
+    else { heap.poll(); true }
+
+  override def update(heap: PriorityQueue[InternalRow],
+      input: InternalRow): PriorityQueue[InternalRow] = {
+    val row = child.eval(input).asInstanceOf[InternalRow]
+    // copy only admitted rows: the struct may point into the input's buffer
+    if (row != null && admit(heap, row)) heap.add(row.copy())
+    heap
+  }
+
+  override def merge(a: PriorityQueue[InternalRow],
+      b: PriorityQueue[InternalRow]): PriorityQueue[InternalRow] = {
+    b.forEach(r => if (admit(a, r)) a.add(r))
+    a
+  }
+
+  override def eval(heap: PriorityQueue[InternalRow]): Any =
+    new GenericArrayData(heap.asScala.toArray.sorted(ord).toArray[Any])
+
+  @transient private lazy val bufferProj =
+    UnsafeProjection.create(Array[DataType](ArrayType(rowType, containsNull = false)))
+
+  override def serialize(heap: PriorityQueue[InternalRow]): Array[Byte] =
+    bufferProj(InternalRow(new GenericArrayData(heap.asScala.toArray[Any]))).getBytes
+
+  override def deserialize(bytes: Array[Byte]): PriorityQueue[InternalRow] = {
+    val heap = createAggregationBuffer()
+    val row = new UnsafeRow(1)
+    row.pointTo(bytes, bytes.length)
+    val rows = row.getArray(0)
+    (0 until rows.numElements()).foreach(i =>
+      heap.add(rows.getStruct(i, rowType.length)))
+    heap
+  }
+
+  override def dataType: DataType = ArrayType(child.dataType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "top_k"
+  override def withNewMutableAggBufferOffset(offset: Int): BoundedTopK =
+    copy(mutableAggBufferOffset = offset)
+  override def withNewInputAggBufferOffset(offset: Int): BoundedTopK =
+    copy(inputAggBufferOffset = offset)
+  override protected def withNewChildInternal(newChild: Expression): BoundedTopK =
+    copy(child = newChild)
+}
+
 object TopK {
 
   val K = 5
 
-  /** The one bounded-top-k Aggregator, generic in the row type and order.
-    * Buffer is a ≤k sorted list; reduce/merge re-sort a ≤k+1 / ≤2k list —
-    * O(k log k) per row with tiny constants at the k this engine uses.
-    * Both concrete orders below share this single implementation so an
-    * encoder or insertion fix can never be applied to one and missed on
-    * the other. */
-  class BoundedTopK[T: scala.reflect.runtime.universe.TypeTag](
-      k: Int, ord: Ordering[T]) extends Aggregator[T, List[T], Seq[T]] {
-    override def zero: List[T] = Nil
-    // Short-circuit (r19, the BoundedKth pattern): a row sorting STRICTLY
-    // after a full buffer's worst can never enter the top-k — most rows of
-    // a large group exit on this one comparison instead of paying the
-    // O(k log k) re-sort (the sort was ~half the ANN tiers' task time).
-    // STRICT, not lteq: on a tie with the worst, the stable sort path
-    // keeps the NEW element (prepended) — rows tying the boundary must
-    // still take that path so results stay bit-identical.
-    override def reduce(b: List[T], a: T): List[T] =
-      if (b.lengthCompare(k) >= 0 && ord.compare(b.last, a) < 0) b
-      else (a :: b).sorted(ord).take(k)
-    override def merge(x: List[T], y: List[T]): List[T] =
-      (x ++ y).sorted(ord).take(k)
-    override def finish(b: List[T]): Seq[T] = b.sorted(ord)
-    override def bufferEncoder: Encoder[List[T]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[T]]()
-    override def outputEncoder: Encoder[Seq[T]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[T]]()
-  }
-
-  /** The k-th BEST element under `ord` (the boundary of the top-k set), as
-    * a single row instead of k collected rows — the shape a selection
-    * threshold wants: "keep the top ⌈frac·N⌉" becomes one bounded-heap
-    * aggregate, one collected scalar, one broadcast filter — no global
-    * sort, no single-partition window, no k-row driver collect. Same
-    * bounded buffer and map-side combine as [[BoundedTopK]], plus a
-    * short-circuit: a row no better than the current k-th never touches
-    * the buffer, so the common-case reduce is one comparison.
-    *
-    * `finish` on fewer than k total rows returns the WORST row seen — a
-    * threshold that admits everything, which is exactly right when
-    * ⌈frac·N⌉ ≥ N. Callers guard the zero-row case (no threshold exists).
-    * Buffers are O(k): for large selections, bracket the boundary with a
-    * rank-guaranteed quantile sketch first and run this heap over the
-    * narrow refine band only — `Curation.dsirWeights` is the pattern
-    * (sketch brackets ⇒ k′ = k − definitely-selected ≈ εN seats). */
-  class BoundedKth[T: scala.reflect.runtime.universe.TypeTag](
-      k: Int, ord: Ordering[T]) extends Aggregator[T, List[T], T] {
-    require(k >= 1, s"k must be >= 1, got $k")
-    override def zero: List[T] = Nil
-    override def reduce(b: List[T], a: T): List[T] =
-      if (b.lengthCompare(k) >= 0 && ord.lteq(b.last, a)) b
-      else (a :: b).sorted(ord).take(k)
-    override def merge(x: List[T], y: List[T]): List[T] =
-      (x ++ y).sorted(ord).take(k)
-    override def finish(b: List[T]): T = b.last
-    override def bufferEncoder: Encoder[List[T]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[T]]()
-    override def outputEncoder: Encoder[T] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[T]()
-  }
-
-  /** (hash, doc_id) ascending — the deterministic sample-rank order the
-    * stratified/cluster samplers draw with: the k smallest
-    * (xxhash64(doc_id, seed), doc_id) per group IS the membership the
-    * window form `row_number().over(orderBy(h, doc_id)) <= k` selects,
-    * without ever sorting a whole group in one task. */
-  case class DocH(h: Long, doc_id: Long)
-  object DocH {
-    val ord: Ordering[DocH] = Ordering.by(d => (d.h, d.doc_id))
-  }
-
-  class DocHTopKAgg(k: Int) extends BoundedTopK[DocH](k, DocH.ord)
-
-  /** (log-weight, doc_id) — DSIR's selection order: weight DESC, doc_id
-    * ASC tiebreak (identical to the oracle's ROW_NUMBER ordering). */
-  case class DocW(lw: Double, doc_id: Long)
-  object DocW {
-    val ord: Ordering[DocW] = Ordering.by(d => (-d.lw, d.doc_id))
-  }
-
-  class DocKthAgg(k: Int) extends BoundedKth[DocW](k, DocW.ord)
-
-  /** (sortTs, id, payload) — the id doubles as the deterministic tiebreak. */
-  case class Item(ts: Long, id: Long, value: Double)
-
-  class TopKAgg(k: Int)
-    extends BoundedTopK[Item](k, Ordering.by(i => (-i.ts, -i.id)))
-
-  /** (score DESC, id ASC) bounded top-k — the ANN tiers' re-rank order.
-    * The brute tier's old `row_number() over (partition by q_id)` re-rank
-    * put ALL N scored rows of a query into one partition for a full sort —
-    * at 100× scale, nQueries single-task full-corpus sorts; this keeps the
-    * scan distributed and the shuffle k-bounded. Field names match the ANN
-    * output schema so consumers project the exploded struct directly. */
-  case class Scored(vec_id: Long, cosine: Double)
-
-  class ScoreTopKAgg(k: Int)
-    extends BoundedTopK[Scored](k, Ordering.by(s => (-s.cosine, s.vec_id)))
-
-  /** Candidate row of the fused two-stage re-rank (r19): the stage-1
-    * approximate score (ADC / int8 dot) AND the exact rounded cosine ride
-    * together as three primitive scalars. The first fused form carried the
-    * candidate's float embedding through the heap instead (ScoredEmb) and
-    * computed cosine on the m survivors — identical decisions, but every
-    * scored row paid the encoder's array→Seq conversion on a dim-sized
-    * payload and the survivors paid a second udaf aggregation pass.
-    * Computing the cosine INLINE (same `round(cosine_sim, 6)` expression,
-    * same emb values — exact same numbers) makes the scored row 24 bytes
-    * and the whole tail ONE bounded aggregation. */
-  case class Scored2(vec_id: Long, qscore: Double, cosine: Double)
-
-  /** The fused tail: keep the top-m candidates per query by stage-1 score
-    * — exactly [[ScoreTopKAgg]]'s (score DESC, vec_id ASC) decisions —
-    * then finish by re-ranking those m survivors by exact cosine through
-    * the SAME (cosine DESC, vec_id ASC) order the old second-stage heap
-    * used, cut to k. One ObjectHashAggregate, one exchange, buffer
-    * m-bounded (3 scalars per entry). */
-  class RerankTopKAgg(m: Int, k: Int)
-      extends Aggregator[Scored2, List[Scored2], Seq[Scored]] {
-    private val stage1: Ordering[Scored2] = Ordering.by(s => (-s.qscore, s.vec_id))
-    override def zero: List[Scored2] = Nil
-    // same strict short-circuit as [[BoundedTopK]]: losers exit on one
-    // comparison, boundary ties still take the stable-sort path
-    override def reduce(b: List[Scored2], a: Scored2): List[Scored2] =
-      if (b.lengthCompare(m) >= 0 && stage1.compare(b.last, a) < 0) b
-      else (a :: b).sorted(stage1).take(m)
-    override def merge(x: List[Scored2], y: List[Scored2]): List[Scored2] =
-      (x ++ y).sorted(stage1).take(m)
-    override def finish(b: List[Scored2]): Seq[Scored] =
-      b.sortBy(s => (-s.cosine, s.vec_id)).take(k)
-        .map(s => Scored(s.vec_id, s.cosine))
-    override def bufferEncoder: Encoder[List[Scored2]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[Scored2]]()
-    override def outputEncoder: Encoder[Seq[Scored]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Scored]]()
-  }
-
-  /** Scored neighbor with its label riding as an order-inert payload —
-    * the label-noise audit's fused shape (r19). Labels keep the
-    * embeddings table's native INT type so the vote tiebreak is the same
-    * integer order the relational form used. */
-  case class ScoredLab(vec_id: Long, cosine: Double, nbr_label: Int,
-      q_label: Int)
-
-  /** The label-vote result of one anchor's k nearest neighbors. */
-  case class LabelVote(majority_label: Int, majority_count: Long,
-      n_agree: Long)
-
-  /** Fused kNN + majority vote (r19): keep the k nearest neighbors per
-    * anchor through [[ScoreTopKAgg]]'s exact (cosine DESC, vec_id ASC)
-    * heap order — the labels are payload — then finish() runs the vote the
-    * old plan spelled as a second corpus scan + broadcast join + two keyed
-    * aggregations: count per neighbor label, majority = max count with
-    * smallest-label tiebreak (native int order — exactly what
-    * min(struct(-cnt, nbr_label)) selected), n_agree = neighbors sharing
-    * the anchor's own label. */
-  class LabelVoteAgg(k: Int)
-      extends Aggregator[ScoredLab, List[ScoredLab], LabelVote] {
-    private val ord: Ordering[ScoredLab] = Ordering.by(s => (-s.cosine, s.vec_id))
-    override def zero: List[ScoredLab] = Nil
-    override def reduce(b: List[ScoredLab], a: ScoredLab): List[ScoredLab] =
-      if (b.lengthCompare(k) >= 0 && ord.compare(b.last, a) < 0) b
-      else (a :: b).sorted(ord).take(k)
-    override def merge(x: List[ScoredLab], y: List[ScoredLab]): List[ScoredLab] =
-      (x ++ y).sorted(ord).take(k)
-    override def finish(b: List[ScoredLab]): LabelVote = {
-      val cnts = b.groupBy(_.nbr_label).view.mapValues(_.size.toLong).toSeq
-      val (mjLabel, mjCnt) = cnts.reduceLeft { (a, c) =>
-        if (c._2 > a._2 || (c._2 == a._2 && c._1 < a._1)) c else a
-      }
-      val qLabel = b.head.q_label // constant within the group
-      LabelVote(mjLabel, mjCnt,
-        cnts.collectFirst { case (l, n) if l == qLabel => n }.getOrElse(0L))
-    }
-    override def bufferEncoder: Encoder[List[ScoredLab]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[ScoredLab]]()
-    override def outputEncoder: Encoder[LabelVote] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[LabelVote]()
-  }
-
-  /** (value ASC, event_id ASC) bounded top-k with the row's coarse key
-    * riding as payload — the rank-battery's heap (r19): the first 8 rows
-    * of the total (value, event_id) order per type, without sorting the
-    * whole partition in one task. */
-  case class RankItem(event_id: Long, value: Double, f: Long)
-
-  class RankTopKAgg(k: Int)
-    extends BoundedTopK[RankItem](k, Ordering.by(i => (i.value, i.event_id)))
+  /** The k best `row`s per group under `order` (field → direction over
+    * the struct's own field names), best first: `array<struct>`. */
+  def top_k(row: Column, k: Int, order: (String, SortDirection)*): Column =
+    GraftBridge.column(
+      BoundedTopK(GraftBridge.expression(row), k, order).toAggregateExpression())
 
   /** Latest-K events per event_type — identical semantics (and oracle) to
-    * the window-based `q_tail_n_per_key`, different physics. */
-  def tailKHeap(spark: SparkSession, dir: String, k: Int = K): DataFrame = {
-    val topk = udaf(new TopKAgg(k), Encoders.product[Item])
+    * the window-based `q_tail_n_per_key`, different physics. Order
+    * (ts DESC, event_id DESC); event_id is unique, so the order is total. */
+  def tailKHeap(spark: SparkSession, dir: String, k: Int = K): DataFrame =
     Tables.events(spark, dir)
-      .select(col("event_type"),
-        struct(
-          unix_micros(col("ts")).as("ts"),
-          col("event_id").as("id"),
-          col("value").as("value")).as("item"))
       .groupBy("event_type")
-      .agg(topk(col("item.ts"), col("item.id"), col("item.value")).as("top"))
+      .agg(top_k(struct(col("ts"), col("event_id"), col("value")), k,
+        "ts" -> Descending, "event_id" -> Descending).as("top"))
       .select(col("event_type"), posexplode(col("top")).as(Seq("pos", "it")))
-      .select(col("event_type"), col("it.id").as("event_id"),
+      .select(col("event_type"), col("it.event_id").as("event_id"),
         (col("pos") + 1).cast("int").as("rn"),
-        date_format(timestamp_micros(col("it.ts")), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
+        date_format(col("it.ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
         col("it.value").as("value"))
-  }
 }

@@ -1,9 +1,11 @@
 package graft.serve
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Ascending
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.TopK
 
 /** User-behavior analytics over the event stream — the cohort/funnel pair
   * every product dashboard wants next to the Lens battery. Both are pure
@@ -158,10 +160,10 @@ object CohortQueries {
     val ev = Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"), col("value"),
         floor(col("value")).cast("long").as("f"))
-    val top8 = udaf(new graft.operators.TopK.RankTopKAgg(8),
-      org.apache.spark.sql.Encoders.product[graft.operators.TopK.RankItem])
+    // (value ASC, event_id ASC): event_id is unique, so the order is total
     val top = ev.groupBy("event_type")
-      .agg(top8(col("event_id"), col("value"), col("f")).as("top"))
+      .agg(TopK.top_k(struct(col("event_id"), col("value"), col("f")), 8,
+        "value" -> Ascending, "event_id" -> Ascending).as("top"))
       .select(col("event_type"), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("event_type"), (col("pos") + 1).cast("int").as("rn"),
         col("s.event_id").as("event_id"), col("s.f").as("f"))

@@ -64,6 +64,20 @@ class DedupSpec extends AnyFunSuite {
       "simhash pair-set plans must be canonically equal for cache sharing")
   }
 
+  test("top-k heap consumers: two constructions share one cache entry") {
+    // the same silent cache-miss class for the bounded-heap family: its
+    // typed-Aggregator udaf form was never sameResult across constructions;
+    // the native top_k aggregate carries its sort spec as plain data
+    val a = graft.operators.TopK.tailKHeap(spark, sf).queryExecution.analyzed
+    val b = graft.operators.TopK.tailKHeap(spark, sf).queryExecution.analyzed
+    assert(a.sameResult(b),
+      "tail-K heap plans must be canonically equal for cache sharing")
+    val p = graft.serve.CohortQueries.rankBattery(spark, sf).queryExecution.analyzed
+    val q = graft.serve.CohortQueries.rankBattery(spark, sf).queryExecution.analyzed
+    assert(p.sameResult(q),
+      "rank-battery plans must be canonically equal for cache sharing")
+  }
+
   test("simhash: identical docs get identical signatures, near-dups close") {
     val sigs = Dedup.simhashSignatures(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -386,7 +400,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("brute-force re-rank plan: bounded heap, no single-partition window sort") {
     // the 100× criterion for the brute tier: the per-query re-rank must be
-    // the map-side-combinable top-k Aggregator (partial + final
+    // the map-side-combinable top-k aggregate (partial + final
     // ObjectHashAggregate, ≤ k rows shuffled per partition per query) —
     // never row_number() over (partition by q_id), which hashes every
     // scored corpus row of a query into ONE partition and full-sorts it

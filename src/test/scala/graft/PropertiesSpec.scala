@@ -114,6 +114,45 @@ class PropertiesSpec extends AnyFunSuite {
     }
   }
 
+  // ------------------------------------------------------------ top-k
+  test("top_k kernel: k best per group across partitions ≡ a local sort") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
+    // few distinct scores, so primary-key ties are common and only the
+    // unique id breaks them; k ranges from 1 to above any group's size
+    val rowsGen = for {
+      n <- Gen.chooseNum(1, 60)
+      groups <- Gen.listOfN(n, Gen.chooseNum(0, 2))
+      scores <- Gen.listOfN(n, Gen.chooseNum(0, 4))
+    } yield groups.zip(scores).zipWithIndex.map { case ((g, s), id) =>
+      (g, s / 2.0, id.toLong, s"p$id") }
+    val kGen = Gen.oneOf(1, 2, 5, 64)
+    forAll(rowsGen, kGen) { (rows, k) =>
+      // three partitions: groups span them, so partial buffers are
+      // serialized through the exchange and merged
+      val df = rows.toDF("g", "score", "id", "p").repartition(3)
+      assert(df.rdd.getNumPartitions >= 2)
+      val got = df.groupBy("g")
+        .agg(graft.operators.TopK.top_k(struct(col("id"), col("score"), col("p")),
+          k, "score" -> Descending, "id" -> Ascending).as("top"))
+        .select(col("g"), col("top.id"), col("top.p"),
+          element_at(col("top"), -1)("id"))
+        .collect().map(r => r.getInt(0) ->
+          (r.getSeq[Long](1), r.getSeq[String](2), r.getLong(3))).toMap
+      val want = rows.groupBy(_._1).map { case (g, rs) =>
+        val ranked = rs.sortBy(r => (-r._2, r._3)).map(_._3)
+        val top = ranked.take(k)
+        g -> (top, top.map(id => s"p$id"), top.last)
+      }
+      assert(got == want, s"k=$k rows=$rows")
+      // the k-th of a group smaller than k is its worst row
+      rows.groupBy(_._1).foreach { case (g, rs) =>
+        if (rs.size < k)
+          assert(got(g)._3 == rs.sortBy(r => (-r._2, r._3)).last._3)
+      }
+    }
+  }
+
   // ------------------------------------------------------------ quality
   test("token count ≥ 0 and 0 iff blank") {
     import spark.implicits._

@@ -139,7 +139,7 @@ class ScaleSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
       s"centroid ranking fell back to a cross join:\n$plan")
     assert(plan.contains("BroadcastHashJoin"), s"cell probe must broadcast the query list:\n$plan")
-    assert(plan.contains("scoretopkagg") && !plan.contains("Window"),
+    assert(plan.contains("top_k") && !plan.contains("Window"),
       s"top-k must be the bounded-heap aggregate, not a rank window:\n$plan")
   }
 
@@ -390,7 +390,7 @@ class ScaleSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange SinglePartition"),
       s"single-partition funnel crept back in:\n$plan")
     // and the heap aggregate is partially aggregated (map-side combine)
-    assert(plan.contains("partial_dochtopkagg"),
+    assert(plan.contains("partial_top_k"),
       s"expected a partial (map-side) heap aggregate:\n$plan")
   }
 

@@ -1,10 +1,15 @@
 #!/usr/bin/env python3
 """Local replica of the driver's t2 correctness gate.
 
-Runs after `sbt "runMain graft.Verify <sfDir> <outDir>"`:
+Runs after `sbt "runMain graft.Verify <sfDir> <outDir> [q_a,q_b,...]"`:
 for each query result parquet in <outDir>, runs the matching oracle SQL in
 DuckDB over the sfDir tables and compares (columns sorted by name, rows
 sorted, exact value match — conservative vs the driver's hash).
+
+A filtered Verify run writes `oracle_sql_filtered.json` instead of
+`oracle_sql.json`; that map is read when the full one is absent and the
+summary line says "(filtered)". Every query Verify lists in
+`verify_failures.json` counts as FAIL, whether or not it has an oracle.
 """
 import duckdb, glob, json, os, sys
 
@@ -16,9 +21,22 @@ for p in sorted(glob.glob(f"{sf_dir}/*.parquet")):
     name = os.path.basename(p).replace(".parquet", "")
     con.sql(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
-oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+full_map = f"{out_dir}/oracle_sql.json"
+filtered = not os.path.exists(full_map)
+oracle = json.load(open(f"{out_dir}/oracle_sql_filtered.json" if filtered else full_map))
+failures_file = f"{out_dir}/verify_failures.json"
+failures = json.load(open(failures_file)) if os.path.exists(failures_file) else {}
 n_pass = n_fail = 0
+
+# queries that threw in Verify: their result directory is absent (or stale
+# from an earlier run), so they are failures whatever the checks below see
+for name in sorted(failures):
+    print(f"FAIL {name}: verify: {failures[name]}")
+    n_fail += 1
+
 for name in sorted(oracle):
+    if name in failures:
+        continue
     sql = oracle[name]
     res_glob = f"{out_dir}/{name}/*.parquet"
     try:
@@ -50,7 +68,7 @@ for name in sorted(oracle):
 # queries with no oracle: rows-only check
 for d in sorted(glob.glob(f"{out_dir}/q_*")):
     name = os.path.basename(d)
-    if name in oracle or not os.path.isdir(d):
+    if name in oracle or name in failures or not os.path.isdir(d):
         continue
     try:
         n = con.sql(f"SELECT COUNT(*) FROM read_parquet('{d}/*.parquet')").fetchone()[0]
@@ -62,5 +80,5 @@ for d in sorted(glob.glob(f"{out_dir}/q_*")):
         print(f"FAIL {name} (rows-only): {e}")
         n_fail += 1
 
-print(f"\n{n_pass} pass / {n_fail} fail")
+print(f"\n{n_pass} pass / {n_fail} fail" + (" (filtered)" if filtered else ""))
 sys.exit(1 if n_fail else 0)
