@@ -344,16 +344,9 @@ object Bench {
     * design, and without `warmup_sec` in the artifact that relocation could
     * silently shrink the timed denominator round over round. Informational,
     * threshold-free — BenchTaintSpec pins the accounting. */
-  private def warmup(spark: SparkSession,
-      sfDir: String): Seq[(String, Double)] = {
-    val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def touch(tag: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      try { df.queryExecution.toRdd.count(); () }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup $tag failed: $e") }
-      timings += tag -> (System.nanoTime() - t0) / 1e9
-    }
+  private def warmup(spark: SparkSession, sfDir: String): WarmupLog = {
+    val log = new WarmupLog
+    import log.touch
     import graft.operators._
     // session + codegen + file-index spin-up (the original warm-up)
     touch("entry")(SparkEntry.entry(spark))
@@ -446,7 +439,24 @@ object Bench {
     touch("ivf_stored_index")(Similarity.semanticProbeStoredQuery(spark, sfDir))
     touch("lm_stored_model")(NgramLm.scoreStoredQuery(spark, sfDir))
     touch("rag_stored_index")(Rag.ragRetrieveStored(spark, sfDir))
-    timings.toSeq
+    log
+  }
+
+  /** The warm-up's record: every touch's wall seconds, in order, and the
+    * tags whose touch threw (`warmup_failed` in both JSON lines). A failed
+    * touch is isolated — the next one still runs — and the seconds it
+    * spent still count toward `warmup_sec`. */
+  private[graft] final class WarmupLog {
+    val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def touch(tag: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
+      val t0 = System.nanoTime()
+      try { df.queryExecution.toRdd.count(); () }
+      catch { case e: Throwable =>
+        failed += tag
+        System.err.println(s"[bench] warmup $tag failed: $e") }
+      timings += tag -> (System.nanoTime() - t0) / 1e9
+    }
   }
 
   /** Sum of the per-touch warm-up seconds, 3 dp — the artifact's
@@ -493,7 +503,8 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val warmupTouches = warmup(spark, sfDir)
+    val warmupLog = warmup(spark, sfDir)
+    val warmupTouches = warmupLog.timings.toSeq
     // optional comma-separated name filter for targeted perf iteration —
     // the driver never sets it, so the per-round artifact always covers the
     // full registry. Filtered artifacts are STAMPED as such below: a
@@ -713,7 +724,8 @@ object Bench {
       s""""total_truth_twins":$totalTwins,"clean_total_linear":$cleanTotalLinear,""" +
       s""""filtered":$filtered,"query_count":${results.size},""" +
       s""""registry_count":${SparkEntry.queries.size},""" +
-      s""""warmup_sec":${warmupTotal(warmupTouches)}"""
+      s""""warmup_sec":${warmupTotal(warmupTouches)},""" +
+      s""""warmup_failed":${jArr(warmupLog.failed.toSeq)}"""
     // per-query detail first, short summary LAST: the driver tail-captures
     // the END of stdout, so the short line must be the final one to survive
     // truncation. Exactly one line carries "metric":"total" (a

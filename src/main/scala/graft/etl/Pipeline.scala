@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Forecast, SessionMemo}
-import graft.serve.Sink
+import graft.serve.{Sink, TxTable}
 
 /** The reference's full daily DAG as ONE entry point — the exact task order
   * of `airflow/dags/yahoo_finance_pipeline.py:110-112`:
@@ -17,14 +17,17 @@ import graft.serve.Sink
   * `Forecast.forecastGroup` kernel is predict_arima (driven here by the
   * REAL finance-schema series: per-symbol daily closes with the news
   * sentiment exog aligned by date and 0.0-filled, `arima_forecast.py:47`),
-  * and the keyed idempotent `Sink.upsertByKey` is index_data (the ES
-  * deterministic-id bulk upsert, `to_elasticsearch.py:78-98`).
+  * and the keyed idempotent `TxTable.merge` is index_data (the ES
+  * deterministic-id bulk upsert, `to_elasticsearch.py:78-98`, as one
+  * transactional commit per serving table).
   *
   * Every stage boundary is a materialized layer, exactly like the
   * reference's lake (raw JSON → formatted parquet → gold parquet → serving
   * tables), so a failed run resumes by re-running one stage and the serving
-  * upsert is idempotent under re-runs. At scale each stage is a separate
-  * job over partitioned storage; nothing here holds state on the driver.
+  * merge is idempotent under re-runs (each re-run is one more version with
+  * identical rows; earlier versions stay readable). At scale each stage is
+  * a separate job over partitioned storage; nothing here holds state on
+  * the driver.
   */
 object Pipeline {
 
@@ -49,15 +52,15 @@ object Pipeline {
     val predictions = forecastFromFinance(spark, stocks, news)
     predictions.write.mode("overwrite").parquet(s"$root/gold/predictions")
 
-    // 5. index_data — keyed idempotent serving upsert with the ES shapes:
+    // 5. index_data — keyed idempotent serving merge with the ES shapes:
     // doc_id = {symbol}_{date}, ISO timestamps, NaN → null
     val servingCombined = Sink.isoString(
       Sink.withDocId(Sink.nanToNull(spark.read.parquet(s"$root/gold/combined")),
         "symbol", "date"), "latest_news_date")
-    Sink.upsertByKey(spark, servingCombined, s"$root/serving/combined", Seq("doc_id"))
+    TxTable.merge(spark, servingCombined, s"$root/serving/combined", Seq("doc_id"))
     val servingPred = Sink.withDocId(
       spark.read.parquet(s"$root/gold/predictions"), "symbol", "date", "type")
-    Sink.upsertByKey(spark, servingPred, s"$root/serving/predictions", Seq("doc_id"))
+    TxTable.merge(spark, servingPred, s"$root/serving/predictions", Seq("doc_id"))
 
     Seq(
       StageCounts("format", "stocks", stocks.count()),
@@ -66,9 +69,9 @@ object Pipeline {
       StageCounts("predict", "predictions",
         spark.read.parquet(s"$root/gold/predictions").count()),
       StageCounts("index", "serving_combined",
-        spark.read.parquet(s"$root/serving/combined").count()),
+        TxTable.read(spark, s"$root/serving/combined").count()),
       StageCounts("index", "serving_predictions",
-        spark.read.parquet(s"$root/serving/predictions").count()))
+        TxTable.read(spark, s"$root/serving/predictions").count()))
   }
 
   /** predict_arima's input contract on the finance schema: one point per
@@ -97,17 +100,17 @@ object Pipeline {
   private val runMemo = new SessionMemo[String, Seq[StageCounts]]
 
   /** Registered-query facade: run the DAG once per session (idempotent on
-    * re-entry — the serving layer is a keyed upsert) and summarize the
+    * re-entry — the serving layer is a keyed merge) and summarize the
     * SERVING tables per symbol: actual/forecast row counts, date ranges,
     * the CI ordering contract, and whether the symbol survived the combine
     * join with company_info (the TSLA orphan doesn't). Fully deterministic
     * (fixtures are content-versioned), so the oracle states the expected
     * table as literals — a drift in ANY stage of the DAG lands here. */
   def servingSummaryQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = "/tmp/graft_pipeline"
+    val root = graft.TmpRoots.root("graft_pipeline")
     runMemo.getOrElseUpdate(spark, root)(run(spark, root))
-    val pred = spark.read.parquet(s"$root/serving/predictions")
-    val combined = spark.read.parquet(s"$root/serving/combined")
+    val pred = TxTable.read(spark, s"$root/serving/predictions")
+    val combined = TxTable.read(spark, s"$root/serving/combined")
     val enriched = combined.groupBy("symbol").agg(
       count(lit(1)).as("n_days"),
       max(col("name").isNotNull).as("has_company_info"),

@@ -1351,8 +1351,8 @@ object Curation {
       alpha: Double = 0.01, keepFrac: Double = 0.2): DataFrame = {
     val docs = Tables.spread(spark, Tables.documents(spark, dir))
     // ONE feature build serves LM training AND scoring (the explode +
-    // hash is the query's dominant cost — ProfileDsir puts it at ~60% of
-    // the end-to-end time). Since r18 the compressed table is the SHARED
+    // hash is the query's dominant cost, ~60% of the end-to-end time
+    // when profiled at sf0.1). Since r18 the compressed table is the SHARED
     // session memo [[corpusDsirFeatures]] (per-ingest artifact, also read
     // by the streaming gate's ratio training), so it is built once per
     // session, not once per call — and deliberately NOT unpersisted here

@@ -55,9 +55,9 @@ object Dedup {
     * the ingest-time signature probe. Hashes the n token columns DIRECTLY
     * (per-token hash + windowed long-fold) instead of materializing
     * shingle strings first — skipping the concat_ws string build halved
-    * the dominant pipeline stage (8.1 s → ~4 s at sf0.1,
-    * tools/ProfileDedup). Since r16 the hash family is the PORTABLE
-    * polynomial combiner (`HashExpressions.poly_combine` over
+    * the dominant pipeline stage (8.1 s → ~4 s at sf0.1). Since r16 the
+    * hash family is the PORTABLE polynomial combiner
+    * (`HashExpressions.poly_combine` over
     * `poly_token_hash` values — the SimHash precedent) instead of
     * xxhash64: exact HUGEINT mod-2^64 arithmetic in DuckDB, which is what
     * upgrades the whole MinHash-LSH family from precision/recall brackets

@@ -626,20 +626,6 @@ object TxTable {
     throw new java.io.IOException(s"TxTable: lost $MaxCommitRetries version races at $path")
   }
 
-  /** MERGE INTO by key: rows of `updates` replace same-key rows, everything
-    * else is retained — `Sink.upsertByKey` semantics as a table-format
-    * commit. FILE-PRUNED, the property that makes MERGE affordable at
-    * 100 TB: a broadcast semi-join of the update keys against the base
-    * snapshot (tagged with `input_file_name`) finds the data files that
-    * contain a matched key; only THOSE files are rewritten (non-matching
-    * rows preserved, updates unioned in) — every untouched file is carried
-    * into the new manifest verbatim, so merge cost scales with the touched
-    * fraction, not the table (Delta's matched-file rewrite, minus
-    * stats-based pruning). The read-merge-stage phase runs OUTSIDE the
-    * commit point; on a version conflict the merge is recomputed against
-    * the new snapshot (optimistic concurrency — no lock, no lost update).
-    * With a versionCol the latest same-key row wins; re-running the same
-    * merge is idempotent (new version, identical rows). */
   /** Test seam: invoked once after a merge stages its rewrite, before its
     * first commit attempt — lets specs interleave a racing writer at the
     * exact window optimistic concurrency must survive. No-op in production. */
@@ -668,7 +654,41 @@ object TxTable {
       .flatMap(v => resolveTxns(fs, path, v).get(appId))
   }
 
-  /** `expectedBase = Some(v)` turns the merge into a compare-and-swap: it
+  /** Collapse duplicate keys WITHIN a batch — deterministic-id upsert
+    * semantics (the ES sink's `{symbol}_{date}` ids collapse same-key docs
+    * to one, `to_elasticsearch.py:78`). With a versionCol the LATEST row
+    * wins (ES last-write-wins); without one the survivor is arbitrary —
+    * only acceptable when same-key rows are identical. */
+  private def collapseByKey(updates: DataFrame, keys: Seq[String],
+      versionCol: Option[String]): DataFrame = versionCol match {
+    case Some(v) =>
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(keys.map(col): _*).orderBy(col(v).desc)
+      updates.withColumn("__v_rn", row_number().over(w))
+        .filter(col("__v_rn") === 1).drop("__v_rn")
+    case None => updates.dropDuplicates(keys)
+  }
+
+  /** MERGE INTO by key — the serving layer's one keyed upsert (the
+    * reference's deterministic-id ES bulk upsert, `to_elasticsearch.py:78`,
+    * as a table-format commit): rows of `updates` replace same-key rows,
+    * everything else is retained; a merge into an absent table is its
+    * first commit. FILE-PRUNED, the property that makes MERGE affordable at
+    * 100 TB: a broadcast semi-join of the update keys against the base
+    * snapshot (tagged with `input_file_name`) finds the data files that
+    * contain a matched key; only THOSE files are rewritten (non-matching
+    * rows preserved, updates unioned in) — every untouched file is carried
+    * into the new manifest verbatim, so merge cost scales with the touched
+    * fraction, not the table (Delta's matched-file rewrite, minus
+    * stats-based pruning). The read-merge-stage phase runs OUTSIDE the
+    * commit point; on a version conflict the merge is recomputed against
+    * the new snapshot (optimistic concurrency — no lock, no lost update).
+    * With a versionCol the latest same-key row wins; re-running the same
+    * merge is idempotent (new version, identical rows). Files in `path`
+    * that no commit names (say, a plain parquet table written there
+    * before) are neither read nor touched.
+    *
+    * `expectedBase = Some(v)` turns the merge into a compare-and-swap: it
     * commits ONLY as version v+1, throwing `ConcurrentModificationException`
     * if any other writer claimed a version since the caller read its
     * snapshot at v. The optimistic retry loop inside merge recomputes only
@@ -696,15 +716,18 @@ object TxTable {
       if (batchId <= last)
         return latestVersion(spark, path).getOrElse(
           throw new java.io.FileNotFoundException(s"TxTable at $path has no commits"))
-    val deduped = Sink.collapseByKey(updates, keys, versionCol)
+    val deduped = collapseByKey(updates, keys, versionCol)
     val updKeys = deduped.select(keys.map(col): _*).distinct()
-    // bounds of the update batch's first key, for the stats pre-filter
-    // below (one tiny agg; multi-key merges still prune soundly on the
-    // leading key alone)
-    val keyBoundsRow = updKeys.agg(
-      min(col(keys.head)).as("lo"), max(col(keys.head)).as("hi")).first()
-    val (updLo, updHi) =
-      (TxStats.toComparable(keyBoundsRow.get(0)), TxStats.toComparable(keyBoundsRow.get(1)))
+    // bounds of the update batch's first key, for the stats pre-filter on
+    // an existing base and the disjointness check after a lost race (one
+    // tiny agg; multi-key merges still prune soundly on the leading key
+    // alone). Lazy: a merge into an absent table reads neither, so its
+    // first commit starts no bounds job
+    lazy val (updLo, updHi) = {
+      val row = updKeys.agg(
+        min(col(keys.head)).as("lo"), max(col(keys.head)).as("hi")).first()
+      (TxStats.toComparable(row.get(0)), TxStats.toComparable(row.get(1)))
+    }
     var attempt = 0
     var firstStage = true
     // the staged rewrite (and what it depends on) survives across LOGICALLY
@@ -804,13 +827,18 @@ object TxTable {
             // evolution — retained rows of rewritten files get null, the
             // snapshotSchema contract); without these a first evolving
             // merge crashes, and a mixed-schema touched set would silently
-            // clip to its first file's fields
+            // clip to its first file's fields. The USING join moves the keys
+            // to the front; the select puts the table's column order back,
+            // so a rewritten file reads like the one it replaces
             val rewrite =
               if (touched.isEmpty) deduped
-              else spark.read.option("mergeSchema", "true")
-                .parquet(touched.map(e => s"$path/${e.rel}"): _*)
-                .join(updKeys, keys, "left_anti")
-                .unionByName(deduped, allowMissingColumns = true)
+              else {
+                val kept = spark.read.option("mergeSchema", "true")
+                  .parquet(touched.map(e => s"$path/${e.rel}"): _*)
+                kept.join(updKeys, keys, "left_anti")
+                  .select(kept.columns.map(kept.col): _*)
+                  .unionByName(deduped, allowMissingColumns = true)
+              }
             (touched.map(_.rel), candidates.map(_.rel).toSet, rewrite)
           case None => (Seq.empty[String], Set.empty[String], deduped)
         }

@@ -18,7 +18,7 @@ import graft.operators.Dedup
   * hits) is micro-batch-scoped, so the deployment wraps the gate in
   * `foreachBatch` and commits each batch's decisions as ONE atomic
   * `TxTable` MERGE — a replayed batch re-merges the same keys and the
-  * table converges (the `upsertStreamTx` idempotency contract). */
+  * table converges (the `upsertStream` idempotency contract). */
 object StreamCurate {
 
   /** Per-document curation decision for one (micro-)batch of new docs

@@ -55,32 +55,15 @@ object StreamFormat {
       .join(broadcast(companyDf.select("symbol", "name", "sector")),
         Seq("symbol"), "left")
 
-  /** Streaming serving path: foreachBatch → keyed upsert, the streaming
-    * twin of the reference's idempotent ES bulk indexing
-    * (`to_elasticsearch.py:66-80`). Each micro-batch merges by doc id, so
-    * replays are idempotent — exactly-once at the table level. */
-  def upsertStream(spark: SparkSession, rawDir: String, companyDf: org.apache.spark.sql.DataFrame,
-      outPath: String, checkpoint: String): Unit = {
-    val q = enrichedStream(spark, rawDir, companyDf).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val keyed = graft.serve.Sink.withDocId(batch, "symbol", "date")
-        graft.serve.Sink.upsertByKey(batch.sparkSession, keyed, outPath,
-          Seq("doc_id"), versionCol = Some("fetched_at_utc"))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** [[upsertStream]] with a TRANSACTIONAL serving table: each micro-batch
-    * is one atomic TxTable MERGE commit, so a reader never observes a
-    * half-applied batch, every batch is a time-travelable version, and a
-    * replay from a fresh checkpoint converges to the same table state
-    * (MERGE is idempotent per key). This is the streaming form of the
-    * Delta `foreachBatch` + `MERGE INTO` recipe, on the native TxTable. */
-  def upsertStreamTx(spark: SparkSession, rawDir: String,
+  /** Streaming serving path: foreachBatch → keyed TxTable MERGE, the
+    * streaming twin of the reference's idempotent ES bulk indexing
+    * (`to_elasticsearch.py:66-80`). Each micro-batch is one atomic commit
+    * merged by doc id, so a reader never observes a half-applied batch,
+    * every batch is a time-travelable version, and a replay from a fresh
+    * checkpoint converges to the same table state (MERGE is idempotent per
+    * key). This is the streaming form of the Delta `foreachBatch` +
+    * `MERGE INTO` recipe, on the native TxTable. */
+  def upsertStream(spark: SparkSession, rawDir: String,
       companyDf: org.apache.spark.sql.DataFrame,
       tablePath: String, checkpoint: String): Unit = {
     val q = enrichedStream(spark, rawDir, companyDf).writeStream

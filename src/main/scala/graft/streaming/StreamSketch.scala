@@ -21,7 +21,7 @@ import graft.operators.Sketches
   * double-counts on replay, so each micro-batch commits its PARTIAL grid
   * keyed (lang, part_id = batch id) via an idempotent TxTable MERGE — a
   * replayed batch overwrites its own partial, never adds twice (the
-  * `upsertStreamTx` contract). The assembled sketch is the pointwise sum
+  * `upsertStream` contract). The assembled sketch is the pointwise sum
   * over partials, linear in (#languages × #batches) rows of fixed
   * depth×width grids; a compaction that sums partials into one row per
   * language is the same MERGE one step further.

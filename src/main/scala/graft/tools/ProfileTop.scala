@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * the SAME warm session the bench uses — separating "the artifact memo
   * does not cover this" (re-exec stays expensive) from "per-call plan
   * construction dominates" (re-exec is cheap, planning is not) from
-  * "genuinely hot kernel" (everything is execution). ProfileDsir pattern. */
+  * "genuinely hot kernel" (everything is execution). */
 object ProfileTop {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[32]")

@@ -93,6 +93,19 @@ class BenchTaintSpec extends AnyFunSuite {
     assert(Bench.warmupTotal(Seq.fill(10)(("t", 0.0004))) == 0.004)
   }
 
+  test("warmup_failed: a throwing touch is listed and its seconds still count") {
+    val log = new Bench.WarmupLog
+    log.touch("ok")(SparkTestSession.spark.range(3).toDF())
+    log.touch("boom") { Thread.sleep(50); throw new IllegalStateException("boom") }
+    log.touch("after")(SparkTestSession.spark.range(1).toDF())
+    assert(log.failed.toSeq == Seq("boom"))
+    // the failure is isolated: every touch, the failed one included, is timed
+    assert(log.timings.map(_._1).toSeq == Seq("ok", "boom", "after"))
+    val boom = log.timings.collectFirst { case ("boom", s) => s }.get
+    assert(boom >= 0.05, s"the failed touch's seconds were lost: $boom")
+    assert(Bench.warmupTotal(log.timings.toSeq) >= 0.05)
+  }
+
   test("canary kernel: deterministic work, sane timing, min-of-3 sampling") {
     // JIT-warm, then sample: the kernel must take real, repeatable time
     (1 to 5).foreach(_ => Bench.canaryOnce())

@@ -30,8 +30,9 @@ class ParquetSchemaSpec extends AnyFunSuite {
     p.toString
   }
 
-  /** Jobs started from this thread while `body` runs. Nothing here executes
-    * a query, so every counted job is a schema inference. */
+  /** Jobs started from this thread while `body` runs. The read tests
+    * execute no query inside `body`, so every job they count is a schema
+    * inference. */
   private def jobsDuring[A](body: => A): (A, Int) = {
     val sc = spark.sparkContext
     val group = s"parquet-schema-spec-${System.nanoTime()}"
@@ -170,6 +171,20 @@ class ParquetSchemaSpec extends AnyFunSuite {
     Caches.clear(spark)
     assert(jobsDuring(Tables.t(spark, dir, "t"))._2 == 1,
       "Caches.clear must drop the schema memo")
+  }
+
+  test("a first merge into an absent table starts no more jobs than a write") {
+    val updates = Seq((1L, "a"), (2L, "b"), (2L, "b"), (3L, "c")).toDF("k", "v")
+    // without a versionCol the merge collapses keys with dropDuplicates
+    val (_, writeJobs) = jobsDuring(
+      TxTable.write(spark, updates.dropDuplicates("k"), fresh("first_write")))
+    val merged = fresh("first_merge")
+    val (v, mergeJobs) = jobsDuring(TxTable.merge(spark, updates, merged, Seq("k")))
+    assert(v == 0L)
+    assert(mergeJobs <= writeJobs,
+      s"a first merge reads no key bounds: $mergeJobs jobs vs $writeJobs for the write")
+    assert(TxTable.read(spark, merged).as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
   test("a TxTable.read of a known snapshot starts no job before it executes") {

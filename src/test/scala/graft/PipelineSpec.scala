@@ -8,7 +8,7 @@ import graft.streaming.StreamFormat
 import java.nio.file.Files
 
 /** End-to-end pipeline: raw JSON fixtures → Format (Silver) → Combine
-  * (Gold) → keyed serving sink, mirroring the reference DAG
+  * (Gold) → keyed serving merge, mirroring the reference DAG
   * `format_data >> combine_data >> index_data`
   * (`airflow/dags/yahoo_finance_pipeline.py:110-112`). */
 class PipelineSpec extends AnyFunSuite {
@@ -56,41 +56,36 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("full DAG runner: ingest→format→combine→predict→index, idempotent re-run") {
+    import graft.serve.TxTable
     val dagRoot = Files.createTempDirectory("graft_dag").toString
     val first = graft.etl.Pipeline.run(spark, dagRoot)
     val counts = first.map(c => c.table -> c.rows).toMap
     assert(counts("stocks") == 5 * 70 + 70)     // dup partition survives to formatted
     assert(counts("combined") == 5 * 70 + 70)
     assert(counts("predictions") == 5 * (70 + 30)) // every symbol ≥60 rows
-    assert(counts("serving_combined") == 5 * 70)   // doc_id upsert collapses the dup
+    assert(counts("serving_combined") == 5 * 70)   // doc_id merge collapses the dup
     assert(counts("serving_predictions") == 5 * 100)
-    // the index stage is a keyed upsert: re-running the DAG must converge
+    val servingTables = Seq("combined", "predictions").map(t => s"$dagRoot/serving/$t")
+    def rows(path: String, version: Option[Long] = None) =
+      TxTable.read(spark, path, version).collect().map(_.toString).toSet
+    val firstRows = servingTables.map(rows(_))
+    // the index stage is a keyed merge: re-running the DAG must converge,
+    // as exactly one more merge commit per serving table
     val second = graft.etl.Pipeline.run(spark, dagRoot)
     assert(second.map(c => c.table -> c.rows).toMap == counts)
+    servingTables.zip(firstRows).foreach { case (path, before) =>
+      assert(TxTable.history(spark, path).map(h => (h._1, h._2)) ==
+        Seq((1L, "merge"), (0L, "merge")), path)
+      assert(rows(path) == before, s"$path: the re-run changed the serving rows")
+      assert(rows(path, Some(0L)) == before, s"$path: version 0 lost the first run's rows")
+    }
     // serving docs carry the ES shapes: deterministic doc_id, ISO timestamps
-    val serving = spark.read.parquet(s"$dagRoot/serving/combined")
+    val serving = TxTable.read(spark, servingTables.head)
     assert(serving.filter(col("doc_id") =!=
       concat_ws("_", col("symbol"), col("date"))).count() == 0)
     val iso = serving.filter(col("latest_news_date").isNotNull)
       .select("latest_news_date").head().getString(0)
     assert(iso.matches("""\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}Z"""))
-  }
-
-  test("keyed upsert: idempotent, updates replace, others retained") {
-    val path = s"$root/serving/enriched"
-    val g = Sink.withDocId(Format.combine(spark, formattedDir), "symbol", "date")
-    Sink.upsertByKey(spark, g, path, Seq("doc_id"))
-    val n1 = spark.read.parquet(path).count()
-    // re-run with identical updates → same count (idempotent)
-    Sink.upsertByKey(spark, g, path, Seq("doc_id"))
-    assert(spark.read.parquet(path).count() == n1)
-    // modify one row, upsert only it → count unchanged, value changed
-    val one = spark.read.parquet(path).limit(1)
-      .withColumn("news_count", lit(999L))
-    Sink.upsertByKey(spark, one, path, Seq("doc_id"))
-    val after = spark.read.parquet(path)
-    assert(after.count() == n1)
-    assert(after.filter(col("news_count") === 999L).count() == 1)
   }
 
   test("TxTable MERGE: insert, update, idempotent rerun, time travel") {
@@ -396,42 +391,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(render(m2).find(_._1 == 3L).map(_._2).contains(1L))
   }
 
-  test("upsert crash recovery: a table stranded at __old is restored, not destroyed") {
-    val path = s"$root/serving/crash_recover"
-    val g = Sink.withDocId(Format.combine(spark, formattedDir), "symbol", "date")
-    Sink.upsertByKey(spark, g, path, Seq("doc_id"))
-    val n1 = spark.read.parquet(path).count()
-    // simulate a crash between the two swap renames: live table moved aside,
-    // nothing at the live path
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + "__old")))
-    // next upsert must recover the stranded copy and merge INTO it — not
-    // treat the table as absent and overwrite with the 1-row update
-    val one = g.limit(1).withColumn("news_count", lit(777L))
-    Sink.upsertByKey(spark, one, path, Seq("doc_id"))
-    val after = spark.read.parquet(path)
-    assert(after.count() == n1, "pre-crash rows must survive recovery")
-    assert(after.filter(col("news_count") === 777L).count() == 1)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__old")))
-  }
-
-  test("upsert aborts on a corrupt table instead of silently overwriting") {
-    val path = s"$root/serving/corrupt_guard"
-    // a directory that exists but holds an unreadable "parquet" file: the
-    // read fails with a non-absent error, which must PROPAGATE (treating it
-    // as first-write would replace the table with the updates alone)
+  test("TxTable merge leaves a foreign part file untouched and unread") {
+    import graft.serve.TxTable
+    val path = s"$root/serving/foreign_part"
+    // a directory that already holds a file no commit names — a corrupt
+    // "parquet" file here, or a plain parquet table from before the serving
+    // layer was transactional: the merge neither reads nor replaces it
     new java.io.File(path).mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$path/part-00000.parquet"), "not parquet at all")
+    val foreign = java.nio.file.Paths.get(s"$path/part-00000.parquet")
+    java.nio.file.Files.writeString(foreign, "not parquet at all")
+    val bytes = java.nio.file.Files.readAllBytes(foreign)
     val g = Sink.withDocId(Format.combine(spark, formattedDir), "symbol", "date")
-    intercept[Exception] {
-      Sink.upsertByKey(spark, g, path, Seq("doc_id"))
-    }
-    // the corrupt original is untouched — nothing was deleted or replaced
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$path/part-00000.parquet")) == "not parquet at all")
+    assert(TxTable.merge(spark, g, path, Seq("doc_id")) == 0L)
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(foreign), bytes),
+      "the foreign file must stay byte-identical")
+    val back = TxTable.read(spark, path)
+    assert(back.count() == 5 * 70, "only the merge's own commit is read back")
+    assert(back.inputFiles.forall(f => !f.endsWith("/part-00000.parquet")))
   }
 
   test("CSV and ORC roundtrip through the same table contract") {
@@ -494,32 +470,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(back.filter(col("v").isNotNull).count() == 1) // NaN and Inf scrubbed
   }
 
-  test("streaming upsert serving path: idempotent across replays") {
-    val out = s"$root/stream_upsert"
-    val company = spark.read.parquet(s"$formattedDir/company_info")
-    StreamFormat.upsertStream(spark, rawDir, company, out, s"$root/ckpt_upsert")
-    val n1 = spark.read.parquet(out).count()
-    val distinctKeys = spark.read.parquet(out).select("doc_id").distinct().count()
-    assert(n1 == distinctKeys, "doc_id must be unique after upsert")
-    // replay from a FRESH checkpoint (reprocesses everything): same state
-    StreamFormat.upsertStream(spark, rawDir, company, out, s"$root/ckpt_upsert2")
-    assert(spark.read.parquet(out).count() == n1)
-    // enrichment columns present
-    assert(spark.read.parquet(out).columns.contains("sector"))
-  }
-
   test("streaming TxTable merge: per-batch commits, replay converges, history kept") {
     import graft.serve.TxTable
     val table = s"$root/stream_tx"
     val company = spark.read.parquet(s"$formattedDir/company_info")
-    StreamFormat.upsertStreamTx(spark, rawDir, company, table, s"$root/ckpt_tx")
+    StreamFormat.upsertStream(spark, rawDir, company, table, s"$root/ckpt_tx")
     val v1 = TxTable.latestVersion(spark, table).get
     val snap1 = TxTable.read(spark, table)
     val n1 = snap1.count()
     assert(n1 == snap1.select("doc_id").distinct().count(), "doc_id unique after merge")
     assert(snap1.columns.contains("sector"))
     // replay from a FRESH checkpoint: new versions committed, same final state
-    StreamFormat.upsertStreamTx(spark, rawDir, company, table, s"$root/ckpt_tx2")
+    StreamFormat.upsertStream(spark, rawDir, company, table, s"$root/ckpt_tx2")
     val v2 = TxTable.latestVersion(spark, table).get
     assert(v2 > v1, "replay must commit new versions, not rewrite old ones")
     assert(TxTable.read(spark, table).count() == n1, "replay must converge")
