@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.types.StructType
 import graft.operators.SessionMemo
 
@@ -52,7 +52,8 @@ object Tables {
     * `spark.read.parquet(...)` runs its footer read as a Spark job on every
     * call, even for one file — a fixed cost every warm table read and every
     * TxTable snapshot read used to pay before executing. The memo returns
-    * whatever that inference returned the first time, keyed by everything
+    * whatever that inference returned the first time (or, for a file this
+    * session wrote, what [[wroteParquet]] recorded), keyed by everything
     * it depends on: the path, the (path, length, mtime) of every file it
     * lists (so a file rewritten in place is re-inferred), and every session
     * conf naming parquet (`inferTimestampNTZ.enabled`, `nanosAsLong`,
@@ -65,14 +66,25 @@ object Tables {
     * directory is one listing of its tree. A multi-file read whose file
     * set changes every call (a merge's candidates, a change feed's commit,
     * a sink that rewrites its directory) would only add dead entries. */
-  def parquetSchema(spark: SparkSession, path: String): StructType = {
+  def parquetSchema(spark: SparkSession, path: String): StructType =
+    schemaMemo.getOrElseUpdate(spark, schemaKey(spark, path))(spark.read.parquet(path).schema)
+
+  /** Record the schema of a parquet file this session just wrote with
+    * Spark's parquet writer from a frame of schema `written`, so that the
+    * first [[parquetSchema]] of it starts no job. Inference of a
+    * Spark-written file returns the schema its writer stored in the footer
+    * — the frame's schema — with every field made nullable, as any parquet
+    * read does. */
+  def wroteParquet(spark: SparkSession, path: String, written: StructType): Unit =
+    schemaMemo.getOrElseUpdate(spark, schemaKey(spark, path))(GraftBridge.asNullable(written))
+
+  private def schemaKey(spark: SparkSession, path: String) = {
     val p = new Path(path)
     val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
     val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
       .map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).toSeq
     val confs = spark.conf.getAll.toSeq.filter(_._1.contains("parquet")).sorted
-    schemaMemo.getOrElseUpdate(spark, (path, files, confs))(
-      spark.read.parquet(path).schema)
+    (path, files, confs)
   }
 
   private val schemaMemo = new SessionMemo[

@@ -20,14 +20,16 @@ object TmpRoots {
   private val HorizonMs = 24L * 3600 * 1000
 
   /** This process's root for `prefix` (created, mtime-touched), sweeping
-    * sibling roots of the same prefix untouched for > 24 h. */
-  def root(prefix: String): String = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    * sibling roots of the same prefix untouched for > 24 h — the pid-keyed
+    * `<prefix>_*` ones and the bare `<prefix>` root that builds before
+    * per-process roots shared. `tmp` defaults to java.io.tmpdir. */
+  def root(prefix: String,
+      tmp: java.io.File = new java.io.File(System.getProperty("java.io.tmpdir"))): String = {
     val self = new java.io.File(tmp, s"${prefix}_${ProcessHandle.current().pid()}")
     val horizon = System.currentTimeMillis() - HorizonMs
     Option(tmp.listFiles()).foreach(_.foreach { f =>
-      if (f.getName.startsWith(prefix + "_") && f.getName != self.getName &&
-          f.lastModified() < horizon)
+      if ((f.getName.startsWith(prefix + "_") || f.getName == prefix) &&
+          f.getName != self.getName && f.lastModified() < horizon)
         org.apache.commons.io.FileUtils.deleteQuietly(f)
     })
     self.mkdirs()

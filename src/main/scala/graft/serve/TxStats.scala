@@ -1,10 +1,10 @@
 package graft.serve
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Not, Or}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.json4s._
@@ -25,14 +25,21 @@ import org.json4s.jackson.JsonMethods
   * the SAME order Spark's min/max aggregates and binary-collation
   * comparisons use, so a pruning decision can never disagree with row-level
   * evaluation. Non-finite float bounds (NaN/Inf) are dropped rather than
-  * approximated — a file without a bound is always read (pruning here must
-  * be conservative: a skipped file must be PROVABLY irrelevant).
+  * approximated, and a missing bound on a column that has non-null values
+  * reads as "unbounded on that side" — only an all-null column (nulls ==
+  * rows) is known to hold no value (pruning here must be conservative: a
+  * skipped file must be PROVABLY irrelevant).
+  *
+  * The stats are recorded by the task that writes each file
+  * ([[StatsParquetFormat]]), never by reading the files back.
   */
 object TxStats {
 
   /** Bounds collected per column: lo/hi over non-null values (None when the
-    * file has no non-null value — which itself prunes: an equality filter
-    * cannot match an all-null file), plus the null count for IS [NOT] NULL. */
+    * file has no non-null value, or when the bound is NaN/±Inf), plus the
+    * null count for IS [NOT] NULL. Only `nulls == rows` proves the column
+    * holds no value — which itself prunes: an equality filter cannot match
+    * an all-null file. */
   case class ColStats(lo: Option[Any], hi: Option[Any], nulls: Long)
 
   /** Per-file stats: row count, file length + mtime (so the reader can build
@@ -56,34 +63,52 @@ object TxStats {
 
   // ---------------------------------------------------------- collection
 
-  /** One aggregate scan over freshly staged files: per file, row count and
-    * min/max/nulls for each supported column. Column pruning means the scan
-    * reads only the stat columns; at cluster scale this piggybacks on the
-    * write (the committer records stats as it writes) — here it is an
-    * explicit second pass over data that is still in the page cache. */
-  def collect(spark: SparkSession, absFiles: Seq[String]): Map[String, FileStats] = {
-    val df = spark.read.parquet(absFiles: _*)
-    val statFields = df.schema.fields.filter(f => supported(f.dataType)).take(MaxStatsCols)
-    val aggs = count(lit(1)).as("__rows") +: statFields.zipWithIndex.flatMap {
-      case (f, i) => Seq(
-        min(col(f.name)).as(s"__lo$i"),
-        max(col(f.name)).as(s"__hi$i"),
-        sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls$i"))
-    }.toSeq
-    df.groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val name = new org.apache.hadoop.fs.Path(r.getString(0)).getName
-        val cols = statFields.zipWithIndex.map { case (f, i) =>
-          f.name -> ColStats(
-            toComparable(r.get(r.fieldIndex(s"__lo$i"))),
-            toComparable(r.get(r.fieldIndex(s"__hi$i"))),
-            r.getLong(r.fieldIndex(s"__nulls$i")))
-        }.toMap
-        // bytes/mtime are stamped by the caller, which knows the FileStatus
-        name -> FileStats(r.getLong(r.fieldIndex("__rows")), 0L, 0L, cols)
-      }.toMap
+  /** Stats of one file, kept row by row as the file is written: the row
+    * count, and per stat column the null count and the min/max under
+    * Spark's own ordering for the type ([[PhysicalDataType.ordering]]: NaN
+    * greatest, -0.0 equal to 0.0, strings as unsigned bytes) — so the
+    * bounds are exactly what `min`/`max` over the file would return.
+    * Internal values, converted by [[litComparable]] once, on close. */
+  private[serve] final class FileStatsBuilder(schema: StructType) {
+    private val fields = schema.fields.zipWithIndex
+      .filter { case (f, _) => supported(f.dataType) }.take(MaxStatsCols)
+    private val ordinals = fields.map(_._2)
+    private val types = fields.map(_._1.dataType)
+    private val orderings = types.map(PhysicalDataType.ordering)
+    private val lo = new Array[Any](fields.length)
+    private val hi = new Array[Any](fields.length)
+    private val nulls = new Array[Long](fields.length)
+    private var rows = 0L
+
+    def add(row: InternalRow): Unit = {
+      rows += 1
+      var i = 0
+      while (i < ordinals.length) {
+        if (row.isNullAt(ordinals(i))) nulls(i) += 1
+        else {
+          val v = row.get(ordinals(i), types(i))
+          if (lo(i) == null || orderings(i).lt(v, lo(i))) lo(i) = owned(v)
+          if (hi(i) == null || orderings(i).gt(v, hi(i))) hi(i) = owned(v)
+        }
+        i += 1
+      }
+    }
+
+    /** An empty file gets no stats, as a scan of it yields no group: the
+      * reader keeps it (one footer) rather than trusting zero counts. */
+    def result: Option[FileStats] =
+      if (rows == 0) None
+      else Some(FileStats(rows, 0L, 0L, fields.indices.map { i =>
+        fields(i)._1.name -> ColStats(litComparable(lo(i), types(i)),
+          litComparable(hi(i), types(i)), nulls(i))
+      }.toMap))
+
+    // the writer reuses the row's buffers: keep a copy of a kept bound
+    private def owned(v: Any): Any = v match {
+      case s: UTF8String => s.clone()
+      case d: Decimal => d.clone()
+      case other => other
+    }
   }
 
   /** External (collected Row) value → comparable form. Returns None for
@@ -109,8 +134,9 @@ object TxStats {
     case _ => None
   }
 
-  /** Catalyst literal (internal representation) → comparable form. */
-  private def litComparable(value: Any, dt: DataType): Option[Any] =
+  /** Catalyst literal (internal representation) → comparable form — the
+    * one rule for both filter literals and write-time bounds. */
+  def litComparable(value: Any, dt: DataType): Option[Any] =
     if (value == null) None
     else dt match {
       case ByteType | ShortType | IntegerType | LongType =>
@@ -193,8 +219,12 @@ object TxStats {
   private def lookup(e: Expression, stats: FileStats): Option[ColStats] =
     attrName(e).flatMap(stats.cols.get)
 
-  /** Could v lie within the file's [lo, hi]? All-null columns (lo/hi None
-    * with stats PRESENT) prove it cannot. */
+  /** True when the column provably holds no non-null value. A missing
+    * bound alone proves nothing: a NaN or ±Inf min/max is not recorded. */
+  private def allNull(cs: ColStats, rows: Long): Boolean = cs.nulls >= rows
+
+  /** Could v lie within the file's [lo, hi]? A missing bound leaves that
+    * side open; all-null columns prove no value matches. */
   private def boundsContain(a: Expression, v: Any, dt: DataType,
       stats: FileStats): Boolean =
     lookup(a, stats) match {
@@ -203,14 +233,9 @@ object TxStats {
         litComparable(v, dt) match {
           case None => true // null literal / foreign type: never prune
           case Some(x) =>
-            (cs.lo, cs.hi) match {
-              case (Some(lo), Some(hi)) =>
-                (cmp(x, lo), cmp(x, hi)) match {
-                  case (Some(cl), Some(ch)) => cl >= 0 && ch <= 0
-                  case _ => true
-                }
-              case _ => false // stats exist but no non-null value: no match
-            }
+            !allNull(cs, stats.rows) &&
+              cs.lo.forall(lo => cmp(x, lo).forall(_ >= 0)) &&
+              cs.hi.forall(hi => cmp(x, hi).forall(_ <= 0))
         }
     }
 
@@ -223,24 +248,23 @@ object TxStats {
       case Some(cs) =>
         litComparable(v, dt) match {
           case None => true
-          case Some(x) => bound(cs) match {
-            case None => false // all-null column cannot satisfy a comparison
-            case Some(b) => cmp(b, x).map(ok).getOrElse(true)
-          }
+          case Some(x) =>
+            !allNull(cs, stats.rows) && // all-null: no comparison holds
+              bound(cs).forall(b => cmp(b, x).forall(ok))
         }
     }
 
-  /** Could a file with bounds `cs` contain a key in [qlo, qhi]? Used by the
-    * MERGE matched-file scan to skip base files whose key range cannot
-    * intersect the update batch. */
-  def rangesOverlap(cs: ColStats, qlo: Option[Any], qhi: Option[Any]): Boolean =
-    (cs.lo, cs.hi) match {
-      case (Some(lo), Some(hi)) =>
-        val belowAll = qhi.flatMap(q => cmp(q, lo)).exists(_ < 0)
-        val aboveAll = qlo.flatMap(q => cmp(q, hi)).exists(_ > 0)
-        !(belowAll || aboveAll)
-      case (None, None) => false // all-null key column: no joinable key
-      case _ => true
+  /** Could the file hold a value of column `key` in [qlo, qhi]? Used by
+    * the MERGE matched-file scan to skip base files whose key range cannot
+    * intersect the update batch. No stats for `key` ⇒ must scan; a missing
+    * bound leaves that side open; an all-null key column holds no
+    * joinable key. */
+  def rangesOverlap(stats: FileStats, key: String, qlo: Option[Any],
+      qhi: Option[Any]): Boolean =
+    stats.cols.get(key).forall { cs =>
+      val belowAll = qhi.zip(cs.lo).exists { case (q, lo) => cmp(q, lo).exists(_ < 0) }
+      val aboveAll = qlo.zip(cs.hi).exists { case (q, hi) => cmp(q, hi).exists(_ > 0) }
+      !allNull(cs, stats.rows) && !belowAll && !aboveAll
     }
 
   // ---------------------------------------------------------------- JSON

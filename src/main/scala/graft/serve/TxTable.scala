@@ -516,35 +516,36 @@ object TxTable {
   }
 
   /** Stage `df` as immutable files under data/ and return their manifest
-    * entries, stats included (no commit yet). Stats cost one column-pruned
-    * scan of the just-written files — data still in the page cache; a
-    * cluster committer would fold this into the write itself. */
+    * entries, stats included (no commit yet). The stats are recorded by
+    * the write tasks themselves ([[StatsParquetFormat]]): staging is one
+    * job, the same as a plain parquet write of `df`, and the first read of
+    * the new files starts no schema-inference job either. */
   private def stageData(spark: SparkSession, df: DataFrame, path: String): Seq[ManifestEntry] = {
     val fs = hfs(spark, path)
     val uuid = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(path, s"_staging_$uuid")
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val staging = fs.makeQualified(new Path(path, s"_staging_$uuid"))
+    val stats = StatsParquetFormat.writing(spark, staging) {
+      df.write.mode(SaveMode.Overwrite).format(classOf[StatsParquetFormat].getName)
+        .save(staging.toString)
+    }
     fs.mkdirs(new Path(path, "data"))
     val parts = fs.listStatus(staging).toSeq.map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val named = parts.zipWithIndex.map { case (p, i) =>
+    val entries = parts.zipWithIndex.map { case (p, i) =>
       val rel = f"data/$uuid-part-$i%05d.parquet"
       if (!fs.rename(p, new Path(path, rel)))
         throw new java.io.IOException(s"TxTable: staging rename $p -> $rel failed")
-      rel
-    }
-    fs.delete(staging, true)
-    val collected =
-      if (named.isEmpty) Map.empty[String, TxStats.FileStats]
-      else TxStats.collect(spark, named.map(r => s"$path/$r"))
-    named.map { rel =>
-      val name = new Path(rel).getName
-      val st = collected.get(name).map { s =>
+      val st = stats.get(p.getName).map { s =>
         val status = fs.getFileStatus(new Path(path, rel))
         s.copy(bytes = status.getLen, mtime = status.getModificationTime)
       }
       ManifestEntry(rel, st)
     }
+    fs.delete(staging, true)
+    // the generation's first file is the one snapshotSchema reads the
+    // schema of: known now, so the next read infers nothing
+    entries.headOption.foreach(e => Tables.wroteParquet(spark, s"$path/${e.rel}", df.schema))
+    entries
   }
 
   /** Atomically publish a DELTA commit as version `v`: `removes` as `-rel`
@@ -748,10 +749,8 @@ object TxTable {
       val c = readCommit(fs, path, rv)
       !c.reset &&
         !c.removes.exists(readRels.contains) &&
-        !c.adds.exists(e => e.stats.flatMap(_.cols.get(keys.head)) match {
-          case Some(cs) => TxStats.rangesOverlap(cs, updLo, updHi)
-          case None => true
-        })
+        !c.adds.exists(e =>
+          e.stats.forall(TxStats.rangesOverlap(_, keys.head, updLo, updHi)))
     }
     while (attempt < MaxCommitRetries) {
       if (attempt > 0) onMergeRetry()
@@ -804,11 +803,8 @@ object TxTable {
             // AND carry it verbatim. At 100 TB this is what bounds merge cost
             // by the touched region, not the table: the matched-file scan
             // reads only range-overlapping candidates.
-            val (candidates, _) = baseFiles.partition { e =>
-              e.stats.flatMap(_.cols.get(keys.head)) match {
-                case Some(cs) => TxStats.rangesOverlap(cs, updLo, updHi)
-                case None => true // no stats: must scan
-              }
+            val candidates = baseFiles.filter { e => // no stats: must scan
+              e.stats.forall(TxStats.rangesOverlap(_, keys.head, updLo, updHi))
             }
             // which candidate files hold a matched key? one scan, keys
             // broadcast, read at the snapshot schema just resolved

@@ -31,4 +31,8 @@ object GraftBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `schema` with every field, element and value nullable — what a file
+    * source reads a written schema as. `asNullable` is `private[spark]`. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

@@ -187,6 +187,24 @@ class ParquetSchemaSpec extends AnyFunSuite {
       Set((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
+  test("a TxTable.write starts no more jobs than a parquet write of the same frame") {
+    // the manifest stats are recorded by the write tasks: no inference job
+    // and no stats scan over the staged files
+    val df = spark.range(0, 5000).selectExpr("id", "cast(id % 97 as string) s",
+      "id * 0.5 d").repartition(3)
+    val (_, plainJobs) = jobsDuring(df.write.parquet(fresh("plain_write")))
+    val path = fresh("tx_write")
+    val (_, txJobs) = jobsDuring(TxTable.write(spark, df, path))
+    assert(plainJobs >= 1)
+    assert(txJobs <= plainJobs, s"TxTable.write started $txJobs jobs vs $plainJobs for parquet")
+    assert(TxTable.manifest(spark, path).forall(_.stats.exists(_.rows > 0)))
+    // the writer knows the schema it wrote: the first read infers nothing
+    val (first, readJobs) = jobsDuring(TxTable.read(spark, path))
+    assert(readJobs == 0, s"the first read of a fresh write started $readJobs jobs")
+    assert(first.schema == spark.read.parquet(s"$path/data").schema)
+    assert(first.count() == 5000L)
+  }
+
   test("a TxTable.read of a known snapshot starts no job before it executes") {
     val path = fresh("txtable")
     TxTable.write(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path)

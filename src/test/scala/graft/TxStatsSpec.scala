@@ -362,7 +362,9 @@ class TxStatsSpec extends AnyFunSuite {
   }
 
   test("rangesOverlap is conservative at the edges") {
-    import TxStats.{rangesOverlap, ColStats}
+    import TxStats.{ColStats, FileStats}
+    def rangesOverlap(cs: ColStats, qlo: Option[Any], qhi: Option[Any], rows: Long = 5L) =
+      TxStats.rangesOverlap(FileStats(rows, 0L, 0L, Map("k" -> cs)), "k", qlo, qhi)
     val cs = ColStats(Some(BigDecimal(10)), Some(BigDecimal(20)), 0L)
     def b(i: Int) = Some(BigDecimal(i): Any)
     assert(rangesOverlap(cs, b(20), b(30))) // touch at hi
@@ -372,6 +374,45 @@ class TxStatsSpec extends AnyFunSuite {
     assert(rangesOverlap(cs, None, None)) // unknown query bounds: must scan
     // all-null key column can never hold a matched key
     assert(!rangesOverlap(ColStats(None, None, 5L), b(0), b(100)))
+    // no bounds but non-null values (NaN/±Inf extremes): must scan
+    assert(rangesOverlap(ColStats(None, None, 2L), b(0), b(100)))
+    // one missing bound leaves only that side open
+    assert(rangesOverlap(ColStats(Some(BigDecimal(10)), None, 0L), b(50), b(60)))
+    assert(!rangesOverlap(ColStats(Some(BigDecimal(10)), None, 0L), b(0), b(9)))
+    // a key the file has no stats for: must scan
+    assert(TxStats.rangesOverlap(FileStats(5L, 0L, 0L, Map.empty), "k", b(0), b(1)))
+  }
+
+  test("NaN and infinite bounds never prune rows that match") {
+    val path = freshDir("nan")
+    TxTable.write(spark, Seq(1.0, 2.5, Double.NaN, 7.0).toDF("x").coalesce(1), path)
+    // max is NaN: no upper bound is recorded, and the lower one still is
+    val cs = TxTable.manifest(spark, path).head.stats.get.cols("x")
+    assert(cs == TxStats.ColStats(Some(BigDecimal(1.0)), None, 0L))
+    val t = TxTable.read(spark, path)
+    assert(t.filter(col("x") === 2.5).count() == 1L)
+    assert(t.filter(col("x") > 1.0).count() == 3L) // NaN sorts above 7.0
+    assert(t.filter(col("x") < 1.0).count() == 0L)
+    assert(t.filter(col("x").isin(7.0, 8.0)).count() == 1L)
+    // the lower bound still prunes on its side
+    val x = resolvedAttr(path, "x")
+    assert(surviving(path, org.apache.spark.sql.catalyst.expressions.LessThan(x, Literal(0.5))) == 0)
+    assert(surviving(path, EqualTo(x, Literal(100.0))) == 1)
+  }
+
+  test("merge keyed on a double column whose file has bounds -Inf and NaN") {
+    val path = freshDir("nanmerge")
+    val base = Seq(Double.NegativeInfinity, 1.0, 4.0, Double.NaN).toDF("k")
+      .withColumn("v", lit("old")).coalesce(1)
+    TxTable.write(spark, base, path)
+    val cs = TxTable.manifest(spark, path).head.stats.get.cols("k")
+    assert(cs.lo.isEmpty && cs.hi.isEmpty && cs.nulls == 0L)
+    TxTable.merge(spark, Seq(1.0, 9.0).toDF("k").withColumn("v", lit("new")), path, Seq("k"))
+    val got = TxTable.read(spark, path).as[(Double, String)].collect()
+      .map { case (k, v) => (k.toString, v) }.sorted.toSeq
+    assert(got == Seq(("-Infinity", "old"), ("1.0", "new"), ("4.0", "old"),
+      ("9.0", "new"), ("NaN", "old")).sorted,
+      "the matched key must be updated in place, not inserted a second time")
   }
 
   test("commit seam: a lost conditional put surfaces as a version race, merge rebases through it") {
