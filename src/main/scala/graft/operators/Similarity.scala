@@ -1266,12 +1266,14 @@ object Similarity {
     * vec_id. TxTable MERGE is file-pruned (cost scales with the touched
     * fraction, not the table) and replay-idempotent: a retried producer
     * re-merges identical rows — SimilaritySpec pins append-then-search ≡
-    * encode-everything-then-search and double-append ≡ single. */
+    * encode-everything-then-search and double-append ≡ single. `txn` is
+    * [[graft.serve.TxTable.merge]]'s idempotent-writer stamp (a streamed
+    * append passes its micro-batch's, so a replay burns no version). */
   def appendPqCodes(spark: SparkSession, batch: DataFrame,
-      indexPath: String): Long = {
+      indexPath: String, txn: Option[(String, Long)] = None): Long = {
     val cb = readPqCodebooks(spark, indexPath)
     graft.serve.TxTable.merge(spark, pqCodes(batch, cb),
-      s"$indexPath/codes", Seq("vec_id"))
+      s"$indexPath/codes", Seq("vec_id"), txn = txn)
   }
 
   /** Session-scratch path for a stored index under `/tmp/<rootName>`:

@@ -162,7 +162,7 @@ object FinanceMv {
     * NOT replay-idempotent by itself — pass `txn` (the Delta
     * txnAppId:batchId stamp) and [[TxTable.merge]] turns a replayed batch
     * into a no-op, closing the crash window between the table commit and
-    * the streaming checkpoint commit (the [[graft.streaming.StreamMv]]
+    * the streaming checkpoint commit (the [[graft.streaming.TxStream]]
     * exactly-once contract). */
   def maintainDailyCloseMv(spark: SparkSession, batch: DataFrame,
       path: String, txn: Option[(String, Long)] = None): Unit =

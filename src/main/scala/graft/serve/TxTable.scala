@@ -655,6 +655,16 @@ object TxTable {
       .flatMap(v => resolveTxns(fs, path, v).get(appId))
   }
 
+  /** The txn appId charset: the stamp is a `txn=appId:batchId` token on a
+    * tab-separated header line, so tab, '=' and ':' would mis-split it, and
+    * LF or a lone CR would split the header into extra lines (the log
+    * reader's `getLines` breaks on both), making `unframe` refuse the
+    * commit as torn — every later read of the table would fail. An empty
+    * id would silently disarm per-writer identity. */
+  private[graft] def validAppId(id: String): Boolean =
+    id.nonEmpty &&
+      !id.exists(c => c == '\t' || c == '=' || c == ':' || c == '\n' || c == '\r')
+
   /** Collapse duplicate keys WITHIN a batch — deterministic-id upsert
     * semantics (the ES sink's `{symbol}_{date}` ids collapse same-key docs
     * to one, `to_elasticsearch.py:78`). With a versionCol the LATEST row
@@ -710,8 +720,8 @@ object TxTable {
     // apply. One writer per appId is the contract (a streaming query per
     // checkpoint), so the entry check races only against itself.
     txn.foreach { case (appId, _) =>
-      require(!appId.exists(c => c == '\t' || c == '=' || c == ':' || c == '\n'),
-        s"TxTable: txn appId '$appId' must not contain tab/'='/':'/newline")
+      require(validAppId(appId),
+        s"TxTable: txn appId '$appId' must be non-empty and free of tab/'='/':'/CR/LF")
     }
     for ((appId, batchId) <- txn; last <- lastTxnBatch(spark, path, appId))
       if (batchId <= last)

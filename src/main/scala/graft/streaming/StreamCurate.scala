@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.functions.TextFunctions
 import graft.operators.Dedup
 
@@ -15,10 +14,10 @@ import graft.operators.Dedup
   * projections and the near-dup probe is a stream-static join against the
   * STORED band-signature index (`Dedup.writeLshIndex` is the batch job
   * that maintains it). Per-doc flag aggregation (a `distinct` over band
-  * hits) is micro-batch-scoped, so the deployment wraps the gate in
-  * `foreachBatch` and commits each batch's decisions as ONE atomic
-  * `TxTable` MERGE — a replayed batch re-merges the same keys and the
-  * table converges (the `upsertStream` idempotency contract). */
+  * hits) is micro-batch-scoped, so the deployment drains through
+  * [[TxStream.drain]] and commits each batch's decisions as ONE atomic
+  * `TxTable` MERGE — a replayed batch is a stamped no-op, and a replay
+  * from a fresh checkpoint re-merges the same keys and converges. */
 object StreamCurate {
 
   /** Per-document curation decision for one (micro-)batch of new docs
@@ -56,18 +55,10 @@ object StreamCurate {
       minQuality: Double = 0.3, minTokens: Int = 10): Unit = {
     val stream = spark.readStream.schema(graft.Tables.DocTextSchemaDdl)
       .parquet(inDir)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val decisions =
-          curateGate(batch, staticIndex, minQuality, minTokens)
-        graft.serve.TxTable.merge(batch.sparkSession, decisions, tablePath,
-          Seq("doc_id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    TxStream.drain(stream, checkpoint) { (batch, stamp) =>
+      graft.serve.TxTable.merge(batch.sparkSession,
+        curateGate(batch, staticIndex, minQuality, minTokens), tablePath,
+        Seq("doc_id"), txn = Some(stamp))
+    }
   }
 }

@@ -55,29 +55,25 @@ object StreamFormat {
       .join(broadcast(companyDf.select("symbol", "name", "sector")),
         Seq("symbol"), "left")
 
-  /** Streaming serving path: foreachBatch → keyed TxTable MERGE, the
-    * streaming twin of the reference's idempotent ES bulk indexing
-    * (`to_elasticsearch.py:66-80`). Each micro-batch is one atomic commit
-    * merged by doc id, so a reader never observes a half-applied batch,
-    * every batch is a time-travelable version, and a replay from a fresh
-    * checkpoint converges to the same table state (MERGE is idempotent per
-    * key). This is the streaming form of the Delta `foreachBatch` +
+  /** Streaming serving path: [[TxStream.drain]] → keyed TxTable MERGE,
+    * the streaming twin of the reference's idempotent ES bulk indexing
+    * (`to_elasticsearch.py:66-80`). Each micro-batch is one atomic,
+    * stamped commit merged by doc id, so a reader never observes a
+    * half-applied batch, every batch is a time-travelable version, a
+    * crash-replayed batch is a no-op, and a replay from a fresh checkpoint
+    * converges to the same table state (MERGE is idempotent per key).
+    * This is the streaming form of the Delta per-micro-batch
     * `MERGE INTO` recipe, on the native TxTable. */
   def upsertStream(spark: SparkSession, rawDir: String,
       companyDf: org.apache.spark.sql.DataFrame,
       tablePath: String, checkpoint: String): Unit = {
-    val q = enrichedStream(spark, rawDir, companyDf).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+    TxStream.drain(enrichedStream(spark, rawDir, companyDf), checkpoint) {
+      (batch, stamp) =>
         val keyed = graft.serve.Sink.withDocId(batch, "symbol", "date")
         graft.serve.TxTable.merge(batch.sparkSession, keyed, tablePath,
-          Seq("doc_id"), versionCol = Some("fetched_at_utc"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+          Seq("doc_id"), versionCol = Some("fetched_at_utc"),
+          txn = Some(stamp))
+    }
   }
 
   /** Windowed streaming aggregation with watermark — the Lens

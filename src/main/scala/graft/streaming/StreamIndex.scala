@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Similarity
 
 /** Ingest-time PQ index maintenance — the streaming twin of the batch
@@ -14,10 +13,11 @@ import graft.operators.Similarity
   *
   * Why this twin streams EXACTLY: a vector's code is a pure per-row
   * function of (embedding, frozen codebooks) — batching and arrival
-  * order cannot change it — and the TxTable MERGE keyed vec_id is
-  * replay-idempotent (a redelivered vector overwrites its own row with
-  * identical bits). So the streamed code table equals the one-shot
-  * encode ROW-FOR-ROW on the ingested prefix, and any search through
+  * order cannot change it — a crash-replayed batch is a no-op under the
+  * [[TxStream.drain]] stamp, and the TxTable MERGE keyed vec_id makes a
+  * fresh-checkpoint replay converge (a redelivered vector overwrites its
+  * own row with identical bits). So the streamed code table equals the
+  * one-shot encode ROW-FOR-ROW on the ingested prefix, and any search through
   * the shared [[Similarity.pqSearchOverCodes]] path is equal by
   * construction — StreamIndexSpec pins streamed ≡ one-shot search
   * results and replay convergence.
@@ -39,24 +39,17 @@ object StreamIndex {
   /** Streaming deployment: replay embedding parquet drops from `inDir`,
     * encode each micro-batch under the codebooks persisted at
     * `indexPath`, and MERGE the codes keyed vec_id — one atomic log
-    * commit per batch, idempotent under replay. */
+    * commit per batch, stamped by [[TxStream.drain]]. */
   def indexStreamTx(spark: SparkSession, inDir: String, indexPath: String,
       checkpoint: String, maxFilesPerTrigger: Int = 1): Unit = {
     val stream = spark.readStream.schema(VecSchemaDdl)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inDir)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Similarity.appendPqCodes(batch.sparkSession,
-          batch.select(col("vec_id"),
-            col("embedding").cast("array<double>").as("emb")),
-          indexPath)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    TxStream.drain(stream, checkpoint) { (batch, stamp) =>
+      Similarity.appendPqCodes(batch.sparkSession,
+        batch.select(col("vec_id"),
+          col("embedding").cast("array<double>").as("emb")),
+        indexPath, txn = Some(stamp))
+    }
   }
 }

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming maintenance of the finance day-grain materialized view — the
   * live form of [[graft.serve.FinanceMv]]: every micro-batch of ticks is
@@ -13,110 +11,19 @@ import org.apache.spark.sql.streaming.Trigger
   * travel over MV refreshes for free).
   *
   * Exactly-once story: the additive fold is NOT replay-idempotent by
-  * itself, so every micro-batch merge is stamped with
-  * `txn = (appId, batchId)` — the Delta txnAppId recipe — where appId is
-  * derived from the checkpoint location (one writer per checkpoint is the
-  * Structured Streaming contract). A crash BETWEEN the TxTable commit and
-  * the checkpoint commit replays the batch, and [[graft.serve.TxTable
-  * .merge]]'s idempotent-writer guard turns the replay into a no-op
-  * instead of a double apply. StreamMvSpec pins both halves:
-  * stream-maintained state ≡ the one-shot batch build bit-for-bit, and a
-  * replayed batch leaves the state (and the version counter) untouched.
+  * itself (a re-applied batch double-counts), so it relies on the
+  * [[TxStream.drain]] stamp: the fold's CAS merge carries
+  * `txn = (appId, batchId)` and a replayed batch is a no-op instead of a
+  * double apply. StreamMvSpec pins both halves: stream-maintained state ≡
+  * the one-shot batch build bit-for-bit, and a replayed batch leaves the
+  * state (and the version counter) untouched. A wiped checkpoint mints a
+  * new appId and re-reads every file in the source, so reprocessing from
+  * scratch means reseeding the table along with the checkpoint.
   *
   * At 100 TB: per trigger the delta aggregate is map-side-combined on
   * (event_type, day) — shuffle volume is day-partials, never raw ticks —
   * and the merge rewrite is file-pruned to the touched day range. */
 object StreamMv {
-
-  /** Stable writer id for the txn stamp: the checkpoint location IS the
-    * stream's identity (one writer per checkpoint), hashed so path
-    * separators never leak into the commit header's token syntax.
-    *
-    * PERSISTED in the checkpoint directory on first use (r15, closing the
-    * r14 fix's own residual): deriving the id from any SPELLING of the
-    * path — absolute (pre-r14) or canonical (r14) — re-keys the id
-    * whenever the derivation changes or the filesystem view does (a
-    * checkpoint reached through a symlink that is later re-pointed, a
-    * mount moved between runs), and a re-keyed id disarms the replay
-    * guard exactly across a crash-restart. The identity therefore lives
-    * WITH the checkpoint state it guards: minted once from the canonical
-    * path (resolving `.`/`..`/symlink spellings), written atomically
-    * beside the checkpoint, and READ BACK on every later call — any
-    * spelling of the same directory sees the same file, and no future
-    * derivation change can ever re-key an existing stream. Checkpoints
-    * created before this file existed mint it on their next start from
-    * the same canonical-path recipe r14 used, so the common
-    * (symlink-free) upgrade is stamp-continuous. All file I/O goes through
-    * the Hadoop FileSystem resolved from the checkpoint URI (r16): a
-    * checkpoint on hdfs:// or s3a:// keeps its identity file WITH its
-    * state, not in a CWD-relative local directory. */
-  /** Session-less convenience (specs, ad-hoc callers): resolves the
-    * Hadoop config from the active-or-default session. getActiveSession
-    * is THREAD-LOCAL, so production callers that hold a session must use
-    * the 2-arg form — a bare Configuration fallback has no fs.s3a/gs
-    * credentials or impls, exactly for the remote URIs this exists to
-    * serve. */
-  private[graft] def txnAppId(checkpoint: String): String =
-    txnAppId(
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .map(_.sparkContext.hadoopConfiguration)
-        .getOrElse(new org.apache.hadoop.conf.Configuration()),
-      checkpoint)
-
-  private[graft] def txnAppId(conf: org.apache.hadoop.conf.Configuration,
-      checkpoint: String): String = {
-    // the checkpoint is a Spark checkpointLocation and can be ANY Hadoop
-    // URI (hdfs://, s3a://) — r15's java.io.File implementation would have
-    // dropped the id file in a CWD-relative local directory for those, so
-    // the identity must be resolved through the SAME FileSystem the
-    // checkpoint state lives on (the StreamSample._sample_params pattern)
-    val cp = new Path(checkpoint)
-    val fs = cp.getFileSystem(conf)
-    val f = new Path(cp, "_graft_app_id")
-    if (fs.exists(f)) readId(fs, f)
-    else {
-      // mint seed = the canonical spelling: local paths keep the exact
-      // java.io canonical-path recipe (symlink-resolving, and byte-for-byte
-      // what r14/r15 hashed — a pre-id-file local checkpoint upgrades
-      // stamp-continuously); remote URIs use the fs-qualified form (the
-      // filesystem itself is the authority on the path's identity there)
-      val qualified = fs.makeQualified(cp)
-      val seed =
-        if (qualified.toUri.getScheme == "file")
-          new java.io.File(qualified.toUri.getPath).getCanonicalPath
-        else qualified.toString
-      val minted = "stream_mv_" + java.lang.Long.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(seed) & 0xffffffffL)
-      fs.mkdirs(cp)
-      val tmp = new Path(cp, s"_graft_app_id.tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, false)
-      try out.write((minted + "\n").getBytes("UTF-8")) finally out.close()
-      // atomic publish (HDFS rename refuses an existing target); if a
-      // concurrent first-start won the race, adopt its id — both minted
-      // from the same canonical seed, so the ids agree anyway
-      if (!fs.rename(tmp, f)) fs.delete(tmp, false)
-      if (fs.exists(f)) readId(fs, f) else minted
-    }
-  }
-
-  /** Read-back with validation: an empty or control-character-bearing id
-    * would either silently disarm per-stream identity (appId "") or make
-    * every later [[graft.serve.TxTable.merge]] throw its appId-charset
-    * `require` with no hint of WHERE the bad id came from. A poisoned
-    * `_graft_app_id` must fail loudly, naming the file, at stream start. */
-  private def readId(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    val id = (try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()).trim
-    require(id.nonEmpty &&
-        !id.exists(c => c == ':' || c == '=' || c == '\t' || c == '\n' || c == '\r'),
-      s"checkpoint identity file $p holds an invalid app id " +
-      s"'${id.take(40)}' (empty or contains one of ':', '=', tab, newline) " +
-      "— the file is corrupt; restore it from the stream's commit stamps " +
-      "or delete it to re-mint, rather than stamping merges with a bad id")
-    id
-  }
 
   /** Drain `eventsDir` as a stream, folding each micro-batch into the MV
     * table at `tablePath`. The table must exist (seed with an empty or
@@ -127,26 +34,14 @@ object StreamMv {
   def maintainToTx(spark: SparkSession, eventsDir: String,
       tablePath: String, checkpoint: String,
       maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream
+    val source = spark.readStream
       .schema(graft.Tables.EventsSchemaDdl)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(eventsDir)
       .filter(col("ts").isNotNull && col("value").isNotNull)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // thread the BATCH session's Hadoop config explicitly: foreachBatch
-        // may run on a thread whose thread-local active session is unset,
-        // and the bare-Configuration fallback cannot resolve remote
-        // checkpoint filesystems
-        val appId = txnAppId(
-          batch.sparkSession.sparkContext.hadoopConfiguration, checkpoint)
-        graft.serve.FinanceMv.maintainDailyCloseMv(batch.sparkSession,
-          batch, tablePath, txn = Some((appId, batchId)))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    TxStream.drain(source, checkpoint) { (batch, stamp) =>
+      graft.serve.FinanceMv.maintainDailyCloseMv(batch.sparkSession,
+        batch, tablePath, txn = Some(stamp))
+    }
   }
 }

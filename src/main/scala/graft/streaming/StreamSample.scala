@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Sampling
 
 /** Ingest-time budget sampling — the streaming twin of the batch
@@ -18,9 +17,11 @@ import graft.operators.Sampling
   * read time reproduces the batch answer on the ingested prefix
   * ROW-FOR-ROW (the CMS-grade streamed ≡ batch contract — most stream
   * twins settle for same-decisions; StreamSampleSpec asserts exact set
-  * equality). Re-delivery is harmless by construction: a replayed doc
-  * contributes the identical (hash, doc_id), and the idempotent TxTable
-  * MERGE keyed (lang, doc_id) overwrites rather than duplicates.
+  * equality). A crash-replayed batch is a no-op under the
+  * [[TxStream.drain]] stamp; re-delivery from a fresh checkpoint is
+  * harmless by construction: a replayed doc contributes the identical
+  * (hash, doc_id), and the TxTable MERGE keyed (lang, doc_id) overwrites
+  * rather than duplicates.
   *
   * At 100 TB: each micro-batch ships ≤ budget rows per language present
   * in the batch (the bounded-heap partial aggregation), and the stored
@@ -30,10 +31,6 @@ import graft.operators.Sampling
   * [[Sampling.budgetSampleOf]] — shared with the batch query, so the two
   * sides cannot hash or tie-break differently. */
 object StreamSample {
-
-  /** (doc_id, lang, text) drop-stream contract (`StreamSketch` schema —
-    * the sampler keys by language, so drops carry it). */
-  val DocLangTextSchemaDdl: String = StreamSketch.DocLangTextSchemaDdl
 
   /** One micro-batch's candidate rows: the batch-local budget-capped
     * sample, ≤ budget rows per language per batch. Only (lang, doc_id)
@@ -50,26 +47,20 @@ object StreamSample {
   /** Streaming deployment: replay (doc_id, lang, text) parquet drops from
     * `inDir`, MERGE each micro-batch's candidate top-k into the TxTable
     * at `tablePath` keyed (lang, doc_id) — one atomic log commit per
-    * batch, idempotent under replay (a redelivered doc overwrites its own
-    * row with identical content). */
+    * batch, stamped by [[TxStream.drain]] (a doc redelivered from a fresh
+    * checkpoint overwrites its own row with identical content). */
   def sampleStreamTx(spark: SparkSession, inDir: String, tablePath: String,
       checkpoint: String, budget: Int = 50, seed: Int = 42,
       maxFilesPerTrigger: Int = 1): Unit = {
     recordParams(spark, tablePath, budget, seed)
-    val stream = spark.readStream.schema(DocLangTextSchemaDdl)
+    val stream = spark.readStream.schema(StreamSketch.DocLangTextSchemaDdl)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inDir)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.serve.TxTable.merge(batch.sparkSession,
-          sampleBatch(batch, budget, seed), tablePath, Seq("lang", "doc_id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    TxStream.drain(stream, checkpoint) { (batch, stamp) =>
+      graft.serve.TxTable.merge(batch.sparkSession,
+        sampleBatch(batch, budget, seed), tablePath, Seq("lang", "doc_id"),
+        txn = Some(stamp))
+    }
   }
 
   /** The assembled sample: re-top the stored candidates — the same

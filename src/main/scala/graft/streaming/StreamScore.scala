@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Classifier
 
 /** Ingest-time LEARNED quality gating — the streaming twin of the batch
@@ -16,8 +15,9 @@ import graft.operators.Classifier
   * Because the feature-hash embedding of a document never looks outside
   * the document, a doc's score is IDENTICAL whether it arrives in a
   * full-corpus batch scan or a one-file micro-batch — StreamScoreSpec
-  * pins streamed ≡ batch score/keep per doc and replay idempotency
-  * through the TxTable MERGE contract.
+  * pins streamed ≡ batch score/keep per doc and fresh-checkpoint replay
+  * convergence through the keyed TxTable MERGE (a crash-replayed batch is
+  * a no-op under the [[TxStream.drain]] stamp).
   *
   * Producer-retry duplicates collapse deterministically (max by text
   * hash, the `StreamSelect.selectGate` rule) so a redelivered doc_id
@@ -40,16 +40,9 @@ object StreamScore {
       tablePath: String, checkpoint: String): Unit = {
     val stream = spark.readStream.schema(graft.Tables.DocTextSchemaDdl)
       .parquet(inDir)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.serve.TxTable.merge(batch.sparkSession,
-          scoreGate(batch, w), tablePath, Seq("doc_id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    TxStream.drain(stream, checkpoint) { (batch, stamp) =>
+      graft.serve.TxTable.merge(batch.sparkSession,
+        scoreGate(batch, w), tablePath, Seq("doc_id"), txn = Some(stamp))
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Curation
 
 /** Ingest-time DSIR data selection — the STREAMING twin of the batch
@@ -16,8 +15,9 @@ import graft.operators.Curation
   * training is corpus-scale and periodic; APPLYING the model is O(batch)
   * and stateless (feature explode → broadcast join → per-doc sum), so the
   * gate composes with the other ingest gates (near-dup, quality, semantic)
-  * in the same foreachBatch + atomic TxTable MERGE deployment — replayed
-  * batches re-merge the same keys and the decision table converges.
+  * in the same [[TxStream.drain]] + atomic TxTable MERGE deployment — a
+  * crash-replayed batch is a stamped no-op, and a fresh-checkpoint replay
+  * re-merges the same keys so the decision table converges.
   *
   * Scoring reuses the batch pipeline's own kernels ([[Curation.dsirScore]]
   * / [[Curation.dsirFeatures]]), so gate and batch query can never bin,
@@ -65,17 +65,10 @@ object StreamSelect {
       buckets: Int = 4096, threshold: Double = 0.0): Unit = {
     val stream = spark.readStream.schema(graft.Tables.DocTextSchemaDdl)
       .parquet(inDir)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val decisions = selectGate(batch, ratio, buckets, threshold)
-        graft.serve.TxTable.merge(batch.sparkSession, decisions, tablePath,
-          Seq("doc_id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    TxStream.drain(stream, checkpoint) { (batch, stamp) =>
+      graft.serve.TxTable.merge(batch.sparkSession,
+        selectGate(batch, ratio, buckets, threshold), tablePath,
+        Seq("doc_id"), txn = Some(stamp))
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.functions.VectorExpressions.cosine_sim
 import graft.operators.Similarity
 
@@ -18,10 +17,10 @@ import graft.operators.Similarity
   * (k×dim — broadcast at any corpus scale), exact-cosine-verify against
   * only those cells' index vectors — batch×cell compute, never
   * index×index, never batch×batch. The per-vector verdict collapse
-  * (argmax over hits) is micro-batch-scoped, so the deployment wraps the
-  * gate in `foreachBatch` and commits each batch's decisions as ONE
-  * atomic TxTable MERGE (replays converge — the established
-  * `curateStreamTx` idempotency contract). */
+  * (argmax over hits) is micro-batch-scoped, so the deployment drains
+  * through [[TxStream.drain]] and commits each batch's decisions as ONE
+  * atomic, stamped TxTable MERGE (the `curateStreamTx` contract: a
+  * crash-replay is a no-op, a fresh-checkpoint replay converges). */
 object StreamSemantic {
 
   /** Per-batch decisions for `newVecs` (vec_id, emb) against a stored
@@ -68,17 +67,10 @@ object StreamSemantic {
     val cells = graft.serve.TxTable.read(spark, s"$indexPath/cells")
     val stream = spark.readStream.schema(graft.Tables.VecSchemaDdl)
       .parquet(inDir)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val decisions = semanticGate(batch, cents, cells, threshold, nprobe)
-        graft.serve.TxTable.merge(batch.sparkSession, decisions, tablePath,
-          Seq("vec_id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    TxStream.drain(stream, checkpoint) { (batch, stamp) =>
+      graft.serve.TxTable.merge(batch.sparkSession,
+        semanticGate(batch, cents, cells, threshold, nprobe), tablePath,
+        Seq("vec_id"), txn = Some(stamp))
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Layout
 
 /** Ingest-time shard assignment — the streaming twin of the batch
@@ -17,12 +16,14 @@ import graft.operators.Layout
   * generation is dealt — and the streamed form IS that sequence, one
   * generation per micro-batch (StreamShardsSpec pins streamed ≡ the
   * sequential batch composition applied in the realized drop order).
-  * Exported shard files are immutable, so replay safety must be
-  * INSERT-IF-ABSENT, not overwrite: a redelivered document would
-  * otherwise be re-dealt at the (advanced) high-water mark and move to a
-  * different shard. Each batch therefore anti-joins the stored export
-  * first; already-assigned docs contribute nothing and never advance the
-  * mark, so replays converge to the same table.
+  * The batch reads the table's high-water mark before it merges, so it is
+  * NOT a pure function of its rows: a crash-replayed batch must not be
+  * re-dealt at the (advanced) mark. The [[TxStream.drain]] stamp makes
+  * that replay a no-op. A replay from a FRESH checkpoint carries a new
+  * stamp, and exported shard files are immutable, so safety there is
+  * INSERT-IF-ABSENT, not overwrite: each batch anti-joins the stored
+  * export first; already-assigned docs contribute nothing and
+  * never advance the mark, so replays converge to the same table.
   *
   * At 100 TB: per micro-batch work is the two-phase prefix sum over the
   * BATCH only (the [[Layout.shuffleShardsOf]] kernel — shared with the
@@ -32,9 +33,6 @@ import graft.operators.Layout
   * aggregate that a production deployment reads from the manifest
   * instead of recomputing. */
 object StreamShards {
-
-  /** The (doc_id, text) drop-stream contract. */
-  val DocTextSchemaDdl: String = "doc_id LONG, text STRING"
 
   /** Assign one micro-batch: docs not yet exported, shuffled among
     * themselves, offset to the next boundary past `highWater` tokens.
@@ -53,43 +51,38 @@ object StreamShards {
   /** Streaming deployment: replay (doc_id, text) parquet drops from
     * `inDir`, append each micro-batch's assignment into the TxTable at
     * `tablePath` keyed doc_id — one atomic log commit per non-empty
-    * batch, insert-if-absent under replay. */
+    * batch, stamped by [[TxStream.drain]], insert-if-absent under a
+    * fresh-checkpoint replay. */
   def shardStreamTx(spark: SparkSession, inDir: String, tablePath: String,
       checkpoint: String, seed: Int = 42,
       shardTokens: Long = Layout.ShardTokens,
       topBits: Int = Layout.ShuffleTopBits,
       maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(DocTextSchemaDdl)
+    val stream = spark.readStream.schema(graft.Tables.DocTextSchemaDdl)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inDir)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val exported = graft.serve.TxTable.latestVersion(s, tablePath).isDefined
-        val (fresh, hw) =
-          if (!exported) (batch, 0L)
-          else {
-            val stored = graft.serve.TxTable.read(s, tablePath)
-            val f = batch.join(stored.select("doc_id"), Seq("doc_id"), "left_anti")
-            val mark = stored
-              .agg(coalesce(max(col("cum_before") + col("n_tokens")), lit(0L)))
-              .first().getLong(0)
-            (f, mark)
-          }
-        // an all-replayed (or all-whitespace — zero-token docs are never
-        // assigned) batch assigns nothing: committing an empty MERGE would
-        // only burn a table version, so the guard checks the ASSIGNMENT
-        val assigned = shardBatch(s, fresh, hw, seed, shardTokens, topBits)
-        if (!assigned.isEmpty) {
-          graft.serve.TxTable.merge(s, assigned, tablePath, Seq("doc_id"))
+    TxStream.drain(stream, checkpoint) { (batch, stamp) =>
+      val s = batch.sparkSession
+      val exported = graft.serve.TxTable.latestVersion(s, tablePath).isDefined
+      val (fresh, hw) =
+        if (!exported) (batch, 0L)
+        else {
+          val stored = graft.serve.TxTable.read(s, tablePath)
+          val f = batch.join(stored.select("doc_id"), Seq("doc_id"), "left_anti")
+          val mark = stored
+            .agg(coalesce(max(col("cum_before") + col("n_tokens")), lit(0L)))
+            .first().getLong(0)
+          (f, mark)
         }
-        ()
+      // an all-replayed (or all-whitespace — zero-token docs are never
+      // assigned) batch assigns nothing: committing an empty MERGE would
+      // only burn a table version, so the guard checks the ASSIGNMENT
+      val assigned = shardBatch(s, fresh, hw, seed, shardTokens, topBits)
+      if (!assigned.isEmpty) {
+        graft.serve.TxTable.merge(s, assigned, tablePath, Seq("doc_id"),
+          txn = Some(stamp))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The assembled export manifest. */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.functions.TextFunctions
 import graft.operators.Sketches
 
@@ -19,10 +18,10 @@ import graft.operators.Sketches
   *
   * Replay safety without read-modify-write: a naive `grid += batch`
   * double-counts on replay, so each micro-batch commits its PARTIAL grid
-  * keyed (lang, part_id = batch id) via an idempotent TxTable MERGE — a
-  * replayed batch overwrites its own partial, never adds twice (the
-  * `upsertStream` contract). The assembled sketch is the pointwise sum
-  * over partials, linear in (#languages × #batches) rows of fixed
+  * keyed (lang, part_id = batch id) via a TxTable MERGE stamped by
+  * [[TxStream.drain]] — a crash-replayed batch is a no-op, and any other
+  * re-merge of a batch overwrites its own partial, never adds twice. The
+  * assembled sketch is the pointwise sum over partials, linear in (#languages × #batches) rows of fixed
   * depth×width grids; a compaction that sums partials into one row per
   * language is the same MERGE one step further.
   *
@@ -49,27 +48,20 @@ object StreamSketch {
   /** Streaming deployment: replay (doc_id, lang, text) parquet drops from
     * `inDir`, commit each micro-batch's partial grids into the TxTable at
     * `tablePath` keyed (lang, part_id) — one atomic log commit per batch,
-    * idempotent under replay. */
+    * stamped by [[TxStream.drain]]. */
   def sketchStreamTx(spark: SparkSession, inDir: String, tablePath: String,
       checkpoint: String, depth: Int = Sketches.CmsDepth,
       width: Int = Sketches.CmsWidth, maxFilesPerTrigger: Int = 1): Unit = {
     val stream = spark.readStream.schema(DocLangTextSchemaDdl)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inDir)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val part = sketchBatch(batch, depth, width)
-          .withColumn("part_id", lit(id))
-          .select("lang", "part_id", "sketch")
-        graft.serve.TxTable.merge(batch.sparkSession, part, tablePath,
-          Seq("lang", "part_id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    TxStream.drain(stream, checkpoint) { (batch, stamp) =>
+      val part = sketchBatch(batch, depth, width)
+        .withColumn("part_id", lit(stamp._2))
+        .select("lang", "part_id", "sketch")
+      graft.serve.TxTable.merge(batch.sparkSession, part, tablePath,
+        Seq("lang", "part_id"), txn = Some(stamp))
+    }
   }
 
   /** The assembled per-language grid: pointwise sum over the committed

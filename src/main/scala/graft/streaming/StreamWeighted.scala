@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Sampling
 
 /** Ingest-time WEIGHTED sampling — the streaming twin of the batch
@@ -15,12 +14,14 @@ import graft.operators.Sampling
   * shared kernel is [[Sampling.weightedSampleOf]] itself, so the two
   * sides cannot hash, weigh, or tie-break differently.
   *
-  * Re-delivery is harmless by construction: a replayed doc contributes
-  * the identical (rank, doc_id) row and the idempotent TxTable MERGE
-  * keyed by doc_id overwrites rather than duplicates. At 100 TB each
-  * micro-batch ships ≤ budget candidate rows TOTAL (the global top-k is a
-  * TakeOrderedAndProject, per-partition heaps merged once), and the
-  * stored candidate table is ≤ budget × #batches rows — metadata scale.
+  * A crash-replayed batch is a no-op under the [[TxStream.drain]] stamp;
+  * re-delivery from a fresh checkpoint is harmless by construction: a
+  * replayed doc contributes the identical (rank, doc_id) row and the
+  * TxTable MERGE keyed by doc_id overwrites rather than duplicates. At
+  * 100 TB each micro-batch ships ≤ budget candidate rows TOTAL (the
+  * global top-k is a TakeOrderedAndProject, per-partition heaps merged
+  * once), and the stored candidate table is ≤ budget × #batches rows —
+  * metadata scale.
   *
   * The drop contract is (doc_id, lang, source, weight): the weight is
   * part of the ingest record — re-deriving it at read time would let a
@@ -50,17 +51,11 @@ object StreamWeighted {
     val stream = spark.readStream.schema(DocWeightSchemaDdl)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inDir)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.serve.TxTable.merge(batch.sparkSession,
-          sampleBatch(batch, budget, seed), tablePath, Seq("doc_id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    TxStream.drain(stream, checkpoint) { (batch, stamp) =>
+      graft.serve.TxTable.merge(batch.sparkSession,
+        sampleBatch(batch, budget, seed), tablePath, Seq("doc_id"),
+        txn = Some(stamp))
+    }
   }
 
   /** The assembled sample: re-top the stored candidates through the SAME

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Static hygiene over the registered query surface — rules that hold for
-  * every CURRENT and FUTURE oracle, enforced without a Spark session.
+/** Static hygiene over the registered query surface and the source tree —
+  * rules that hold for every CURRENT and FUTURE oracle or module, enforced
+  * without a Spark session.
   */
 class RepoHygieneSpec extends AnyFunSuite {
 
@@ -28,6 +29,26 @@ class RepoHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"double backslash reached final SQL text: ${offenders.mkString(", ")}")
+  }
+
+  test("the streaming foreachBatch skeleton exists once, in TxStream") {
+    // every streaming TxTable sink drains through TxStream.drain, which
+    // stamps each micro-batch for exactly-once commits; a second
+    // foreachBatch would be a sink that skips the stamp
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) files(f) else Seq(f)
+      }
+    val allowed = new java.io.File(root, "graft/streaming/TxStream.scala")
+    val offenders = files(root).filter { f =>
+      f.getName.endsWith(".scala") && f != allowed &&
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+          .contains("foreachBatch")
+    }
+    assert(allowed.isFile && offenders.isEmpty,
+      s"foreachBatch outside TxStream.scala: ${offenders.mkString(", ")}")
   }
 
   test("spark-side whitespace class matches the oracle-side text") {

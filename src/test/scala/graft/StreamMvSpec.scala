@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.serve.FinanceMv
-import graft.streaming.StreamMv
+import graft.streaming.{StreamMv, TxStream}
 
 /** Streaming maintenance of the day-grain MV (§2.10 twin of the FinanceMv
   * batch build): the additive micro-batch fold into the TxTable must
@@ -11,6 +11,8 @@ import graft.streaming.StreamMv
   * genuinely multi-batch drain. */
 class StreamMvSpec extends AnyFunSuite {
   import SparkTestSession._
+
+  private def hconf = spark.sparkContext.hadoopConfiguration
 
   test("stream-maintained MV == one-shot batch build, across micro-batches") {
     val root = java.nio.file.Files.createTempDirectory("stream_mv").toString
@@ -40,10 +42,10 @@ class StreamMvSpec extends AnyFunSuite {
 
   test("txnAppId is persisted with the checkpoint — spelling- and derivation-proof") {
     val root = java.nio.file.Files.createTempDirectory("stream_mv_appid").toString
-    val a = StreamMv.txnAppId(s"$root/ckpt")
+    val a = TxStream.txnAppId(hconf, s"$root/ckpt")
     // any later spelling of the same directory reads the same persisted id
-    assert(StreamMv.txnAppId(s"$root/./ckpt") == a)
-    assert(StreamMv.txnAppId(s"$root/ckpt/../ckpt") == a)
+    assert(TxStream.txnAppId(hconf, s"$root/./ckpt") == a)
+    assert(TxStream.txnAppId(hconf, s"$root/ckpt/../ckpt") == a)
     assert(new java.io.File(s"$root/ckpt", "_graft_app_id").isFile,
       "the identity must live WITH the checkpoint state it guards")
     // an id minted by an OLDER derivation is adopted verbatim — a future
@@ -52,7 +54,7 @@ class StreamMvSpec extends AnyFunSuite {
     java.nio.file.Files.write(
       new java.io.File(legacy, "_graft_app_id").toPath,
       "stream_mv_legacy42\n".getBytes("UTF-8"))
-    assert(StreamMv.txnAppId(legacy.getPath) == "stream_mv_legacy42")
+    assert(TxStream.txnAppId(hconf, legacy.getPath) == "stream_mv_legacy42")
   }
 
   test("a poisoned _graft_app_id fails loudly naming the file, never a bad stamp") {
@@ -64,14 +66,14 @@ class StreamMvSpec extends AnyFunSuite {
     val empty = new java.io.File(s"$root/ckptE"); empty.mkdirs()
     java.nio.file.Files.write(
       new java.io.File(empty, "_graft_app_id").toPath, "\n".getBytes("UTF-8"))
-    val e1 = intercept[IllegalArgumentException] { StreamMv.txnAppId(empty.getPath) }
+    val e1 = intercept[IllegalArgumentException] { TxStream.txnAppId(hconf, empty.getPath) }
     assert(e1.getMessage.contains("_graft_app_id") &&
       e1.getMessage.contains("invalid app id"))
     val colon = new java.io.File(s"$root/ckptC"); colon.mkdirs()
     java.nio.file.Files.write(
       new java.io.File(colon, "_graft_app_id").toPath,
       "bad:id\n".getBytes("UTF-8"))
-    val e2 = intercept[IllegalArgumentException] { StreamMv.txnAppId(colon.getPath) }
+    val e2 = intercept[IllegalArgumentException] { TxStream.txnAppId(hconf, colon.getPath) }
     assert(e2.getMessage.contains("invalid app id"))
   }
 
@@ -82,7 +84,7 @@ class StreamMvSpec extends AnyFunSuite {
       FinanceMv.viewOf(Tables.events(spark, sf).limit(0))
         .withColumn("day", date_format(col("day"), "yyyy-MM-dd")),
       tablePath)
-    val app = StreamMv.txnAppId(s"$root/ckpt")
+    val app = TxStream.txnAppId(hconf, s"$root/ckpt")
     val batch = Tables.events(spark, sf).limit(500)
     FinanceMv.maintainDailyCloseMv(spark, batch, tablePath, Some((app, 0L)))
     val vAfter = serve.TxTable.latestVersion(spark, tablePath).get
