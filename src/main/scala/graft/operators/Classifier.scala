@@ -142,7 +142,7 @@ object Classifier {
     * formulas either way, pinned ≡ by ClassifierSpec. */
   val LocalFitRows = 100000L
 
-  /** Test seam (the TxTable `onMergeStaged` pattern): forces the
+  /** Test seam (the TxTable `onStaged` pattern): forces the
     * distributed pass path regardless of size, so ClassifierSpec can pin
     * local ≡ distributed on the same data. No-op in production. */
   private[graft] var forceDistributed = false

@@ -279,25 +279,38 @@ object NgramLm {
   /** INCREMENTAL count maintenance: count the new batch, add the stored
     * counts for the touched grams, MERGE keyed by gram — file-pruned by
     * the TxTable key stats, so the rewrite cost scales with the touched
-    * gram range, not the model. Each table's merge is one atomic commit.
+    * gram range, not the model. Each table's fold is one atomic
+    * [[graft.serve.TxTable.mergeAt]] commit: a concurrent append or purge
+    * that commits first makes the fold re-read the stored counts and
+    * re-apply on top, so neither writer's counts are lost.
     * NOT replay-idempotent (counts are additive — a redelivered batch
     * double-counts): producers must dedupe batches upstream, e.g. keying
     * deliveries by batch id — the honest contract of any count-based
     * statistic, unlike the overwrite-style code/index merges. */
   def appendLmCounts(spark: SparkSession, batch: DataFrame, path: String): Unit = {
     val (uni, big, tri) = rawCounts(tokenStream(batch))
-    def bump(cnts: DataFrame, table: String, keys: Seq[String], ccol: String): Unit = {
-      val stored = graft.serve.TxTable.read(spark, s"$path/$table")
-        .select((keys.map(col) :+ col(ccol).as("c_old")): _*)
-      val updated = cnts.join(stored, keys, "left")
-        .select((keys.map(col) :+
-          (col(ccol) + coalesce(col("c_old"), lit(0L))).as(ccol)): _*)
-      graft.serve.TxTable.merge(spark, updated, s"$path/$table", keys)
-      ()
+    Seq(uni, big, tri).zip(CountTables).foreach { case (cnts, (t, keys, ccol)) =>
+      foldCounts(spark, cnts, s"$path/$t", keys, ccol, +1)
     }
-    bump(uni, "uni", Seq("w"), "c1")
-    bump(big, "big", Seq("b1", "b2"), "c2")
-    bump(tri, "tri", Seq("t1", "t2", "t3"), "c3")
+  }
+
+  /** The stored count tables: (name, gram key columns, count column). */
+  private val CountTables = Seq(("uni", Seq("w"), "c1"),
+    ("big", Seq("b1", "b2"), "c2"), ("tri", Seq("t1", "t2", "t3"), "c3"))
+
+  /** Add (`sign` +1) or subtract (−1) `cnts` to the counts stored in the
+    * TxTable at `tpath`, as of the version the merge commits on top of. */
+  private def foldCounts(spark: SparkSession, cnts: DataFrame, tpath: String,
+      keys: Seq[String], ccol: String, sign: Int): Unit = {
+    graft.serve.TxTable.mergeAt(spark, tpath, keys) { v =>
+      val stored = graft.serve.TxTable.read(spark, tpath, Some(v))
+        .select((keys.map(col) :+ col(ccol).as("c_old")): _*)
+      val cOld = coalesce(col("c_old"), lit(0L))
+      cnts.join(stored, keys, "left")
+        .select((keys.map(col) :+
+          (if (sign >= 0) col(ccol) + cOld else cOld - col(ccol)).as(ccol)): _*)
+    }
+    ()
   }
 
   /** RIGHT-TO-BE-FORGOTTEN on the count statistic: counts form an abelian
@@ -308,23 +321,14 @@ object NgramLm {
     * the stored tables are EXACTLY the counts of the remaining corpus
     * (PurgeSpec pins table equality against a from-scratch rebuild) — no
     * full recount, cost O(purged batch) + the touched gram ranges. Same
-    * delivery contract as [[appendLmCounts]]: not replay-idempotent. */
+    * contract as [[appendLmCounts]]: not replay-idempotent, and safe
+    * against a racing writer (the subtraction is a `mergeAt` fold too). */
   def removeLmCounts(spark: SparkSession, purged: DataFrame, path: String): Unit = {
     val (uni, big, tri) = rawCounts(tokenStream(purged))
-    def unbump(cnts: DataFrame, table: String, keys: Seq[String], ccol: String): Unit = {
-      val tpath = s"$path/$table"
-      val stored = graft.serve.TxTable.read(spark, tpath)
-        .select((keys.map(col) :+ col(ccol).as("c_old")): _*)
-      val updated = cnts.join(stored, keys, "left")
-        .select((keys.map(col) :+
-          (coalesce(col("c_old"), lit(0L)) - col(ccol)).as(ccol)): _*)
-      graft.serve.TxTable.merge(spark, updated, tpath, keys)
-      graft.serve.TxTable.delete(spark, tpath, col(ccol) <= 0L)
-      ()
+    Seq(uni, big, tri).zip(CountTables).foreach { case (cnts, (t, keys, ccol)) =>
+      foldCounts(spark, cnts, s"$path/$t", keys, ccol, -1)
+      graft.serve.TxTable.delete(spark, s"$path/$t", col(ccol) <= 0L)
     }
-    unbump(uni, "uni", Seq("w"), "c1")
-    unbump(big, "big", Seq("b1", "b2"), "c2")
-    unbump(tri, "tri", Seq("t1", "t2", "t3"), "c3")
   }
 
   /** Score a corpus against the PERSISTED model: counts read back from

@@ -47,6 +47,8 @@ object FinanceMv {
   // (a reset commit; writer stamps survive resets, so streams resume).
   private val Dec = org.apache.spark.sql.types.DecimalType(38, 6)
 
+  private val MvKeys = Seq("event_type", "day")
+
   /** Full MV build over a tick snapshot: (event_type, day, n_events, s).
     * The sum is cast back to the declared state type (an identity at
     * (38,6) — sum of (38,6) is (38,6)), because the stored state must
@@ -94,45 +96,15 @@ object FinanceMv {
     closeOf(TxTable.read(spark, path)
       .withColumn("day", to_timestamp(col("day"), "yyyy-MM-dd")))
 
-  /** How many whole-fold retries a CAS'd read-modify-write gets before
-    * giving up — mirrors [[TxTable.MaxCommitRetries]]. */
-  private val MaxFoldRetries = 5
-
-  /** The additive read-modify-write at the heart of both maintenance verbs,
-    * run as a COMPARE-AND-SWAP on the table version (r14 ADVICE): the
-    * `updated` batch embeds n_old/s_old read from a snapshot, and
-    * [[TxTable.merge]]'s internal optimistic retry recomputes only the file
-    * rewrite — never the caller's stale arithmetic — so a fold racing a
-    * truly concurrent merge on the same key would silently lose one side's
-    * delta (the stream's increment dropped, or a purge's subtraction
-    * overwritten — resurrecting forgotten data). Here every fold pins the
-    * version it read (`expectedBase`); any interleaved commit aborts the
-    * merge with `ConcurrentModificationException` and the WHOLE fold —
-    * snapshot read included — recomputes against the new version.
-    * FinanceMvSpec races this against an interleaved merge via the
-    * onMergeStaged seam and asserts both deltas survive. */
-  private def casFold(spark: SparkSession, path: String,
-      txn: Option[(String, Long)])(
-      updatedAt: Long => DataFrame): Unit = {
-    var attempt = 0
-    while (true) {
-      val v0 = TxTable.latestVersion(spark, path).getOrElse(
-        throw new java.io.FileNotFoundException(s"TxTable at $path has no commits"))
-      try {
-        TxTable.merge(spark, updatedAt(v0), path, Seq("event_type", "day"),
-          txn = txn, expectedBase = Some(v0))
-        return
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= MaxFoldRetries) throw e
-      }
-    }
-  }
-
   /** The keyed additive delta both verbs merge: batch partials joined with
-    * the stored state AT THE PINNED VERSION (the CAS read), summed with
-    * `sign` (+1 ingest, −1 purge). */
+    * the stored state AS OF version `v0`, summed with `sign` (+1 ingest,
+    * −1 purge). A read-modify-write fold: both verbs run it through
+    * [[TxTable.mergeAt]], so a fold racing another commit — a live
+    * stream's increment, or a purge's subtraction — re-reads the state and
+    * re-applies on top instead of overwriting the other side's delta
+    * (which would drop the increment, or resurrect forgotten data).
+    * FinanceMvSpec races a purge against an ingest fold through the
+    * `onStaged` seam and asserts both deltas survive. */
   private def foldDelta(spark: SparkSession, batch: DataFrame, path: String,
       v0: Long, sign: Int): DataFrame = {
     val delta = viewOf(batch)
@@ -157,16 +129,18 @@ object FinanceMv {
     * add the stored state for the touched (event_type, day) keys, MERGE —
     * file-pruned by the TxTable day stats, so the rewrite scales with the
     * days the batch touches, never the view. One atomic commit per batch,
-    * CAS-pinned to the version the state was read at (see [[casFold]]).
+    * through [[TxTable.mergeAt]]: a racing commit re-runs the fold.
     * Like [[graft.operators.NgramLm.appendLmCounts]], the additive fold is
     * NOT replay-idempotent by itself — pass `txn` (the Delta
-    * txnAppId:batchId stamp) and [[TxTable.merge]] turns a replayed batch
+    * txnAppId:batchId stamp) and [[TxTable.mergeAt]] turns a replayed batch
     * into a no-op, closing the crash window between the table commit and
     * the streaming checkpoint commit (the [[graft.streaming.TxStream]]
     * exactly-once contract). */
   def maintainDailyCloseMv(spark: SparkSession, batch: DataFrame,
-      path: String, txn: Option[(String, Long)] = None): Unit =
-    casFold(spark, path, txn)(v0 => foldDelta(spark, batch, path, v0, +1))
+      path: String, txn: Option[(String, Long)] = None): Unit = {
+    TxTable.mergeAt(spark, path, MvKeys, txn)(foldDelta(spark, batch, path, _, +1))
+    ()
+  }
 
   /** RIGHT-TO-BE-FORGOTTEN on the persisted MV state: fold the purged
     * ticks OUT of the aggregate (negated bump — decimal addition is exact,
@@ -182,9 +156,9 @@ object FinanceMv {
     * the ingest fold's — StreamPurgeSpec's crash-replay leg pins the
     * no-op); the interactive right-to-be-forgotten loop runs it once per
     * request with txn = None. Cost: O(days touched by the purge) — same
-    * file-pruned CAS'd merge shape as an ingest batch, so a purge racing a
-    * live stream's merge on the same key can no longer lose either side's
-    * delta (one of the two folds re-reads and re-applies).
+    * file-pruned [[TxTable.mergeAt]] shape as an ingest batch, so a purge
+    * racing a live stream's merge on the same key cannot lose either
+    * side's delta (one of the two folds re-reads and re-applies).
     *
     * CRASH WINDOW (documented contract): the negated merge and the
     * zero-key DELETE are TWO commits. A crash between them leaves
@@ -197,7 +171,7 @@ object FinanceMv {
     * delete lands. */
   def removeFromDailyCloseMv(spark: SparkSession, purged: DataFrame,
       path: String, txn: Option[(String, Long)] = None): Unit = {
-    casFold(spark, path, txn)(v0 => foldDelta(spark, purged, path, v0, -1))
+    TxTable.mergeAt(spark, path, MvKeys, txn)(foldDelta(spark, purged, path, _, -1))
     TxTable.delete(spark, path, col("n_events") <= 0L)
     ()
   }

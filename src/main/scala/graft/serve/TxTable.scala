@@ -38,8 +38,9 @@ import graft.Tables
   * The COMMIT POINT is the atomic rename of a staged manifest to
   * `_txlog/<version>.txt`. Hadoop `rename` refuses an existing destination,
   * so two writers racing for the same version produce exactly one winner —
-  * the loser re-reads the new snapshot and retries its merge on top
-  * (optimistic concurrency, the Delta protocol's conflict rule). Readers
+  * the loser re-reads the new snapshot and retries on top (optimistic
+  * concurrency, the Delta protocol; every writer runs the one
+  * [[commitLoop]] with its own conflict rule). Readers
   * resolve a snapshot by manifest, so they never observe a half-written
   * table and can time-travel to any retained version. Checkpoints are
   * written AFTER the commit wins, outside the race (idempotent, and purely
@@ -106,16 +107,11 @@ object TxTable {
     new Path(logDir(path), f"$v%08d.txt")
 
   /** Highest committed version, or None for a table that does not exist. */
-  def latestVersion(spark: SparkSession, path: String): Option[Long] = {
-    val fs = hfs(spark, path)
-    if (!fs.exists(logDir(path))) None
-    else {
-      val vs = fs.listStatus(logDir(path)).toSeq
-        .map(_.getPath.getName).filter(_.endsWith(".txt"))
-        .map(_.stripSuffix(".txt").toLong)
-      if (vs.isEmpty) None else Some(vs.max)
-    }
-  }
+  def latestVersion(spark: SparkSession, path: String): Option[Long] =
+    listLog(hfs(spark, path), path, ".txt").maxOption
+
+  private def noTable(path: String) =
+    new java.io.FileNotFoundException(s"TxTable at $path has no commits")
 
   /** One manifest line: a table-relative file name, optionally with
     * per-file stats (see [[TxStats]]). Manifest lines are
@@ -369,13 +365,14 @@ object TxTable {
     if (!publish(fs, tmp, checkpointFile(path, v))) fs.delete(tmp, false)
   }
 
-  /** Post-commit checkpoint hook — fired by every writer after it wins a
-    * version on the interval boundary. Failure-safe: the checkpoint is
-    * derivable from the log, so best-effort is enough. */
-  private def maybeCheckpoint(fs: FileSystem, path: String, v: Long,
-      entries: Seq[ManifestEntry]): Unit =
+  /** Post-commit checkpoint hook — fired by the commit loop after it wins
+    * a version on the interval boundary. The manifest is resolved from the
+    * log just extended, so a delta commit's checkpoint includes the files
+    * it carried. Failure-safe: the checkpoint is derivable from the log,
+    * so best-effort is enough. */
+  private def maybeCheckpoint(fs: FileSystem, path: String, v: Long): Unit =
     if (v > 0 && v % CheckpointInterval == 0)
-      try writeCheckpoint(fs, path, v, entries)
+      try writeCheckpoint(fs, path, v, resolveEntries(fs, path, v))
       catch { case scala.util.control.NonFatal(_) => () }
 
   /** Resolve the full file list at version `v`: nearest checkpoint ≤ v,
@@ -429,8 +426,7 @@ object TxTable {
     * tests and planners consult without reading any data. */
   def manifest(spark: SparkSession, path: String,
       version: Option[Long] = None): Seq[ManifestEntry] = {
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new java.io.FileNotFoundException(s"TxTable at $path has no commits"))
+    val v = version.orElse(latestVersion(spark, path)).getOrElse(throw noTable(path))
     val fs = hfs(spark, path)
     if (!fs.exists(commitFile(path, v)))
       throw new java.io.FileNotFoundException(s"TxTable $path has no version $v")
@@ -610,16 +606,75 @@ object TxTable {
     }
   }
 
-  /** Full snapshot write (op=write): stage, then commit as the next
-    * version. The previous snapshot stays readable (no file is touched). */
-  def write(spark: SparkSession, df: DataFrame, path: String): Long = {
+  /** Test seam: invoked once after any op's first stage, before its first
+    * commit attempt — lets specs interleave a racing writer at the exact
+    * window optimistic concurrency must survive. No-op in production. */
+  private[graft] var onStaged: () => Unit = () => ()
+
+  /** Test seam: invoked at the top of every RETRY iteration (after a lost
+    * race, before the snapshot re-read) — lets specs land a second racing
+    * commit in the window the revalidation watermark must cover. */
+  private[graft] var onRetry: () => Unit = () => ()
+
+  /** Test telemetry: how many times a commit loop has staged again after
+    * a lost race (the racing commits failed the op's conflict rule). */
+  private[graft] val restages = new java.util.concurrent.atomic.AtomicLong
+
+  /** One op's staged delta plus its conflict rule: `survives(rv)` says
+    * whether the commit that landed at version `rv` after staging leaves
+    * the staged files valid — false makes the loop stage again. */
+  private case class Staged(removes: Seq[String], adds: Seq[ManifestEntry],
+      survives: Long => Boolean)
+
+  /** The optimistic commit loop every writer runs — the Delta protocol,
+    * written once. `stage(base)` reads the snapshot at `base` (None: no
+    * table yet) and stages the op's files outside the commit point, or
+    * returns None to commit nothing. Each attempt:
+    *  1. reads the latest version;
+    *  2. applies the idempotent-writer guard (Delta's txnAppId:txnVersion):
+    *     a `txn` stamp already committed is a REPLAY — the crash window
+    *     between a streaming fold's table commit and its checkpoint
+    *     commit — and returns the current version, never a double apply.
+    *     One writer per appId is the contract (a streaming query per
+    *     checkpoint), so the check races only against itself;
+    *  3. re-checks every commit that landed since the staged files were
+    *     last validated against the op's conflict rule, and stages again
+    *     if one conflicts (checking only at lost-race time would miss a
+    *     commit landing between that sample and the next attempt);
+    *  4. publishes the delta as the next version through the put-if-absent
+    *     commit point — losing the version race loops back to step 1;
+    *  5. on the [[CheckpointInterval]] boundary, checkpoints the resolved
+    *     manifest.
+    * After [[MaxCommitRetries]] lost races it gives up loudly. */
+  private def commitLoop(spark: SparkSession, path: String, op: String,
+      txn: Option[(String, Long)] = None)(
+      stage: Option[Long] => Option[Staged]): Long = {
     val fs = hfs(spark, path)
-    val files = stageData(spark, df, path)
+    txn.foreach { case (appId, _) =>
+      require(validAppId(appId),
+        s"TxTable: txn appId '$appId' must be non-empty and free of tab/'='/':'/CR/LF")
+    }
+    val meta = txn.map { case (a, b) => "txn" -> s"$a:$b" }.toMap
+    var staged: Option[Staged] = None
+    var validatedThrough = -1L
     var attempt = 0
     while (attempt < MaxCommitRetries) {
-      val v = latestVersion(spark, path).map(_ + 1).getOrElse(0L)
-      if (tryCommit(fs, path, v, "write", Nil, files)) {
-        maybeCheckpoint(fs, path, v, files)
+      if (attempt > 0) onRetry()
+      val base = latestVersion(spark, path)
+      for ((appId, batchId) <- txn; bv <- base)
+        if (resolveTxns(fs, path, bv).get(appId).exists(batchId <= _)) return bv
+      staged = staged.filter(s =>
+        (validatedThrough + 1 to base.getOrElse(-1L)).forall(s.survives))
+      if (staged.isEmpty) {
+        if (attempt > 0) restages.incrementAndGet()
+        staged = stage(base)
+        if (staged.isEmpty) return base.getOrElse(throw noTable(path))
+        if (attempt == 0) onStaged()
+      }
+      validatedThrough = base.getOrElse(-1L)
+      val v = base.map(_ + 1).getOrElse(0L)
+      if (tryCommit(fs, path, v, op, staged.get.removes, staged.get.adds, meta)) {
+        maybeCheckpoint(fs, path, v)
         return v
       }
       attempt += 1
@@ -627,20 +682,13 @@ object TxTable {
     throw new java.io.IOException(s"TxTable: lost $MaxCommitRetries version races at $path")
   }
 
-  /** Test seam: invoked once after a merge stages its rewrite, before its
-    * first commit attempt — lets specs interleave a racing writer at the
-    * exact window optimistic concurrency must survive. No-op in production. */
-  private[graft] var onMergeStaged: () => Unit = () => ()
-
-  /** Test seam: invoked at the top of every RETRY iteration (after a lost
-    * race, before the snapshot re-read) — lets specs land a second racing
-    * commit in the window the revalidation watermark must cover. */
-  private[graft] var onMergeRetry: () => Unit = () => ()
-
-  /** Test telemetry: how many times merge() has recomputed its
-    * read-merge-stage phase (a lost race that fails logical conflict
-    * detection). */
-  private[graft] val mergeRecomputes = new java.util.concurrent.atomic.AtomicLong
+  /** Full snapshot write (op=write): stage, then commit as the next
+    * version. The previous snapshot stays readable (no file is touched).
+    * Staged once: a reset commit replaces whatever raced in before it. */
+  def write(spark: SparkSession, df: DataFrame, path: String): Long =
+    commitLoop(spark, path, "write") { _ =>
+      Some(Staged(Nil, stageData(spark, df, path), _ => true))
+    }
 
   /** Latest batch id committed under `appId`'s `txn=` stamp — the read
     * half of the Delta txnAppId/txnVersion recipe. Resolved like a
@@ -699,178 +747,124 @@ object TxTable {
     * that no commit names (say, a plain parquet table written there
     * before) are neither read nor touched.
     *
-    * `expectedBase = Some(v)` turns the merge into a compare-and-swap: it
-    * commits ONLY as version v+1, throwing `ConcurrentModificationException`
-    * if any other writer claimed a version since the caller read its
-    * snapshot at v. The optimistic retry loop inside merge recomputes only
-    * the FILE rewrite — it cannot know that the caller's `updates` frame
-    * embeds state read from an earlier snapshot (a read-modify-write fold
-    * like [[FinanceMv.maintainDailyCloseMv]] bakes n_old/s_old into the
-    * batch), so a lost race there must abort the WHOLE fold, not re-stage
-    * stale deltas. Callers catch the CME, re-read, recompute, retry. */
+    * Conflict rule (Delta's): a lost race re-commits the SAME staged files
+    * when every racing commit is a non-reset that removed none of the
+    * files the merge read and added no file whose leading-key range can
+    * contain one of its update keys (stats-less adds conservatively
+    * conflict) — disjoint-key writers cost no re-scan, no re-stage. The
+    * re-stage re-runs the file rewrite only: `updates` itself is fixed, so
+    * a batch that embeds state read from the table (a read-modify-write
+    * fold) must go through [[mergeAt]] instead. */
   def merge(spark: SparkSession, updates: DataFrame, path: String,
       keys: Seq[String], versionCol: Option[String] = None,
-      txn: Option[(String, Long)] = None,
-      expectedBase: Option[Long] = None): Long = {
-    val fs = hfs(spark, path)
-    // Idempotent-writer guard (Delta's txnAppId:txnVersion): a merge
-    // stamped with a (appId, batchId) it has already committed is a
-    // REPLAY — the crash-between-table-commit-and-checkpoint-commit
-    // window of a streaming fold — and must be a no-op, not a double
-    // apply. One writer per appId is the contract (a streaming query per
-    // checkpoint), so the entry check races only against itself.
-    txn.foreach { case (appId, _) =>
-      require(validAppId(appId),
-        s"TxTable: txn appId '$appId' must be non-empty and free of tab/'='/':'/CR/LF")
+      txn: Option[(String, Long)] = None): Long = {
+    val batch = new MergeBatch(updates, keys, versionCol)
+    commitLoop(spark, path, "merge", txn)(base => Some(stageMerge(spark, path, batch, base)))
+  }
+
+  /** A read-modify-write MERGE: the batch is a function of the version it
+    * merges into — `updatesAt(v)` may read the table AS OF `v` (an
+    * additive fold bakes the stored counts into its batch, like
+    * [[FinanceMv.maintainDailyCloseMv]]). Any commit landing after the
+    * read re-runs the WHOLE fold — `updatesAt` included — against the new
+    * version, so a racing writer's delta is never overwritten with stale
+    * arithmetic (compare-and-swap on the table version; a plain [[merge]]
+    * would re-stage only the file rewrite). The table must exist. */
+  def mergeAt(spark: SparkSession, path: String, keys: Seq[String],
+      txn: Option[(String, Long)] = None)(updatesAt: Long => DataFrame): Long =
+    commitLoop(spark, path, "merge", txn) { base =>
+      val batch = new MergeBatch(updatesAt(base.getOrElse(throw noTable(path))), keys, None)
+      Some(stageMerge(spark, path, batch, base).copy(survives = _ => false))
     }
-    for ((appId, batchId) <- txn; last <- lastTxnBatch(spark, path, appId))
-      if (batchId <= last)
-        return latestVersion(spark, path).getOrElse(
-          throw new java.io.FileNotFoundException(s"TxTable at $path has no commits"))
-    val deduped = collapseByKey(updates, keys, versionCol)
-    val updKeys = deduped.select(keys.map(col): _*).distinct()
-    // bounds of the update batch's first key, for the stats pre-filter on
-    // an existing base and the disjointness check after a lost race (one
-    // tiny agg; multi-key merges still prune soundly on the leading key
-    // alone). Lazy: a merge into an absent table reads neither, so its
-    // first commit starts no bounds job
-    lazy val (updLo, updHi) = {
-      val row = updKeys.agg(
+
+  /** A merge batch collapsed to one row per key, plus the bounds of its
+    * leading key — for the stats pre-filter on an existing base and the
+    * disjointness rule after a lost race (one tiny agg; multi-key merges
+    * still prune soundly on the leading key alone). Lazy: a merge into an
+    * absent table reads neither, so its first commit starts no bounds job. */
+  private class MergeBatch(updates: DataFrame, val keys: Seq[String],
+      versionCol: Option[String]) {
+    val rows: DataFrame = collapseByKey(updates, keys, versionCol)
+    val keyRows: DataFrame = rows.select(keys.map(col): _*).distinct()
+    lazy val (lo, hi) = {
+      val row = keyRows.agg(
         min(col(keys.head)).as("lo"), max(col(keys.head)).as("hi")).first()
       (TxStats.toComparable(row.get(0)), TxStats.toComparable(row.get(1)))
     }
-    var attempt = 0
-    var firstStage = true
-    // the staged rewrite (and what it depends on) survives across LOGICALLY
-    // DISJOINT races — Delta's conflict rule: losing the version race only
-    // forces a recompute when a racing commit actually invalidated what we
-    // read or could contain one of our keys
-    var staged: Seq[ManifestEntry] = Seq.empty
-    var touchedRels: Seq[String] = Seq.empty
-    var readRels: Set[String] = Set.empty
-    var stagedValid = false
-    // highest version the staged rewrite has been validated against — a
-    // commit attempt may only reuse staged files after EVERY commit above
-    // this watermark passed the disjointness check (checking only at
-    // lost-race time would miss a commit landing between that sample and
-    // the next tryCommit: classic lost update)
-    var validatedThrough = -1L
-    def disjointFrom(rv: Long): Boolean = {
+  }
+
+  /** Stage one merge of `batch` into the snapshot at `base`: the touched
+    * files' rewrite, plus the disjointness rule [[merge]] documents. */
+  private def stageMerge(spark: SparkSession, path: String, batch: MergeBatch,
+      base: Option[Long]): Staged = {
+    val fs = hfs(spark, path)
+    val keys = batch.keys
+    val (touchedRels, readRels, rewritten) = base match {
+      case Some(bv) =>
+        val baseFiles = resolveEntries(fs, path, bv)
+        // fail-fast additive-evolution guard: a retyped column must be
+        // refused BEFORE the commit poisons the table (the read-side
+        // snapshotSchema check is the safety net, not the gate)
+        val current = snapshotSchema(spark, path, baseFiles.map(_.rel))
+        batch.rows.schema.fields.foreach { f =>
+          current.fields.find(_.name == f.name).foreach { existing =>
+            if (!org.apache.spark.sql.types.DataType
+                .equalsIgnoreNullability(existing.dataType, f.dataType))
+              throw new IllegalArgumentException(
+                s"TxTable $path: merge batch retypes column '${f.name}' " +
+                  s"(${existing.dataType.simpleString} -> ${f.dataType.simpleString}) " +
+                  "— schema evolution is additive-only")
+          }
+        }
+        // stats pre-filter: a file whose key range cannot intersect the
+        // update batch cannot hold a matched key — skip it in the scan
+        // AND carry it verbatim. At 100 TB this is what bounds merge cost
+        // by the touched region, not the table: the matched-file scan
+        // reads only range-overlapping candidates.
+        val candidates = baseFiles.filter { e => // no stats: must scan
+          e.stats.forall(TxStats.rangesOverlap(_, keys.head, batch.lo, batch.hi))
+        }
+        // which candidate files hold a matched key? one scan, keys
+        // broadcast, read at the snapshot schema just resolved
+        val touchedNames =
+          if (candidates.isEmpty) Set.empty[String]
+          else spark.read.schema(current)
+            .parquet(candidates.map(e => s"$path/${e.rel}"): _*)
+            .withColumn("__file", input_file_name())
+            .join(broadcast(batch.keyRows), keys, "left_semi")
+            .select("__file").distinct().collect()
+            .map(r => new Path(r.getString(0)).getName).toSet
+        val touched = candidates.filter(
+          e => touchedNames.contains(new Path(e.rel).getName))
+        // mergeSchema on the touched read + allowMissingColumns on the
+        // union: an update batch may ADD columns (additive schema
+        // evolution — retained rows of rewritten files get null, the
+        // snapshotSchema contract); without these a first evolving
+        // merge crashes, and a mixed-schema touched set would silently
+        // clip to its first file's fields. The USING join moves the keys
+        // to the front; the select puts the table's column order back,
+        // so a rewritten file reads like the one it replaces
+        val rewrite =
+          if (touched.isEmpty) batch.rows
+          else {
+            val kept = spark.read.option("mergeSchema", "true")
+              .parquet(touched.map(e => s"$path/${e.rel}"): _*)
+            kept.join(batch.keyRows, keys, "left_anti")
+              .select(kept.columns.map(kept.col): _*)
+              .unionByName(batch.rows, allowMissingColumns = true)
+          }
+        (touched.map(_.rel), candidates.map(_.rel).toSet, rewrite)
+      case None => (Seq.empty[String], Set.empty[String], batch.rows)
+    }
+    // the commit is the DELTA (removed touched files, added staged ones);
+    // carried files are implicit — O(touched) metadata per merge
+    Staged(touchedRels, stageData(spark, rewritten, path), survives = { rv =>
       val c = readCommit(fs, path, rv)
       !c.reset &&
         !c.removes.exists(readRels.contains) &&
         !c.adds.exists(e =>
-          e.stats.forall(TxStats.rangesOverlap(_, keys.head, updLo, updHi)))
-    }
-    while (attempt < MaxCommitRetries) {
-      if (attempt > 0) onMergeRetry()
-      val base = latestVersion(spark, path)
-      // CAS contract: the caller's updates embed state read at
-      // expectedBase — any interleaved commit (even a key-disjoint one:
-      // the fold's arithmetic, not just its files, may be stale) aborts
-      // the merge back to the caller for a full re-read + recompute
-      expectedBase.foreach { e =>
-        if (!base.contains(e))
-          throw new java.util.ConcurrentModificationException(
-            s"TxTable $path: expected base version $e but found " +
-              s"${base.getOrElse(-1L)} — the caller's read-modify-write " +
-              "fold is stale; re-read and retry the whole fold")
-      }
-      val v = base.map(_ + 1).getOrElse(0L)
-      // logical conflict detection (Delta's rule): before REUSING the
-      // staged rewrite, every commit that appeared since we last validated
-      // must be a non-reset that removed none of the files we read and
-      // added no file whose leading-key range can contain one of our
-      // update keys (stats-less adds are conservatively conflicting).
-      // Disjoint-key writers therefore re-commit the SAME staged files at
-      // the next version — no re-scan, no re-stage; orphans only on true
-      // conflicts.
-      if (stagedValid && base.exists(_ > validatedThrough)) {
-        stagedValid = (validatedThrough + 1 to base.get).forall(disjointFrom)
-        if (stagedValid) validatedThrough = base.get
-      }
-      if (!stagedValid) {
-        if (attempt > 0) mergeRecomputes.incrementAndGet()
-        val (tr, rr, rewritten) = base match {
-          case Some(bv) =>
-            val baseFiles = resolveEntries(fs, path, bv)
-            // fail-fast additive-evolution guard: a retyped column must be
-            // refused BEFORE the commit poisons the table (the read-side
-            // snapshotSchema check is the safety net, not the gate)
-            val current = snapshotSchema(spark, path, baseFiles.map(_.rel))
-            deduped.schema.fields.foreach { f =>
-              current.fields.find(_.name == f.name).foreach { existing =>
-                if (!org.apache.spark.sql.types.DataType
-                    .equalsIgnoreNullability(existing.dataType, f.dataType))
-                  throw new IllegalArgumentException(
-                    s"TxTable $path: merge batch retypes column '${f.name}' " +
-                      s"(${existing.dataType.simpleString} -> ${f.dataType.simpleString}) " +
-                      "— schema evolution is additive-only")
-              }
-            }
-            // stats pre-filter: a file whose key range cannot intersect the
-            // update batch cannot hold a matched key — skip it in the scan
-            // AND carry it verbatim. At 100 TB this is what bounds merge cost
-            // by the touched region, not the table: the matched-file scan
-            // reads only range-overlapping candidates.
-            val candidates = baseFiles.filter { e => // no stats: must scan
-              e.stats.forall(TxStats.rangesOverlap(_, keys.head, updLo, updHi))
-            }
-            // which candidate files hold a matched key? one scan, keys
-            // broadcast, read at the snapshot schema just resolved
-            val touchedNames =
-              if (candidates.isEmpty) Set.empty[String]
-              else spark.read.schema(current)
-                .parquet(candidates.map(e => s"$path/${e.rel}"): _*)
-                .withColumn("__file", input_file_name())
-                .join(broadcast(updKeys), keys, "left_semi")
-                .select("__file").distinct().collect()
-                .map(r => new Path(r.getString(0)).getName).toSet
-            val (touched, _) = candidates.partition(
-              e => touchedNames.contains(new Path(e.rel).getName))
-            // mergeSchema on the touched read + allowMissingColumns on the
-            // union: an update batch may ADD columns (additive schema
-            // evolution — retained rows of rewritten files get null, the
-            // snapshotSchema contract); without these a first evolving
-            // merge crashes, and a mixed-schema touched set would silently
-            // clip to its first file's fields. The USING join moves the keys
-            // to the front; the select puts the table's column order back,
-            // so a rewritten file reads like the one it replaces
-            val rewrite =
-              if (touched.isEmpty) deduped
-              else {
-                val kept = spark.read.option("mergeSchema", "true")
-                  .parquet(touched.map(e => s"$path/${e.rel}"): _*)
-                kept.join(updKeys, keys, "left_anti")
-                  .select(kept.columns.map(kept.col): _*)
-                  .unionByName(deduped, allowMissingColumns = true)
-              }
-            (touched.map(_.rel), candidates.map(_.rel).toSet, rewrite)
-          case None => (Seq.empty[String], Set.empty[String], deduped)
-        }
-        touchedRels = tr
-        readRels = rr
-        staged = stageData(spark, rewritten, path)
-        stagedValid = true
-        validatedThrough = base.getOrElse(-1L) // staged against this snapshot
-        if (firstStage) { firstStage = false; onMergeStaged() }
-      }
-      // the commit is the DELTA (removed touched files, added staged ones);
-      // carried files are implicit — O(touched) metadata per merge
-      if (tryCommit(fs, path, v, "merge", touchedRels, staged,
-          txn.map { case (a, b) => "txn" -> s"$a:$b" }.toMap)) {
-        // checkpoint needs the FULL manifest — resolve it from the log we
-        // just extended (disjoint racers may have changed carried files)
-        if (v > 0 && v % CheckpointInterval == 0)
-          maybeCheckpoint(fs, path, v, resolveEntries(fs, path, v))
-        return v
-      }
-      // lost the race: loop — the watermark check above revalidates every
-      // commit that landed since, INCLUDING ones racing in after the last
-      // check, before staged files are reused
-      attempt += 1
-    }
-    throw new java.io.IOException(s"TxTable: lost $MaxCommitRetries version races at $path")
+          e.stats.forall(TxStats.rangesOverlap(_, keys.head, batch.lo, batch.hi)))
+    })
   }
 
   /** OPTIMIZE-style compaction: rewrite the CURRENT snapshot into
@@ -878,7 +872,8 @@ object TxTable {
     * merges append a few files per commit; periodic compaction folds the
     * accumulated small files together (vacuum then reclaims the old ones
     * once they age out of retention). Runs through the same optimistic
-    * commit loop as any writer.
+    * commit loop as any writer, re-staging after every lost race: a reset
+    * commit of the STALE snapshot would silently undo the racing commit.
     *
     * `zorderBy = Some((x, y))` is OPTIMIZE ZORDER: the snapshot is
     * redistributed into contiguous Morton-key ranges before the rewrite,
@@ -886,36 +881,17 @@ object TxTable {
     * manifest stats recorded at commit then let [[StatsFileIndex]] prune
     * point/range filters on either column to a few files, where the
     * merge-accumulated layout satisfied almost none. */
-  /** Test seam: invoked once after compact stages its rewrite, before its
-    * first commit attempt — the window where a racing MERGE's commit must
-    * make the compaction re-read and re-stage (a reset commit of the STALE
-    * snapshot would silently undo the merge). No-op in production. */
-  private[graft] var onCompactStaged: () => Unit = () => ()
-
   def compact(spark: SparkSession, path: String, numFiles: Int = 1,
-      zorderBy: Option[(String, String)] = None): Long = {
-    val fs = hfs(spark, path)
-    var attempt = 0
-    var firstStage = true
-    while (attempt < MaxCommitRetries) {
-      val base = latestVersion(spark, path).getOrElse(
-        throw new java.io.FileNotFoundException(s"TxTable at $path has no commits"))
-      val snapshot = read(spark, path, Some(base))
+      zorderBy: Option[(String, String)] = None): Long =
+    commitLoop(spark, path, "compact") { base =>
+      val snapshot = read(spark, path, Some(base.getOrElse(throw noTable(path))))
       val arranged = zorderBy match {
         case Some((x, y)) =>
           graft.operators.Layout.zorderCluster(snapshot, x, y, numFiles)
         case None => snapshot.repartition(numFiles)
       }
-      val files = stageData(spark, arranged, path)
-      if (firstStage) { firstStage = false; onCompactStaged() }
-      if (tryCommit(fs, path, base + 1, "compact", Nil, files)) {
-        maybeCheckpoint(fs, path, base + 1, files)
-        return base + 1
-      }
-      attempt += 1
+      Some(Staged(Nil, stageData(spark, arranged, path), _ => false))
     }
-    throw new java.io.IOException(s"TxTable: lost $MaxCommitRetries version races at $path")
-  }
 
   /** Delta-CDF-style change feed: row-level changes between two committed
     * versions, derived from the commit DELTAS — for a delta commit only
@@ -1027,55 +1003,41 @@ object TxTable {
     * matched (an empty delete must not burn a commit: replaying it is
     * then idempotent by construction). Change feeds over the commit
     * emit the removed rows as `delete` rows for free (the manifest diff
-    * IS the CDC source). */
-  /** Test seam: invoked once after a delete stages its rewrite, before its
-    * first commit attempt — the interleave window where a racing writer's
-    * commit must force the delete to lose the version race and recompute
-    * its touched set against the new snapshot. No-op in production. */
-  private[graft] var onDeleteStaged: () => Unit = () => ()
-
+    * IS the CDC source). Re-stages after every lost race: the racing
+    * commit may have rewritten a co-located row or added a new match. */
   def delete(spark: SparkSession, path: String,
       condition: org.apache.spark.sql.Column): Long = {
     val fs = hfs(spark, path)
-    var firstStage = true
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val base = latestVersion(spark, path).getOrElse(
-        throw new java.io.FileNotFoundException(s"TxTable at $path has no commits"))
+    commitLoop(spark, path, "delete") { b =>
+      val base = b.getOrElse(throw noTable(path))
       // stats-pruned match scan: the snapshot read's FileIndex drops files
       // whose ranges cannot satisfy pushed-down predicate fragments
       val touchedNames = read(spark, path, Some(base))
         .filter(condition)
         .select(input_file_name().as("__file")).distinct().collect()
         .map(r => new Path(r.getString(0)).getName).toSet
-      if (touchedNames.isEmpty) return base
-      val entries = resolveEntries(fs, path, base)
-      val touched = entries.filter(e => touchedNames.contains(new Path(e.rel).getName))
-      // The rewrite-side read must present the SNAPSHOT schema, not just
-      // the union of the touched files': the match scan above ran over the
-      // snapshot (old files null-padded), so a predicate referencing a
-      // post-evolution column can match rows in pre-evolution files whose
-      // footers lack that column — filtering the narrower mergeSchema read
-      // with it would throw AnalysisException and fail the delete. Pad the
-      // touched read to the snapshot schema (the changeFeed pad) first.
-      val snapSchema = snapshotSchema(spark, path, entries.map(_.rel))
-      val raw = spark.read.option("mergeSchema", "true")
-        .parquet(touched.map(e => s"$path/${e.rel}"): _*)
-      val present = raw.columns.toSet
-      val kept = raw.select(snapSchema.fields.toSeq.map(f =>
-          if (present(f.name)) col(f.name)
-          else lit(null).cast(f.dataType).as(f.name)): _*)
-        .filter(!coalesce(condition, lit(false)))
-      val staged = stageData(spark, kept, path)
-      if (firstStage) { firstStage = false; onDeleteStaged() }
-      if (tryCommit(fs, path, base + 1, "delete", touched.map(_.rel), staged)) {
-        if ((base + 1) % CheckpointInterval == 0)
-          maybeCheckpoint(fs, path, base + 1, resolveEntries(fs, path, base + 1))
-        return base + 1
+      if (touchedNames.isEmpty) None
+      else {
+        val entries = resolveEntries(fs, path, base)
+        val touched = entries.filter(e => touchedNames.contains(new Path(e.rel).getName))
+        // The rewrite-side read must present the SNAPSHOT schema, not just
+        // the union of the touched files': the match scan above ran over the
+        // snapshot (old files null-padded), so a predicate referencing a
+        // post-evolution column can match rows in pre-evolution files whose
+        // footers lack that column — filtering the narrower mergeSchema read
+        // with it would throw AnalysisException and fail the delete. Pad the
+        // touched read to the snapshot schema (the changeFeed pad) first.
+        val snapSchema = snapshotSchema(spark, path, entries.map(_.rel))
+        val raw = spark.read.option("mergeSchema", "true")
+          .parquet(touched.map(e => s"$path/${e.rel}"): _*)
+        val present = raw.columns.toSet
+        val kept = raw.select(snapSchema.fields.toSeq.map(f =>
+            if (present(f.name)) col(f.name)
+            else lit(null).cast(f.dataType).as(f.name)): _*)
+          .filter(!coalesce(condition, lit(false)))
+        Some(Staged(touched.map(_.rel), stageData(spark, kept, path), _ => false))
       }
-      attempt += 1
     }
-    throw new java.io.IOException(s"TxTable: lost $MaxCommitRetries version races at $path")
   }
 
   /** Commit history (version, op, n_files) — newest first. Lists the

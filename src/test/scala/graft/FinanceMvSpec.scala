@@ -48,10 +48,10 @@ class FinanceMvSpec extends AnyFunSuite {
     // a fold racing a truly concurrent merge on the same (event_type, day)
     // key would silently lose one side's delta (dropping the stream's
     // increment, or resurrecting forgotten data by overwriting the purge's
-    // subtraction). The folds now CAS on the version they read
-    // (expectedBase) and recompute the WHOLE fold on a conflict. This leg
+    // subtraction). The folds now run through TxTable.mergeAt, which
+    // recomputes the WHOLE fold on a conflict. This leg
     // interleaves an ingest merge inside the purge's stage-to-commit
-    // window via the onMergeStaged seam and asserts BOTH deltas survive,
+    // window via the onStaged seam and asserts BOTH deltas survive,
     // decimal-bit-for-bit.
     import graft.serve.TxTable
     val path = s"/tmp/graft_fin_mv_race/${new java.io.File(sf).getName}"
@@ -68,12 +68,12 @@ class FinanceMvSpec extends AnyFunSuite {
     assert(victims.count() > 0 && batch.count() > 0, "fixture must race real deltas")
     // the racing ingest lands exactly between the purge's snapshot read
     // (already staged into its merge batch) and its commit attempt
-    TxTable.onMergeStaged = () => {
-      TxTable.onMergeStaged = () => ()
+    TxTable.onStaged = () => {
+      TxTable.onStaged = () => ()
       FinanceMv.maintainDailyCloseMv(spark, batch, path)
     }
     try FinanceMv.removeFromDailyCloseMv(spark, victims, path)
-    finally TxTable.onMergeStaged = () => ()
+    finally TxTable.onStaged = () => ()
     val got = TxTable.read(spark, path)
       .select("event_type", "day", "n_events", "s")
       .collect().map(_.toString).sorted.toSeq

@@ -128,6 +128,32 @@ class NgramLmSpec extends AnyFunSuite {
       }
   }
 
+  test("racing count appends: a concurrent append's counts survive the fold") {
+    // append(h2) stages its unigram fold; before it commits, a second
+    // append(h3) over a disjoint document set commits all three tables.
+    // The two batches share vocabulary, so a fold that re-staged only its
+    // file rewrite would overwrite h3's bumps with h2's stale counts.
+    val docs = Tables.spread(spark, Tables.documents(spark, sf))
+    val part = pmod(col("doc_id"), lit(3))
+    val full = java.nio.file.Files.createTempDirectory("lm_full_").toString
+    val inc = java.nio.file.Files.createTempDirectory("lm_race_").toString
+    NgramLm.writeLmModel(spark, docs, full)
+    NgramLm.writeLmModel(spark, docs.filter(part === 0), inc)
+    graft.serve.TxTable.onStaged = () => {
+      graft.serve.TxTable.onStaged = () => ()
+      NgramLm.appendLmCounts(spark, docs.filter(part === 2), inc)
+    }
+    try NgramLm.appendLmCounts(spark, docs.filter(part === 1), inc)
+    finally graft.serve.TxTable.onStaged = () => ()
+    Seq("uni", "big", "tri").foreach { t =>
+      val a = graft.serve.TxTable.read(spark, s"$full/$t")
+      val b = graft.serve.TxTable.read(spark, s"$inc/$t")
+      assert(a.count() == b.count(), s"$t cardinality drift")
+      assert(a.except(b).isEmpty && b.except(a).isEmpty,
+        s"$t lost a concurrent append's counts")
+    }
+  }
+
   test("gate: keep counts consistent and bounded on the test corpus") {
     val rows = NgramLm.gateQuery(spark, sf).collect()
     assert(rows.nonEmpty)

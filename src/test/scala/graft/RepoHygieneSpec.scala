@@ -51,6 +51,31 @@ class RepoHygieneSpec extends AnyFunSuite {
       s"foreachBatch outside TxStream.scala: ${offenders.mkString(", ")}")
   }
 
+  test("the optimistic commit loop exists once, in TxTable") {
+    // every TxTable writer commits through one stage-validate-commit loop;
+    // a second retry loop would be a writer with its own conflict rule,
+    // and a ConcurrentModificationException a caller-side retry protocol
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) files(f) else Seq(f)
+      }
+    val sources = files(root).filter(_.getName.endsWith(".scala")).map { f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    }
+    val retryLoop = """\b(while|for)\b[^\n]*\bMaxCommitRetries\b""".r
+    val loops = sources.flatMap { case (f, text) =>
+      retryLoop.findAllIn(text).map(_ => f).toSeq
+    }
+    assert(loops == Seq(new java.io.File(root, "graft/serve/TxTable.scala")),
+      s"MaxCommitRetries loops: ${loops.mkString(", ")}")
+    val cme = sources.collect {
+      case (f, text) if text.contains("ConcurrentModificationException") => f
+    }
+    assert(cme.isEmpty, s"ConcurrentModificationException in ${cme.mkString(", ")}")
+  }
+
   test("spark-side whitespace class matches the oracle-side text") {
     // one definition, two dialects: the Spark pattern constant must be the
     // exact text the oracle SQL inlines

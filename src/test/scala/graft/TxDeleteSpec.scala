@@ -81,8 +81,8 @@ class TxDeleteSpec extends AnyFunSuite {
       Seq((1L, "keep"), (2L, "purge"), (3L, "keep"))
         .toDF("k", "tag").repartition(1), path)
     var mergeV = -1L
-    TxTable.onDeleteStaged = () => {
-      TxTable.onDeleteStaged = () => ()
+    TxTable.onStaged = () => {
+      TxTable.onStaged = () => ()
       // the racing merge BOTH updates a surviving row and adds a new
       // matching one — each detects a distinct stale-rewrite bug
       mergeV = TxTable.merge(spark,
@@ -93,7 +93,7 @@ class TxDeleteSpec extends AnyFunSuite {
       val dv = TxTable.delete(spark, path, col("tag") === "purge")
       assert(mergeV == 1L && dv == 2L,
         "delete must lose the version race to the merge and retry on top")
-    } finally TxTable.onDeleteStaged = () => ()
+    } finally TxTable.onStaged = () => ()
     val out = TxTable.read(spark, path).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(out == Set((1L, "keep"), (3L, "keep-updated")),

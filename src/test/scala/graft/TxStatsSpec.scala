@@ -220,13 +220,13 @@ class TxStatsSpec extends AnyFunSuite {
 
   test("disjoint racing merges: loser revalidates and re-commits without recompute") {
     val path = freshDir("race"); writeRangeTable(path)
-    TxTable.mergeRecomputes.set(0)
+    TxTable.restages.set(0)
     // merge A updates ids 0..9 (first file); while A is staged but not yet
     // committed, merge B (ids 9000..9009 — last file, disjoint keys AND
     // disjoint touched files) wins the version race
     var bVersion = -1L
-    TxTable.onMergeStaged = () => {
-      TxTable.onMergeStaged = () => () // only the outer merge interleaves
+    TxTable.onStaged = () => {
+      TxTable.onStaged = () => () // only the outer merge interleaves
       bVersion = TxTable.merge(spark, upd(9000, 9010, "B", 2.0), path, Seq("id"))
     }
     try {
@@ -234,9 +234,9 @@ class TxStatsSpec extends AnyFunSuite {
       // A lost exactly one race to B, then re-committed its ORIGINAL
       // staged files — logical conflict detection, no re-scan/re-stage
       assert(bVersion == 1L && aVersion == 2L)
-      assert(TxTable.mergeRecomputes.get == 0L,
+      assert(TxTable.restages.get == 0L,
         "disjoint race must revalidate, not recompute")
-    } finally TxTable.onMergeStaged = () => ()
+    } finally TxTable.onStaged = () => ()
     val out = TxTable.read(spark, path).cache()
     try {
       assert(out.count() == 10000)
@@ -247,19 +247,19 @@ class TxStatsSpec extends AnyFunSuite {
 
   test("overlapping racing merges: loser recomputes on top of the winner") {
     val path = freshDir("race2"); writeRangeTable(path)
-    TxTable.mergeRecomputes.set(0)
+    TxTable.restages.set(0)
     // B updates ids 0..9 while A (ids 5..14) is staged: A's update keys
     // can live in B's added file, so A must recompute against v1
-    TxTable.onMergeStaged = () => {
-      TxTable.onMergeStaged = () => ()
+    TxTable.onStaged = () => {
+      TxTable.onStaged = () => ()
       TxTable.merge(spark, upd(0, 10, "B", 2.0), path, Seq("id"))
     }
     try {
       val aVersion = TxTable.merge(spark, upd(5, 15, "A", 1.0), path, Seq("id"))
       assert(aVersion == 2L)
-      assert(TxTable.mergeRecomputes.get == 1L,
+      assert(TxTable.restages.get == 1L,
         "conflicting race must recompute the merge")
-    } finally TxTable.onMergeStaged = () => ()
+    } finally TxTable.onStaged = () => ()
     val out = TxTable.read(spark, path).cache()
     try {
       assert(out.count() == 10000)
@@ -275,21 +275,21 @@ class TxStatsSpec extends AnyFunSuite {
     // before A's next attempt — A must detect C and recompute, never
     // re-commit its stale staged files over C's update
     val path = freshDir("race3"); writeRangeTable(path)
-    TxTable.mergeRecomputes.set(0)
-    TxTable.onMergeStaged = () => {
-      TxTable.onMergeStaged = () => ()
+    TxTable.restages.set(0)
+    TxTable.onStaged = () => {
+      TxTable.onStaged = () => ()
       TxTable.merge(spark, upd(9000, 9010, "B", 2.0), path, Seq("id")) // disjoint
     }
-    TxTable.onMergeRetry = () => {
-      TxTable.onMergeRetry = () => ()
+    TxTable.onRetry = () => {
+      TxTable.onRetry = () => ()
       TxTable.merge(spark, upd(0, 10, "C", 3.0), path, Seq("id")) // conflicts with A
     }
     try {
       val aVersion = TxTable.merge(spark, upd(5, 15, "A", 1.0), path, Seq("id"))
       assert(aVersion == 3L) // lost v1 to B, lost v2 to C, recomputed, won v3
-      assert(TxTable.mergeRecomputes.get == 1L,
+      assert(TxTable.restages.get == 1L,
         "the late conflicting commit must force exactly one recompute")
-    } finally { TxTable.onMergeStaged = () => (); TxTable.onMergeRetry = () => () }
+    } finally { TxTable.onStaged = () => (); TxTable.onRetry = () => () }
     val out = TxTable.read(spark, path).cache()
     try {
       assert(out.count() == 10000)
@@ -305,21 +305,22 @@ class TxStatsSpec extends AnyFunSuite {
     // is a RESET commit that superseded every file the merge's staged
     // rewrite referenced — re-committing the stale delta would remove
     // files the new manifest no longer contains (dangling references) and
-    // resurrect pre-compact row copies. disjointFrom() must flag the
-    // reset and force a full recompute against the compacted snapshot.
+    // resurrect pre-compact row copies. The merge's `survives` conflict
+    // rule, checked by TxTable.commitLoop, must flag the reset and force a
+    // full recompute against the compacted snapshot.
     val path = freshDir("race_compact"); writeRangeTable(path)
-    TxTable.mergeRecomputes.set(0)
+    TxTable.restages.set(0)
     var compactV = -1L
-    TxTable.onMergeStaged = () => {
-      TxTable.onMergeStaged = () => ()
+    TxTable.onStaged = () => {
+      TxTable.onStaged = () => ()
       compactV = TxTable.compact(spark, path, numFiles = 2)
     }
     try {
       val aVersion = TxTable.merge(spark, upd(5, 15, "A", 1.0), path, Seq("id"))
       assert(compactV == 1L && aVersion == 2L)
-      assert(TxTable.mergeRecomputes.get == 1L,
+      assert(TxTable.restages.get == 1L,
         "a reset commit landing mid-merge must force exactly one recompute")
-    } finally TxTable.onMergeStaged = () => ()
+    } finally TxTable.onStaged = () => ()
     val out = TxTable.read(spark, path).cache()
     try {
       assert(out.count() == 10000, "no row duplicated or lost across the race")
@@ -342,15 +343,15 @@ class TxStatsSpec extends AnyFunSuite {
     // optimistic loop must lose the version race, re-read, and re-stage.
     val path = freshDir("compact_race"); writeRangeTable(path)
     var mergeV = -1L
-    TxTable.onCompactStaged = () => {
-      TxTable.onCompactStaged = () => ()
+    TxTable.onStaged = () => {
+      TxTable.onStaged = () => ()
       mergeV = TxTable.merge(spark, upd(5, 15, "A", 1.0), path, Seq("id"))
     }
     try {
       val cv = TxTable.compact(spark, path, numFiles = 2)
       assert(mergeV == 1L && cv == 2L,
         "compact must lose the version race to the merge and retry on top")
-    } finally TxTable.onCompactStaged = () => ()
+    } finally TxTable.onStaged = () => ()
     val out = TxTable.read(spark, path).cache()
     try {
       assert(out.count() == 10000)
@@ -424,7 +425,7 @@ class TxStatsSpec extends AnyFunSuite {
     // optimistic protocol rebases and loses neither update.
     import graft.serve.{CommitStore, HadoopRenameStore}
     val path = freshDir("seam"); writeRangeTable(path)
-    TxTable.mergeRecomputes.set(0)
+    TxTable.restages.set(0)
     var fired = false
     TxTable.registerCommitStore("file", new CommitStore {
       override def putIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
@@ -444,7 +445,7 @@ class TxStatsSpec extends AnyFunSuite {
       val v = TxTable.merge(spark, upd(5, 15, "mine", 1.0), path, Seq("id"))
       assert(fired, "the injected store must have intercepted the commit")
       assert(v == 2L, s"loser must rebase onto the rival's version, got $v")
-      assert(TxTable.mergeRecomputes.get == 1L,
+      assert(TxTable.restages.get == 1L,
         "overlapping keys: the beaten merge must recompute, not replay")
     } finally TxTable.unregisterCommitStore("file")
     val out = TxTable.read(spark, path).cache()

@@ -141,15 +141,15 @@ class TxVacuumSpec extends AnyFunSuite {
     // anything the merge read or wants to reference.
     val path = fresh("vacuum_race")
     threeVersions(path)
-    TxTable.onMergeStaged = () => {
-      TxTable.onMergeStaged = () => ()
+    TxTable.onStaged = () => {
+      TxTable.onStaged = () => ()
       TxTable.vacuum(spark, path, keepVersions = 1, retentionMs = 60L * 60 * 1000)
     }
     try {
       val v = TxTable.merge(spark,
         Seq((7L, "post-vacuum")).toDF("id", "txt"), path, Seq("id"))
       assert(v == 3L)
-    } finally TxTable.onMergeStaged = () => ()
+    } finally TxTable.onStaged = () => ()
     val out = TxTable.read(spark, path).collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     assert(out.size == 100 && out(7L) == "post-vacuum"
