@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import scala.collection.immutable.VectorMap
 import graft.Tables
 
 /** A minimal transactional table format on plain parquet — the contract a
@@ -32,7 +33,10 @@ import graft.Tables
   * [[CheckpointInterval]] commits the winner also writes a `.checkpoint`
   * with the complete manifest, so snapshot resolution reads ONE checkpoint
   * plus at most CheckpointInterval−1 delta commits — O(1) in table
-  * history, never a replay from v0. Pre-delta logs (unprefixed lines) are
+  * history, never a replay from v0. That replay exists once: every reader
+  * and writer resolves one `Snapshot` — manifest and txn stamps together —
+  * from one log listing, and the commit loop checkpoints its base snapshot
+  * with the winning commit applied. Pre-delta logs (unprefixed lines) are
   * still readable as full-snapshot commits.
   *
   * The COMMIT POINT is the atomic rename of a staged manifest to
@@ -108,7 +112,7 @@ object TxTable {
 
   /** Highest committed version, or None for a table that does not exist. */
   def latestVersion(spark: SparkSession, path: String): Option[Long] =
-    listLog(hfs(spark, path), path, ".txt").maxOption
+    new Log(hfs(spark, path), path).latest
 
   private def noTable(path: String) =
     new java.io.FileNotFoundException(s"TxTable at $path has no commits")
@@ -146,7 +150,18 @@ object TxTable {
     * Delta idempotent-writer stamp. */
   private case class Commit(op: String, reset: Boolean,
       removes: Seq[String], adds: Seq[ManifestEntry],
-      meta: Map[String, String] = Map.empty)
+      meta: Map[String, String] = Map.empty) {
+    def txn: Option[(String, Long)] = meta.get("txn").flatMap(parseStamp)
+  }
+
+  /** Full rewrites replace the whole state; every other op is a delta. */
+  private def resetOp(op: String): Boolean = op == "write" || op == "compact"
+
+  /** `appId:batchId` → (appId, batchId); the appId may not hold ':'. */
+  private def parseStamp(t: String): Option[(String, Long)] = t.lastIndexOf(':') match {
+    case -1 => None
+    case i => Some(t.substring(0, i) -> t.substring(i + 1).toLong)
+  }
 
   private def readLines(fs: FileSystem, p: Path): List[String] = {
     val in = fs.open(p)
@@ -213,7 +228,7 @@ object TxTable {
     * cannot have torn the whole log. Checked only on an unframe failure
     * (one extra log scan on the error path, nothing on healthy reads). */
   private def preV2Log(fs: FileSystem, path: String): Boolean = {
-    val vs = listLog(fs, path, ".txt")
+    val vs = new Log(fs, path).commits
     vs.nonEmpty && vs.forall { v =>
       val lines = readLines(fs, commitFile(path, v))
       !lines.lastOption.contains(EofPrefix + (lines.length - 1))
@@ -252,23 +267,16 @@ object TxTable {
     if (legacyFull)
       Commit(op, reset = true, Nil, body.map(ManifestEntry.parse), meta)
     else
-      Commit(op, reset = op == "write" || op == "compact",
+      Commit(op, resetOp(op),
         body.filter(_.startsWith("-")).map(_.substring(1)),
         body.filter(_.startsWith("+")).map(l => ManifestEntry.parse(l.substring(1))),
         meta)
   }
 
-  private def listLog(fs: FileSystem, path: String, suffix: String): Seq[Long] =
-    if (!fs.exists(logDir(path))) Seq.empty
-    else fs.listStatus(logDir(path)).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(suffix))
-      .map(_.stripSuffix(suffix).toLong)
-
   /** Checkpoint metadata line prefix for retained idempotent-writer stamps
     * (Delta's SetTransaction-in-checkpoint): `#txn appId:batchId`. Kept
     * lexically distinct from the `#eof` framing trailer and filtered out of
-    * entry parsing, so a checkpoint stays a plain manifest to the entry
-    * resolver. */
+    * entry parsing, so a checkpoint stays a plain manifest plus stamps. */
   private val TxnPrefix = "#txn "
 
   /** Parse one checkpoint file: (manifest entries, latest txn stamp per
@@ -281,157 +289,136 @@ object TxTable {
     val lines = unframe(readLines(fs, f), f, "checkpoint").filter(_.nonEmpty)
     val (txnLines, entryLines) = lines.partition(_.startsWith(TxnPrefix))
     (entryLines.map(ManifestEntry.parse),
-      txnLines.flatMap { l =>
-        val t = l.substring(TxnPrefix.length)
-        val i = t.lastIndexOf(':')
-        if (i < 0) None else Some(t.substring(0, i) -> t.substring(i + 1).toLong)
-      }.toMap)
+      txnLines.flatMap(l => parseStamp(l.substring(TxnPrefix.length))).toMap)
   }
 
-  /** The latest txn stamp per appId AS OF version `v`: nearest checkpoint's
-    * retained stamps, folded forward over the delta tail (latest wins per
-    * app). Unlike file entries, a RESET commit does not clear stamps — a
+  /** The table state at one version: the manifest (`files`, in commit
+    * order) and the latest txn stamp per appId (`stamps`). A half the log
+    * cannot root at this version is a Left naming the missing commits, and
+    * its accessor refuses loudly — a hole is never folded into a
+    * silently-wrong manifest or an older stamp.
+    *
+    * [[applied]] is the one fold step every reader and writer shares: a
+    * reset commit replaces the files, then removes and adds follow, and the
+    * commit's `txn` stamp wins for its appId. A reset keeps the stamps — a
     * compaction rewrites data, not writer history (Delta keeps
-    * SetTransaction across OPTIMIZE for exactly this reason). Same strict
-    * contiguity rule as entry resolution: a mid-chain hole could hide a
-    * NEWER stamp, and answering with an older one would green-light a
-    * double apply — fail loudly instead. */
-  private def resolveTxns(fs: FileSystem, path: String, v: Long): Map[String, Long] = {
-    val cp = listLog(fs, path, ".checkpoint").filter(_ <= v) match {
-      case vs if vs.isEmpty => None
-      case vs => Some(vs.max)
+    * SetTransaction across OPTIMIZE). Rooting across a hole:
+    *  - files re-root at the next reset, which replaces them all;
+    *  - stamps re-root at the next reset only when no checkpoint roots the
+    *    replay, which makes the root the OLDEST reset with a contiguous tail
+    *    (a newer root would drop a stamp the fold can still know). Stamps on
+    *    commits pruned below that root are unknowable and read as absent —
+    *    the documented migration caveat; this engine's own vacuum
+    *    checkpoints every kept version first, so only external deletion
+    *    gets here;
+    *  - above a checkpoint, a hole could hide a NEWER stamp, and answering
+    *    with an older one would green-light a double apply, so the stamps
+    *    stay unknowable. */
+  private case class Snapshot(path: String, version: Long,
+      files: Either[String, VectorMap[String, ManifestEntry]],
+      stamps: Either[String, Map[String, Long]], fromCheckpoint: Boolean) {
+
+    def entries: Seq[ManifestEntry] = files.fold(hole =>
+      throw new java.io.FileNotFoundException(s"TxTable $path: version " +
+        s"$version is not resolvable ($hole and no reset commit follows)"),
+      _.values.toSeq)
+
+    def txns: Map[String, Long] = stamps.fold(hole =>
+      throw new java.io.FileNotFoundException(
+        s"TxTable $path: txn state at version $version is not resolvable ($hole)"),
+      identity)
+
+    /** The state once `c` commits as the next version. */
+    def applied(c: Commit): Snapshot = {
+      val adds = c.adds.map(e => e.rel -> e)
+      copy(version = version + 1,
+        files = if (c.reset) Right(VectorMap.from(adds))
+          else files.map(_.removedAll(c.removes) ++ adds),
+        stamps = (if (c.reset && !fromCheckpoint) stamps.orElse(Right(Map.empty[String, Long]))
+          else stamps).map(_ ++ c.txn))
     }
-    val commits = listLog(fs, path, ".txt")
-      .filter(cv => cv > cp.getOrElse(-1L) && cv <= v).sorted
-    val root = cp.map(_ + 1L).getOrElse(0L)
-    val (base, chain) =
-      if (commits == (root to v))
-        (cp.map(c => checkpointLines(fs, path, c)._2).getOrElse(Map.empty), commits)
-      else if (cp.isEmpty) {
-        // Align with resolveEntries' rooting (r14 ADVICE): with no
-        // checkpoint, a chain whose history below a RESET commit was
-        // pruned out-of-band is still a readable snapshot — entry
-        // resolution accepts it, so txn resolution must too, or every
-        // stamped merge / lastTxnBatch / writeCheckpoint on such a table
-        // fails while reads work. Root at the OLDEST reset commit with a
-        // contiguous tail to v — never the newest: a readable stamped
-        // commit sitting between an older contiguous reset and a newer one
-        // carries a stamp this fold can still know, and discarding it
-        // (then persisting the impoverished map via the next checkpoint)
-        // would green-light exactly the double apply the docstring above
-        // forbids. Only stamps on commits PRUNED below the oldest
-        // qualifying root are UNKNOWABLE and treated as absent — the
-        // documented migration caveat (a replay of a pre-root batch
-        // re-applies). Unreachable through this engine's own maintenance:
-        // vacuum checkpoints every kept version before pruning, so only
-        // external deletion gets here.
-        val resetRoot = commits.find { cv =>
-          commits.dropWhile(_ < cv) == (cv to v) &&
-            readCommit(fs, path, cv).reset
-        }
-        resetRoot match {
-          case Some(r) => (Map.empty[String, Long], commits.dropWhile(_ < r))
-          case None =>
-            throw new java.io.FileNotFoundException(
-              s"TxTable $path: txn state at version $v is not resolvable " +
-                s"(delta chain $root..$v has holes: ${commits.mkString(",")})")
-        }
-      } else
-        throw new java.io.FileNotFoundException(
-          s"TxTable $path: txn state at version $v is not resolvable " +
-            s"(delta chain $root..$v has holes: ${commits.mkString(",")})")
-    chain.foldLeft(base) { (m, cv) =>
-      readCommit(fs, path, cv).meta.get("txn") match {
-        case Some(t) =>
-          val i = t.lastIndexOf(':')
-          if (i < 0) m else m + (t.substring(0, i) -> t.substring(i + 1).toLong)
-        case None => m
+
+    /** This state carried to just below commit `next`: across missing
+      * commits both halves become unknowable. */
+    def reaching(next: Long): Snapshot =
+      if (next == version + 1) this
+      else {
+        val hole = Left(s"commits ${version + 1}..${next - 1} are missing")
+        copy(version = next - 1, files = hole, stamps = hole)
       }
+  }
+
+  /** One listing of `_txlog` — committed versions and checkpoints — with
+    * each commit file read at most once, however many snapshots, conflict
+    * checks or change-feed steps consult it. */
+  private final class Log(fs: FileSystem, path: String) {
+    private val names =
+      try fs.listStatus(logDir(path)).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    private def versions(suffix: String): Vector[Long] =
+      names.filter(_.endsWith(suffix)).map(_.stripSuffix(suffix).toLong).sorted.toVector
+    val commits: Vector[Long] = versions(".txt")
+    val checkpoints: Vector[Long] = versions(".checkpoint")
+    def latest: Option[Long] = commits.lastOption
+
+    private val read = scala.collection.mutable.Map.empty[Long, Commit]
+    def commit(v: Long): Commit = read.getOrElseUpdate(v, readCommit(fs, path, v))
+
+    /** The one log replay: the nearest checkpoint ≤ v (else the empty
+      * table before v0) folded forward over the delta chain to v — one
+      * checkpoint plus at most CheckpointInterval−1 commits, never a replay
+      * of the whole history. Without a checkpoint a pruned prefix is a
+      * hole like any other: state is never rebuilt over an empty base. */
+    def snapshot(v: Long): Snapshot = {
+      val root = checkpoints.filter(_ <= v).lastOption match {
+        case Some(c) =>
+          val (entries, txns) = checkpointLines(fs, path, c)
+          Snapshot(path, c, Right(VectorMap.from(entries.map(e => e.rel -> e))),
+            Right(txns), fromCheckpoint = true)
+        case None =>
+          Snapshot(path, -1L, Right(VectorMap.empty), Right(Map.empty), fromCheckpoint = false)
+      }
+      commits.filter(cv => cv > root.version && cv <= v)
+        .foldLeft(root)((s, cv) => s.reaching(cv).applied(commit(cv)))
+        .reaching(v + 1)
+    }
+
+    /** The snapshot at `version` (default: the latest) — a version the log
+      * no longer holds is refused, never resolved from its neighbours. */
+    def at(version: Option[Long]): Snapshot = {
+      val v = version.orElse(latest).getOrElse(throw noTable(path))
+      if (!commits.contains(v))
+        throw new java.io.FileNotFoundException(s"TxTable $path has no version $v")
+      snapshot(v)
     }
   }
 
   /** Checkpoints carry BOTH halves of durable state: the manifest AND the
     * retained txn stamps — so vacuum can prune a stamped commit without
     * reopening the idempotent-writer replay window. */
-  private def writeCheckpoint(fs: FileSystem, path: String, v: Long,
-      entries: Seq[ManifestEntry]): Unit = {
-    val txns = resolveTxns(fs, path, v)
+  private def writeCheckpoint(fs: FileSystem, path: String, s: Snapshot): Unit = {
+    val lines = s.entries.map(_.line) ++
+      s.txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a:$b" }
     val tmp = new Path(logDir(path), s"_cptmp_${java.util.UUID.randomUUID().toString.take(8)}")
     val out = fs.create(tmp, false)
-    val lines = entries.map(_.line) ++
-      txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a:$b" }
     try out.write(framed(lines))
     finally out.close()
-    if (!publish(fs, tmp, checkpointFile(path, v))) fs.delete(tmp, false)
+    if (!publish(fs, tmp, checkpointFile(path, s.version))) fs.delete(tmp, false)
   }
 
-  /** Post-commit checkpoint hook — fired by the commit loop after it wins
-    * a version on the interval boundary. The manifest is resolved from the
-    * log just extended, so a delta commit's checkpoint includes the files
-    * it carried. Failure-safe: the checkpoint is derivable from the log,
-    * so best-effort is enough. */
-  private def maybeCheckpoint(fs: FileSystem, path: String, v: Long): Unit =
-    if (v > 0 && v % CheckpointInterval == 0)
-      try writeCheckpoint(fs, path, v, resolveEntries(fs, path, v))
+  /** Post-commit checkpoint hook — fired by the commit loop with the state
+    * its winning commit produced, on the interval boundary. Failure-safe:
+    * the checkpoint is derivable from the log, so best-effort is enough. */
+  private def maybeCheckpoint(fs: FileSystem, path: String, s: Snapshot): Unit =
+    if (s.version > 0 && s.version % CheckpointInterval == 0)
+      try writeCheckpoint(fs, path, s)
       catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Resolve the full file list at version `v`: nearest checkpoint ≤ v,
-    * then the (≤ CheckpointInterval−1, bounded further by any reset commit)
-    * delta tail — never a replay of the whole history. */
-  private def resolveEntries(fs: FileSystem, path: String, v: Long): Seq[ManifestEntry] = {
-    val cp = listLog(fs, path, ".checkpoint").filter(_ <= v) match {
-      case vs if vs.isEmpty => None
-      case vs => Some(vs.max)
-    }
-    val commits = listLog(fs, path, ".txt")
-      .filter(cv => cv > cp.getOrElse(-1L) && cv <= v).sorted
-      .map(cv => cv -> readCommit(fs, path, cv))
-    // a reset commit supersedes everything before it — start there instead
-    val lastReset = commits.lastIndexWhere(_._2.reset)
-    val (start, tail) =
-      if (lastReset >= 0) (Seq.empty[ManifestEntry], commits.drop(lastReset))
-      else (cp.map(c => checkpointLines(fs, path, c)._1).getOrElse {
-          // with no checkpoint and no reset in range, the delta chain is
-          // only sound if it is rooted at the TABLE's first commit (v0) —
-          // merely starting at the oldest SURVIVING commit is not enough:
-          // out-of-band pruning (or a lost checkpoint) would silently
-          // rebuild state over an empty base and report wrong manifests
-          if (commits.isEmpty || commits.head._1 != 0L)
-            throw new java.io.FileNotFoundException(
-              s"TxTable $path: version $v is not resolvable (no checkpoint and no reset in range)")
-          Seq.empty
-        }, commits)
-    // the delta tail must be CONTIGUOUS from its root to v: a mid-log hole
-    // (external deletion — vacuum only ever prunes a prefix and
-    // checkpoints what it keeps) means unseen removes/adds, and folding
-    // across it would silently produce a wrong manifest. Fail loudly
-    // instead, like the unrooted-chain case above.
-    val root: Long =
-      if (lastReset >= 0) tail.head._1
-      else cp.map(_ + 1L).getOrElse(0L)
-    if (tail.map(_._1) != (root to v).toSeq)
-      throw new java.io.FileNotFoundException(
-        s"TxTable $path: version $v is not resolvable (delta chain $root..$v has holes: ${tail.map(_._1).mkString(",")})")
-    val state = scala.collection.mutable.LinkedHashMap.empty[String, ManifestEntry]
-    start.foreach(e => state(e.rel) = e)
-    tail.foreach { case (_, c) =>
-      if (c.reset) state.clear()
-      c.removes.foreach(state.remove)
-      c.adds.foreach(e => state(e.rel) = e)
-    }
-    state.values.toSeq
-  }
 
   /** The snapshot's manifest entries (files + stats) — the metadata surface
     * tests and planners consult without reading any data. */
   def manifest(spark: SparkSession, path: String,
-      version: Option[Long] = None): Seq[ManifestEntry] = {
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(throw noTable(path))
-    val fs = hfs(spark, path)
-    if (!fs.exists(commitFile(path, v)))
-      throw new java.io.FileNotFoundException(s"TxTable $path has no version $v")
-    resolveEntries(fs, path, v)
-  }
+      version: Option[Long] = None): Seq[ManifestEntry] =
+    new Log(hfs(spark, path), path).at(version).entries
 
   /** The stats-aware file index over a snapshot — also the hook tests use
     * to assert pruning decisions directly. */
@@ -444,8 +431,12 @@ object TxTable {
     * travel is just "resolve an older manifest". The scan goes through
     * [[StatsFileIndex]], so any filter Catalyst pushes down prunes whole
     * files from the manifest stats before parquet footers are touched. */
-  def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
-    val entries = manifest(spark, path, version)
+  def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame =
+    scan(spark, path, manifest(spark, path, version))
+
+  /** The stats-pruned scan over one snapshot's entries. */
+  private def scan(spark: SparkSession, path: String,
+      entries: Seq[ManifestEntry]): DataFrame = {
     if (entries.isEmpty)
       return spark.read.parquet(path + "/data") // never: guard only
     val index = new StatsFileIndex(spark, path, entries.map(e => (e.rel, e.stats)))
@@ -547,15 +538,13 @@ object TxTable {
   /** Atomically publish a DELTA commit as version `v`: `removes` as `-rel`
     * lines, `adds` as `+entry` lines — O(touched), not O(table). False ⇒
     * someone else won the version race (caller must re-read and retry). */
-  private def tryCommit(fs: FileSystem, path: String, v: Long, op: String,
-      removes: Seq[String], adds: Seq[ManifestEntry],
-      meta: Map[String, String] = Map.empty): Boolean = {
+  private def tryCommit(fs: FileSystem, path: String, v: Long, c: Commit): Boolean = {
     fs.mkdirs(logDir(path))
     val tmp = new Path(logDir(path), s"_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
     val out = fs.create(tmp, false)
-    val header = (op +: meta.toSeq.sortBy(_._1).map { case (k, vl) => s"$k=$vl" })
+    val header = (c.op +: c.meta.toSeq.sortBy(_._1).map { case (k, vl) => s"$k=$vl" })
       .mkString("\t")
-    val body = removes.map("-" + _) ++ adds.map("+" + _.line)
+    val body = c.removes.map("-" + _) ++ c.adds.map("+" + _.line)
     try out.write(framed(header +: body))
     finally out.close()
     val won = publish(fs, tmp, commitFile(path, v))
@@ -620,17 +609,17 @@ object TxTable {
     * a lost race (the racing commits failed the op's conflict rule). */
   private[graft] val restages = new java.util.concurrent.atomic.AtomicLong
 
-  /** One op's staged delta plus its conflict rule: `survives(rv)` says
-    * whether the commit that landed at version `rv` after staging leaves
-    * the staged files valid — false makes the loop stage again. */
+  /** One op's staged delta plus its conflict rule: `survives(c)` says
+    * whether a commit `c` that landed after staging leaves the staged files
+    * valid — false makes the loop stage again. */
   private case class Staged(removes: Seq[String], adds: Seq[ManifestEntry],
-      survives: Long => Boolean)
+      survives: Commit => Boolean)
 
   /** The optimistic commit loop every writer runs — the Delta protocol,
-    * written once. `stage(base)` reads the snapshot at `base` (None: no
-    * table yet) and stages the op's files outside the commit point, or
-    * returns None to commit nothing. Each attempt:
-    *  1. reads the latest version;
+    * written once. `stage(base)` stages the op's files on the snapshot
+    * `base` (None: no table yet) outside the commit point, or returns None
+    * to commit nothing. Each attempt:
+    *  1. resolves the latest snapshot — one listing, one replay;
     *  2. applies the idempotent-writer guard (Delta's txnAppId:txnVersion):
     *     a `txn` stamp already committed is a REPLAY — the crash window
     *     between a streaming fold's table commit and its checkpoint
@@ -643,12 +632,12 @@ object TxTable {
     *     commit landing between that sample and the next attempt);
     *  4. publishes the delta as the next version through the put-if-absent
     *     commit point — losing the version race loops back to step 1;
-    *  5. on the [[CheckpointInterval]] boundary, checkpoints the resolved
-    *     manifest.
+    *  5. on the [[CheckpointInterval]] boundary, checkpoints the base
+    *     snapshot with the winning commit applied — no second replay.
     * After [[MaxCommitRetries]] lost races it gives up loudly. */
   private def commitLoop(spark: SparkSession, path: String, op: String,
       txn: Option[(String, Long)] = None)(
-      stage: Option[Long] => Option[Staged]): Long = {
+      stage: Option[Snapshot] => Option[Staged]): Long = {
     val fs = hfs(spark, path)
     txn.foreach { case (appId, _) =>
       require(validAppId(appId),
@@ -660,22 +649,24 @@ object TxTable {
     var attempt = 0
     while (attempt < MaxCommitRetries) {
       if (attempt > 0) onRetry()
-      val base = latestVersion(spark, path)
-      for ((appId, batchId) <- txn; bv <- base)
-        if (resolveTxns(fs, path, bv).get(appId).exists(batchId <= _)) return bv
+      val log = new Log(fs, path)
+      val base = log.latest.map(log.snapshot)
+      val baseV = base.fold(-1L)(_.version)
+      for ((appId, batchId) <- txn; b <- base)
+        if (b.txns.get(appId).exists(batchId <= _)) return baseV
       staged = staged.filter(s =>
-        (validatedThrough + 1 to base.getOrElse(-1L)).forall(s.survives))
+        (validatedThrough + 1 to baseV).forall(rv => s.survives(log.commit(rv))))
       if (staged.isEmpty) {
         if (attempt > 0) restages.incrementAndGet()
         staged = stage(base)
-        if (staged.isEmpty) return base.getOrElse(throw noTable(path))
+        if (staged.isEmpty) return base.getOrElse(throw noTable(path)).version
         if (attempt == 0) onStaged()
       }
-      validatedThrough = base.getOrElse(-1L)
-      val v = base.map(_ + 1).getOrElse(0L)
-      if (tryCommit(fs, path, v, op, staged.get.removes, staged.get.adds, meta)) {
-        maybeCheckpoint(fs, path, v)
-        return v
+      validatedThrough = baseV
+      val commit = Commit(op, resetOp(op), staged.get.removes, staged.get.adds, meta)
+      if (tryCommit(fs, path, baseV + 1, commit)) {
+        base.foreach(b => maybeCheckpoint(fs, path, b.applied(commit)))
+        return baseV + 1
       }
       attempt += 1
     }
@@ -691,16 +682,17 @@ object TxTable {
     }
 
   /** Latest batch id committed under `appId`'s `txn=` stamp — the read
-    * half of the Delta txnAppId/txnVersion recipe. Resolved like a
-    * manifest (nearest checkpoint's retained stamps + the delta tail), so
-    * the answer survives vacuum pruning the stamped commit itself: without
-    * checkpoint retention, "crash → external compactions/vacuum before the
-    * stream restarts → replay of the stamped batch" would double-apply.
-    * Metadata-scale: one checkpoint + ≤ CheckpointInterval commit reads. */
+    * half of the Delta txnAppId/txnVersion recipe. Read off the same
+    * replay as the manifest (the nearest checkpoint's retained stamps
+    * folded over the delta tail), so the answer survives vacuum pruning
+    * the stamped commit itself: without checkpoint retention, "crash →
+    * external compactions/vacuum before the stream restarts → replay of
+    * the stamped batch" would double-apply. Throws FileNotFoundException
+    * where [[Snapshot]] cannot root the stamps. Metadata-scale: one
+    * checkpoint + ≤ CheckpointInterval commit reads. */
   def lastTxnBatch(spark: SparkSession, path: String, appId: String): Option[Long] = {
-    val fs = hfs(spark, path)
-    latestVersion(spark, path)
-      .flatMap(v => resolveTxns(fs, path, v).get(appId))
+    val log = new Log(hfs(spark, path), path)
+    log.latest.flatMap(v => log.snapshot(v).txns.get(appId))
   }
 
   /** The txn appId charset: the stamp is a `txn=appId:batchId` token on a
@@ -773,7 +765,7 @@ object TxTable {
   def mergeAt(spark: SparkSession, path: String, keys: Seq[String],
       txn: Option[(String, Long)] = None)(updatesAt: Long => DataFrame): Long =
     commitLoop(spark, path, "merge", txn) { base =>
-      val batch = new MergeBatch(updatesAt(base.getOrElse(throw noTable(path))), keys, None)
+      val batch = new MergeBatch(updatesAt(base.getOrElse(throw noTable(path)).version), keys, None)
       Some(stageMerge(spark, path, batch, base).copy(survives = _ => false))
     }
 
@@ -796,12 +788,11 @@ object TxTable {
   /** Stage one merge of `batch` into the snapshot at `base`: the touched
     * files' rewrite, plus the disjointness rule [[merge]] documents. */
   private def stageMerge(spark: SparkSession, path: String, batch: MergeBatch,
-      base: Option[Long]): Staged = {
-    val fs = hfs(spark, path)
+      base: Option[Snapshot]): Staged = {
     val keys = batch.keys
     val (touchedRels, readRels, rewritten) = base match {
-      case Some(bv) =>
-        val baseFiles = resolveEntries(fs, path, bv)
+      case Some(b) =>
+        val baseFiles = b.entries
         // fail-fast additive-evolution guard: a retyped column must be
         // refused BEFORE the commit poisons the table (the read-side
         // snapshotSchema check is the safety net, not the gate)
@@ -858,8 +849,7 @@ object TxTable {
     }
     // the commit is the DELTA (removed touched files, added staged ones);
     // carried files are implicit — O(touched) metadata per merge
-    Staged(touchedRels, stageData(spark, rewritten, path), survives = { rv =>
-      val c = readCommit(fs, path, rv)
+    Staged(touchedRels, stageData(spark, rewritten, path), survives = { c =>
       !c.reset &&
         !c.removes.exists(readRels.contains) &&
         !c.adds.exists(e =>
@@ -884,7 +874,7 @@ object TxTable {
   def compact(spark: SparkSession, path: String, numFiles: Int = 1,
       zorderBy: Option[(String, String)] = None): Long =
     commitLoop(spark, path, "compact") { base =>
-      val snapshot = read(spark, path, Some(base.getOrElse(throw noTable(path))))
+      val snapshot = scan(spark, path, base.getOrElse(throw noTable(path)).entries)
       val arranged = zorderBy match {
         case Some((x, y)) =>
           graft.operators.Layout.zorderCluster(snapshot, x, y, numFiles)
@@ -914,8 +904,8 @@ object TxTable {
     * Output: `change_type`, `commit_version`, then the table columns. */
   def changes(spark: SparkSession, path: String, fromV: Long, toV: Long,
       keys: Seq[String]): DataFrame = {
-    val fs = hfs(spark, path)
-    val versions = listLog(fs, path, ".txt").filter(v => v > fromV && v <= toV).sorted
+    val log = new Log(hfs(spark, path), path)
+    val versions = log.commits.filter(v => v > fromV && v <= toV)
     if (versions.map(_ - fromV) != (1L to (toV - fromV)).toSeq)
       throw new java.io.FileNotFoundException(
         s"TxTable $path: change feed ($fromV, $toV] has missing commits: ${versions.mkString(",")}")
@@ -928,16 +918,16 @@ object TxTable {
     // common polling state (no commits since `fromV`, or only no-op
     // commits in the window); must be a valid empty frame, not a crash
     def emptyFeed: DataFrame = {
-      val snap = read(spark, path, Some(toV))
+      val snap = scan(spark, path, log.at(Some(toV)).entries)
       val nonKey = snap.columns.filterNot(keys.contains).toSeq
       snap.limit(0).select(
         Seq(lit("").as("change_type"), lit(0).cast("int").as("commit_version"))
           ++ (keys ++ nonKey).map(col): _*)
     }
     val frames = versions.flatMap { v =>
-      val c = readCommit(fs, path, v)
+      val c = log.commit(v)
       val (oldRels, newRels) =
-        if (c.reset) (resolveEntries(fs, path, v - 1).map(_.rel), c.adds.map(_.rel))
+        if (c.reset) (log.snapshot(v - 1).entries.map(_.rel), c.adds.map(_.rel))
         else (c.removes, c.adds.map(_.rel))
       // a commit touching no files (e.g. a merge of an empty batch) is an
       // empty diff, not an error — it must not poison every window
@@ -1006,19 +996,17 @@ object TxTable {
     * IS the CDC source). Re-stages after every lost race: the racing
     * commit may have rewritten a co-located row or added a new match. */
   def delete(spark: SparkSession, path: String,
-      condition: org.apache.spark.sql.Column): Long = {
-    val fs = hfs(spark, path)
-    commitLoop(spark, path, "delete") { b =>
-      val base = b.getOrElse(throw noTable(path))
+      condition: org.apache.spark.sql.Column): Long =
+    commitLoop(spark, path, "delete") { base =>
+      val entries = base.getOrElse(throw noTable(path)).entries
       // stats-pruned match scan: the snapshot read's FileIndex drops files
       // whose ranges cannot satisfy pushed-down predicate fragments
-      val touchedNames = read(spark, path, Some(base))
+      val touchedNames = scan(spark, path, entries)
         .filter(condition)
         .select(input_file_name().as("__file")).distinct().collect()
         .map(r => new Path(r.getString(0)).getName).toSet
       if (touchedNames.isEmpty) None
       else {
-        val entries = resolveEntries(fs, path, base)
         val touched = entries.filter(e => touchedNames.contains(new Path(e.rel).getName))
         // The rewrite-side read must present the SNAPSHOT schema, not just
         // the union of the touched files': the match scan above ran over the
@@ -1038,51 +1026,27 @@ object TxTable {
         Some(Staged(touched.map(_.rel), stageData(spark, kept, path), _ => false))
       }
     }
-  }
 
   /** Commit history (version, op, n_files) — newest first. Lists the
     * manifests actually present (vacuum prunes old ones, so the log need
-    * not be contiguous from 0). */
+    * not be contiguous from 0). One listing, one read per commit: each
+    * version is its predecessor with the commit [[Snapshot.applied]]; only
+    * the first version, a version after a gap and a version after an
+    * unknowable one go back through the replay, which re-roots at a
+    * checkpoint or reset. A version whose delta ancestry has a hole
+    * (external mid-log deletion) reports -1 files rather than a
+    * silently-wrong fold. */
   def history(spark: SparkSession, path: String): Seq[(Long, String, Int)] = {
-    val fs = hfs(spark, path)
-    // ONE log listing + one read per commit, resolving incrementally —
-    // per-version resolveEntries would re-list and re-read O(interval)
-    // commits for every row (O(V·interval) I/O on an object store). Only
-    // the first present version (whose delta ancestry may be vacuumed)
-    // goes through checkpoint-based resolution.
-    val versions = listLog(fs, path, ".txt").sorted
-    var state: Option[scala.collection.mutable.LinkedHashMap[String, ManifestEntry]] = None
-    var prev = -1L
-    val rows = versions.map { v =>
-      val c = readCommit(fs, path, v)
-      state match {
-        // incremental folding is only sound across CONTIGUOUS versions —
-        // a mid-log gap (external deletion; vacuum prunes only a prefix)
-        // means unseen deltas, so re-resolve from a checkpoint/reset root
-        // exactly as for the first version
-        case Some(m) if v == prev + 1 =>
-          if (c.reset) m.clear()
-          c.removes.foreach(m.remove)
-          c.adds.foreach(e => m(e.rel) = e)
-        case _ =>
-          val m = scala.collection.mutable.LinkedHashMap.empty[String, ManifestEntry]
-          if (c.reset) { c.adds.foreach(e => m(e.rel) = e); state = Some(m) }
-          else
-            // a version whose delta ancestry has a hole (external mid-log
-            // deletion) has no knowable manifest — report it as -1 files
-            // rather than a silently-wrong fold; resolution re-roots at
-            // the next reset/checkpointed version
-            try {
-              resolveEntries(fs, path, v).foreach(e => m(e.rel) = e)
-              state = Some(m)
-            } catch {
-              case _: java.io.FileNotFoundException => state = None
-            }
+    val log = new Log(hfs(spark, path), path)
+    var prev: Option[Snapshot] = None
+    log.commits.map { v =>
+      val s = prev match {
+        case Some(p) if p.version == v - 1 && p.files.isRight => p.applied(log.commit(v))
+        case _ => log.snapshot(v)
       }
-      prev = v
-      (v, c.op, state.map(_.size).getOrElse(-1))
-    }
-    rows.reverse
+      prev = Some(s)
+      (v, log.commit(v).op, s.files.fold(_ => -1, _.size))
+    }.reverse
   }
 
   /** Drop all but the newest `keepVersions` manifests PRESENT (the log need
@@ -1093,24 +1057,25 @@ object TxTable {
     * publishes, so a freshly-staged-but-uncommitted file is unreferenced —
     * deleting it would corrupt the commit about to win. Files younger than
     * the retention window are left alone (Delta's retention-threshold
-    * rule); pass 0 only when no writer can be in flight. */
+    * rule); pass 0 only when no writer can be in flight. `keepVersions`
+    * must be at least 1: keeping none would delete the whole log. */
   def vacuum(spark: SparkSession, path: String, keepVersions: Int = 2,
       retentionMs: Long = 60L * 60 * 1000): Unit = {
+    require(keepVersions >= 1,
+      s"TxTable $path: vacuum must keep at least one version, got keepVersions = $keepVersions")
     val fs = hfs(spark, path)
-    val versions = listLog(fs, path, ".txt").sorted.reverse // newest first
-    if (versions.isEmpty) return
-    val keep = versions.take(keepVersions)
+    val log = new Log(fs, path)
+    if (log.commits.isEmpty) return
+    val keep = log.commits.takeRight(keepVersions).map(log.snapshot)
     // kept versions must stay resolvable after their delta ancestry is
-    // dropped: materialize a checkpoint for each BEFORE deleting anything
-    val resolved = keep.map(v => v -> resolveEntries(fs, path, v))
-    resolved.foreach { case (v, entries) =>
-      if (!fs.exists(checkpointFile(path, v))) writeCheckpoint(fs, path, v, entries)
-    }
-    versions.drop(keepVersions).foreach(v => fs.delete(commitFile(path, v), false))
-    listLog(fs, path, ".checkpoint").filter(_ < keep.min)
+    // dropped: resolve each, then materialize its checkpoint, BEFORE
+    // deleting anything
+    val referenced = keep.flatMap(_.entries).map(e => new Path(path, e.rel).getName).toSet
+    keep.filterNot(s => log.checkpoints.contains(s.version))
+      .foreach(writeCheckpoint(fs, path, _))
+    log.commits.dropRight(keepVersions).foreach(v => fs.delete(commitFile(path, v), false))
+    log.checkpoints.filter(_ < keep.head.version)
       .foreach(v => fs.delete(checkpointFile(path, v), false))
-    val referenced = resolved.flatMap(_._2)
-      .map(e => new Path(path, e.rel).getName).toSet
     val cutoff = System.currentTimeMillis() - retentionMs
     val dataDir = new Path(path, "data")
     if (fs.exists(dataDir))

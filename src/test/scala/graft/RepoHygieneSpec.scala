@@ -8,6 +8,25 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RepoHygieneSpec extends AnyFunSuite {
 
+  /** Every main source file with its text; run from the repo root. */
+  private lazy val mainSources: Seq[(java.io.File, String)] = {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) files(f) else Seq(f)
+      }
+    files(root).filter(_.getName.endsWith(".scala")).sortBy(_.getPath).map { f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    }
+  }
+
+  private val TxTableSource = "src/main/scala/graft/serve/TxTable.scala"
+
+  /** The file of every match of `re` across the main sources. */
+  private def sites(re: scala.util.matching.Regex): Seq[String] =
+    mainSources.flatMap { case (f, text) => re.findAllIn(text).map(_ => f.getPath) }
+
   test("no bare \\s in oracle SQL: whitespace must be an explicit class") {
     // Java \s includes vertical tab \x0B, RE2's (DuckDB) does not — a bare
     // \s in a dual-dialect tokenizer diverges on any document containing a
@@ -35,17 +54,9 @@ class RepoHygieneSpec extends AnyFunSuite {
     // every streaming TxTable sink drains through TxStream.drain, which
     // stamps each micro-batch for exactly-once commits; a second
     // foreachBatch would be a sink that skips the stamp
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
-    def files(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) files(f) else Seq(f)
-      }
-    val allowed = new java.io.File(root, "graft/streaming/TxStream.scala")
-    val offenders = files(root).filter { f =>
-      f.getName.endsWith(".scala") && f != allowed &&
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          .contains("foreachBatch")
+    val allowed = new java.io.File("src/main/scala/graft/streaming/TxStream.scala")
+    val offenders = mainSources.collect {
+      case (f, text) if f != allowed && text.contains("foreachBatch") => f
     }
     assert(allowed.isFile && offenders.isEmpty,
       s"foreachBatch outside TxStream.scala: ${offenders.mkString(", ")}")
@@ -55,25 +66,26 @@ class RepoHygieneSpec extends AnyFunSuite {
     // every TxTable writer commits through one stage-validate-commit loop;
     // a second retry loop would be a writer with its own conflict rule,
     // and a ConcurrentModificationException a caller-side retry protocol
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
-    def files(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) files(f) else Seq(f)
-      }
-    val sources = files(root).filter(_.getName.endsWith(".scala")).map { f =>
-      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    }
-    val retryLoop = """\b(while|for)\b[^\n]*\bMaxCommitRetries\b""".r
-    val loops = sources.flatMap { case (f, text) =>
-      retryLoop.findAllIn(text).map(_ => f).toSeq
-    }
-    assert(loops == Seq(new java.io.File(root, "graft/serve/TxTable.scala")),
-      s"MaxCommitRetries loops: ${loops.mkString(", ")}")
-    val cme = sources.collect {
+    val loops = sites("""\b(while|for)\b[^\n]*\bMaxCommitRetries\b""".r)
+    assert(loops == Seq(TxTableSource), s"MaxCommitRetries loops: ${loops.mkString(", ")}")
+    val cme = mainSources.collect {
       case (f, text) if text.contains("ConcurrentModificationException") => f
     }
     assert(cme.isEmpty, s"ConcurrentModificationException in ${cme.mkString(", ")}")
+  }
+
+  test("the TxTable log replay exists once: one checkpoint parser, one commit fold") {
+    // every reader and writer resolves its snapshot through one replay
+    // (Log.snapshot) and its one step (Snapshot.applied); a second
+    // resolver would carry its own rooting rule, and the two would drift
+    val cpParse = sites("""unframe\([^\n]*"checkpoint"""".r)
+    assert(cpParse == Seq(TxTableSource), s"checkpoint parsers: ${cpParse.mkString(", ")}")
+    val cpRead = sites("""\bcheckpointLines\(""".r)
+    assert(cpRead == Seq(TxTableSource, TxTableSource),
+      s"checkpointLines must have one caller, the replay: ${cpRead.mkString(", ")}")
+    // a commit's removes reach a manifest only by leaving a map
+    val fold = sites("""\bremoves\.(foreach|foldLeft)\b|(--|removedAll\()\s*[\w.]*\bremoves\b""".r)
+    assert(fold == Seq(TxTableSource), s"commit folds: ${fold.mkString(", ")}")
   }
 
   test("spark-side whitespace class matches the oracle-side text") {

@@ -65,4 +65,36 @@ class TxCommitLoopSpec extends AnyFunSuite {
         s"$op: checkpoint manifest differs from the checkpoint-free resolution")
     }
   }
+
+  test("commit-loop checkpoints are byte-identical to a full log replay") {
+    // the commit loop checkpoints its in-memory base snapshot with the
+    // winning commit applied; vacuum materializes checkpoints from a full
+    // replay of the log. Both must write the same bytes, #txn lines included.
+    val path = fresh("cp_parity")
+    TxTable.write(spark, (0L until 8L).map(k => (k, "seed")).toDF("k", "v"), path)
+    (1 to 2 * TxTable.CheckpointInterval).foreach { i =>
+      i match {
+        case 4 | 10 => TxTable.delete(spark, path, col("k") === (i - 1).toLong)
+        case 5 | 15 => TxTable.compact(spark, path, numFiles = 2)
+        case _ if i % 3 == 0 =>
+          TxTable.merge(spark, Seq((i.toLong, s"u$i")).toDF("k", "v"), path, Seq("k"))
+        case _ =>
+          TxTable.merge(spark, Seq((i.toLong, s"s$i")).toDF("k", "v"), path, Seq("k"),
+            txn = Some((if (i % 2 == 0) "app_a" else "app_b", i.toLong)))
+      }
+    }
+    assert(TxTable.latestVersion(spark, path).contains(2L * TxTable.CheckpointInterval))
+    val boundaries = Seq(1, 2).map(n => n.toLong * TxTable.CheckpointInterval)
+    def cp(v: Long) = new java.io.File(f"$path/_txlog/$v%08d.checkpoint")
+    val written = boundaries.map(v => v -> Files.readAllBytes(cp(v).toPath)).toMap
+    assert(new String(written(20L), "UTF-8").contains("#txn app_a:20") &&
+      new String(written(20L), "UTF-8").contains("#txn app_b:19"))
+    boundaries.foreach(v => assert(cp(v).delete()))
+    // keep every version and every file: vacuum only re-creates checkpoints
+    TxTable.vacuum(spark, path, keepVersions = Int.MaxValue, retentionMs = Long.MaxValue / 2)
+    boundaries.foreach { v =>
+      assert(Files.readAllBytes(cp(v).toPath).sameElements(written(v)),
+        s"v$v: the commit loop's checkpoint differs from the full replay's")
+    }
+  }
 }

@@ -188,15 +188,15 @@ class TxVacuumSpec extends AnyFunSuite {
   }
 
   test("out-of-band pruned, reset-rooted log: txn state resolves exactly like entries") {
-    // r14 ADVICE: resolveTxns used to demand a chain rooted at v0 (or a
-    // checkpoint) while entry resolution also accepts a chain rooted at a
-    // write/compact RESET with pruned, checkpoint-less history below — so
-    // a table whose snapshot was perfectly readable refused every stamped
-    // merge, lastTxnBatch and checkpoint write. The two resolvers must
-    // agree; stamps carried only by pruned pre-root commits are UNKNOWABLE
-    // and read as absent (the documented migration caveat — this engine's
-    // own vacuum always checkpoints kept versions first, so only external
-    // deletion reaches this state).
+    // Txn state once demanded a chain rooted at v0 (or a checkpoint) while
+    // the manifest also accepts a chain rooted at a write/compact RESET
+    // with pruned, checkpoint-less history below — so a table whose
+    // snapshot was perfectly readable refused every stamped merge,
+    // lastTxnBatch and checkpoint write. With no checkpoint, both halves
+    // of the replay must re-root at a reset; stamps carried only by pruned
+    // pre-root commits are UNKNOWABLE and read as absent (the documented
+    // migration caveat — this engine's own vacuum always checkpoints kept
+    // versions first, so only external deletion reaches this state).
     val path = fresh("reset_root")
     TxTable.write(spark,
       spark.range(10).select(col("id"), lit("base").as("txt")), path) // v0
@@ -259,6 +259,61 @@ class TxVacuumSpec extends AnyFunSuite {
       Seq("id"), txn = Some(("app_mid", 5L)))
     assert(TxTable.latestVersion(spark, path) == before,
       "replay of the mid-chain stamped batch must no-op, not double apply")
+  }
+
+  test("vacuum refuses to keep no version: the log and every version survive") {
+    // keepVersions = 0 used to prune every commit and, with nothing left
+    // referenced, every data file past retention — a silent table wipe
+    val path = fresh("keep_none")
+    threeVersions(path)
+    def snapshots = (0L to 2L).map(v =>
+      TxTable.read(spark, path, Some(v)).collect().map(_.toString).sorted.toSeq)
+    val before = snapshots
+    Seq(0, -1).foreach { k =>
+      intercept[IllegalArgumentException] {
+        TxTable.vacuum(spark, path, keepVersions = k, retentionMs = 0L)
+      }
+    }
+    assert(TxTable.latestVersion(spark, path).contains(2L))
+    assert(snapshots == before, "a refused vacuum must leave every version readable")
+  }
+
+  test("a hole above a checkpoint: entries re-root at a later reset, txn state refuses") {
+    // checkpoint at v10, v11 pruned out of band, reset at v12, stamped
+    // merge at v13. The manifest roots at the reset; txn state above a
+    // checkpoint cannot skip the hole (v11 might have carried a NEWER
+    // stamp), so every reader of it and every stamped commit refuses.
+    val path = fresh("cp_hole_reset")
+    TxTable.write(spark,
+      spark.range(20).select(col("id"), lit("base").as("txt")), path) // v0
+    (1 to 10).foreach { i =>
+      TxTable.merge(spark, Seq((i.toLong, s"m$i")).toDF("id", "txt"), path,
+        Seq("id"), txn = Some(("app_a", i.toLong)))
+    }
+    assert(new java.io.File(f"$path/_txlog/${10L}%08d.checkpoint").isFile)
+    TxTable.merge(spark, Seq((11L, "m11")).toDF("id", "txt"), path,
+      Seq("id"), txn = Some(("app_a", 11L))) // v11 (to be pruned)
+    TxTable.write(spark,
+      spark.range(5).select(col("id"), lit("reset").as("txt")), path) // v12 RESET
+    TxTable.merge(spark, Seq((1L, "b13")).toDF("id", "txt"), path,
+      Seq("id"), txn = Some(("app_b", 13L))) // v13, stamped
+    val expected = TxTable.read(spark, path, Some(13L)).collect().map(_.toString).sorted.toSeq
+    val files13 = TxTable.manifest(spark, path, Some(13L)).map(_.rel)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$path/_txlog", f"${11L}%08d.txt"), false))
+    assert(TxTable.manifest(spark, path, Some(13L)).map(_.rel) == files13)
+    assert(TxTable.read(spark, path, Some(13L)).collect().map(_.toString).sorted.toSeq == expected)
+    assert(TxTable.read(spark, path).count() == 5L)
+    Seq("app_a", "app_b").foreach { app =>
+      intercept[java.io.FileNotFoundException] { TxTable.lastTxnBatch(spark, path, app) }
+    }
+    intercept[java.io.FileNotFoundException] {
+      TxTable.merge(spark, Seq((2L, "b14")).toDF("id", "txt"), path,
+        Seq("id"), txn = Some(("app_b", 14L)))
+    }
+    assert(TxTable.latestVersion(spark, path).contains(13L),
+      "a refused stamped merge must commit nothing")
   }
 
   test("vacuum retains every version's files that keepVersions names, pruning only the prefix") {
