@@ -4,22 +4,24 @@ import org.apache.spark.sql.SparkSession
 
 /** Release the engine's session-lifetime working state.
   *
-  * The query library deliberately `cache()`s shared intermediates (the
-  * dedup pipeline's shingles/signatures/pair set) and memoizes
-  * checkpoint-rooted artifacts (cluster labels, trained IVF stats, the
+  * Two stores hold it. Per-query code `cache()`s intermediates it reads
+  * more than once (the dedup pipeline's shingles and signatures), shared
+  * through the CacheManager by plan identity. The session-shared
+  * artifacts ([[Artifacts]]: cluster labels, trained IVF stats, the
   * forecast table, the DAG runner's stage counts, every inferred parquet
-  * schema — [[Tables.parquetSchema]]) for the life of a session — correct
-  * for Verify/Bench runs, but a LONG-LIVED server session cycling many
-  * corpora would accumulate them. This is the
-  * explicit release hook: evict cached plans and drop the session from
-  * every [[graft.operators.SessionMemo]] (their checkpoint and cache
-  * blocks become unreferenced and the ContextCleaner reclaims them). The
-  * next query simply rebuilds what it needs.
+  * schema) are shared by object identity for the life of a session —
+  * correct for Verify/Bench runs, but a LONG-LIVED server session cycling
+  * many corpora would accumulate them. This is the explicit release hook:
+  * evict cached plans and drop the session's artifact values (their
+  * checkpoint and cache blocks become unreferenced and the ContextCleaner
+  * reclaims them). The next query simply rebuilds what it needs; the
+  * artifacts' build and hit counts stay, so the rebuild shows as a second
+  * build.
   *
   * SCOPE CAVEAT: `catalog.clearCache()` clears the CacheManager, which
   * Spark shares across ALL sessions of the SparkContext — sibling
   * sessions' cached plans are evicted too (they rebuild on next use;
-  * correctness is unaffected). The memo drop IS per-session. A process
+  * correctness is unaffected). The artifact drop IS per-session. A process
   * hosting concurrent tenant sessions should call this at tenant-idle
   * points, not mid-workload.
   */
@@ -27,6 +29,6 @@ object Caches {
 
   def clear(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    graft.operators.SessionMemo.dropSession(spark)
+    Artifacts.drop(spark)
   }
 }

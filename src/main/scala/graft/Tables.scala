@@ -3,7 +3,6 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.types.StructType
-import graft.operators.SessionMemo
 
 /** Readers for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -67,7 +66,7 @@ object Tables {
     * set changes every call (a merge's candidates, a change feed's commit,
     * a sink that rewrites its directory) would only add dead entries. */
   def parquetSchema(spark: SparkSession, path: String): StructType =
-    schemaMemo.getOrElseUpdate(spark, schemaKey(spark, path))(spark.read.parquet(path).schema)
+    Artifacts.parquetSchema(spark, schemaKey(spark, path))(spark.read.parquet(path).schema)
 
   /** Record the schema of a parquet file this session just wrote with
     * Spark's parquet writer from a frame of schema `written`, so that the
@@ -76,7 +75,7 @@ object Tables {
     * — the frame's schema — with every field made nullable, as any parquet
     * read does. */
   def wroteParquet(spark: SparkSession, path: String, written: StructType): Unit =
-    schemaMemo.getOrElseUpdate(spark, schemaKey(spark, path))(GraftBridge.asNullable(written))
+    Artifacts.parquetSchema(spark, schemaKey(spark, path))(GraftBridge.asNullable(written))
 
   private def schemaKey(spark: SparkSession, path: String) = {
     val p = new Path(path)
@@ -86,9 +85,6 @@ object Tables {
     val confs = spark.conf.getAll.toSeq.filter(_._1.contains("parquet")).sorted
     (path, files, confs)
   }
-
-  private val schemaMemo = new SessionMemo[
-    (String, Seq[(String, Long, Long)], Seq[(String, String)]), StructType]
 
   /** Spread a small-file input across the cluster before per-row-expensive
     * work — IF the scan actually under-parallelizes. The small testdata
@@ -182,5 +178,13 @@ object Tables {
     }
   }
   def documents(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "documents")
+
+  /** The readers of the tables two or more registered queries read
+    * (QueriesSpec's artifact-policy test keeps the list measured), `events`
+    * first: its reader sets a parquet conf that every later
+    * [[parquetSchema]] key carries. */
+  private[graft] def readShared(spark: SparkSession, dir: String): Seq[DataFrame] =
+    events(spark, dir) +: Seq("region", "nation", "customer", "orders",
+      "lineitem", "documents", "embeddings").map(t(spark, dir, _))
   def embeddings(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "embeddings")
 }

@@ -72,7 +72,6 @@ object Sentiment {
     else "neutral"
 
   def scoreUdf = udf((t: String) => compound(t))
-  def labelUdf = udf((s: Double) => label(s))
 
   /** Score + label every document; then the A6 donut aggregation shape on
     * top (count per label). */

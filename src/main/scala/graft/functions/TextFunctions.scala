@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables
 
 /** Text-analysis operators for a training-data pipeline over the `documents`
@@ -80,37 +81,23 @@ object TextFunctions {
             + least(avgTokLen / 10.0, lit(1.0)) * 0.2)), 6))
   }
 
-  /** The exploded corpus token stream (doc_id, lang, term), MEMOIZED per
-    * (session, dir): the sketch family (MG/CMS heavy-hitter queries — five
-    * registered consumers via `Sketches.langTerms`) and the TF-IDF ranker
-    * (two branches: tf and document-frequency) each re-run the tokenizer's
-    * regex normalization + explode over the full corpus. In production the
-    * tokenized stream is a MATERIALIZED per-ingest table (the quality-memo
-    * contract applied to instances); the cached frame is its in-session
-    * form. Consumers needing positions (corpusGrams) keep their own
-    * memoized downstream artifacts. */
-  private val tokenInstancesMemo =
-    new graft.operators.SessionMemo[String, DataFrame]
-
+  /** The exploded corpus token stream (doc_id, lang, term), a session
+    * artifact: in production a MATERIALIZED per-ingest table, read by the
+    * sketch family and the TF-IDF ranker instead of re-running the
+    * tokenizer over the full corpus. */
   def tokenInstances(spark: SparkSession, dir: String): DataFrame =
-    tokenInstancesMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.tokenInstances(spark, dir) {
       graft.Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"),
           explode(tokens(col("text"))).as("term"))
         .cache()
     }
 
-  private val qualityMemo =
-    new graft.operators.SessionMemo[String, DataFrame]
-
-  /** MEMOIZED per (session, dir): five-plus registered queries (metrics,
-    * curate, reputation, epoch plan, the curation funnel) consume these
-    * per-doc quality columns, and each call re-runs four full-text regex
-    * passes. In production they are MATERIALIZED metadata columns written
-    * once per ingest (the scored-docs memo contract); the cached frame —
-    * seven numbers per doc, metadata-scale — is the in-session form. */
+  /** The per-doc quality columns, a session artifact: in production
+    * MATERIALIZED metadata columns written once per ingest, so no
+    * consumer re-runs four full-text regex passes. */
   def qualityQuery(spark: SparkSession, dir: String): DataFrame =
-    qualityMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.qualityCols(spark, dir) {
       qualityMetrics(Tables.documents(spark, dir), "text")
         .select("doc_id", "n_chars_m", "n_tokens", "alpha_ratio", "digit_ratio",
           "avg_token_len", "quality_score")

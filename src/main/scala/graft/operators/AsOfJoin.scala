@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Artifacts
 import graft.Tables
 
 /** As-of (backward) join: for every left row, attach the most recent right
@@ -119,8 +120,6 @@ object AsOfJoin {
       |ASOF LEFT JOIN states s
       |  ON p.o_custkey = s.s_custkey AND p.p_nt >= s.s_nt""".stripMargin
 
-  private val statesMemo = new SessionMemo[String, DataFrame]
-
   /** probes = orders (key=o_custkey, t=o_orderdate); states = one row per
     * (custkey, shipdate): max quantity that day — makes the as-of target
     * unique so the oracle is deterministic.
@@ -128,12 +127,16 @@ object AsOfJoin {
     * The states side is MEMOIZED per (session, dir) and cached: it is the
     * quote/state table a finance pipeline materializes once per ingest,
     * consumed by three registered queries (window-sweep, native-exec, and
-    * forward as-of — policy (a)), each of which should time its own
+    * forward as-of), so it is warmed: each of them should time its own
     * as-of machinery, not a fourth rebuild of the shared input join. */
   def probesAndStates(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val probes = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
-    val states = statesMemo.getOrElseUpdate(spark, dir) {
+    (probes, states(spark, dir))
+  }
+
+  private[graft] def states(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.asofStates(spark, dir) {
       Tables.orders(spark, dir).alias("o2")
         .join(Tables.lineitem(spark, dir),
           col("o2.o_orderkey") === col("l_orderkey"))
@@ -143,8 +146,6 @@ object AsOfJoin {
           col("ship_qty"))
         .cache()
     }
-    (probes, states)
-  }
 
   val asofQuerySql: String =
     """WITH states AS (

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables
 import graft.functions.TextFunctions
 
@@ -158,7 +159,7 @@ object BpeEncode {
     * [[encodeSql]] — see [[encodedCtes]] for why the training replay's
     * final word states ARE the encode of the training corpus. */
   def encodeQuery(spark: SparkSession, dir: String): DataFrame =
-    encoded(spark, dir)
+    encodedWordToks(spark, dir)
       .select(col("doc_id"),
         size(col("word_toks")).as("n_words"),
         aggregate(col("word_toks"), lit(0),
@@ -173,7 +174,7 @@ object BpeEncode {
     * merges are intra-word concatenations — any encode defect that
     * drops, duplicates, splits or reorders a symbol breaks the hash. */
   def roundtripQuery(spark: SparkSession, dir: String): DataFrame =
-    encoded(spark, dir)
+    encodedWordToks(spark, dir)
       .select(col("doc_id"),
         md5(concat_ws(" ",
           transform(col("word_toks"), w => concat_ws("", w)))).as("text_sig"))
@@ -234,17 +235,11 @@ object BpeEncode {
         |  COALESCE(p.tok_sig, md5('')) AS tok_sig
         |FROM documents d LEFT JOIN perdoc p ON d.doc_id = p.doc_id""".stripMargin
 
-  private val encMemo = new SessionMemo[String, DataFrame]
-
-  /** Memoized corpus encode under the memoized trained merges — shared by
-    * the summary and roundtrip queries and the BPE-chunking twin
-    * (`Packing.chunkDocumentsBpe`): one training + one encode per
-    * session/dir, same materialized-artifact contract as `ivfTrain`. */
+  /** The corpus encode under the trained merges, a session artifact read
+    * by the summary and roundtrip queries and the BPE-chunking twin
+    * (`Packing.chunkDocumentsBpe`). */
   private[graft] def encodedWordToks(spark: SparkSession, dir: String): DataFrame =
-    encoded(spark, dir)
-
-  private def encoded(spark: SparkSession, dir: String): DataFrame =
-    encMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.bpeTokenIds(spark, dir) {
       encodeOf(spark, Tables.spread(spark, Tables.documents(spark, dir)),
         BpeTrain.train(spark, dir)).cache()
     }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables
 import graft.functions.TextFunctions
 
@@ -71,8 +72,6 @@ object BpeTrain {
       .groupBy(col("p.l").as("l"), col("p.r").as("r"))
       .agg(sum("wc").as("cnt"))
 
-  private val trainMemo = new SessionMemo[(String, Int), DataFrame]
-
   /** Train `merges` BPE merges; returns (rank, left, right, merged,
     * pair_count) ordered by rank — the merge table a tokenizer ships.
     * Memoized per (session, dir, merges): training runs once and its
@@ -80,7 +79,7 @@ object BpeTrain {
     * queries (same materialized-artifact contract as
     * `Similarity.ivfTrain`). */
   def train(spark: SparkSession, dir: String, merges: Int = 20): DataFrame =
-    trainMemo.getOrElseUpdate(spark, (dir, merges)) {
+    Artifacts.bpeMerges(spark, (dir, merges)) {
       trainImpl(spark, dir, merges).cache()
     }
 

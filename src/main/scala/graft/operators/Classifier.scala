@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables
 
 /** Model-based quality filtering — the learned gate modern curation
@@ -109,9 +110,6 @@ object Classifier {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
   }
 
-  private val trainMemo =
-    new SessionMemo[(String, Double, Int, Double), (DataFrame, Seq[Double])]
-
   /** Training stats: one row per iteration (0 = the zero-weight start)
     * with the mean logistic loss and teacher-agreement accuracy. */
   def qualityTrain(spark: SparkSession, dir: String, tau: Double = DefaultTau,
@@ -121,7 +119,7 @@ object Classifier {
   private[graft] def qualityTrainFull(spark: SparkSession, dir: String,
       tau: Double = DefaultTau, iters: Int = DefaultIters,
       eta: Double = DefaultEta): (DataFrame, Seq[Double]) =
-    trainMemo.getOrElseUpdate(spark, (dir, tau, iters, eta)) {
+    Artifacts.qualityGateFit(spark, (dir, tau, iters, eta)) {
       val r = qualityTrainImpl(spark, dir, tau, iters, eta)
       (r._1.cache(), r._2)
     }
@@ -295,9 +293,6 @@ object Classifier {
   // spends its scan budget on MORE iterations over LESS data
   val DefaultSampleIters = 60
 
-  private val sampledTrainMemo =
-    new SessionMemo[(String, Double, Double, Int, Double), (DataFrame, Seq[Double])]
-
   /** SAMPLED-teacher training — the production split at 100 TB: full-batch
     * GD is sound in shape (linear passes, 65-double state) but spends
     * 16 complete lake scans fitting a 65-parameter model; the standard
@@ -316,7 +311,7 @@ object Classifier {
   private[graft] def qualityTrainSampledFull(spark: SparkSession, dir: String,
       frac: Double = DefaultSampleFrac, tau: Double = DefaultTau,
       iters: Int = DefaultSampleIters, eta: Double = DefaultEta): (DataFrame, Seq[Double]) =
-    sampledTrainMemo.getOrElseUpdate(spark, (dir, frac, tau, iters, eta)) {
+    Artifacts.qualityGateSampledFit(spark, (dir, frac, tau, iters, eta)) {
       val sample = Sampling.stratifiedSampleTwoPhase(spark, dir, frac)
         .select("doc_id")
       val training = trainingFrame(spark, dir, tau)

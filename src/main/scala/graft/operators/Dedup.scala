@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.Encoders
+import graft.Artifacts
 import graft.Tables
 import graft.functions.TextFunctions.{normText, tokens}
 
@@ -175,10 +176,6 @@ object Dedup {
   /** Exact n-gram Jaccard on candidate pairs only (the expensive verify,
     * gated behind LSH): join each side's shingle set, intersection/union by
     * counting. */
-  def exactJaccard(spark: SparkSession, dir: String, cands: DataFrame,
-      n: Int = 3): DataFrame =
-    exactJaccardFromShingles(docShingles(spark, dir, n).cache(), cands)
-
   def exactJaccardFromShingles(sh: DataFrame, cands: DataFrame): DataFrame = {
     val counts = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val sa = sh.toDF("da", "sha")
@@ -201,27 +198,26 @@ object Dedup {
     * → estimate → exact verify. Emits verified pairs with jaccard ≥ 0.7.
     * Signatures and candidates feed three downstream joins, so they are
     * cached — without it the whole shingle pipeline re-executes per use.
-    * Deliberately NOT unpersisted: CacheManager keys entries by analyzed
-    * plan, so the dedup/cluster/curation queries of one session all share
-    * these entries; an eager unpersist would force each query to recompute
-    * the pipeline. Bounded by session lifetime (Verify/Bench runs). */
-  def minhashNearDups(spark: SparkSession, dir: String): DataFrame = {
-    val sh = docShingles(spark, dir).cache()
-    val sigs = signaturesFromShingles(sh).cache()
-    val cands = minhashCandidates(sigs).cache()
-    val est = estimateJaccard(sigs, cands)
-    val exact = exactJaccardFromShingles(sh, cands)
-    // cache the verified pair set too (few hundred rows): it feeds six
-    // consumers (the two dedup queries, clustering, curation, split
-    // contamination, the recall and cluster invariants), each of which
-    // would otherwise redo the est+verify joins — the in-session analogue
-    // of the stored near-dup pair table an ingest pipeline keeps at scale
-    // (same policy as ngramJaccardPairs' cached output below)
-    est.join(exact, Seq("doc_a", "doc_b"))
-      .filter(col("jaccard") >= 0.7)
-      .select("doc_a", "doc_b", "est_jaccard", "jaccard")
-      .cache()
-  }
+    * The verified pair set is a warmed session artifact ([[Artifacts]]):
+    * every consumer is handed the same instance. */
+  def minhashNearDups(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.minhashPairs(spark, dir) {
+      val sh = docShingles(spark, dir).cache()
+      val sigs = signaturesFromShingles(sh).cache()
+      val cands = minhashCandidates(sigs).cache()
+      val est = estimateJaccard(sigs, cands)
+      val exact = exactJaccardFromShingles(sh, cands)
+      // cache the verified pair set too (few hundred rows): it feeds six
+      // consumers (the two dedup queries, clustering, curation, split
+      // contamination, the recall and cluster invariants), each of which
+      // would otherwise redo the est+verify joins — the in-session analogue
+      // of the stored near-dup pair table an ingest pipeline keeps at scale
+      // (same policy as ngramJaccardPairs' cached output below)
+      est.join(exact, Seq("doc_a", "doc_b"))
+        .filter(col("jaccard") >= 0.7)
+        .select("doc_a", "doc_b", "est_jaccard", "jaccard")
+        .cache()
+    }
 
   /** Row-local MinHash band signatures — NO shuffle: each min-hash slot is
     * `array_min` over the row's shingle-hash array, so signatures compute
@@ -265,27 +261,27 @@ object Dedup {
     * cached shingle/signature pipeline the batch path uses.
     *
     * Output: (index_id, new_id, jaccard) for verified pairs ≥ 0.7. */
-  def minhashNearDupsIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val sh = docShingles(spark, dir).cache()
-    val sigs = signaturesFromShingles(sh).cache()
-    val banded = bandedSignatures(sigs)
-    val idx = banded.filter(pmod(col("doc_id"), lit(2)) === 0)
-      .select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-    val fresh = banded.filter(pmod(col("doc_id"), lit(2)) === 1)
-      .select(col("doc_id").as("doc_b"), col("band"), col("sig"))
-    val cands = idx.join(fresh, Seq("band", "sig"))
-      .select("doc_a", "doc_b").distinct()
-    // cache the verified incremental pair set (dozens of rows): like the
-    // batch pair table above it is what an ingest MATERIALIZES (the new
-    // batch's near-dup links), and it has two registered consumers —
-    // q_dedup_incremental and the q_incremental_consistency audit, which
-    // would otherwise each redo the probe's bucket join + exact verify
-    // (policy (a): warm-touched by the bench in the same commit)
-    exactJaccardFromShingles(sh, cands)
-      .filter(col("jaccard") >= 0.7)
-      .select(col("doc_a").as("index_id"), col("doc_b").as("new_id"), col("jaccard"))
-      .cache()
-  }
+  def minhashNearDupsIncremental(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.minhashPairsIncremental(spark, dir) {
+      val sh = docShingles(spark, dir).cache()
+      val sigs = signaturesFromShingles(sh).cache()
+      val banded = bandedSignatures(sigs)
+      val idx = banded.filter(pmod(col("doc_id"), lit(2)) === 0)
+        .select(col("doc_id").as("doc_a"), col("band"), col("sig"))
+      val fresh = banded.filter(pmod(col("doc_id"), lit(2)) === 1)
+        .select(col("doc_id").as("doc_b"), col("band"), col("sig"))
+      val cands = idx.join(fresh, Seq("band", "sig"))
+        .select("doc_a", "doc_b").distinct()
+      // cache the verified incremental pair set (dozens of rows): like the
+      // batch pair table above it is what an ingest MATERIALIZES (the new
+      // batch's near-dup links), and it has two registered consumers —
+      // q_dedup_incremental and the q_incremental_consistency audit, which
+      // would otherwise each redo the probe's bucket join + exact verify
+      exactJaccardFromShingles(sh, cands)
+        .filter(col("jaccard") >= 0.7)
+        .select(col("doc_a").as("index_id"), col("doc_b").as("new_id"), col("jaccard"))
+        .cache()
+    }
 
   // --------------------------------------------- stored-index hash stamp
   /** Identifier of the LSH hash family THIS build signs and probes with:
@@ -634,7 +630,11 @@ object Dedup {
     * [[SimHashAgg]] remains the pinned reference semantics
     * (PropertiesSpec merge-associativity; DedupSpec asserts declarative ≡
     * aggregator corpus-wide). */
-  def simhashSignatures(spark: SparkSession, dir: String): DataFrame = {
+  def simhashSignatures(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.simhashSigs(spark, dir)(simhashSignaturesOf(spark, dir).cache())
+
+  /** The un-memoized signature build behind [[simhashSignatures]]. */
+  private[graft] def simhashSignaturesOf(spark: SparkSession, dir: String): DataFrame = {
     val votes = (0 until 64).map { j =>
       sum(when(shiftrightunsigned(col("th"), j).bitwiseAND(lit(1L)) === 1L, 1L)
         .otherwise(-1L)).as(s"v$j")
@@ -684,10 +684,11 @@ object Dedup {
     * set is cached like the minhash pair table above: it is what an ingest
     * materializes, and its two registered consumers (q_simhash_pairs, the
     * q_dedup_simhash summary) each redid the chunk self-join + distinct +
-    * verify to reach the same dozens of rows (policy (a): warm-touched by
-    * the bench in the same commit). */
+    * verify to reach the same dozens of rows. */
   def simhashNearDups(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame =
-    simhashNearDupsFromSigs(simhashSignatures(spark, dir), maxHamming).cache()
+    Artifacts.simhashPairs(spark, (dir, maxHamming)) {
+      simhashNearDupsFromSigs(simhashSignatures(spark, dir), maxHamming).cache()
+    }
 
   def simhashNearDupsFromSigs(sigs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val chunked = sigs.select(col("doc_id"), col("simhash"),
@@ -710,10 +711,10 @@ object Dedup {
 
   /** Per-doc SimHash summary (total coverage, like minhashSummary). */
   def simhashSummary(spark: SparkSession, dir: String): DataFrame = {
-    // one signature computation (cached) feeds both the pair search and the
-    // final join — recomputing it was the costliest stage run twice; the
-    // pair set itself is the cached shared artifact (see simhashNearDups)
-    val sigs = simhashSignatures(spark, dir).cache()
+    // one signature artifact feeds both the pair search and the final
+    // join — recomputing it was the costliest stage run twice; the pair
+    // set itself is the shared artifact too (see simhashNearDups)
+    val sigs = simhashSignatures(spark, dir)
     val pairs = simhashNearDups(spark, dir)
     // one explode instead of the two-branch union (r19, guide §2.4): the
     // cached pair set is scanned ONCE and each pair emits its two partner
@@ -853,8 +854,6 @@ object Dedup {
       |JOIN counts cb ON cb.doc_id = doc_b
       |WHERE ROUND(n_inter / CAST(ca.n_sh + cb.n_sh - n_inter AS DOUBLE), 6) >= $threshold""".stripMargin
 
-  private val jaccShMemo = new SessionMemo[(String, Int), DataFrame]
-
   /** The exact-Jaccard family's shingle table, MEMOIZED per (session, dir,
     * n) — ONE DataFrame instance shared by the pair pipeline, the rare
     * sweep, and the cap-exposure audit (r18 ADVICE: the three used to
@@ -862,31 +861,25 @@ object Dedup {
     * to share the materialization; any drift in construction order or
     * naming would have silently rebuilt the heavy shingle pass with no
     * test noticing — instance sharing cannot drift). */
-  private def jaccardShingles(spark: SparkSession, dir: String,
-      n: Int): DataFrame =
-    jaccShMemo.getOrElseUpdate(spark, (dir, n)) {
+  private[graft] def jaccardShingles(spark: SparkSession, dir: String,
+      n: Int = 3): DataFrame =
+    Artifacts.jaccardShingles(spark, (dir, n)) {
       docShingles(spark, dir, n).cache()
     }
-
-  private val withDfMemo = new SessionMemo[(String, Int), DataFrame]
 
   /** The df-annotated (doc_id, sh, df ≥ 2) inverted index, MEMOIZED like
     * [[jaccardShingles]] and built from it: df == 1 shingles can never
     * intersect (drop them — typically most of the index); consumers split
     * it at dfCap into the rare index (candidates) and the common tail
-    * (the skew guard / recall bound). Warm-touched transitively through
-    * `rarePairCounts` (policy (a)): materializing the sweep forces this
-    * cache first. */
-  private def shinglesWithDf(spark: SparkSession, dir: String,
-      n: Int): DataFrame =
-    withDfMemo.getOrElseUpdate(spark, (dir, n)) {
+    * (the skew guard / recall bound). */
+  private[graft] def shinglesWithDf(spark: SparkSession, dir: String,
+      n: Int = 3): DataFrame =
+    Artifacts.shinglesWithDf(spark, (dir, n)) {
       val sh = jaccardShingles(spark, dir, n)
       sh.join(
         sh.groupBy("sh").agg(count(lit(1)).as("df")).filter(col("df") >= 2),
         "sh").cache()
     }
-
-  private val rarePairsMemo = new SessionMemo[(String, Int, Int), DataFrame]
 
   /** THE exact-truth pair sweep, factored out and memoized (r17 — the one
     * heavy pass three registered consumers previously rebuilt piecemeal:
@@ -898,11 +891,11 @@ object Dedup {
     * equi-self-join, but 2 exchanges (group-by-shingle, group-by-pair)
     * instead of 3. Group size is bounded by dfCap, so the in-group
     * d(d-1)/2 expansion can never skew a task. Returns
-    * (doc_a, doc_b, r_ab = shared rare-shingle count); warm-up touches it
-    * under policy (a) as a per-ingest truth artifact. */
+    * (doc_a, doc_b, r_ab = shared rare-shingle count); warmed as a
+    * per-ingest truth artifact. */
   private[graft] def rarePairCounts(spark: SparkSession, dir: String,
       n: Int = 3, dfCap: Int = 20): DataFrame =
-    rarePairsMemo.getOrElseUpdate(spark, (dir, n, dfCap)) {
+    Artifacts.ngramRarePairs(spark, (dir, n, dfCap)) {
       shinglesWithDf(spark, dir, n).filter(col("df") <= dfCap)
         .groupBy("sh").agg(collect_list(col("doc_id")).as("ds"))
         .select(explode(flatten(transform(col("ds"), a =>
@@ -1090,17 +1083,12 @@ object Dedup {
       |FROM runs GROUP BY doc_a, doc_b, diag, run0
       |HAVING COUNT(*) + 7 >= 12""".stripMargin
 
-  /** [[duplicateSpans]] MEMOIZED per (session, dir, k, minTokens, dfCap) —
-    * the span table has two registered consumers (the span report and the
-    * scrub that applies it), and at scale it is a materialized per-ingest
-    * artifact a scrub job reads, never recomputed per query (the
-    * dupClusters multi-consumer policy). The salted twin stays un-memoized
+  /** [[duplicateSpans]] as a session artifact: at scale a materialized
+    * per-ingest table a scrub job reads. The salted twin stays un-memoized
     * on purpose: its whole point is to execute the alternative join plan. */
-  private val spansMemo = new SessionMemo[(String, Int, Int, Int), DataFrame]
-
   def duplicateSpansMemo(spark: SparkSession, dir: String, k: Int = 8,
       minTokens: Int = 12, dfCap: Int = 20): DataFrame =
-    spansMemo.getOrElseUpdate(spark, (dir, k, minTokens, dfCap)) {
+    Artifacts.duplicateSpans(spark, (dir, k, minTokens, dfCap)) {
       duplicateSpans(spark, dir, k, minTokens, dfCap).cache()
     }
 

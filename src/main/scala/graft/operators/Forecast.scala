@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.time.{DayOfWeek, LocalDate}
+import graft.Artifacts
 
 /** Per-key time-series forecasting — the reference's `predict_arima` stage
   * (`scripts/prediction/arima_forecast.py:32-108`) re-expressed as a typed
@@ -134,19 +135,13 @@ object Forecast {
     Array.tabulate(p)(i => a(i)(p))
   }
 
-  private val forecastMemo = new SessionMemo[String, DataFrame]
-
   /** Build per-supplier daily price series from lineitem (the testdata
     * analogue of per-symbol close prices) and forecast each group.
     * `groupByKey` shuffles once on the series key; group functions run
     * data-parallel across executors.
-    *
-    * Memoized per (session, dir): the OLS kernel's output feeds both
-    * q_forecast and the q_forecast_bounds contract twin — without the memo
-    * the bounds query re-runs the whole grouped fit (same
-    * materialized-artifact policy as `Similarity.ivfTrain`). */
+    * A session artifact: the forecast and its bounds twin share one fit. */
   def forecastQuery(spark: SparkSession, dir: String): DataFrame =
-    forecastMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.forecastTable(spark, dir) {
       forecastQueryImpl(spark, dir).cache()
     }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables
 import graft.functions.TextFunctions
 
@@ -123,9 +124,6 @@ object NgramLm {
     modelFromCounts(u, b, t)
   }
 
-  private val rawCountsMemo =
-    new SessionMemo[String, (DataFrame, DataFrame, DataFrame)]
-
   /** The corpus RAW count tables, once per (session, sf dir) — the ONE
     * sufficient statistic both the in-session model derivation and the
     * stored-model write consume (each used to re-run the token explode +
@@ -133,14 +131,11 @@ object NgramLm {
     * materializes; everything else derives from them. */
   private def corpusRawCounts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    rawCountsMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.lmRawCounts(spark, dir) {
       val (u, b, t) = rawCounts(
         tokenStream(Tables.spread(spark, Tables.documents(spark, dir))))
       (u.cache(), b.cache(), t.cache())
     }
-
-  private val corpusModelMemo =
-    new SessionMemo[String, (DataFrame, DataFrame, DataFrame)]
 
   /** The corpus-trained model tables, once per (session, sf dir) — four
     * registered queries (score/gate/stored/curriculum) consume the same
@@ -149,7 +144,7 @@ object NgramLm {
     * pattern). */
   private def corpusModel(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    corpusModelMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.lmModel(spark, dir) {
       val (u, b, t) = corpusRawCounts(spark, dir)
       modelFromCounts(u, b, t)
     }
@@ -212,17 +207,12 @@ object NgramLm {
       .withColumn("sb_ppl", round(pow(lit(2.0), -col("avg_log2sb")), 4))
   }
 
-  private val scoredMemo = new SessionMemo[String, DataFrame]
-
   // no ORDER BY: the result is corpus-sized (one row per doc) and the
   // driver's compare sorts rows — a global sort here would be pure cost.
-  // MEMOIZED per (session, dir): the per-doc score table is metadata-scale
-  // (one row per doc) and in production it is a MATERIALIZED quality
-  // column written once per ingest — gate, curriculum and the score query
-  // itself all read that artifact, they never re-run the token explode +
-  // three model joins per consumer (the dupClusters memo contract).
+  // A session artifact: in production a MATERIALIZED quality column
+  // written once per ingest.
   def scoreQuery(spark: SparkSession, dir: String): DataFrame =
-    scoredMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.lmScores(spark, dir) {
       val (uniS, bigS, triS) = corpusModel(spark, dir)
       scoreStream(
         tokenStream(Tables.spread(spark, Tables.documents(spark, dir))),
@@ -350,23 +340,22 @@ object NgramLm {
     scoreStream(tokenStream(docs), uniS, bigS, triS)
   }
 
-  private val storedModelMemo = new SessionMemo[String, String]
-
   /** Registered-query form: write the stored model once per (session, sf
     * dir) under the scratch root, then score against it — the in-session
     * stand-in for "the counts were materialized by last night's ingest"
     * ([[Similarity.pqStoredQuery]] pattern). Same oracle as
     * `q_ngram_lm_score`. */
-  def scoreStoredQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.spread(spark, Tables.documents(spark, dir))
-    val path = storedModelMemo.getOrElseUpdate(spark, dir) {
+  def scoreStoredQuery(spark: SparkSession, dir: String): DataFrame =
+    scoreDocsStored(Tables.spread(spark, Tables.documents(spark, dir)), spark,
+      storedModel(spark, dir))
+
+  private[graft] def storedModel(spark: SparkSession, dir: String): String =
+    Artifacts.lmStoredModel(spark, dir) {
       // write the SAME memoized raw counts the in-session model derives
       // from — one count pipeline serves both forms
       Similarity.scratchIndexPath("graft_lm_model", dir)(p =>
         writeLmModelFrom(spark, corpusRawCounts(spark, dir), p))
     }
-    scoreDocsStored(docs, spark, path)
-  }
 
   /** Shared DuckDB token-stream fragment — mirrors [[tokenStream]]:
     * `tk` is the Spark `TextFunctions.tokens` split; DuckDB lists are

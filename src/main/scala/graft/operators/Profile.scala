@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables
 
 /** One-pass table profiler — the `ANALYZE TABLE`-style statistics sweep a
@@ -38,12 +39,9 @@ object Profile {
     * per-ingest ANALYZE artifact, and it now has two registered consumers
     * — q_profile_table reads it verbatim and the verified approx form
     * ([[profileLineitemApproxVerified]]) certifies its sketches against
-    * it — so warm-up policy (a) applies (the cardinality-stats
-    * precedent). */
-  private val exactProfileMemo = new SessionMemo[String, DataFrame]
-
+    * it — so it is warmed (the cardinality-stats precedent). */
   def profileLineitem(spark: SparkSession, dir: String): DataFrame =
-    exactProfileMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.exactProfile(spark, dir) {
       profileLineitemImpl(spark, dir).cache()
     }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables
 import graft.functions.TextFunctions
 import graft.functions.VectorExpressions.cosine_sim
@@ -45,16 +46,13 @@ object Rag {
         md5(concat_ws(" ", col("chunk"))).as("chunk_sig"))
   }
 
-  /** The chunk-embedding index, memoized per (session, dir, window,
-    * stride) — consumed by BOTH the plain retrieval and the MMR re-rank
-    * (and at lake scale a materialized per-ingest table, like the stored
-    * IVF/PQ indexes; the memo is its in-session form — the established
-    * multi-consumer-artifact policy, cf. `Curation.sourceReputation`). */
-  private val vecsMemo = new SessionMemo[(String, Int, Int), DataFrame]
-
-  private def chunkVecs(spark: SparkSession, dir: String, window: Int,
-      stride: Int): DataFrame =
-    vecsMemo.getOrElseUpdate(spark, (dir, window, stride)) {
+  /** The chunk-embedding index, a session artifact read by the plain
+    * retrieval and by the builds of the MMR pool and the stored index (at
+    * lake scale a materialized per-ingest table, like the stored IVF/PQ
+    * indexes). */
+  private[graft] def chunkVecs(spark: SparkSession, dir: String,
+      window: Int = 32, stride: Int = 16): DataFrame =
+    Artifacts.ragChunks(spark, (dir, window, stride)) {
       TextEmbed.embedDocs(
           chunkTable(spark, dir, window, stride)
             .select(col("chunk_id").as("doc_id"), col("text")))
@@ -146,27 +144,28 @@ object Rag {
     }
   }
 
-  private val chunkIndexMemo = new SessionMemo[String, String]
-
   /** Registered-query form: write the chunk index once per (session, sf
     * dir) under the scratch root, then retrieve against the PERSISTED
     * vectors through the SHARED [[retrieveFrom]] body — same result,
     * same DuckDB oracle as `q_rag_retrieve` (the `q_ann_pq_stored` /
     * `q_ngram_lm_stored` proof-by-same-oracle pattern). */
   def ragRetrieveStored(spark: SparkSession, dir: String, nQueries: Int = 5,
-      k: Int = 3, window: Int = 32, stride: Int = 16): DataFrame = {
-    // memo key AND on-disk root both carry (window, stride): a second call
-    // with different chunking params must build its own index, not silently
-    // serve the first call's vectors against a differently-chunked probe
-    // side (r13 ADVICE — the vecsMemo/mmrPoolMemo keying rule)
-    val path = chunkIndexMemo.getOrElseUpdate(spark, s"$dir|w=$window|s=$stride") {
+      k: Int = 3, window: Int = 32, stride: Int = 16): DataFrame =
+    retrieveFrom(chunkTable(spark, dir, window, stride),
+      graft.serve.TxTable.read(spark, chunkIndex(spark, dir, window, stride))
+        .select("vec_id", "emb"),
+      nQueries, k)
+
+  /** The persisted chunk index's path. Artifact key AND on-disk root both
+    * carry (window, stride): a second call with different chunking params
+    * must build its own index, not silently serve the first call's vectors
+    * against a differently-chunked probe side. */
+  private[graft] def chunkIndex(spark: SparkSession, dir: String,
+      window: Int = 32, stride: Int = 16): String =
+    Artifacts.ragStoredIndex(spark, (dir, window, stride)) {
       Similarity.scratchIndexPath(s"graft_chunk_index_w${window}s$stride", dir)(
         p => writeChunkIndex(spark, dir, p, window, stride))
     }
-    retrieveFrom(chunkTable(spark, dir, window, stride),
-      graft.serve.TxTable.read(spark, path).select("vec_id", "emb"),
-      nQueries, k)
-  }
 
   /** DuckDB mirror: the chunk chain (the [[Packing.chunkDocumentsSql]]
     * spelling, kept as text), the embed chain over the chunk relation
@@ -316,12 +315,10 @@ object Rag {
     * bounded-heap pass serves both — `pos` is the 0-based heap rank
     * (rounded cosine DESC, vec_id ASC), already joined to the candidate
     * embeddings the greedy needs. */
-  private val mmrPoolMemo =
-    new SessionMemo[(String, Int, Int, Int, Int), DataFrame]
-
-  private def mmrPool(spark: SparkSession, dir: String, nQueries: Int,
-      pool: Int, window: Int, stride: Int): DataFrame =
-    mmrPoolMemo.getOrElseUpdate(spark, (dir, nQueries, pool, window, stride)) {
+  private[graft] def mmrPool(spark: SparkSession, dir: String,
+      nQueries: Int = 5, pool: Int = 20, window: Int = 32,
+      stride: Int = 16): DataFrame =
+    Artifacts.ragMmrPool(spark, (dir, nQueries, pool, window, stride)) {
       val vecs = chunkVecs(spark, dir, window, stride)
       val q = vecs
         .filter(col("vec_id") % ChunkShift === 0 &&

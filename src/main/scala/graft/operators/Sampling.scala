@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Ascending
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables
 
 /** Stratified sampling with EXACT per-stratum allocation — the curation
@@ -28,16 +29,14 @@ import graft.Tables
   */
 object Sampling {
 
-  private val strataCountsMemo = new SessionMemo[String, DataFrame]
-
   /** Per-stratum document counts (lang, n_docs) — MEMOIZED per (session,
-    * dir) and cached (r19, policy (a)): the per-ingest stratum-stats table
+    * dir) and cached, and warmed: the per-ingest stratum-stats table
     * a pipeline materializes once. Registered consumers: the
     * q_stratified_sample summary and the q_stratified_twophase summary
     * (each previously re-aggregated the corpus per call for the same
     * |langs|-row answer). Metadata-scale: one row per stratum. */
   private[graft] def strataCounts(spark: SparkSession, dir: String): DataFrame =
-    strataCountsMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.strataCounts(spark, dir) {
       Tables.documents(spark, dir).groupBy("lang")
         .agg(count(lit(1)).as("n_docs")).cache()
     }
@@ -98,16 +97,14 @@ object Sampling {
     * (a stratum tinier than the sketch margins can cover) FAILS LOUDLY —
     * a metadata-scale count check per call, never a silently undersized
     * sample. At 100 TB the only per-stratum sort left is the ε-band;
-    * everything else is scans and broadcast-joined scalar brackets. */
-  private val bracketsMemo =
-    new SessionMemo[(String, Double, Int, Int), DataFrame]
-
-  /** The per-stratum bracket table (lang, k, lo, hi) of the two-phase
+    * everything else is scans and broadcast-joined scalar brackets.
+    *
+    * The per-stratum bracket table (lang, k, lo, hi) of the two-phase
     * sampler — MEMOIZED per (session, dir, frac, seed, accuracy) and
-    * cached (r19, policy (a)): the sketch-bracket artifact an ingest
-    * materializes next to its stratum stats. Registered consumers:
-    * q_stratified_twophase and the sampled quality gate's training draw
-    * (`Classifier.qualityTrainSampledFull`). The bracket-breach refusal
+    * cached: the sketch-bracket artifact an ingest materializes next to
+    * its stratum stats. Readers: q_stratified_twophase and the sampled
+    * quality gate's training draw (inside the build of
+    * `Classifier.qualityTrainSampledFull`). The bracket-breach refusal
     * runs HERE, once per (session, key): breach iff some stratum has
     * n_sure > k (lo too high — over-selection) or n_sure + n_band < k
     * (hi too low — the band can't fill the remaining seats); when
@@ -118,7 +115,7 @@ object Sampling {
     * r18 bench line spent more wall in this check than in the query). */
   private[graft] def twoPhaseBrackets(spark: SparkSession, dir: String,
       frac: Double = 0.1, seed: Int = 42, accuracy: Int = 100): DataFrame =
-    bracketsMemo.getOrElseUpdate(spark, (dir, frac, seed, accuracy)) {
+    Artifacts.strataBrackets(spark, (dir, frac, seed, accuracy)) {
       val eps = 1.0 / accuracy
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"),
@@ -192,18 +189,10 @@ object Sampling {
     * lang-seeded centroid over the hashed-text vectors — the SAME
     * deterministic coarse quantizer the IVF text twin uses
     * (`TextEmbed.textIvfTopK`), so the whole assignment is closed-form
-    * and the sampler's allocation oracle re-derives it in SQL. */
-  private val clusterAssignMemo =
-    new SessionMemo[String, DataFrame]
-
-  /** MEMOIZED per (session, dir) since r13: the embed → centroid →
-    * nearest-cell chain is re-consumed by the sampler AND its allocation
-    * summary (and the summary consumes it twice more for the n_docs side)
-    * — at scale the cluster assignment is a materialized table refreshed
-    * per ingest (the dupClusters contract), never recomputed per query.
-    * The cached frame is metadata-scale: (doc_id, cluster). */
-  private def clusterAssign(spark: SparkSession, dir: String): DataFrame =
-    clusterAssignMemo.getOrElseUpdate(spark, dir) {
+    * and the sampler's allocation oracle re-derives it in SQL.
+    * A session artifact, metadata-scale: (doc_id, cluster). */
+  private[graft] def clusterAssign(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.clusterAssign(spark, dir) {
       val vecs = TextEmbed.embeddings(spark, dir)
         .join(Tables.documents(spark, dir)
           .select(col("doc_id"), col("lang").as("label")), "doc_id")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Artifacts
 import graft.Tables
 import graft.functions.VectorExpressions.cosine_sim
 
@@ -63,19 +64,13 @@ object Similarity {
   // ------------------------------------------------------------ brute force
   /** Exact cosine top-k for the first `nQueries` vectors (by vec_id).
     * Queries are broadcast; the corpus is scanned once; per-query top-k via
-    * rank window over the (nQueries × N) scored pairs. */
-  private val bruteMemo = new SessionMemo[(String, Int, Int), DataFrame]
-
-  /** MEMOIZED per (session, dir, nQueries, k) since r13: the exact top-k
-    * is the GROUND-TRUTH table every tier's recall audit joins against —
-    * four registered consumers (the brute query itself plus the
-    * quantized/RP/PQ recalls) each re-ran the full corpus×queries scan for
-    * the same 100-row result. In production the ground truth is
-    * materialized once per eval suite; the cached frame is that artifact's
-    * session form. */
+    * rank window over the (nQueries × N) scored pairs.
+    *
+    * A session artifact: the exact top-k is the GROUND-TRUTH table every
+    * tier's recall audit joins against. */
   def bruteForceTopK(spark: SparkSession, dir: String,
       nQueries: Int = 20, k: Int = 5): DataFrame =
-    bruteMemo.getOrElseUpdate(spark, (dir, nQueries, k)) {
+    Artifacts.bruteSearch(spark, (dir, nQueries, k)) {
       bruteForceTopKOf(corpus(spark, dir), nQueries, k).cache()
     }
 
@@ -471,15 +466,13 @@ object Similarity {
     * scale) and cut to k. Fully deterministic: the quantization grid is
     * per-dimension (min, max) — an exact two-row aggregate — codes round
     * half-up on both engines, and both rank stages tiebreak on vec_id, so
-    * the entire two-stage result is DuckDB-hash-oracled end to end. */
-  private val quantTopKMemo =
-    new SessionMemo[(String, Int, Int, Int), DataFrame]
-
-  /** MEMOIZED per (session, dir, params) — [[bruteForceTopK]]'s rationale
+    * the entire two-stage result is DuckDB-hash-oracled end to end.
+    *
+    * MEMOIZED per (session, dir, params) — [[bruteForceTopK]]'s rationale
     * (search query + recall audit share the 100-row result). */
   def quantizedTopK(spark: SparkSession, dir: String, nQueries: Int = 20,
       k: Int = 5, m: Int = 20): DataFrame =
-    quantTopKMemo.getOrElseUpdate(spark, (dir, nQueries, k, m)) {
+    Artifacts.quantizedSearch(spark, (dir, nQueries, k, m)) {
       quantizedTopKOf(corpus(spark, dir), nQueries, k, m).cache()
     }
 
@@ -753,17 +746,12 @@ object Similarity {
   /** Two-stage RP search: stage 1 ranks the whole corpus by ROUNDED
     * cosine in the projected space (bounded heap, top-m per query, the
     * [[quantizedTopKOf]] shape); stage 2 re-ranks the m survivors by
-    * exact float cosine and cuts to k. */
-  private val rpTopKMemo =
-    new SessionMemo[(String, Int, Int, Int, Int), DataFrame]
-
-  /** MEMOIZED per (session, dir, params) — [[bruteForceTopK]]'s rationale:
-    * the search result (nQueries×k rows) is read by both the registered
-    * search query and the recall audit; the projection + stage-1 scan runs
-    * once per session. */
+    * exact float cosine and cuts to k.
+    *
+    * A session artifact, like [[bruteForceTopK]]. */
   def rpTopK(spark: SparkSession, dir: String, nQueries: Int = 20,
       k: Int = 5, m: Int = RpPool, kOut: Int = RpDim): DataFrame =
-    rpTopKMemo.getOrElseUpdate(spark, (dir, nQueries, k, m, kOut)) {
+    Artifacts.rpSearch(spark, (dir, nQueries, k, m, kOut)) {
       rpTopKOf(corpus(spark, dir), nQueries, k, m, kOut).cache()
     }
 
@@ -922,15 +910,13 @@ object Similarity {
     * and maintain incrementally (the TxTable stored-index pattern the
     * LSH/IVF tiers already ship) — [[writePqIndex]]/[[pqTopKStored]] is
     * that form, verified by the SAME oracle; here it is computed inline —
-    * one expression-only projection over the scan. */
-  private val pqTopKMemo =
-    new SessionMemo[(String, Int, Int, Int, Int), DataFrame]
-
-  /** MEMOIZED per (session, dir, params) — [[bruteForceTopK]]'s rationale
+    * one expression-only projection over the scan.
+    *
+    * MEMOIZED per (session, dir, params) — [[bruteForceTopK]]'s rationale
     * (search query + recall audit share the 100-row result). */
   def pqTopK(spark: SparkSession, dir: String, nQueries: Int = 20,
       k: Int = 5, m: Int = 50, nsub: Int = 16): DataFrame =
-    pqTopKMemo.getOrElseUpdate(spark, (dir, nQueries, k, m, nsub)) {
+    Artifacts.pqSearch(spark, (dir, nQueries, k, m, nsub)) {
       val c = corpus(spark, dir)
       pqSearch(c, seededCodebooksKeyed(spark, s"corpus:$dir", c, nsub),
         nQueries, k, m).cache()
@@ -943,8 +929,6 @@ object Similarity {
       m: Int = 50, nsub: Int = 16): DataFrame =
     pqSearch(vecs, seededCodebooks(vecs, nsub), nQueries, k, m)
 
-  private val cbMemo = new SessionMemo[(String, Int), Seq[Seq[Seq[Double]]]]
-
   /** [[seededCodebooks]] memoized under a caller-supplied corpus key —
     * the centroid collect is a metadata-scale driver action but costs a
     * full posexplode-aggregate JOB per call, and every PQ query in the
@@ -953,7 +937,7 @@ object Similarity {
     * artifact-memo contract as the trained-codebook/encode memos. */
   private[graft] def seededCodebooksKeyed(spark: SparkSession, key: String,
       vecs: DataFrame, nsub: Int): Seq[Seq[Seq[Double]]] =
-    cbMemo.getOrElseUpdate(spark, (key, nsub))(seededCodebooks(vecs, nsub))
+    Artifacts.pqCodebooks(spark, (key, nsub))(seededCodebooks(vecs, nsub))
 
   /** The label-seeded codebooks (the oracled search default): label-ordered
     * centroids collected (labels × dim — tiny) and sliced per subspace —
@@ -1057,9 +1041,6 @@ object Similarity {
       .select(col("q_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
   }
 
-  private val pqTrainMemo =
-    new SessionMemo[(String, Int, Int), (DataFrame, Seq[Seq[Seq[Double]]])]
-
   /** Per-subspace Lloyd refinement of the PQ codebooks — "training" the
     * product quantizer instead of trusting the label-seeded slices, the
     * same upgrade path [[ivfTrain]] gives the coarse quantizer, run in all
@@ -1086,8 +1067,8 @@ object Similarity {
     pqTrainFull(spark, dir, iters, nsub)._1
 
   private[graft] def pqTrainFull(spark: SparkSession, dir: String,
-      iters: Int, nsub: Int): (DataFrame, Seq[Seq[Seq[Double]]]) =
-    pqTrainMemo.getOrElseUpdate(spark, (dir, iters, nsub)) {
+      iters: Int = 3, nsub: Int = 16): (DataFrame, Seq[Seq[Seq[Double]]]) =
+    Artifacts.pqTrainStats(spark, (dir, iters, nsub)) {
       val r = pqTrainImpl(spark, dir, iters, nsub)
       (r._1.cache(), r._2)
     }
@@ -1306,19 +1287,18 @@ object Similarity {
     p
   }
 
-  private val pqStoredIndexMemo = new SessionMemo[String, String]
-
   /** Registered-query form: write the stored PQ index once per (session,
     * sf dir) under the scratch root, then search it — the in-session
     * stand-in for "the codes were materialized by last night's ingest"
     * ([[semanticProbeStoredQuery]] pattern, including the stale-version
     * cleanup). */
-  def pqStoredQuery(spark: SparkSession, dir: String): DataFrame = {
-    val path = pqStoredIndexMemo.getOrElseUpdate(spark, dir) {
+  def pqStoredQuery(spark: SparkSession, dir: String): DataFrame =
+    pqTopKStored(spark, dir, pqStoredIndex(spark, dir))
+
+  private[graft] def pqStoredIndex(spark: SparkSession, dir: String): String =
+    Artifacts.pqStoredIndex(spark, dir) {
       scratchIndexPath("graft_pq_index", dir)(p => writePqIndex(spark, dir, p))
     }
-    pqTopKStored(spark, dir, path)
-  }
 
   /** The labeled default corpus source for the PQ oracle chain. */
   private val PqDefaultSource =
@@ -1533,15 +1513,11 @@ object Similarity {
     * non-increasing — the invariant SimilaritySpec asserts.
     *
     * Output: one row per iteration (0 = seed assignment) with the SSE and
-    * the number of vectors that changed cell. */
-  private val trainMemo = new SessionMemo[(String, Int), DataFrame]
-
-  /** Memoized per (session, dir, iters): training runs once per session and
-    * its 4-row stats table is shared by q_ivf_train and the monotonicity
-    * invariant (same materialized-artifact contract as
-    * `Curation.dupClusters`). */
+    * the number of vectors that changed cell.
+    *
+    * A session artifact: training runs once per session. */
   def ivfTrain(spark: SparkSession, dir: String, iters: Int = 3): DataFrame =
-    trainMemo.getOrElseUpdate(spark, (dir, iters)) {
+    Artifacts.ivfTrainStats(spark, (dir, iters)) {
       ivfTrainImpl(spark, dir, iters).cache()
     }
 
@@ -1587,20 +1563,12 @@ object Similarity {
       .select(col("iter"), round(col("sse"), 4).as("sse"), col("n_moved"))
   }
 
-  /** MEMOIZED per (session, dir): the IVF index over the embeddings corpus
-    * — the per-label mean centroids plus the nearest-centroid cell
-    * assignment, i.e. the "index build" half of the tier. Two registered
-    * consumers share it (q_ivf_assign reads the assignment verbatim,
-    * q_ann_ivf routes its search through the same cells), which is warm-up
-    * policy (a): in production this is the coarse quantizer an ingest
-    * materializes ONCE and every search probes — the registered queries
-    * time the steady-state probe, not the build (the r15 verdict's
-    * first-touch billing artifact: 9.8 s of index build landed on
-    * whichever consumer ran first). */
-  private val ivfIndexMemo = new SessionMemo[String, (DataFrame, DataFrame)]
-
+  /** The IVF index over the embeddings corpus — the per-label mean
+    * centroids plus the nearest-centroid cell assignment, i.e. the "index
+    * build" half of the tier: in production the coarse quantizer an ingest
+    * materializes ONCE and every search probes. A session artifact. */
   private[graft] def ivfIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    ivfIndexMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.ivfIndex(spark, dir) {
       val cents = centroids(spark, dir).cache()
       val assigned = nearestCells(corpus(spark, dir), cents, 1)
         .select(col("vec_id"), col("label"), col("emb"), col("cell"), col("cos_c"))
@@ -1831,16 +1799,13 @@ object Similarity {
     * prefilters on raw cosine with a 1e-6 guard band and the PLAN applies
     * the exact `round(_, 6) >= threshold` cut, so the emitted set is
     * grid-stable and engine-portable. Output is sparse (near-dup pairs),
-    * so the quadratic sweep's result shuffles cheaply. */
-  private val exactPairsMemo = new SessionMemo[(String, Double, Int), DataFrame]
-
-  /** Memoized per (session, dir, threshold, nBlocks): the N² sweep runs
-    * once per session and its SMALL pair list is shared by every consumer
-    * (exact dedup twin, the recall invariant, modality agreement) — the
-    * same materialized-artifact contract as the span anchor index. */
+    * so the quadratic sweep's result shuffles cheaply.
+    *
+    * A session artifact: the N² sweep runs once per session and its SMALL
+    * pair list is shared by every consumer. */
   def embeddingPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.4, nBlocks: Int = 8): DataFrame =
-    exactPairsMemo.getOrElseUpdate(spark, (dir, threshold, nBlocks)) {
+    Artifacts.exactEmbeddingPairs(spark, (dir, threshold, nBlocks)) {
       embeddingPairsImpl(spark, dir, threshold, nBlocks).cache()
     }
 
@@ -1887,13 +1852,12 @@ object Similarity {
     * universe: pairs are only ever formed between vectors sharing a probed
     * cell, so the pair sweep is Σ_cells |cell|² instead of N². Centroids are
     * k×dim (tiny at any scale) → broadcast; the replication factor is the
-    * fixed `nprobe`. */
-  private val probedCellsMemo = new SessionMemo[(String, Int), DataFrame]
-
-  /** Memoized: the corpus × centroids ranking is shared by the cell-pair
+    * fixed `nprobe`.
+    *
+    * Memoized: the corpus × centroids ranking is shared by the cell-pair
     * build and the recall invariant's share-cell join. */
   private def probedCells(spark: SparkSession, dir: String, nprobe: Int): DataFrame =
-    probedCellsMemo.getOrElseUpdate(spark, (dir, nprobe)) {
+    Artifacts.semanticProbedCells(spark, (dir, nprobe)) {
       probedCellsImpl(spark, dir, nprobe).cache()
     }
 
@@ -1915,14 +1879,13 @@ object Similarity {
     * Σ_cells |cell|²·dim. At 100 TB you size k (the centroid count) so a
     * cell fits a task — the standard SemDeDup deployment — and train
     * centroids with [[ivfTrain]]; here they are the label-seeded means so
-    * the DuckDB oracle can recompute the assignment exactly. */
-  private val cellPairsMemo = new SessionMemo[(String, Double, Int), DataFrame]
-
-  /** Memoized like [[embeddingPairs]]: the within-cell sweep is shared by
+    * the DuckDB oracle can recompute the assignment exactly.
+    *
+    * Memoized like [[embeddingPairs]]: the within-cell sweep is shared by
     * the primary dedup and the recall invariant. */
   def cellPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.4, nprobe: Int = 2): DataFrame =
-    cellPairsMemo.getOrElseUpdate(spark, (dir, threshold, nprobe)) {
+    Artifacts.semanticCellPairs(spark, (dir, threshold, nprobe)) {
       cellPairsImpl(spark, dir, threshold, nprobe).cache()
     }
 
@@ -2021,8 +1984,6 @@ object Similarity {
   private[graft] def adaptiveK(n: Long): Int =
     math.max(2, math.ceil(math.sqrt(n.toDouble)).toInt)
 
-  private val adaptivePairsMemo = new SessionMemo[(String, Double, Int), DataFrame]
-
   /** Cell-scoped pairs with CORPUS-SIZE-DERIVED k: seeds are the vectors
     * with vec_id ≡ 0 (mod stride), stride = ⌈N/k⌉ — a map-side pick, no
     * global sort — and every vector joins its `nprobe` nearest seeds by
@@ -2036,7 +1997,7 @@ object Similarity {
     * Broadcast stays tiny: √N seeds × dim doubles ≈ 8 MB at N = 10⁹. */
   def adaptiveCellPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.4, nprobe: Int = 2): DataFrame =
-    adaptivePairsMemo.getOrElseUpdate(spark, (dir, threshold, nprobe)) {
+    Artifacts.semanticCellPairsAdaptive(spark, (dir, threshold, nprobe)) {
       adaptiveCellPairsImpl(spark, dir, threshold, nprobe).cache()
     }
 
@@ -2280,19 +2241,17 @@ object Similarity {
     * index vectors. batch×cell work — never index×index, never batch×batch
     * — which is what makes daily ingest O(batch · cell) at any corpus
     * size. Deterministic end-to-end ⇒ full hash oracle (unlike the LSH
-    * incremental path, whose signatures are hash-dependent). */
-  private val probeQuantMemo = new SessionMemo[String, (DataFrame, CellSet)]
-
-  /** The even-half (index-side) coarse quantizer — centroid frame + its
+    * incremental path, whose signatures are hash-dependent).
+    *
+    * The even-half (index-side) coarse quantizer — centroid frame + its
     * collected [[CellSet]] — MEMOIZED per (session, dir): this is the
-    * quantizer a pipeline trains once per index rebuild, and it has two
-    * registered consumers — the in-memory probe (q_semantic_probe) and the
-    * stored-index write feeding q_semantic_probe_stored — each of which
-    * re-ran the label-mean aggregation + driver collect per call (policy
-    * (a); the existing `semantic_probed_cells` warm touch covers it). */
-  private def probeQuantizer(spark: SparkSession,
+    * quantizer a pipeline trains once per index rebuild, read by the
+    * in-memory probe (q_semantic_probe) and by the stored-index write
+    * feeding q_semantic_probe_stored, each of which re-ran the label-mean
+    * aggregation + driver collect per call. */
+  private[graft] def probeQuantizer(spark: SparkSession,
       dir: String): (DataFrame, CellSet) =
-    probeQuantMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.semanticProbeQuantizer(spark, dir) {
       val cents = meanVectors(
           corpus(spark, dir).filter(col("vec_id") % 2 === 0)
             .select(col("label"), col("emb")), "label", "emb")
@@ -2364,18 +2323,17 @@ object Similarity {
       .select("index_id", "new_id", "cosine").distinct()
   }
 
-  private val storedIndexMemo = new SessionMemo[String, String]
-
   /** Registered-query form: write the stored index once per (session, sf
     * dir) under the scratch root, then probe it. The memo is the
     * in-session stand-in for "the index was materialized by last night's
     * ingest" — the probe itself reads only the TxTable. */
-  def semanticProbeStoredQuery(spark: SparkSession, dir: String): DataFrame = {
-    val path = storedIndexMemo.getOrElseUpdate(spark, dir) {
+  def semanticProbeStoredQuery(spark: SparkSession, dir: String): DataFrame =
+    semanticProbeStored(spark, dir, ivfStoredIndex(spark, dir))
+
+  private[graft] def ivfStoredIndex(spark: SparkSession, dir: String): String =
+    Artifacts.ivfStoredIndex(spark, dir) {
       scratchIndexPath("graft_ivf_index", dir)(p => writeIvfIndex(spark, dir, p))
     }
-    semanticProbeStored(spark, dir, path)
-  }
 
   /** DuckDB oracle for [[semanticProbe]]: index-half centroids, both
     * assignments under the same (rounded cosine, label) ranking, exact

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables
 import graft.functions.TextFunctions
 
@@ -497,12 +498,9 @@ object Sketches {
     * exact-count pipeline; now the estimate and its guarantee are two
     * projections of ONE cached 3-row frame — which also guarantees they
     * judge the SAME sketch instance. */
-  private val joinStatsMemo =
-    new SessionMemo[(String, Int, Int), DataFrame]
-
-  private def joinSketchStats(spark: SparkSession, dir: String,
-      depth: Int, width: Int): DataFrame =
-    joinStatsMemo.getOrElseUpdate(spark, (dir, depth, width)) {
+  private[graft] def joinSketchStats(spark: SparkSession, dir: String,
+      depth: Int = AmsDepth, width: Int = CmsWidth): DataFrame =
+    Artifacts.joinSketchStats(spark, (dir, depth, width)) {
       val ams = udaf(new AmsAgg(depth, width), Encoders.STRING)
       val cms = udaf(new CountMinAgg(CmsDepth, width), Encoders.STRING)
       joinScenarios(spark, dir).map { case (name, a, b) =>

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Artifacts
 import graft.Tables
 import graft.functions.TextFunctions.tokens
 import graft.functions.VectorExpressions.cosine_sim
@@ -31,14 +32,13 @@ object TextEmbed {
   /** Dense (doc_id, emb[dim], nrm) feature-hash embeddings; docs with no
     * tokens drop out (nothing to embed), zero vectors pass through
     * unnormalized (the cosine kernel's zero-denominator guard covers
-    * them). */
-  private val embMemo = new SessionMemo[(String, Int), DataFrame]
-
-  /** Memoized per (session, dir, dim): the token explode + hash runs once
+    * them).
+    *
+    * Memoized per (session, dir, dim): the token explode + hash runs once
     * and its (docs × dim) dense result is shared by the projection query
     * and the composed near-dup search. */
   def embeddings(spark: SparkSession, dir: String, dim: Int = Dim): DataFrame =
-    embMemo.getOrElseUpdate(spark, (dir, dim)) {
+    Artifacts.textEmbeddings(spark, (dir, dim)) {
       embeddingsImpl(spark, dir, dim).cache()
     }
 
@@ -142,25 +142,21 @@ object TextEmbed {
   def textLshTopKSql(nQueries: Int = 20, k: Int = 5): String =
     Similarity.lshTopKSqlOver(embedVecsCtes, nQueries, k)
 
-  private val labeledMemo = new SessionMemo[String, DataFrame]
-
   /** The lang-LABELED embedding frame (vec_id, label, emb) — MEMOIZED per
     * (session, dir) and cached: the `documents` label join otherwise
     * re-ran on every use of the labeled corpus (three scans inside one PQ
     * search alone). Two registered consumers share it (q_embed_text_ivf
     * seeds its coarse quantizer on `lang`, q_embed_text_pq seeds its
-    * codebooks the same way) — warm-up policy (a): in production this is
+    * codebooks the same way), so it is warmed: in production this is
     * the labeled embedding table an ingest materializes once. */
   private[graft] def labeledVecs(spark: SparkSession, dir: String): DataFrame =
-    labeledMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.textLabeledVecs(spark, dir) {
       embeddings(spark, dir)
         .join(Tables.documents(spark, dir)
           .select(col("doc_id"), col("lang").as("label")), "doc_id")
         .select(col("doc_id").as("vec_id"), col("label"), col("emb"))
         .cache()
     }
-
-  private val cellsMemo = new SessionMemo[String, Similarity.CellSet]
 
   /** The text tier's coarse quantizer — per-lang mean vectors of the
     * hashed-text embeddings, collected once (langs × dim — metadata
@@ -171,8 +167,8 @@ object TextEmbed {
     * `orderBy("label")`'s order, so the slices are identical to the
     * independent collect they replace). One aggregate + collect job per
     * session instead of one per query call. */
-  private def textCells(spark: SparkSession, dir: String): Similarity.CellSet =
-    cellsMemo.getOrElseUpdate(spark, dir) {
+  private[graft] def textCells(spark: SparkSession, dir: String): Similarity.CellSet =
+    Artifacts.textCells(spark, dir) {
       Similarity.collectCells(
         Similarity.meanVectors(
             labeledVecs(spark, dir).select(col("label"), col("emb")),

@@ -1,10 +1,9 @@
 package graft.serve
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables
-import graft.operators.SessionMemo
 
 /** Registered-query surface for the TxTable change feed
   * ([[TxTable.changes]]): a deterministic two-commit table built from the
@@ -24,17 +23,14 @@ import graft.operators.SessionMemo
   * a merge rewrites into new files unchanged. */
 object ChangeFeed {
 
-  private val cdcMemo = new SessionMemo[String, String]
-
-  /** The two-commit fixture table, built once per (session, sf dir) —
-    * rebuilt from scratch each session so the version numbers the feed
-    * addresses are deterministic. */
-  private def fixturePath(spark: SparkSession, dir: String): String =
-    cdcMemo.getOrElseUpdate(spark, dir) {
-      val p = s"/tmp/graft_cdc/${new java.io.File(dir).getName}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(p), spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(p), true)
+  /** The two-commit fixture table, built once per (session, sf dir) in a
+    * directory of its own under this process's scratch root — fresh each
+    * session, so the version numbers the feed addresses are deterministic
+    * and no other session's rebuild deletes files this one still reads. */
+  private[graft] def fixturePath(spark: SparkSession, dir: String): String =
+    Artifacts.cdcTable(spark, dir) {
+      val p = s"${graft.TmpRoots.root("graft_cdc")}/" +
+        s"${new java.io.File(dir).getName}_${java.util.UUID.randomUUID()}"
       val orders = Tables.orders(spark, dir)
       val base = orders.filter(col("o_orderkey") % 3 =!= 0)
         .select(col("o_orderkey"), col("o_totalprice").as("price"))

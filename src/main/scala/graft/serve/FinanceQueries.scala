@@ -3,6 +3,7 @@ package graft.serve
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.Tables
 
 /** Market-analytics battery over the event stream — the indicator set the
@@ -37,23 +38,16 @@ import graft.Tables
   */
 object FinanceQueries {
 
-  private val dailyMemo = new graft.operators.SessionMemo[String, DataFrame]
-
   /** Daily close per instrument: the one corpus-scale aggregate every
     * indicator shares (avg value per (event_type, day) — the same daily
     * series the Lens dashboard chain and the forecaster consume).
     *
-    * MEMOIZED per (session, dir) since r13: ~20 battery queries hang off
-    * this frame, and re-running the tick-scale aggregate per dashboard
-    * panel is exactly the reference's double-computation bug (SURVEY §4)
-    * reborn at 100 TB. In production the day-grain frame is a
-    * MATERIALIZED VIEW refreshed per ingest — [[FinanceMv]] is that form
-    * (TxTable-persisted, incrementally maintained from the change feed,
-    * spec-pinned incremental ≡ full); the session cache is its in-memory
-    * stand-in, so every indicator reads |types|×|days| rows instead of
-    * raw ticks. */
+    * A session artifact: ~20 battery queries hang off this frame, and
+    * re-running the tick-scale aggregate per panel is the reference's
+    * double-computation bug (SURVEY §4). In production the day-grain frame
+    * is a MATERIALIZED VIEW refreshed per ingest — [[FinanceMv]]. */
   private[graft] def dailyClose(spark: SparkSession, dir: String): DataFrame =
-    dailyMemo.getOrElseUpdate(spark, dir) {
+    Artifacts.financeDaily(spark, dir) {
       Tables.events(spark, dir)
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
         .agg(avg("value").as("close"))

@@ -3,6 +3,7 @@ package graft.serve
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Artifacts
 import graft.Tables
 
 /** The reference's interactive query surface — the Kibana Lens aggregation
@@ -127,23 +128,18 @@ object LensQueries {
       |FROM events GROUP BY event_type""".stripMargin
 
   // ---------------------------------------------------------------- A8
-  /** MEMOIZED per-ingest distinct-count stats over events (r16, closing
-    * the r15 verdict's q_cardinality_bounds first-touch spike): the
-    * 5-row-per-frame aggregates that FOUR registered consumers join
-    * (q_cardinality, q_cardinality_approx, q_cardinality_hll,
-    * q_cardinality_bounds) — warm-up policy (a): in production this is
-    * ONE stats table materialized per ingest, not a fresh full scan per
-    * dashboard panel. Two passes, not one or three: the exact side's
+  /** Per-ingest distinct-count stats over events, two session artifacts:
+    * in production ONE stats table materialized per ingest, not a fresh
+    * full scan per dashboard panel. Two passes, not one or three: the exact side's
     * countDistinct plans through an Expand, and dragging an imperative
     * sketch through that path demotes the whole aggregate to
     * SortAggregate over the expanded stream (the r13 measurement in
     * `Invariants.cardinalityBounds` — 7 s vs 2 s at sf0.1); the two
-    * sketches share ONE ObjectHashAggregate pass (no Expand there). */
-  private val cardStatsMemo = new graft.operators.SessionMemo[(String, String), DataFrame]
-
-  /** (event_type, unique_users) — the exact side, HashAggregate+Expand. */
+    * sketches share ONE ObjectHashAggregate pass (no Expand there).
+    *
+    * (event_type, unique_users) — the exact side, HashAggregate+Expand. */
   private[graft] def exactDistinctStats(spark: SparkSession, dir: String): DataFrame =
-    cardStatsMemo.getOrElseUpdate(spark, (dir, "exact")) {
+    Artifacts.cardinalityExact(spark, dir) {
       Tables.events(spark, dir)
         .groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("unique_users"))
@@ -154,7 +150,7 @@ object LensQueries {
     * in one ObjectHashAggregate pass (Spark's HLL++ and graft's own
     * TypedImperativeAggregate HLL). */
   private[graft] def sketchDistinctStats(spark: SparkSession, dir: String): DataFrame =
-    cardStatsMemo.getOrElseUpdate(spark, (dir, "sketch")) {
+    Artifacts.cardinalitySketch(spark, dir) {
       Tables.events(spark, dir)
         .groupBy("event_type")
         .agg(

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupState
 
 /** Streaming twin of [[graft.operators.Sessionize.trainingPairs]]: emit the
   * autoregressive (input → target) next-event pairs of each session when
@@ -86,18 +84,5 @@ object StreamPairs {
         math.max(s.evs.map(_._1).max + GapMinutes * 60000L, wm + 1))
     }
     out.reverse.flatten.iterator
-  }
-
-  /** writeStream-ready pair stream over (user_id, event_id, ts, event_type)
-    * columns. */
-  def pairsStream(spark: SparkSession, events: DataFrame) = {
-    import spark.implicits._
-    events.select(col("user_id").cast("long"), col("event_id").cast("long"),
-        col("ts").cast("timestamp"), col("event_type").cast("string"))
-      .as[PEv]
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(pairsFn)
   }
 }

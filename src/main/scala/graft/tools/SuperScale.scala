@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * same 1.5 gate over both the 50× (sf0.01 → sf0.5) and the 5×
   * (sf0.1 → sf0.5) spans. A hidden superlinear constant — e.g. banded-join
   * bucket-collision growth that one decade's fixed overhead can mask —
-  * shows up as the 5× leg drifting above the 0.3-0.5 exponents PROBE_r13
-  * measured, long before it breaches the gate.
+  * shows up as the 5× leg drifting above the 0.3-0.5 exponents the r13
+  * probe measured, long before it breaches the gate.
   *
   * The corpus is DERIVED, deterministically, from the driver's sf0.1
   * tables (never regenerated driver data, never /root/testdata writes):

@@ -53,13 +53,16 @@ class DedupSpec extends AnyFunSuite {
   test("simhash signatures: two constructions share one cache entry") {
     // the r18 regression this pins: udaf encoders resolved per query broke
     // canonicalized sameResult, so every call registered a fresh
-    // unpopulated cache entry and the warm touch never helped
-    val a = Dedup.simhashSignatures(spark, sf).queryExecution.analyzed
-    val b = Dedup.simhashSignatures(spark, sf).queryExecution.analyzed
+    // unpopulated cache entry and the warm touch never helped. The shared
+    // artifacts hand out one instance; the builds behind them must still
+    // be canonically equal for the per-query caches built on top of them
+    val a = Dedup.simhashSignaturesOf(spark, sf).queryExecution.analyzed
+    val b = Dedup.simhashSignaturesOf(spark, sf).queryExecution.analyzed
     assert(a.sameResult(b),
       "simhash signature plans must be canonically equal for cache sharing")
-    val p = Dedup.simhashNearDups(spark, sf).queryExecution.analyzed
-    val q = Dedup.simhashNearDups(spark, sf).queryExecution.analyzed
+    def pairs = Dedup.simhashNearDupsFromSigs(Dedup.simhashSignaturesOf(spark, sf))
+    val p = pairs.queryExecution.analyzed
+    val q = pairs.queryExecution.analyzed
     assert(p.sameResult(q),
       "simhash pair-set plans must be canonically equal for cache sharing")
   }

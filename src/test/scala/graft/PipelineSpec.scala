@@ -391,6 +391,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(render(m2).find(_._1 == 3L).map(_._2).contains(1L))
   }
 
+  test("change feed fixture: another session's build leaves this session's frame readable") {
+    import graft.serve.ChangeFeed
+    val mine = ChangeFeed.tableChangesQuery(spark, sf)
+    val expected = mine.collect().map(_.toString).sorted.toSeq
+    // a second session builds its own fixture; rebuilding in place would
+    // delete the data files `mine` resolved
+    val other = spark.newSession()
+    assert(ChangeFeed.tableChangesQuery(other, sf).count() == expected.size)
+    assert(mine.collect().map(_.toString).sorted.toSeq == expected)
+  }
+
   test("TxTable merge leaves a foreign part file untouched and unread") {
     import graft.serve.TxTable
     val path = s"$root/serving/foreign_part"

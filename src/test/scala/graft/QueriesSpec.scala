@@ -42,11 +42,53 @@ class QueriesSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracleSql keys without a query: $missing")
   }
 
+  /** The registry run's own session, so the artifact-policy test reads
+    * exactly what the warm-up walk and the registry did in it — not what
+    * other suites built in the shared session. */
+  private lazy val registrySession = spark.newSession()
+  @volatile private var registryRan = false
+
   test("every registered query runs and returns rows on sf0.001") {
+    val s = registrySession
+    // the bench's order: the warm-up walk, then the queries. Every
+    // artifact read is attributed to whoever made it, so the policy test
+    // below measures consumers instead of trusting comments
+    Artifacts.warmedAll.foreach(a => Artifacts.materialize(Artifacts.warmBuild(s, sf, a)))
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
+      val n = Artifacts.consumedBy(name)(fn(s, sf).count())
       assert(n > 0, s"$name returned 0 rows")
     }
+    registryRan = true
+  }
+
+  test("artifact policy holds over the registry run: warmed iff shared, built once") {
+    assume(registryRan, "reads the records of the registry run above")
+    val queries = SparkEntry.queries.keySet
+    val uses = Artifacts.usage(registrySession)
+    val stored = Artifacts.warmedAll.map(a => a.name -> a.warm.get.stored).toMap
+    // warm: built or read by the walk, the reads inside its builds included
+    val warm = uses.collect {
+      case u if (u.direct ++ u.within).exists(_.startsWith(Artifacts.warmer("")))
+        => (u.name, u.key)
+    }.toSet
+    // a consumer reads the artifact itself, not inside another one's build
+    val consumers = uses.map(u => (u.name, u.key) -> (u.direct & queries)).toMap
+    def show(ks: Iterable[((String, Any), Set[String])]) =
+      ks.map { case ((n, k), qs) => s"$n $k <- ${qs.toSeq.sorted.mkString(",")}" }
+        .toSeq.sorted.mkString("\n  ", "\n  ", "")
+    val thin = uses.collect {
+      case u if u.direct(Artifacts.warmer(u.name)) && !stored(u.name) &&
+          consumers((u.name, u.key)).size < 2 =>
+        (u.name, u.key) -> consumers((u.name, u.key))
+    }
+    val cold = consumers.filter { case (k, qs) => qs.size >= 2 && !warm(k) }
+    val twice = uses.collect {
+      case u if u.builds > 1 => (u.name, u.key) -> (u.direct ++ u.within)
+    }
+    assert(warm.nonEmpty && thin.isEmpty && cold.isEmpty && twice.isEmpty,
+      s"\nwarmed with fewer than 2 consumers and not stored:${show(thin)}" +
+        s"\nshared by 2+ queries but not warmed:${show(cold)}" +
+        s"\nbuilt more than once in the session:${show(twice)}")
   }
 
   test("business days: exactly 30, none on weekends") {

@@ -12,14 +12,15 @@ class RepoHygieneSpec extends AnyFunSuite {
   private lazy val mainSources: Seq[(java.io.File, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
-    def files(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) files(f) else Seq(f)
-      }
     files(root).filter(_.getName.endsWith(".scala")).sortBy(_.getPath).map { f =>
       f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     }
   }
+
+  private def files(d: java.io.File): Seq[java.io.File] =
+    Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) files(f) else Seq(f)
+    }
 
   private val TxTableSource = "src/main/scala/graft/serve/TxTable.scala"
 
@@ -92,5 +93,23 @@ class RepoHygieneSpec extends AnyFunSuite {
     // one definition, two dialects: the Spark pattern constant must be the
     // exact text the oracle SQL inlines
     assert(graft.functions.TextFunctions.Ws == "[ \\t\\n\\x0B\\f\\r]")
+  }
+
+  test("session-shared artifacts live in one registry: Artifacts") {
+    // every session-shared artifact is declared once in Artifacts, the only
+    // place a value may be keyed by session; a private memo elsewhere would
+    // be invisible to the warm-up walk and to the build/hit accounting
+    val retired = "Session" + "Memo"
+    val memo = Seq("src", "tools").flatMap(d => files(new java.io.File(d))).filter { f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(retired)
+    }
+    assert(memo.isEmpty, s"$retired in ${memo.mkString(", ")}")
+    val keyed = sites("""Map\[\s*\(?\s*SparkSession\b""".r)
+      .filterNot(_ == "src/main/scala/graft/Artifacts.scala")
+    assert(keyed.isEmpty, s"maps keyed by SparkSession: ${keyed.mkString(", ")}")
+    // the warm-up builds artifacts through their declarations, never by
+    // caching a frame and hoping a consumer's plan matches it
+    val bench = sites("""\.cache\(\)""".r).filter(_ == "src/main/scala/graft/Bench.scala")
+    assert(bench.isEmpty, "Bench.scala calls .cache()")
   }
 }
