@@ -126,7 +126,7 @@ object Artifacts {
     warmed[(String, Int, Int, Int, Int), DataFrame]("pq_search")(Similarity.pqTopK(_, _))
   val pqTrainStats =
     warmed[(String, Int, Int), (DataFrame, Seq[Seq[Seq[Double]]])]("pq_train_stats")(
-      Similarity.pqTrainFull(_, _))
+      Similarity.pqTrain(_, _))
   val bruteSearch =
     warmed[(String, Int, Int), DataFrame]("brute_search")(Similarity.bruteForceTopK(_, _))
   val quantizedSearch = warmed[(String, Int, Int, Int), DataFrame]("quantized_search")(
@@ -227,8 +227,7 @@ object Artifacts {
     * counts, the consumers that read it themselves (`direct`), and those
     * that reached it only inside the build of another artifact
     * (`within` — once that artifact exists they never reach it again).
-    * Counts survive [[Caches.clear]], so a rebuild after a drop shows as
-    * a second build. */
+    * [[Caches.clear]] drops it with the session's values. */
   final case class Usage(name: String, key: Any, builds: Long, hits: Long,
       direct: Set[String], within: Set[String])
 
@@ -256,12 +255,15 @@ object Artifacts {
       spark.sparkContext.addSparkListener(new SparkListener {
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
           drop(spark)
-          uses.keySet.removeIf(_._1 eq spark)
           watched.remove(spark)
           ()
         }
       })
 
-  /** Drop one session's values from every artifact. */
-  private[graft] def drop(spark: SparkSession): Unit = declared.foreach(_.drop(spark))
+  /** Drop one session's values from every artifact, and their accounting. */
+  private[graft] def drop(spark: SparkSession): Unit = {
+    declared.foreach(_.drop(spark))
+    uses.keySet.removeIf(_._1 eq spark)
+    ()
+  }
 }

@@ -12,11 +12,10 @@ import org.apache.spark.sql.SparkSession
   * schema) are shared by object identity for the life of a session —
   * correct for Verify/Bench runs, but a LONG-LIVED server session cycling
   * many corpora would accumulate them. This is the explicit release hook:
-  * evict cached plans and drop the session's artifact values (their
-  * checkpoint and cache blocks become unreferenced and the ContextCleaner
-  * reclaims them). The next query simply rebuilds what it needs; the
-  * artifacts' build and hit counts stay, so the rebuild shows as a second
-  * build.
+  * evict cached plans and drop the session's artifact values and their
+  * build and hit counts (the values' checkpoint and cache blocks become
+  * unreferenced and the ContextCleaner reclaims them). The next query
+  * simply rebuilds what it needs.
   *
   * SCOPE CAVEAT: `catalog.clearCache()` clears the CacheManager, which
   * Spark shares across ALL sessions of the SparkContext — sibling

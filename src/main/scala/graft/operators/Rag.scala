@@ -35,6 +35,13 @@ object Rag {
 
   val ChunkShift = 4096L
 
+  /** The retrieval defaults: query docs, MMR candidate pool, and the chunk
+    * window and stride in tokens. */
+  val DefaultQueries = 5
+  val DefaultPool = 20
+  val DefaultWindow = 32
+  val DefaultStride = 16
+
   private def chunkTable(spark: SparkSession, dir: String,
       window: Int, stride: Int): DataFrame = {
     val toked = Tables.spread(spark, Tables.documents(spark, dir))
@@ -51,7 +58,7 @@ object Rag {
     * lake scale a materialized per-ingest table, like the stored IVF/PQ
     * indexes). */
   private[graft] def chunkVecs(spark: SparkSession, dir: String,
-      window: Int = 32, stride: Int = 16): DataFrame =
+      window: Int, stride: Int): DataFrame =
     Artifacts.ragChunks(spark, (dir, window, stride)) {
       TextEmbed.embedDocs(
           chunkTable(spark, dir, window, stride)
@@ -63,8 +70,9 @@ object Rag {
   /** (q_doc, rank, src_doc, chunk_pos, cosine, chunk_sig): the k best
     * passages outside each query doc, ranked by rounded cosine with the
     * chunk-id tiebreak. Fully hash-oracled end to end. */
-  def ragRetrieve(spark: SparkSession, dir: String, nQueries: Int = 5,
-      k: Int = 3, window: Int = 32, stride: Int = 16): DataFrame =
+  def ragRetrieve(spark: SparkSession, dir: String,
+      nQueries: Int = DefaultQueries, k: Int = 3, window: Int = DefaultWindow,
+      stride: Int = DefaultStride): DataFrame =
     retrieveFrom(chunkTable(spark, dir, window, stride),
       chunkVecs(spark, dir, window, stride), nQueries, k)
 
@@ -100,7 +108,7 @@ object Rag {
     * Doubles round-trip parquet bit-exactly, so stored ≡ inline is
     * hash-provable. Returns the committed version. */
   def writeChunkIndex(spark: SparkSession, dir: String, path: String,
-      window: Int = 32, stride: Int = 16): Long =
+      window: Int = DefaultWindow, stride: Int = DefaultStride): Long =
     graft.serve.TxTable.write(spark,
       chunkVecs(spark, dir, window, stride), path)
 
@@ -113,7 +121,7 @@ object Rag {
     * doc_id·4096 + pos, so a batch of new docs lands in fresh, contiguous
     * key ranges and never rewrites old files). */
   def appendChunkIndex(spark: SparkSession, batch: DataFrame, path: String,
-      window: Int = 32, stride: Int = 16): Unit = {
+      window: Int = DefaultWindow, stride: Int = DefaultStride): Unit = {
     val toked = batch.select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
     val vecs = TextEmbed.embedDocs(
         Packing.chunkRows(toked, window, stride)
@@ -149,8 +157,9 @@ object Rag {
     * vectors through the SHARED [[retrieveFrom]] body — same result,
     * same DuckDB oracle as `q_rag_retrieve` (the `q_ann_pq_stored` /
     * `q_ngram_lm_stored` proof-by-same-oracle pattern). */
-  def ragRetrieveStored(spark: SparkSession, dir: String, nQueries: Int = 5,
-      k: Int = 3, window: Int = 32, stride: Int = 16): DataFrame =
+  def ragRetrieveStored(spark: SparkSession, dir: String,
+      nQueries: Int = DefaultQueries, k: Int = 3, window: Int = DefaultWindow,
+      stride: Int = DefaultStride): DataFrame =
     retrieveFrom(chunkTable(spark, dir, window, stride),
       graft.serve.TxTable.read(spark, chunkIndex(spark, dir, window, stride))
         .select("vec_id", "emb"),
@@ -161,7 +170,7 @@ object Rag {
     * must build its own index, not silently serve the first call's vectors
     * against a differently-chunked probe side. */
   private[graft] def chunkIndex(spark: SparkSession, dir: String,
-      window: Int = 32, stride: Int = 16): String =
+      window: Int = DefaultWindow, stride: Int = DefaultStride): String =
     Artifacts.ragStoredIndex(spark, (dir, window, stride)) {
       Similarity.scratchIndexPath(s"graft_chunk_index_w${window}s$stride", dir)(
         p => writeChunkIndex(spark, dir, p, window, stride))
@@ -171,8 +180,8 @@ object Rag {
     * spelling, kept as text), the embed chain over the chunk relation
     * ([[TextEmbed.embedSqlCtesOver]]), the brute-force window ranking,
     * and the provenance join. */
-  def ragRetrieveSql(nQueries: Int = 5, k: Int = 3, window: Int = 32,
-      stride: Int = 16): String =
+  def ragRetrieveSql(nQueries: Int = DefaultQueries, k: Int = 3,
+      window: Int = DefaultWindow, stride: Int = DefaultStride): String =
     s"""WITH ${retrievalCtes(nQueries, window, stride)}
       |SELECT w.q_doc, w.rank, ch.src_doc, ch.chunk_pos, w.cosine, ch.chunk_sig
       |FROM win w JOIN ch ON ch.chunk_id = w.vec_id
@@ -316,8 +325,8 @@ object Rag {
     * (rounded cosine DESC, vec_id ASC), already joined to the candidate
     * embeddings the greedy needs. */
   private[graft] def mmrPool(spark: SparkSession, dir: String,
-      nQueries: Int = 5, pool: Int = 20, window: Int = 32,
-      stride: Int = 16): DataFrame =
+      nQueries: Int = DefaultQueries, pool: Int = DefaultPool,
+      window: Int = DefaultWindow, stride: Int = DefaultStride): DataFrame =
     Artifacts.ragMmrPool(spark, (dir, nQueries, pool, window, stride)) {
       val vecs = chunkVecs(spark, dir, window, stride)
       val q = vecs
@@ -338,9 +347,9 @@ object Rag {
         .cache()
     }
 
-  def mmrRetrieve(spark: SparkSession, dir: String, nQueries: Int = 5,
-      k: Int = 5, pool: Int = 20, window: Int = 32,
-      stride: Int = 16): DataFrame = {
+  def mmrRetrieve(spark: SparkSession, dir: String,
+      nQueries: Int = DefaultQueries, k: Int = 5, pool: Int = DefaultPool,
+      window: Int = DefaultWindow, stride: Int = DefaultStride): DataFrame = {
     import spark.implicits._
     import graft.functions.PqKernels.round6
     val chunks = chunkTable(spark, dir, window, stride)
@@ -363,8 +372,9 @@ object Rag {
     * candidate pool, the pairwise rounded-sim relation, and the greedy
     * unrolled as k chained CTE steps (argmax per step via ROW_NUMBER,
     * chosen-set accumulated by UNION ALL). */
-  def mmrRetrieveSql(nQueries: Int = 5, k: Int = 5, pool: Int = 20,
-      window: Int = 32, stride: Int = 16): String =
+  def mmrRetrieveSql(nQueries: Int = DefaultQueries, k: Int = 5,
+      pool: Int = DefaultPool, window: Int = DefaultWindow,
+      stride: Int = DefaultStride): String =
     s"""WITH ${mmrSelCtes(nQueries, k, pool, window, stride)}
        |SELECT sel.q_doc, CAST(sel.rank AS INT) AS rank, ch.src_doc,
        |       ch.chunk_pos, sel.rel, ROUND(sel.mmr, 6) AS mmr
@@ -430,9 +440,9 @@ object Rag {
     * bounded-heap plan", exactly the trade the df-cap audit reports for
     * n-gram dedup. Fully hash-oracled: the mirror re-derives the greedy
     * AND the exclusion bound. */
-  def mmrPoolExposure(spark: SparkSession, dir: String, nQueries: Int = 5,
-      k: Int = 5, pool: Int = 20, window: Int = 32,
-      stride: Int = 16): DataFrame = {
+  def mmrPoolExposure(spark: SparkSession, dir: String,
+      nQueries: Int = DefaultQueries, k: Int = 5, pool: Int = DefaultPool,
+      window: Int = DefaultWindow, stride: Int = DefaultStride): DataFrame = {
     import spark.implicits._
     // the shared pool+1 frame: the (pool+1)-th best relevance IS the
     // exclusion bound the audit prices
@@ -452,8 +462,9 @@ object Rag {
       "bound_gap")
   }
 
-  def mmrPoolExposureSql(nQueries: Int = 5, k: Int = 5, pool: Int = 20,
-      window: Int = 32, stride: Int = 16): String =
+  def mmrPoolExposureSql(nQueries: Int = DefaultQueries, k: Int = 5,
+      pool: Int = DefaultPool, window: Int = DefaultWindow,
+      stride: Int = DefaultStride): String =
     s"""WITH ${mmrSelCtes(nQueries, k, pool, window, stride)},
        |excl AS (SELECT q_doc, MAX(cosine) AS max_excl_rel
        |         FROM win WHERE rank > $pool GROUP BY 1),

@@ -1067,7 +1067,7 @@ object Similarity {
     pqTrainFull(spark, dir, iters, nsub)._1
 
   private[graft] def pqTrainFull(spark: SparkSession, dir: String,
-      iters: Int = 3, nsub: Int = 16): (DataFrame, Seq[Seq[Seq[Double]]]) =
+      iters: Int, nsub: Int): (DataFrame, Seq[Seq[Seq[Double]]]) =
     Artifacts.pqTrainStats(spark, (dir, iters, nsub)) {
       val r = pqTrainImpl(spark, dir, iters, nsub)
       (r._1.cache(), r._2)

@@ -1092,8 +1092,11 @@ class CachesSpec extends AnyFunSuite {
     val before = Dedup.minhashNearDups(spark, sf).count()
     val train = Similarity.ivfTrain(spark, sf).collect()
     assert(!spark.sharedState.cacheManager.isEmpty)
+    assert(Artifacts.usage(spark).nonEmpty)
     Caches.clear(spark)
     assert(spark.sharedState.cacheManager.isEmpty, "cached plans survived clear")
+    // the accounting goes too: a long-lived session's key set stays bounded
+    assert(Artifacts.usage(spark).isEmpty, "artifact accounting survived clear")
     // memo dropped: a fresh call rebuilds (new DataFrame identity) and the
     // results are unchanged — clear is a release hook, not a semantic event
     val train2 = Similarity.ivfTrain(spark, sf).collect()
