@@ -5,16 +5,20 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import scala.util.DynamicVariable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions
 import org.apache.spark.sql.types.StructType
 import graft.operators._
 
 /** One session-shared artifact: a value built at most once per (session,
   * key) and handed out by object identity — not CacheManager plan
-  * identity — to every later caller. Values are dropped by [[Caches.clear]]
-  * and when the owning SparkContext ends (a static map would pin stopped
-  * sessions' plans and blocks; DataFrames reference their session, so weak
-  * keys don't work either). Every access is counted ([[Artifacts.usage]]).
+  * identity — to every later caller. Every DataFrame of a fresh value is
+  * cached before the first caller gets it ([[Artifacts.persist]]), so a
+  * build never ends in `.cache()` itself. Values are dropped by
+  * [[Caches.clear]] and when the owning SparkContext ends (a static map
+  * would pin stopped sessions' plans; DataFrames reference their session,
+  * so weak keys don't work either). Every access is counted
+  * ([[Artifacts.usage]]).
   */
 final class Artifact[K, V] private[graft] (val name: String,
     private[graft] val warm: Option[Artifacts.Warm]) {
@@ -26,14 +30,19 @@ final class Artifact[K, V] private[graft] (val name: String,
     var built = false
     val v = values.computeIfAbsent((spark, key), _ => {
       built = true
-      Artifacts.inBuild.withValue(true)(build)
+      Artifacts.persist(Artifacts.inBuild.withValue(true)(build))
     })
     Artifacts.record(spark, name, key, direct, built)
     v
   }
 
-  /** Forget this session's values (they become unreferenced; the
-    * ContextCleaner reclaims their checkpoint and cache blocks on GC). */
+  /** This session's values. */
+  private[graft] def held(spark: SparkSession): Seq[V] =
+    values.asScala.toSeq.collect { case ((s, _), v) if s eq spark => v }
+
+  /** Forget this session's values. Their cached plans stay in the
+    * CacheManager until `clearCache` ([[Caches.clear]]); only their
+    * checkpoint blocks go to the ContextCleaner once unreferenced. */
   private[graft] def drop(spark: SparkSession): Unit =
     values.keySet.removeIf(_._1 eq spark)
 }
@@ -79,17 +88,13 @@ object Artifacts {
   val minhashPairs = warmed[String, DataFrame]("minhash_pairs")(Dedup.minhashNearDups(_, _))
   val minhashPairsIncremental = warmed[String, DataFrame]("minhash_pairs_incremental")(
     Dedup.minhashNearDupsIncremental(_, _))
-  val jaccardShingles =
-    warmed[(String, Int), DataFrame]("jaccard_shingles")(Dedup.jaccardShingles(_, _))
-  val shinglesWithDf =
-    warmed[(String, Int), DataFrame]("shingles_with_df")(Dedup.shinglesWithDf(_, _))
-  val ngramRarePairs =
-    warmed[(String, Int, Int), DataFrame]("ngram_rare_pairs")(Dedup.rarePairCounts(_, _))
   val duplicateSpans = warmed[(String, Int, Int, Int), DataFrame]("duplicate_spans")(
     Dedup.duplicateSpansMemo(_, _))
   val simhashPairs =
     warmed[(String, Int), DataFrame]("simhash_pairs")(Dedup.simhashNearDups(_, _))
   val dupClusters = warmed[String, DataFrame]("dup_clusters")(Curation.dupClusters(_, _))
+  val ngramJaccardPairs = warmed[(String, Double, Int, Int), DataFrame](
+    "ngram_jaccard_pairs")(Dedup.ngramJaccardPairs(_, _))
   val jaccardComponents =
     warmed[String, DataFrame]("jaccard_components")(Curation.jaccardComponents(_, _))
   val servingTables = stored[String, Seq[etl.Pipeline.StageCounts]]("serving_tables")(
@@ -161,6 +166,11 @@ object Artifacts {
   val pqCodebooks = memo[(String, Int), Seq[Seq[Seq[Double]]]]("pq_codebooks")
   val semanticProbedCells = memo[(String, Int), DataFrame]("semantic_probed_cells")
   val docHashes = memo[String, DataFrame]("doc_hashes")
+  val jaccardShingles = memo[(String, Int), DataFrame]("jaccard_shingles")
+  val shinglesWithDf = memo[(String, Int), DataFrame]("shingles_with_df")
+  val ngramRarePairs = memo[(String, Int, Int), DataFrame]("ngram_rare_pairs")
+  val minhashSigs = memo[String, DataFrame]("minhash_sigs")
+  val spanAnchors = memo[(String, Int, Int), DataFrame]("span_anchors")
   val lmRawCounts = memo[String, (DataFrame, DataFrame, DataFrame)]("lm_raw_counts")
   val lmModel = memo[String, (DataFrame, DataFrame, DataFrame)]("lm_model")
   val bpeMerges = memo[(String, Int), DataFrame]("bpe_merges")
@@ -190,13 +200,27 @@ object Artifacts {
   /** The consumer label [[warmBuild]] records its reads under. */
   def warmer(name: String): String = s"warmup:$name"
 
-  /** Execute every DataFrame in `v`: the value itself, or each part of a
-    * tuple or case class. Collections and scalars are already built. */
-  def materialize(v: Any): Unit = v match {
-    case df: org.apache.spark.sql.Dataset[_] => df.queryExecution.toRdd.count(); ()
-    case _: Iterable[_] => ()
-    case p: Product => p.productIterator.foreach(materialize)
-    case _ => ()
+  /** Every DataFrame in `v`: the value itself, or each part of a tuple or
+    * case class. Collections, schemas and scalars hold none. */
+  def frames(v: Any): Iterator[Dataset[_]] = v match {
+    case df: Dataset[_] => Iterator(df)
+    case _: Iterable[_] => Iterator.empty
+    case p: Product => p.productIterator.flatMap(frames)
+    case _ => Iterator.empty
+  }
+
+  /** Execute every DataFrame in `v`. */
+  def materialize(v: Any): Unit =
+    frames(v).foreach(_.queryExecution.toRdd.count())
+
+  /** Cache every DataFrame of a freshly built value, except one whose plan
+    * the build already cached (it read the frame twice itself), so no plan
+    * is ever cached twice. */
+  private[graft] def persist[V](v: V): V = {
+    frames(v).map(ClassicConversions.castToImpl(_)).foreach { df =>
+      if (df.sparkSession.sharedState.cacheManager.lookupCachedData(df).isEmpty) df.cache()
+    }
+    v
   }
 
   // ------------------------------------------------------------ accounting
@@ -259,6 +283,10 @@ object Artifacts {
           ()
         }
       })
+
+  /** (name, value) of every artifact value the session holds. */
+  private[graft] def held(spark: SparkSession): Seq[(String, Any)] =
+    declared.toSeq.flatMap(a => a.held(spark).map(a.name -> _))
 
   /** Drop one session's values from every artifact, and their accounting. */
   private[graft] def drop(spark: SparkSession): Unit = {

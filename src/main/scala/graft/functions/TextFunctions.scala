@@ -90,7 +90,6 @@ object TextFunctions {
       graft.Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"),
           explode(tokens(col("text"))).as("term"))
-        .cache()
     }
 
   /** The per-doc quality columns, a session artifact: in production
@@ -101,7 +100,6 @@ object TextFunctions {
       qualityMetrics(Tables.documents(spark, dir), "text")
         .select("doc_id", "n_chars_m", "n_tokens", "alpha_ratio", "digit_ratio",
           "avg_token_len", "quality_score")
-        .cache()
     }
 
   /** DuckDB oracle for the quality metrics. regexp_replace carries the 'g'

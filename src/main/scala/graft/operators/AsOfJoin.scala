@@ -144,7 +144,6 @@ object AsOfJoin {
         .agg(max("l_quantity").as("ship_qty"))
         .select(col("o_custkey"), col("l_shipdate").as("o_orderdate"),
           col("ship_qty"))
-        .cache()
     }
 
   val asofQuerySql: String =

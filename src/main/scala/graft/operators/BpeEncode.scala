@@ -241,6 +241,6 @@ object BpeEncode {
   private[graft] def encodedWordToks(spark: SparkSession, dir: String): DataFrame =
     Artifacts.bpeTokenIds(spark, dir) {
       encodeOf(spark, Tables.spread(spark, Tables.documents(spark, dir)),
-        BpeTrain.train(spark, dir)).cache()
+        BpeTrain.train(spark, dir))
     }
 }

@@ -79,9 +79,7 @@ object BpeTrain {
     * queries (same materialized-artifact contract as
     * `Similarity.ivfTrain`). */
   def train(spark: SparkSession, dir: String, merges: Int = 20): DataFrame =
-    Artifacts.bpeMerges(spark, (dir, merges)) {
-      trainImpl(spark, dir, merges).cache()
-    }
+    Artifacts.bpeMerges(spark, (dir, merges))(trainImpl(spark, dir, merges))
 
   /** The un-memoized training run — spec surface for determinism tests
     * (the public [[train]] would satisfy run-to-run equality trivially

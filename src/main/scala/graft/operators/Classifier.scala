@@ -119,10 +119,8 @@ object Classifier {
   private[graft] def qualityTrainFull(spark: SparkSession, dir: String,
       tau: Double = DefaultTau, iters: Int = DefaultIters,
       eta: Double = DefaultEta): (DataFrame, Seq[Double]) =
-    Artifacts.qualityGateFit(spark, (dir, tau, iters, eta)) {
-      val r = qualityTrainImpl(spark, dir, tau, iters, eta)
-      (r._1.cache(), r._2)
-    }
+    Artifacts.qualityGateFit(spark, (dir, tau, iters, eta))(
+      qualityTrainImpl(spark, dir, tau, iters, eta))
 
   private def qualityTrainImpl(spark: SparkSession, dir: String, tau: Double,
       iters: Int, eta: Double): (DataFrame, Seq[Double]) =
@@ -318,8 +316,7 @@ object Classifier {
         .join(sample, "doc_id") // sample ids are frac·N — lake-scale joins
                                 // would bloom-filter or broadcast by range;
                                 // at gate scale Spark broadcasts it outright
-      val r = gdLoop(spark, training, iters, eta)
-      (r._1.cache(), r._2)
+      gdLoop(spark, training, iters, eta)
     }
 
   /** The sampled-trained gate applied CORPUS-WIDE — train on frac·N,

@@ -167,15 +167,22 @@ object Curation {
     * cluster assignment is a MATERIALIZED table refreshed per ingest. */
   def dupClusters(spark: SparkSession, dir: String): DataFrame =
     Artifacts.dupClusters(spark, dir) {
-      val pairs = Dedup.minhashNearDups(spark, dir).select("doc_a", "doc_b")
-      val comp = connectedComponents(pairs)
-      Tables.documents(spark, dir).select("doc_id")
-        .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("comp"), col("doc_id")).as("cluster_id"))
-        .withColumn("keep", col("doc_id") === col("cluster_id"))
-        .cache()
+      componentsOf(Tables.documents(spark, dir).select("doc_id"),
+          Dedup.minhashNearDups(spark, dir))
+        .withColumnRenamed("comp", "cluster_id")
     }
+
+  /** Every id of the one-column frame `ids` with its connected component
+    * over the (doc_a, doc_b) pair graph: (id, comp, keep), where an id in
+    * no pair is its own component and `keep` marks the component's
+    * canonical member (its min id). Callers rename comp and keep. */
+  private[graft] def componentsOf(ids: DataFrame, pairs: DataFrame): DataFrame = {
+    val id = ids.columns.head
+    val labels = connectedComponents(pairs.select("doc_a", "doc_b"))
+    ids.join(labels.withColumnRenamed("id", id), Seq(id), "left")
+      .select(col(id), coalesce(col("comp"), col(id)).as("comp"))
+      .withColumn("keep", col(id) === col("comp"))
+  }
 
   /** Connected components over the EXACT n-gram-Jaccard pair graph — the
     * first hash-oracled pin of the CC kernel (r9; since r16 [[dupClusters]]
@@ -194,14 +201,10 @@ object Curation {
     * soft-weight query below shares the component table. */
   def jaccardComponents(spark: SparkSession, dir: String): DataFrame =
     Artifacts.jaccardComponents(spark, dir) {
-      val pairs = Dedup.ngramJaccardPairs(spark, dir).select("doc_a", "doc_b")
-      val comp = connectedComponents(pairs)
-      Tables.documents(spark, dir).select("doc_id")
-        .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("comp"), col("doc_id")).as("component"))
-        .withColumn("is_canonical", col("doc_id") === col("component"))
-        .cache()
+      componentsOf(Tables.documents(spark, dir).select("doc_id"),
+          Dedup.ngramJaccardPairs(spark, dir))
+        .withColumnRenamed("comp", "component")
+        .withColumnRenamed("keep", "is_canonical")
     }
 
   /** DuckDB oracle for [[jaccardComponents]]: the full Jaccard pair
@@ -600,7 +603,6 @@ object Curation {
   private[graft] def corpusGrams(spark: SparkSession, dir: String, n: Int): DataFrame =
     Artifacts.corpusGrams(spark, (dir, n)) {
       docNgrams(Tables.documents(spark, dir).select("doc_id", "text"), n)
-        .cache()
     }
 
   /** THE 13-gram contamination core, over any (doc_id, text, split) frame:
@@ -890,7 +892,6 @@ object Curation {
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"),
           md5(col("text")).as("h"))
-        .cache()
     }
 
   /** Memoized per (session, dir, keepTop): the reputation table is consumed
@@ -900,9 +901,8 @@ object Curation {
     * form. */
   def sourceReputation(spark: SparkSession, dir: String,
       keepTop: Int = 15): DataFrame =
-    Artifacts.sourceReputation(spark, (dir, keepTop)) {
-      sourceReputationImpl(spark, dir, keepTop).cache()
-    }
+    Artifacts.sourceReputation(spark, (dir, keepTop))(
+      sourceReputationImpl(spark, dir, keepTop))
 
   private def sourceReputationImpl(spark: SparkSession, dir: String,
       keepTop: Int): DataFrame = {
@@ -1246,7 +1246,6 @@ object Curation {
       buckets: Int = 4096, alpha: Double = 0.01): DataFrame =
     Artifacts.dsirRatio(spark, (dir, buckets, alpha)) {
       ratioFromFeatures(corpusDsirFeatures(spark, dir, buckets), buckets, alpha)
-        .cache()
     }
 
   /** The corpus's compressed (doc_id, lang, b, cnt) DSIR feature table,
@@ -1262,7 +1261,7 @@ object Curation {
     Artifacts.dsirFeatures(spark, (dir, buckets)) {
       compressFeatures(dsirFeatures(
         Tables.spread(spark, Tables.documents(spark, dir))
-          .select("doc_id", "lang", "text"), buckets)).cache()
+          .select("doc_id", "lang", "text"), buckets))
     }
 
   /** Per-(doc, lang, bucket) feature MULTIPLICITIES — the compressed form

@@ -196,28 +196,30 @@ object Dedup {
 
   /** Full MinHash-LSH near-dup pipeline: signature → band-bucket candidates
     * → estimate → exact verify. Emits verified pairs with jaccard ≥ 0.7.
-    * Signatures and candidates feed three downstream joins, so they are
-    * cached — without it the whole shingle pipeline re-executes per use.
-    * The verified pair set is a warmed session artifact ([[Artifacts]]):
-    * every consumer is handed the same instance. */
+    * Candidates feed both the estimate and the verify, so they are cached
+    * — without it the band self-join re-executes per use. The verified
+    * pair set is a warmed session artifact ([[Artifacts]]): it feeds six
+    * consumers (the two dedup queries, clustering, curation, split
+    * contamination, the recall and cluster invariants) — the in-session
+    * analogue of the stored near-dup pair table an ingest pipeline keeps
+    * at scale. */
   def minhashNearDups(spark: SparkSession, dir: String): DataFrame =
     Artifacts.minhashPairs(spark, dir) {
-      val sh = docShingles(spark, dir).cache()
-      val sigs = signaturesFromShingles(sh).cache()
+      val sh = jaccardShingles(spark, dir)
+      val sigs = minhashSigs(spark, dir)
       val cands = minhashCandidates(sigs).cache()
       val est = estimateJaccard(sigs, cands)
       val exact = exactJaccardFromShingles(sh, cands)
-      // cache the verified pair set too (few hundred rows): it feeds six
-      // consumers (the two dedup queries, clustering, curation, split
-      // contamination, the recall and cluster invariants), each of which
-      // would otherwise redo the est+verify joins — the in-session analogue
-      // of the stored near-dup pair table an ingest pipeline keeps at scale
-      // (same policy as ngramJaccardPairs' cached output below)
       est.join(exact, Seq("doc_a", "doc_b"))
         .filter(col("jaccard") >= 0.7)
         .select("doc_a", "doc_b", "est_jaccard", "jaccard")
-        .cache()
     }
+
+  /** The corpus MinHash signatures over the memoized 3-gram shingles, a
+    * session artifact read by the builds of the batch and the incremental
+    * pair sets. */
+  private def minhashSigs(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.minhashSigs(spark, dir)(signaturesFromShingles(jaccardShingles(spark, dir)))
 
   /** Row-local MinHash band signatures — NO shuffle: each min-hash slot is
     * `array_min` over the row's shingle-hash array, so signatures compute
@@ -258,29 +260,24 @@ object Dedup {
     * only the new documents and bucket-joins into the stored index, then
     * exact-verifies the survivors. Here the split is simulated
     * deterministically (even doc_id = index, odd = new batch) on the same
-    * cached shingle/signature pipeline the batch path uses.
+    * memoized shingles and signatures the batch path uses.
     *
-    * Output: (index_id, new_id, jaccard) for verified pairs ≥ 0.7. */
+    * Output: (index_id, new_id, jaccard) for verified pairs ≥ 0.7 — what
+    * an ingest MATERIALIZES (the new batch's near-dup links), read by
+    * q_dedup_incremental and the q_incremental_consistency audit. */
   def minhashNearDupsIncremental(spark: SparkSession, dir: String): DataFrame =
     Artifacts.minhashPairsIncremental(spark, dir) {
-      val sh = docShingles(spark, dir).cache()
-      val sigs = signaturesFromShingles(sh).cache()
-      val banded = bandedSignatures(sigs)
+      val sh = jaccardShingles(spark, dir)
+      val banded = bandedSignatures(minhashSigs(spark, dir))
       val idx = banded.filter(pmod(col("doc_id"), lit(2)) === 0)
         .select(col("doc_id").as("doc_a"), col("band"), col("sig"))
       val fresh = banded.filter(pmod(col("doc_id"), lit(2)) === 1)
         .select(col("doc_id").as("doc_b"), col("band"), col("sig"))
       val cands = idx.join(fresh, Seq("band", "sig"))
         .select("doc_a", "doc_b").distinct()
-      // cache the verified incremental pair set (dozens of rows): like the
-      // batch pair table above it is what an ingest MATERIALIZES (the new
-      // batch's near-dup links), and it has two registered consumers —
-      // q_dedup_incremental and the q_incremental_consistency audit, which
-      // would otherwise each redo the probe's bucket join + exact verify
       exactJaccardFromShingles(sh, cands)
         .filter(col("jaccard") >= 0.7)
         .select(col("doc_a").as("index_id"), col("doc_b").as("new_id"), col("jaccard"))
-        .cache()
     }
 
   // --------------------------------------------- stored-index hash stamp
@@ -394,7 +391,7 @@ object Dedup {
     val cands = dedupProbe(newDocs, index)
       .select(col("index_id").as("doc_a"), col("new_id").as("doc_b"))
       .distinct()
-    exactJaccardFromShingles(docShingles(spark, dir).cache(), cands)
+    exactJaccardFromShingles(jaccardShingles(spark, dir), cands)
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a").as("index_id"), col("doc_b").as("new_id"),
         col("jaccard"))
@@ -631,7 +628,7 @@ object Dedup {
     * (PropertiesSpec merge-associativity; DedupSpec asserts declarative ≡
     * aggregator corpus-wide). */
   def simhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.simhashSigs(spark, dir)(simhashSignaturesOf(spark, dir).cache())
+    Artifacts.simhashSigs(spark, dir)(simhashSignaturesOf(spark, dir))
 
   /** The un-memoized signature build behind [[simhashSignatures]]. */
   private[graft] def simhashSignaturesOf(spark: SparkSession, dir: String): DataFrame = {
@@ -681,14 +678,12 @@ object Dedup {
   /** SimHash near-dups: band the 64-bit signature into 4×16-bit chunks (a
     * pair within hamming distance ≤ 3 must agree on ≥ 1 chunk — pigeonhole),
     * bucket-join per chunk, verify with bit_count(xor). The verified pair
-    * set is cached like the minhash pair table above: it is what an ingest
-    * materializes, and its two registered consumers (q_simhash_pairs, the
-    * q_dedup_simhash summary) each redid the chunk self-join + distinct +
-    * verify to reach the same dozens of rows. */
+    * set is a warmed artifact like the minhash pair table above: it is
+    * what an ingest materializes, read by q_simhash_pairs and the
+    * q_dedup_simhash summary. */
   def simhashNearDups(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame =
-    Artifacts.simhashPairs(spark, (dir, maxHamming)) {
-      simhashNearDupsFromSigs(simhashSignatures(spark, dir), maxHamming).cache()
-    }
+    Artifacts.simhashPairs(spark, (dir, maxHamming))(
+      simhashNearDupsFromSigs(simhashSignatures(spark, dir), maxHamming))
 
   def simhashNearDupsFromSigs(sigs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val chunked = sigs.select(col("doc_id"), col("simhash"),
@@ -761,53 +756,54 @@ object Dedup {
     * only for docs sharing ≥1 shingle (sparse by construction), with a
     * document-frequency cap dropping ultra-common shingles — the standard
     * guard that keeps the self-join skew-free at corpus scale (a shingle in
-    * f docs contributes f² pair rows; capping f bounds the blow-up). */
+    * f docs contributes f² pair rows; capping f bounds the blow-up).
+    *
+    * A warmed session artifact: the verified pair table (few hundred rows)
+    * is read by q_dedup_ngram_jaccard, the recall and precision
+    * invariants, the modality agreement, the split-contamination audit
+    * and the build of [[Curation.jaccardComponents]]. */
   def ngramJaccardPairs(spark: SparkSession, dir: String,
-      threshold: Double = 0.5, n: Int = 3, dfCap: Int = 20): DataFrame = {
-    val sh = jaccardShingles(spark, dir, n)
-    // Candidate generation on the df-capped index ONLY; the reported jaccard
-    // is then exact over the FULL shingle sets (same candidates→exact-verify
-    // split as the MinHash path). Mixing a capped intersection with uncapped
-    // denominators would systematically underestimate pairs that share
-    // common shingles; recall is still bounded by the cap (a pair sharing
-    // ONLY df>cap shingles is never a candidate — the documented skew/recall
-    // trade of any inverted-index join).
-    val withDf = shinglesWithDf(spark, dir, n)
-    // per-doc count of df>cap shingles — the only shingles a pair can share
-    // beyond the rare index (df=1 cannot be shared), so they bound the
-    // unseen part of the intersection
-    val commonCnt = withDf.filter(col("df") > dfCap)
-      .groupBy("doc_id").agg(count(lit(1)).as("n_common"))
-    val counts = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    // SOUND upper-bound prune before the expensive full-set verify:
-    // n_inter ≤ r_ab (shared rare shingles, counted here for free) +
-    // min(common_a, common_b); jaccard is increasing in n_inter, so pairs
-    // whose bound misses the threshold (minus a 1e-6 rounding slack) cannot
-    // appear in the output — at sf0.1 this cuts ~1.1M candidates to the
-    // few hundred genuine near-dup pairs before the verify join.
-    val rInter = rarePairCounts(spark, dir, n, dfCap)
-    val cands = rInter
-      .join(counts.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a")), "doc_a")
-      .join(counts.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b")), "doc_b")
-      .join(commonCnt.select(col("doc_id").as("doc_a"), col("n_common").as("c_a")),
-        Seq("doc_a"), "left")
-      .join(commonCnt.select(col("doc_id").as("doc_b"), col("n_common").as("c_b")),
-        Seq("doc_b"), "left")
-      .na.fill(0L, Seq("c_a", "c_b"))
-      .withColumn("ub_i", col("r_ab") + least(col("c_a"), col("c_b")))
-      .filter(col("ub_i").cast("double")
-        / (col("n_a") + col("n_b") - col("ub_i")).cast("double")
-        >= threshold - 1e-6)
-      .select("doc_a", "doc_b")
-    // cache the verified pairs (few hundred rows): the recall-invariant
-    // query re-reads this exact plan, and CacheManager keys by analyzed
-    // plan, so one materialization serves both (same policy as
-    // minhashNearDups' pipeline caches — session-bounded)
-    exactJaccardFromShingles(sh, cands)
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-      .cache()
-  }
+      threshold: Double = 0.5, n: Int = 3, dfCap: Int = 20): DataFrame =
+    Artifacts.ngramJaccardPairs(spark, (dir, threshold, n, dfCap)) {
+      val sh = jaccardShingles(spark, dir, n)
+      // Candidate generation on the df-capped index ONLY; the reported jaccard
+      // is then exact over the FULL shingle sets (same candidates→exact-verify
+      // split as the MinHash path). Mixing a capped intersection with uncapped
+      // denominators would systematically underestimate pairs that share
+      // common shingles; recall is still bounded by the cap (a pair sharing
+      // ONLY df>cap shingles is never a candidate — the documented skew/recall
+      // trade of any inverted-index join).
+      val withDf = shinglesWithDf(spark, dir, n)
+      // per-doc count of df>cap shingles — the only shingles a pair can share
+      // beyond the rare index (df=1 cannot be shared), so they bound the
+      // unseen part of the intersection
+      val commonCnt = withDf.filter(col("df") > dfCap)
+        .groupBy("doc_id").agg(count(lit(1)).as("n_common"))
+      val counts = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+      // SOUND upper-bound prune before the expensive full-set verify:
+      // n_inter ≤ r_ab (shared rare shingles, counted here for free) +
+      // min(common_a, common_b); jaccard is increasing in n_inter, so pairs
+      // whose bound misses the threshold (minus a 1e-6 rounding slack) cannot
+      // appear in the output — at sf0.1 this cuts ~1.1M candidates to the
+      // few hundred genuine near-dup pairs before the verify join.
+      val rInter = rarePairCounts(spark, dir, n, dfCap)
+      val cands = rInter
+        .join(counts.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a")), "doc_a")
+        .join(counts.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b")), "doc_b")
+        .join(commonCnt.select(col("doc_id").as("doc_a"), col("n_common").as("c_a")),
+          Seq("doc_a"), "left")
+        .join(commonCnt.select(col("doc_id").as("doc_b"), col("n_common").as("c_b")),
+          Seq("doc_b"), "left")
+        .na.fill(0L, Seq("c_a", "c_b"))
+        .withColumn("ub_i", col("r_ab") + least(col("c_a"), col("c_b")))
+        .filter(col("ub_i").cast("double")
+          / (col("n_a") + col("n_b") - col("ub_i")).cast("double")
+          >= threshold - 1e-6)
+        .select("doc_a", "doc_b")
+      exactJaccardFromShingles(sh, cands)
+        .filter(col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    }
 
   /** DuckDB oracle for [[ngramJaccardPairs]] (defaults: n=3, dfCap=20,
     * threshold=0.5). The Spark side shingles by xxhash64 of token triples;
@@ -863,9 +859,7 @@ object Dedup {
     * test noticing — instance sharing cannot drift). */
   private[graft] def jaccardShingles(spark: SparkSession, dir: String,
       n: Int = 3): DataFrame =
-    Artifacts.jaccardShingles(spark, (dir, n)) {
-      docShingles(spark, dir, n).cache()
-    }
+    Artifacts.jaccardShingles(spark, (dir, n))(docShingles(spark, dir, n))
 
   /** The df-annotated (doc_id, sh, df ≥ 2) inverted index, MEMOIZED like
     * [[jaccardShingles]] and built from it: df == 1 shingles can never
@@ -878,7 +872,7 @@ object Dedup {
       val sh = jaccardShingles(spark, dir, n)
       sh.join(
         sh.groupBy("sh").agg(count(lit(1)).as("df")).filter(col("df") >= 2),
-        "sh").cache()
+        "sh")
     }
 
   /** THE exact-truth pair sweep, factored out and memoized (r17 — the one
@@ -891,8 +885,9 @@ object Dedup {
     * equi-self-join, but 2 exchanges (group-by-shingle, group-by-pair)
     * instead of 3. Group size is bounded by dfCap, so the in-group
     * d(d-1)/2 expansion can never skew a task. Returns
-    * (doc_a, doc_b, r_ab = shared rare-shingle count); warmed as a
-    * per-ingest truth artifact. */
+    * (doc_a, doc_b, r_ab = shared rare-shingle count); a per-ingest
+    * truth artifact, built by the warm-up inside
+    * [[ngramJaccardPairs]]'s build. */
   private[graft] def rarePairCounts(spark: SparkSession, dir: String,
       n: Int = 3, dfCap: Int = 20): DataFrame =
     Artifacts.ngramRarePairs(spark, (dir, n, dfCap)) {
@@ -903,7 +898,6 @@ object Dedup {
             b => struct(a.as("doc_a"), b.as("doc_b")))))).as("p"))
         .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
         .agg(count(lit(1)).as("r_ab"))
-        .cache()
     }
 
   /** Distinct doc pairs sharing at least one RARE (2 ≤ df ≤ dfCap) shingle
@@ -1011,17 +1005,18 @@ object Dedup {
         transform(sequence(lit(1), size(toks) - (k - 1)),
           i => md5(concat_ws(" ", slice(toks, i, lit(k))))))
       .otherwise(array().cast("array<string>")) // shorter than k ⇒ no k-spans
-    val grams = Tables.spread(spark, Tables.documents(spark, dir))
-      .select(col("doc_id"), tokens(col("text")).as("__toks"))
-      .select(col("doc_id"), posexplode(gramArr).as(Seq("pos", "gram")))
-    val freq = grams.groupBy("gram")
-      .agg(countDistinct("doc_id").as("df"))
-      .filter(col("df").between(2, dfCap))
     // the capped anchor index feeds BOTH sides of the self-join and is
-    // rebuilt identically by the plain/salted/scrub consumers — cache it so
-    // one session materializes the gram pipeline once (same session-bounded
-    // policy as the minhash pipeline caches)
-    val rare = grams.join(freq, "gram").cache()
+    // read by the plain and the salted form, so it is a session artifact:
+    // one session runs the gram pipeline once
+    val rare = Artifacts.spanAnchors(spark, (dir, k, dfCap)) {
+      val grams = Tables.spread(spark, Tables.documents(spark, dir))
+        .select(col("doc_id"), tokens(col("text")).as("__toks"))
+        .select(col("doc_id"), posexplode(gramArr).as(Seq("pos", "gram")))
+      val freq = grams.groupBy("gram")
+        .agg(countDistinct("doc_id").as("df"))
+        .filter(col("df").between(2, dfCap))
+      grams.join(freq, "gram")
+    }
     val xa = rare.select(col("gram"), col("doc_id").as("doc_a"), col("pos").as("pa"))
     val yb = rare.select(col("gram"), col("doc_id").as("doc_b"), col("pos").as("pb"))
     val pts =
@@ -1088,9 +1083,8 @@ object Dedup {
     * on purpose: its whole point is to execute the alternative join plan. */
   def duplicateSpansMemo(spark: SparkSession, dir: String, k: Int = 8,
       minTokens: Int = 12, dfCap: Int = 20): DataFrame =
-    Artifacts.duplicateSpans(spark, (dir, k, minTokens, dfCap)) {
-      duplicateSpans(spark, dir, k, minTokens, dfCap).cache()
-    }
+    Artifacts.duplicateSpans(spark, (dir, k, minTokens, dfCap))(
+      duplicateSpans(spark, dir, k, minTokens, dfCap))
 
   /** Span-level SCRUB: apply [[duplicateSpans]] to the corpus — the doc
     * with the larger id in each pair has the shared token range removed

@@ -141,9 +141,7 @@ object Forecast {
     * data-parallel across executors.
     * A session artifact: the forecast and its bounds twin share one fit. */
   def forecastQuery(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.forecastTable(spark, dir) {
-      forecastQueryImpl(spark, dir).cache()
-    }
+    Artifacts.forecastTable(spark, dir)(forecastQueryImpl(spark, dir))
 
   private def forecastQueryImpl(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

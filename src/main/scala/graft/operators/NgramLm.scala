@@ -82,10 +82,11 @@ object NgramLm {
       .agg(count(lit(1)).as("c3")))
 
   /** Score tables derived from raw counts: (uni with s1 and N folded in,
-    * pruned bigrams with s2, pruned trigrams with s3). Cached: they are
-    * the MODEL (KBs–MBs at any corpus size), re-used by every scoring
-    * branch — and the ONE derivation both the inline and the stored paths
-    * go through, so they cannot drift. */
+    * pruned bigrams with s2, pruned trigrams with s3) — the MODEL (KBs–MBs
+    * at any corpus size), and the ONE derivation both the inline and the
+    * stored paths go through, so they cannot drift. The unigram and raw
+    * bigram tables are cached because each feeds two derivations; the
+    * in-session model artifact caches all three it returns. */
   private def modelFromCounts(uni0: DataFrame, bigRaw0: DataFrame,
       tri0: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val uni = uni0.select(col("w"), col("c1").cast("double").as("c1"))
@@ -107,7 +108,6 @@ object NgramLm {
     val bigS = bigRaw
       .join(broadcast(uniS.select(col("w").as("b1"), col("c1"))), "b1")
       .select(col("b1"), col("b2"), col("c2"), (col("c2") / col("c1")).as("s2"))
-      .cache()
     val triS = tri0.filter(col("c3") >= MinCount)
       .select(col("t1"), col("t2"), col("t3"), col("c3").cast("double").as("c3"))
       // raw-count denominator: c3 ≥ 2 ⇒ the context bigram exists in bigRaw
@@ -115,7 +115,6 @@ object NgramLm {
         col("c2").as("c2ctx"))), Seq("t1", "t2"))
       .select(col("t1"), col("t2"), col("t3"), col("c3"),
         (col("c3") / col("c2ctx")).as("s3"))
-      .cache()
     (uniS, bigS, triS)
   }
 
@@ -132,9 +131,7 @@ object NgramLm {
   private def corpusRawCounts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
     Artifacts.lmRawCounts(spark, dir) {
-      val (u, b, t) = rawCounts(
-        tokenStream(Tables.spread(spark, Tables.documents(spark, dir))))
-      (u.cache(), b.cache(), t.cache())
+      rawCounts(tokenStream(Tables.spread(spark, Tables.documents(spark, dir))))
     }
 
   /** The corpus-trained model tables, once per (session, sf dir) — four
@@ -216,7 +213,7 @@ object NgramLm {
       val (uniS, bigS, triS) = corpusModel(spark, dir)
       scoreStream(
         tokenStream(Tables.spread(spark, Tables.documents(spark, dir))),
-        uniS, bigS, triS).cache()
+        uniS, bigS, triS)
     }
 
   /** The model artifact itself: top pruned trigrams by count with their

@@ -41,9 +41,7 @@ object Profile {
     * ([[profileLineitemApproxVerified]]) certifies its sketches against
     * it — so it is warmed (the cardinality-stats precedent). */
   def profileLineitem(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.exactProfile(spark, dir) {
-      profileLineitemImpl(spark, dir).cache()
-    }
+    Artifacts.exactProfile(spark, dir)(profileLineitemImpl(spark, dir))
 
   /** The un-memoized build plan — `private[graft]` so ProfileSpec pins
     * the ANALYZE pass's shape directly (the cached wrapper's printed AQE

@@ -64,7 +64,6 @@ object Rag {
           chunkTable(spark, dir, window, stride)
             .select(col("chunk_id").as("doc_id"), col("text")))
         .select(col("doc_id").as("vec_id"), col("emb"))
-        .cache()
     }
 
   /** (q_doc, rank, src_doc, chunk_pos, cosine, chunk_sig): the k best
@@ -344,7 +343,6 @@ object Rag {
           col("s.vec_id").as("vec_id"), col("s.cosine").as("rel"))
       broadcast(cands).join(vecs, "vec_id")
         .select(col("q_doc"), col("pos"), col("vec_id"), col("rel"), col("emb"))
-        .cache()
     }
 
   def mmrRetrieve(spark: SparkSession, dir: String,

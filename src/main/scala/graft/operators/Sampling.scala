@@ -38,7 +38,7 @@ object Sampling {
   private[graft] def strataCounts(spark: SparkSession, dir: String): DataFrame =
     Artifacts.strataCounts(spark, dir) {
       Tables.documents(spark, dir).groupBy("lang")
-        .agg(count(lit(1)).as("n_docs")).cache()
+        .agg(count(lit(1)).as("n_docs"))
     }
 
   /** The sampled rows (deterministic; membership is hash-defined and
@@ -202,7 +202,6 @@ object Sampling {
         .withColumnRenamed("label", "c_label")
       Similarity.nearestCells(vecs, cents, 1)
         .select(col("vec_id").as("doc_id"), col("cell").as("cluster"))
-        .cache()
     }
 
   /** Cluster-BALANCED sample: an equal per-cluster budget drawn with the

@@ -70,9 +70,8 @@ object Similarity {
     * tier's recall audit joins against. */
   def bruteForceTopK(spark: SparkSession, dir: String,
       nQueries: Int = 20, k: Int = 5): DataFrame =
-    Artifacts.bruteSearch(spark, (dir, nQueries, k)) {
-      bruteForceTopKOf(corpus(spark, dir), nQueries, k).cache()
-    }
+    Artifacts.bruteSearch(spark, (dir, nQueries, k))(
+      bruteForceTopKOf(corpus(spark, dir), nQueries, k))
 
   /** The same exact search over ANY (vec_id, emb) frame — the third tier
     * generalized like [[lshTopKOf]]/[[ivfTopKOf]], so the round-then-rank
@@ -472,9 +471,8 @@ object Similarity {
     * (search query + recall audit share the 100-row result). */
   def quantizedTopK(spark: SparkSession, dir: String, nQueries: Int = 20,
       k: Int = 5, m: Int = 20): DataFrame =
-    Artifacts.quantizedSearch(spark, (dir, nQueries, k, m)) {
-      quantizedTopKOf(corpus(spark, dir), nQueries, k, m).cache()
-    }
+    Artifacts.quantizedSearch(spark, (dir, nQueries, k, m))(
+      quantizedTopKOf(corpus(spark, dir), nQueries, k, m))
 
   /** Per-dimension (lo, hi) of the corpus — the quantization grid. dim×2
     * doubles: metadata-scale, collected and folded into the plan as
@@ -576,13 +574,17 @@ object Similarity {
   /** Per-query hit count of the quantized tier against the exact
     * brute-force top-k — the oracled approximation-quality audit (the
     * "no silent approximation" twin: recall is a standing query, not a
-    * one-off claim). Total coverage: a query with zero overlap reports 0,
-    * never drops out. */
+    * one-off claim). */
   def quantizedRecall(spark: SparkSession, dir: String,
-      nQueries: Int = 20, k: Int = 5, m: Int = 20): DataFrame = {
-    val quant = quantizedTopK(spark, dir, nQueries, k, m)
-    val exact = bruteForceTopK(spark, dir, nQueries, k)
-    val hits = quant.select("q_id", "vec_id")
+      nQueries: Int = 20, k: Int = 5, m: Int = 20): DataFrame =
+    recallVsExact(quantizedTopK(spark, dir, nQueries, k, m),
+      bruteForceTopK(spark, dir, nQueries, k))
+
+  /** Per-query hit count of an approximate top-k against the exact one,
+    * both (q_id, vec_id, ...). Total coverage: a query with zero overlap
+    * reports 0, never drops out. */
+  private def recallVsExact(approx: DataFrame, exact: DataFrame): DataFrame = {
+    val hits = approx.select("q_id", "vec_id")
       .join(exact.select("q_id", "vec_id"), Seq("q_id", "vec_id"))
       .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
     exact.select("q_id").distinct()
@@ -655,7 +657,14 @@ object Similarity {
   /** DuckDB oracle for [[quantizedRecall]]: the quantized chain joined
     * against an independently recomputed exact brute-force top-k. */
   def quantizedRecallSql(nQueries: Int = 20, k: Int = 5, m: Int = 20): String =
-    s"""WITH ${quantizedCtes(QuantDefaultSource, nQueries, k, m)},
+    recallSqlOver(quantizedCtes(QuantDefaultSource, nQueries, k, m), k)
+
+  /** The recall oracles' shared tail over a search chain `ctes` that ends
+    * in `qtop(q_id, rank, vec_id, cosine)` with `c(vec_id, emb)` and
+    * `qq(q_id, q_emb)` in scope: an independently recomputed exact
+    * brute-force top-k, joined for per-query hits ([[recallVsExact]]). */
+  private def recallSqlOver(ctes: String, k: Int): String =
+    s"""WITH $ctes,
        |bcos AS (
        |  SELECT qq.q_id, c.vec_id,
        |    ROUND(${cosSqlExpr("c.emb", "qq.q_emb")}, 6) AS cosine
@@ -751,9 +760,8 @@ object Similarity {
     * A session artifact, like [[bruteForceTopK]]. */
   def rpTopK(spark: SparkSession, dir: String, nQueries: Int = 20,
       k: Int = 5, m: Int = RpPool, kOut: Int = RpDim): DataFrame =
-    Artifacts.rpSearch(spark, (dir, nQueries, k, m, kOut)) {
-      rpTopKOf(corpus(spark, dir), nQueries, k, m, kOut).cache()
-    }
+    Artifacts.rpSearch(spark, (dir, nQueries, k, m, kOut))(
+      rpTopKOf(corpus(spark, dir), nQueries, k, m, kOut))
 
   def rpTopKOf(vecs: DataFrame, nQueries: Int = 20, k: Int = 5,
       m: Int = RpPool, kOut: Int = RpDim): DataFrame = {
@@ -776,16 +784,9 @@ object Similarity {
     * top-k — the standing approximation audit ([[quantizedRecall]]
     * contract: zero-overlap queries report 0, never drop out). */
   def rpRecall(spark: SparkSession, dir: String, nQueries: Int = 20,
-      k: Int = 5, m: Int = RpPool, kOut: Int = RpDim): DataFrame = {
-    val rp = rpTopK(spark, dir, nQueries, k, m, kOut)
-    val exact = bruteForceTopK(spark, dir, nQueries, k)
-    val hits = rp.select("q_id", "vec_id")
-      .join(exact.select("q_id", "vec_id"), Seq("q_id", "vec_id"))
-      .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
-    exact.select("q_id").distinct()
-      .join(hits, Seq("q_id"), "left")
-      .select(col("q_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-  }
+      k: Int = 5, m: Int = RpPool, kOut: Int = RpDim): DataFrame =
+    recallVsExact(rpTopK(spark, dir, nQueries, k, m, kOut),
+      bruteForceTopK(spark, dir, nQueries, k))
 
   /** The md5-parity matrix + projection CTEs, ending in `pc(vec_id,
     * pemb)` — the i-ordered list_sum reproduces the native dot's
@@ -855,23 +856,7 @@ object Similarity {
     * independently recomputed exact brute-force top-k. */
   def rpRecallSql(nQueries: Int = 20, k: Int = 5, m: Int = RpPool,
       kOut: Int = RpDim): String =
-    s"""WITH ${rpCtes(nQueries, k, m, kOut)},
-       |bcos AS (
-       |  SELECT qq.q_id, c.vec_id,
-       |    ROUND(${cosSqlExpr("c.emb", "qq.q_emb")}, 6) AS cosine
-       |  FROM c CROSS JOIN qq WHERE c.vec_id <> qq.q_id),
-       |btop AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, ROW_NUMBER() OVER (PARTITION BY q_id
-       |      ORDER BY cosine DESC NULLS LAST, vec_id ASC) AS r
-       |    FROM bcos)
-       |  WHERE r <= $k),
-       |hits AS (
-       |  SELECT q.q_id, COUNT(*) AS n_hits
-       |  FROM qtop q JOIN btop b ON b.q_id = q.q_id AND b.vec_id = q.vec_id
-       |  GROUP BY 1)
-       |SELECT DISTINCT b.q_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits
-       |FROM btop b LEFT JOIN hits h ON h.q_id = b.q_id""".stripMargin
+    recallSqlOver(rpCtes(nQueries, k, m, kOut), k)
 
   // ------------------------------------------- product quantization (PQ)
   /** Product quantization + ADC search (Jégou et al. 2011, "Product
@@ -919,7 +904,7 @@ object Similarity {
     Artifacts.pqSearch(spark, (dir, nQueries, k, m, nsub)) {
       val c = corpus(spark, dir)
       pqSearch(c, seededCodebooksKeyed(spark, s"corpus:$dir", c, nsub),
-        nQueries, k, m).cache()
+        nQueries, k, m)
     }
 
   /** The same PQ search over ANY (vec_id, label, emb) frame — the
@@ -1030,16 +1015,9 @@ object Similarity {
     * top-k — the oracled approximation audit ([[quantizedRecall]]
     * contract: zero-overlap queries report 0, never drop out). */
   def pqRecall(spark: SparkSession, dir: String, nQueries: Int = 20,
-      k: Int = 5, m: Int = 50, nsub: Int = 16): DataFrame = {
-    val pq = pqTopK(spark, dir, nQueries, k, m, nsub)
-    val exact = bruteForceTopK(spark, dir, nQueries, k)
-    val hits = pq.select("q_id", "vec_id")
-      .join(exact.select("q_id", "vec_id"), Seq("q_id", "vec_id"))
-      .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
-    exact.select("q_id").distinct()
-      .join(hits, Seq("q_id"), "left")
-      .select(col("q_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-  }
+      k: Int = 5, m: Int = 50, nsub: Int = 16): DataFrame =
+    recallVsExact(pqTopK(spark, dir, nQueries, k, m, nsub),
+      bruteForceTopK(spark, dir, nQueries, k))
 
   /** Per-subspace Lloyd refinement of the PQ codebooks — "training" the
     * product quantizer instead of trusting the label-seeded slices, the
@@ -1068,10 +1046,7 @@ object Similarity {
 
   private[graft] def pqTrainFull(spark: SparkSession, dir: String,
       iters: Int, nsub: Int): (DataFrame, Seq[Seq[Seq[Double]]]) =
-    Artifacts.pqTrainStats(spark, (dir, iters, nsub)) {
-      val r = pqTrainImpl(spark, dir, iters, nsub)
-      (r._1.cache(), r._2)
-    }
+    Artifacts.pqTrainStats(spark, (dir, iters, nsub))(pqTrainImpl(spark, dir, iters, nsub))
 
   private def pqTrainImpl(spark: SparkSession, dir: String, iters: Int,
       nsub: Int): (DataFrame, Seq[Seq[Seq[Double]]]) = {
@@ -1388,23 +1363,7 @@ object Similarity {
     * independently recomputed exact brute-force top-k. */
   def pqRecallSql(nQueries: Int = 20, k: Int = 5, m: Int = 50,
       nsub: Int = 16): String =
-    s"""WITH ${pqCtes(PqDefaultSource, nQueries, k, m, nsub)},
-       |bcos AS (
-       |  SELECT qq.q_id, c.vec_id,
-       |    ROUND(${cosSqlExpr("c.emb", "qq.q_emb")}, 6) AS cosine
-       |  FROM c CROSS JOIN qq WHERE c.vec_id <> qq.q_id),
-       |btop AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, ROW_NUMBER() OVER (PARTITION BY q_id
-       |      ORDER BY cosine DESC NULLS LAST, vec_id ASC) AS r
-       |    FROM bcos)
-       |  WHERE r <= $k),
-       |hits AS (
-       |  SELECT q.q_id, COUNT(*) AS n_hits
-       |  FROM qtop q JOIN btop b ON b.q_id = q.q_id AND b.vec_id = q.vec_id
-       |  GROUP BY 1)
-       |SELECT DISTINCT b.q_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits
-       |FROM btop b LEFT JOIN hits h ON h.q_id = b.q_id""".stripMargin
+    recallSqlOver(pqCtes(PqDefaultSource, nQueries, k, m, nsub), k)
 
   // ------------------------------------------------------------ IVF
   /** Mean vector per key: posexplode → (key, pos) mean → re-assemble in
@@ -1517,9 +1476,7 @@ object Similarity {
     *
     * A session artifact: training runs once per session. */
   def ivfTrain(spark: SparkSession, dir: String, iters: Int = 3): DataFrame =
-    Artifacts.ivfTrainStats(spark, (dir, iters)) {
-      ivfTrainImpl(spark, dir, iters).cache()
-    }
+    Artifacts.ivfTrainStats(spark, (dir, iters))(ivfTrainImpl(spark, dir, iters))
 
   private def ivfTrainImpl(spark: SparkSession, dir: String, iters: Int): DataFrame = {
     import spark.implicits._
@@ -1572,7 +1529,6 @@ object Similarity {
       val cents = centroids(spark, dir).cache()
       val assigned = nearestCells(corpus(spark, dir), cents, 1)
         .select(col("vec_id"), col("label"), col("emb"), col("cell"), col("cos_c"))
-        .cache()
       (cents, assigned)
     }
 
@@ -1759,6 +1715,17 @@ object Similarity {
   private def blockGrid(spark: SparkSession, dir: String, nBlocks: Int) =
     blockGridOf(corpus(spark, dir), nBlocks)
 
+  /** THE raw dot product of the exact pair kernels: j-ascending
+    * accumulation, so every kernel rounds a pair's cosine from the same
+    * bits (a pair seen by two kernels, or from two shared cells, is
+    * bitwise identical). */
+  private def rawDot(a: Array[Double], b: Array[Double]): Double = {
+    var d = 0.0
+    var j = 0
+    while (j < a.length) { d += a(j) * b(j); j += 1 }
+    d
+  }
+
   def embeddingNearDupSummary(spark: SparkSession, dir: String,
       nBlocks: Int = 8): DataFrame = {
     import spark.implicits._
@@ -1771,10 +1738,7 @@ object Similarity {
         while (i < rvs.length) {
           val (rid, remb, rnrm) = rvs(i)
           if (rid != id) {
-            var d = 0.0
-            var j = 0
-            while (j < emb.length) { d += emb(j) * remb(j); j += 1 }
-            val cos = d / (nrm * rnrm)
+            val cos = rawDot(emb, remb) / (nrm * rnrm)
             if (cos > bestCos || (cos == bestCos && rid < bestId)) {
               bestCos = cos; bestId = rid
             }
@@ -1805,9 +1769,8 @@ object Similarity {
     * pair list is shared by every consumer. */
   def embeddingPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.4, nBlocks: Int = 8): DataFrame =
-    Artifacts.exactEmbeddingPairs(spark, (dir, threshold, nBlocks)) {
-      embeddingPairsImpl(spark, dir, threshold, nBlocks).cache()
-    }
+    Artifacts.exactEmbeddingPairs(spark, (dir, threshold, nBlocks))(
+      embeddingPairsImpl(spark, dir, threshold, nBlocks))
 
   private def embeddingPairsImpl(spark: SparkSession, dir: String,
       threshold: Double, nBlocks: Int): DataFrame =
@@ -1831,10 +1794,7 @@ object Similarity {
       lvs.iterator.flatMap { case (id, emb, nrm) =>
         rvs.iterator.flatMap { case (rid, remb, rnrm) =>
           if (id < rid) {
-            var d = 0.0
-            var j = 0
-            while (j < emb.length) { d += emb(j) * remb(j); j += 1 }
-            val cos = d / (nrm * rnrm)
+            val cos = rawDot(emb, remb) / (nrm * rnrm)
             if (cos >= threshold - 1e-6) Iterator.single((id, rid, cos))
             else Iterator.empty
           } else Iterator.empty
@@ -1857,9 +1817,7 @@ object Similarity {
     * Memoized: the corpus × centroids ranking is shared by the cell-pair
     * build and the recall invariant's share-cell join. */
   private def probedCells(spark: SparkSession, dir: String, nprobe: Int): DataFrame =
-    Artifacts.semanticProbedCells(spark, (dir, nprobe)) {
-      probedCellsImpl(spark, dir, nprobe).cache()
-    }
+    Artifacts.semanticProbedCells(spark, (dir, nprobe))(probedCellsImpl(spark, dir, nprobe))
 
   private def probedCellsImpl(spark: SparkSession, dir: String, nprobe: Int): DataFrame =
     nearestCells(corpus(spark, dir), centroids(spark, dir), nprobe)
@@ -1885,9 +1843,8 @@ object Similarity {
     * the primary dedup and the recall invariant. */
   def cellPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.4, nprobe: Int = 2): DataFrame =
-    Artifacts.semanticCellPairs(spark, (dir, threshold, nprobe)) {
-      cellPairsImpl(spark, dir, threshold, nprobe).cache()
-    }
+    Artifacts.semanticCellPairs(spark, (dir, threshold, nprobe))(
+      cellPairsImpl(spark, dir, threshold, nprobe))
 
   private[graft] def cellPairsImpl(spark: SparkSession, dir: String,
       threshold: Double = 0.4, nprobe: Int = 2): DataFrame =
@@ -1913,10 +1870,7 @@ object Similarity {
         val (ida, emba, nrma) = s(i)
         (i + 1 until s.length).iterator.flatMap { k =>
           val (idb, embb, nrmb) = s(k)
-          var d = 0.0
-          var j = 0
-          while (j < emba.length) { d += emba(j) * embb(j); j += 1 }
-          val cos = d / (nrma * nrmb)
+          val cos = rawDot(emba, embb) / (nrma * nrmb)
           if (cos >= threshold - 1e-6) Iterator.single((ida, idb, cos))
           else Iterator.empty
         }
@@ -1966,14 +1920,9 @@ object Similarity {
       embeddingPairs(spark, dir, threshold, nBlocks))
 
   private def dedupFromPairs(spark: SparkSession, dir: String,
-      pairs: DataFrame): DataFrame = {
-    val labels = Curation.connectedComponents(pairs.select("doc_a", "doc_b"))
-    corpus(spark, dir).select(col("vec_id"))
-      .join(labels.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("comp"), col("vec_id")).as("cluster_id"))
-      .withColumn("keep", col("vec_id") === col("cluster_id"))
-  }
+      pairs: DataFrame): DataFrame =
+    Curation.componentsOf(corpus(spark, dir).select(col("vec_id")), pairs)
+      .withColumnRenamed("comp", "cluster_id")
 
   // ------------------------------------------------- adaptive-k SemDeDup
   /** The centroid count the adaptive scoping uses: k = ⌈√N⌉ (min 2). With
@@ -1997,9 +1946,8 @@ object Similarity {
     * Broadcast stays tiny: √N seeds × dim doubles ≈ 8 MB at N = 10⁹. */
   def adaptiveCellPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.4, nprobe: Int = 2): DataFrame =
-    Artifacts.semanticCellPairsAdaptive(spark, (dir, threshold, nprobe)) {
-      adaptiveCellPairsImpl(spark, dir, threshold, nprobe).cache()
-    }
+    Artifacts.semanticCellPairsAdaptive(spark, (dir, threshold, nprobe))(
+      adaptiveCellPairsImpl(spark, dir, threshold, nprobe))
 
   private[graft] def adaptiveCellPairsImpl(spark: SparkSession, dir: String,
       threshold: Double = 0.4, nprobe: Int = 2): DataFrame =

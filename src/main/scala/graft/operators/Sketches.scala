@@ -518,7 +518,7 @@ object Sketches {
           .select(lit(name).as("join_name"), col("n_a"), col("n_b"),
             col("exact_join_rows"), col("ams_a"), col("ams_b"),
             col("cms_a"), col("cms_b"), col("f2a"), col("f2b"))
-      }.reduce(_ unionAll _).cache()
+      }.reduce(_ unionAll _)
     }
 
   /** Per scenario: both sketch estimates next to the exact join size and

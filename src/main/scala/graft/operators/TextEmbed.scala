@@ -38,9 +38,7 @@ object TextEmbed {
     * and its (docs × dim) dense result is shared by the projection query
     * and the composed near-dup search. */
   def embeddings(spark: SparkSession, dir: String, dim: Int = Dim): DataFrame =
-    Artifacts.textEmbeddings(spark, (dir, dim)) {
-      embeddingsImpl(spark, dir, dim).cache()
-    }
+    Artifacts.textEmbeddings(spark, (dir, dim))(embeddingsImpl(spark, dir, dim))
 
   private def embeddingsImpl(spark: SparkSession, dir: String, dim: Int): DataFrame =
     embedDocs(Tables.spread(spark, Tables.documents(spark, dir)), dim)
@@ -155,7 +153,6 @@ object TextEmbed {
         .join(Tables.documents(spark, dir)
           .select(col("doc_id"), col("lang").as("label")), "doc_id")
         .select(col("doc_id").as("vec_id"), col("label"), col("emb"))
-        .cache()
     }
 
   /** The text tier's coarse quantizer — per-lang mean vectors of the

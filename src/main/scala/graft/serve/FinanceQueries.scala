@@ -51,7 +51,6 @@ object FinanceQueries {
       Tables.events(spark, dir)
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
         .agg(avg("value").as("close"))
-        .cache()
     }
 
   private val dailySql: String =

@@ -143,7 +143,6 @@ object LensQueries {
       Tables.events(spark, dir)
         .groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("unique_users"))
-        .cache()
     }
 
   /** (event_type, approx_unique_users, hll_unique_users) — BOTH sketches
@@ -157,7 +156,6 @@ object LensQueries {
           approx_count_distinct(col("user_id"), 0.01).as("approx_unique_users"),
           graft.functions.HllAggregate.hll_distinct(col("user_id"))
             .as("hll_unique_users"))
-        .cache()
     }
 
   /** [Lens] unique_count (cardinality) — "Buzz médiatique" distinct titles

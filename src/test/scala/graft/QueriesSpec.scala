@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.classic.ClassicConversions
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
@@ -20,6 +25,44 @@ object SparkTestSession {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+}
+
+/** The CacheManager's "Asked to cache already cached data" warnings, each
+  * attributed to the query (or "warm-up") running when it was logged. */
+object CacheWarnings {
+  private val current = new java.util.concurrent.atomic.AtomicReference("warm-up")
+
+  def in[T](name: String)(body: => T): T = {
+    val was = current.getAndSet(name)
+    try body finally current.set(was)
+  }
+
+  /** Run `body` and return the label of every warning logged meanwhile. */
+  def during(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    val appender = new AbstractAppender("graft-cache-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("Asked to cache already cached data"))
+          seen.add(current.get)
+    }
+    appender.start()
+    cfg.addAppender(appender)
+    val name = "org.apache.spark.sql.execution.CacheManager"
+    val lc = new LoggerConfig(name, Level.WARN, true)
+    lc.addAppender(appender, Level.WARN, null)
+    cfg.addLogger(name, lc)
+    ctx.updateLoggers()
+    try body
+    finally {
+      cfg.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
 }
 
 class QueriesSpec extends AnyFunSuite {
@@ -50,15 +93,33 @@ class QueriesSpec extends AnyFunSuite {
 
   test("every registered query runs and returns rows on sf0.001") {
     val s = registrySession
+    // start from an empty CacheManager, as a Verify or Bench process does:
+    // other suites' cached plans would otherwise collide with this run's
+    Caches.clear(spark)
     // the bench's order: the warm-up walk, then the queries. Every
     // artifact read is attributed to whoever made it, so the policy test
     // below measures consumers instead of trusting comments
-    Artifacts.warmedAll.foreach(a => Artifacts.materialize(Artifacts.warmBuild(s, sf, a)))
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = Artifacts.consumedBy(name)(fn(s, sf).count())
-      assert(n > 0, s"$name returned 0 rows")
+    val twice = CacheWarnings.during {
+      Artifacts.warmedAll.foreach(a => Artifacts.materialize(Artifacts.warmBuild(s, sf, a)))
+      SparkEntry.queries.foreach { case (name, fn) =>
+        val n = CacheWarnings.in(name)(Artifacts.consumedBy(name)(fn(s, sf).count()))
+        assert(n > 0, s"$name returned 0 rows")
+      }
     }
     registryRan = true
+    // a plan cached a second time is a query rebuilding a frame another
+    // query or build already cached: sharing by plan identity, not by an
+    // artifact read
+    assert(twice.isEmpty,
+      s"plans cached twice, by query: ${twice.groupBy(identity).map {
+        case (q, ws) => s"$q x${ws.size}" }.toSeq.sorted.mkString(", ")}")
+    // the registry persists every frame it hands out
+    val cm = s.sharedState.cacheManager
+    val uncached = Artifacts.held(s).collect {
+      case (name, v) if Artifacts.frames(v).exists(df =>
+          cm.lookupCachedData(ClassicConversions.castToImpl(df)).isEmpty) => name
+    }
+    assert(uncached.isEmpty, s"artifact frames not cached: ${uncached.distinct.sorted.mkString(", ")}")
   }
 
   test("artifact policy holds over the registry run: warmed iff shared, built once") {

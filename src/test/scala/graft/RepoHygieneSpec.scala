@@ -112,4 +112,47 @@ class RepoHygieneSpec extends AnyFunSuite {
     val bench = sites("""\.cache\(\)""".r).filter(_ == "src/main/scala/graft/Bench.scala")
     assert(bench.isEmpty, "Bench.scala calls .cache()")
   }
+
+  test("no artifact build ends in .cache(): the registry persists what it stores") {
+    // Artifact.apply caches every frame of a fresh value; a build that
+    // caches its own result is a second, hand-kept copy of that policy
+    val offenders = mainSources.flatMap { case (f, text) =>
+      """\bArtifacts\.\w+\(""".r.findAllMatchIn(text).flatMap { m =>
+        val keyEnd = closing(text, m.end - 1)
+        val open = text.indexWhere(!_.isWhitespace, keyEnd + 1)
+        if (open < 0 || (text(open) != '{' && text(open) != '(')) None
+        else {
+          val body = text.substring(open + 1, closing(text, open))
+          val last = body.linesIterator.map(_.replaceAll("//.*", "").trim)
+            .filter(_.nonEmpty).toSeq.lastOption.getOrElse("")
+          if (last.contains(".cache()"))
+            Some(s"${f.getPath}:${text.substring(0, m.start).count(_ == '\n') + 1}")
+          else None
+        }
+      }
+    }
+    assert(offenders.isEmpty, s"artifact builds ending in .cache(): ${offenders.mkString(", ")}")
+  }
+
+  /** The index of the bracket closing the one at `open`, skipping string
+    * literals. */
+  private def closing(text: String, open: Int): Int = {
+    var depth = 0
+    var i = open
+    while (i < text.length) {
+      if (text.startsWith("\"\"\"", i)) i = text.indexOf("\"\"\"", i + 3) + 2
+      else text(i) match {
+        case '"' =>
+          i += 1
+          while (text(i) != '"') i += (if (text(i) == '\\') 2 else 1)
+        case '(' | '{' | '[' => depth += 1
+        case ')' | '}' | ']' =>
+          depth -= 1
+          if (depth == 0) return i
+        case _ =>
+      }
+      i += 1
+    }
+    sys.error(s"unbalanced bracket at $open")
+  }
 }
