@@ -115,7 +115,11 @@ class RepoHygieneSpec extends AnyFunSuite {
 
   test("no artifact build ends in .cache(): the registry persists what it stores") {
     // Artifact.apply caches every frame of a fresh value; a build that
-    // caches its own result is a second, hand-kept copy of that policy
+    // caches its own result is a second, hand-kept copy of that policy.
+    // The rule reads only the literal tail of the build body: a tail moved
+    // one call deeper (a helper ending in .cache()) passes here, and is
+    // harmless only because Artifacts.persist skips a plan the
+    // CacheManager already holds
     val offenders = mainSources.flatMap { case (f, text) =>
       """\bArtifacts\.\w+\(""".r.findAllMatchIn(text).flatMap { m =>
         val keyEnd = closing(text, m.end - 1)
@@ -135,12 +139,16 @@ class RepoHygieneSpec extends AnyFunSuite {
   }
 
   /** The index of the bracket closing the one at `open`, skipping string
-    * literals. */
+    * and char literals and comments. */
   private def closing(text: String, open: Int): Int = {
     var depth = 0
     var i = open
     while (i < text.length) {
       if (text.startsWith("\"\"\"", i)) i = text.indexOf("\"\"\"", i + 3) + 2
+      else if (text.startsWith("//", i)) i = text.indexOf('\n', i) match { case -1 => text.length; case n => n }
+      else if (text.startsWith("/*", i)) i = text.indexOf("*/", i + 2) + 1
+      else if (text.startsWith("'\\", i)) i = text.indexOf('\'', i + 3)
+      else if (text(i) == '\'' && i + 2 < text.length && text(i + 2) == '\'') i += 2
       else text(i) match {
         case '"' =>
           i += 1
